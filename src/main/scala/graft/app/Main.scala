@@ -86,7 +86,7 @@ object Main {
             ResumableValidator.run(spark, input, dim, cfg, statePath)
           case None =>
             val df = spark.read.parquet(input)
-            val rep = Validator.validate(spark, df, dim, cfg)
+            val rep = Validator.validateOneScan(spark, df, dim, cfg)
             ResumableValidator.RunSummary(rep, Nil, Nil,
               rep.sourceStats.agg(sum("n_rows")).collect()(0).getLong(0))
         }

@@ -26,7 +26,7 @@ object ResumableValidator {
     val (done, todo) = Checkpoint.plan(spark, inputPath, statePath)
     val allSources = (done ++ todo).map(_.source)
     require(allSources.nonEmpty,
-      s"$inputPath has no source= partitions; use Validator.validate for unpartitioned input")
+      s"$inputPath has no source= partitions; use Validator.validateOneScan for unpartitioned input")
     val input = spark.read.parquet(inputPath)
 
     if (todo.nonEmpty) {

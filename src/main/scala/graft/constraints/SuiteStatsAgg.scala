@@ -3,29 +3,25 @@ package graft.constraints
 import org.apache.datasketches.hll.{HllSketch, Union => HllUnion}
 import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** ALL per-source suite statistics in ONE aggregate — the reference's
-  * extract-then-merge monoid (core.clj:22-27) in its literal Spark form:
-  * `update` extracts one row into the stat buffer (a single walk of the
-  * token array computes size/nulls/min/max, the vocab histogram, and the
-  * violation flags), `merge` combines buffers (counters add, min/max
-  * fold, HLL union, KLL merge, histogram vector-add).
+/** The per-source suite statistics fold — the reference's
+  * extract-then-merge monoid (core.clj:22-27) in its literal form:
+  * [[SuiteStatsAgg.updateRow]] extracts one row into the stat buffer (a
+  * single walk of the token array computes size/nulls/min/max, the vocab
+  * histogram, and the violation flags), [[SuiteStatsAgg.Buf.mergeIn]]
+  * combines buffers (counters add, min/max fold, HLL union, KLL merge,
+  * histogram vector-add). [[SuiteStatsBySourceAgg]] runs it keyed by
+  * source inside one observe aggregate.
   *
   * Why fused instead of 16 composed aggregate expressions (kept as
   * [[Validator.sourceStatsComposed]], the semantic oracle pinned by
   * SuiteStatsSpec): the composed plan walks each token array TWICE
   * (TokenStats + TokenHistAgg) and evaluates each flag separately; at
-  * saturation the second walk alone costs ~25% of suite throughput. One
-  * buffer per (partition, source) means the partial shuffle still ships
-  * KBs per input split, never rows.
+  * saturation the second walk alone costs ~25% of suite throughput.
   *
   * Flag semantics mirror [[Validator.rowFlags]] + the coalesce defaults in
   * the composed aggregation exactly:
@@ -34,55 +30,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - null_token / oov_token: null input does NOT count (coalesce FALSE);
   *  - ntok_bounds: null n_tok counts (coalesce TRUE).
   */
-case class SuiteStatsAgg(
-    docId: Expression,
-    tokens: Expression,
-    nTok: Expression,
-    vocab: Int,
-    minNtokCfg: Int,
-    maxNtokCfg: Int,
-    bins: Int,
-    kllK: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[SuiteStatsAgg.Buf] {
-  import SuiteStatsAgg.Buf
-
-  override def children: Seq[Expression] = Seq(docId, tokens, nTok)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): SuiteStatsAgg =
-    copy(docId = c(0), tokens = c(1), nTok = c(2))
-
-  override def createAggregationBuffer(): Buf = new Buf(bins, kllK)
-
-  private lazy val binLut: Array[Int] =
-    Array.tabulate(vocab)(t => (t.toLong * bins / vocab).toInt)
-
-  override def update(buf: Buf, input: InternalRow): Buf = {
-    SuiteStatsAgg.updateRow(buf,
-      docId.eval(input).asInstanceOf[UTF8String],
-      nTok.eval(input).asInstanceOf[Integer],
-      tokens.eval(input),
-      vocab, minNtokCfg, maxNtokCfg, bins, binLut)
-    buf
-  }
-
-  override def merge(a: Buf, b: Buf): Buf = a.mergeIn(b)
-
-  override def eval(buf: Buf): Any = SuiteStatsAgg.evalBuf(buf)
-
-  override def serialize(buf: Buf): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): Buf = Buf.fromBytes(bytes, bins, kllK)
-
-  override def withNewMutableAggBufferOffset(o: Int): SuiteStatsAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): SuiteStatsAgg =
-    copy(inputAggBufferOffset = o)
-
-  override def dataType: DataType = SuiteStatsAgg.schema
-  override def nullable: Boolean = false
-  override def prettyName: String = "suite_stats_agg"
-}
-
 object SuiteStatsAgg {
 
   /** Field layout of the produced struct — matches the composed
@@ -107,9 +54,7 @@ object SuiteStatsAgg {
     StructField("kll_ntok", BinaryType, nullable = false),
     StructField("hist_token", ArrayType(LongType, containsNull = false), nullable = false)))
 
-  /** One row folded into a buffer — the single fused walk (shared with
-    * [[SuiteStatsBySourceAgg]] so the one-scan path is update-identical).
-    */
+  /** One row folded into a buffer — the single fused walk. */
   private[constraints] def updateRow(
       buf: Buf, d: UTF8String, nt: Integer, arrRaw: Any,
       vocab: Int, minNtokCfg: Int, maxNtokCfg: Int,
@@ -169,7 +114,7 @@ object SuiteStatsAgg {
     }
   }
 
-  /** Buffer -> stats struct (shared with [[SuiteStatsBySourceAgg]]). */
+  /** Buffer -> stats struct. */
   private[constraints] def evalBuf(buf: Buf): InternalRow = {
     def optI(seen: Boolean, v: Int): Any = if (seen) Int.box(v) else null
     InternalRow(
@@ -180,26 +125,20 @@ object SuiteStatsAgg {
       optI(buf.seenDLen, buf.minDLen), optI(buf.seenDLen, buf.maxDLen),
       // Math.round matches hll_sketch_estimate (which returns a rounded
       // long); the buffer mirrors hll_sketch_agg's exact structure
-      // (HllSketch(12, HLL_8) + Union at merge), so the sketch bytes —
-      // and hence this estimate — are bit-equal to the composed plan's
+      // (HllSketch(12, HLL_8) + Union at merge), so over the same merge
+      // order the sketch bytes — and hence this estimate — are bit-equal
+      // to the composed plan's
       math.round(buf.hll.getEstimate),
       buf.hll.toUpdatableByteArray,
       buf.kll.toByteArray,
       new GenericArrayData(buf.hist))
   }
 
-  def suite_stats(docId: Column, tokens: Column, nTok: Column,
-                  cfg: Validator.SuiteConfig): Column =
-    ColumnBridge.column(SuiteStatsAgg(
-      ColumnBridge.expression(docId), ColumnBridge.expression(tokens),
-      ColumnBridge.expression(nTok),
-      cfg.vocabSize, cfg.minNtok, cfg.maxNtok,
-      cfg.tokenHistBins, cfg.kllK).toAggregateExpression())
-
   /** Aggregation buffer: plain counters + the three mergeable sketches.
     * The HLL buffer is a directly-updated HllSketch with Union applied
     * only at merge — the exact structure of Spark's hll_sketch_agg, so
-    * the fused estimate is bit-equal to the composed plan's.
+    * over the same merge order the fused estimate is bit-equal to the
+    * composed plan's.
     */
   final class Buf(bins: Int, kllK: Int) {
     var nRows, nMismatch, nNullTok, nOov, nBounds, nNullDocid = 0L

@@ -11,21 +11,22 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** [[SuiteStatsAgg]] keyed by source INSIDE one global aggregate, so the
-  * whole per-source stats table can ride a `df.observe(...)` CollectMetrics
-  * node on the violations scan — the suite's two full-data passes (stats
-  * groupBy + violations filter) collapse into ONE. At 100 TB that halves
-  * the dominant cost, the table scan; the observe aggregation is the same
-  * map-side-partial monoid (per-task buffers merged by an accumulator, KBs
-  * on the wire, never rows).
+/** The [[SuiteStatsAgg]] fold keyed by source INSIDE one global
+  * aggregate, so the whole per-source stats table can ride a
+  * `df.observe(...)` CollectMetrics node on the violations scan — stats
+  * and violations share ONE full-data pass. At 100 TB that is the
+  * dominant cost, the table scan; the observe aggregation is a
+  * map-side-partial monoid (per-task buffers merged by an accumulator,
+  * KBs on the wire, never rows).
   *
-  * The buffer is a hash map source -> [[SuiteStatsAgg.Buf]]; per-row update
-  * and buffer eval are the SAME code as the groupBy aggregate
-  * ([[SuiteStatsAgg.updateRow]]/[[SuiteStatsAgg.evalBuf]]), so the two
-  * paths cannot drift. Memory is O(#sources): right for partition-like
-  * source cardinality (the table's layout key). For unbounded/high-card
-  * grouping keys use the classic groupBy path instead — a map-per-task
-  * with millions of keys belongs in a real aggregation exchange.
+  * The buffer is a hash map source -> [[SuiteStatsAgg.Buf]], updated by
+  * [[SuiteStatsAgg.updateRow]] and read out by [[SuiteStatsAgg.evalBuf]].
+  *
+  * Precondition: the number of distinct sources is bounded. Every task
+  * holds one buffer per source it sees and the Spark driver merges them
+  * all, so memory is O(#sources) per task and driver-side — right for
+  * partition-like source cardinality (the table's layout key), wrong for
+  * an unbounded grouping key, which belongs in an aggregation exchange.
   *
   * Output: array<struct<source, stats>>, sorted by source (nulls first)
   * for deterministic row order.

@@ -14,20 +14,16 @@ import graft.stats.{Drift, KllSketchAgg}
   * `analyze-json-schema` summary, core.clj:57-67) and violation rows with
   * identity + reason (the parser's failed-lines channel, parser.clj:9-28).
   *
-  * Execution shape (designed for 10^12 rows / 1000 executors):
+  * Execution shape (designed for 10^12 rows / 1000 executors), one path
+  * ([[validateOneScan]]):
   *  - ONE full-data scan computes all row-level flags AND per-source stat
-  *    sketches: flags are plain Catalyst expressions (whole-stage codegen),
-  *    the groupBy(source) aggregation is partially aggregated map-side, so
-  *    the only full shuffle ships a handful of sketch rows per input
-  *    partition, never data rows.
-  *  - Violation rows are a filter over the same scan (no extra pass; the
-  *    filter and the agg share the scan via one job each over a cached
-  *    columnar batch or two parquet scans — at scale two scans of pruned
-  *    columns beat caching 100 TB).
-  *  - Global exact uniqueness is the one unavoidable wide shuffle; it
-  *    projects (doc_id, source) only — ~1% of table width — and relies on
-  *    AQE to coalesce/split skewed partitions. A cheap HLL pre-check per
-  *    source allows skipping it when estimated distinct == rows.
+  *    sketches: the violations filter is one native mask walk per row, and
+  *    the per-source stats ride that same scan as an `observe` aggregate
+  *    ([[SuiteStatsBySourceAgg]]) — no exchange, KBs per task merged
+  *    driver-side.
+  *  - Global exact uniqueness is the one unavoidable wide shuffle: a
+  *    count-only exchange of a 128-bit hash pair of each non-NULL doc_id
+  *    ([[dupStats]]), 16 fixed bytes per row whatever the key width.
   *  - Referential, drift (PSI/KS over merged KLL sketches), and
   *    declared-fit verdicts are computed driver-side from the per-source
   *    sketch table (KBs, independent of data size).
@@ -44,17 +40,6 @@ object Validator {
       /** token-ID distribution drift: histogram bins + PSI threshold */
       tokenHistBins: Int = 64,
       tokenPsiThreshold: Double = 0.25,
-      /** run the exact global uniqueness shuffle (vs HLL estimate only) */
-      exactUniqueness: Boolean = true,
-      /** uniqueness exchange strategy for [[Validator.validateOneScan]]:
-        * false (default) groups the key column directly — one scan, one
-        * exchange of the keys; measured fastest on a single node where
-        * shuffle is a memcpy. true uses [[Validator.duplicateKeysHashFirst]]
-        * — two narrow scans but the wide exchange ships 8-byte hashes
-        * instead of key strings; the right trade on a network-bound
-        * cluster where exchange BYTES, not scans, are the ceiling.
-        */
-      uniquenessHashFirst: Boolean = false,
       /** cap violation rows sampled per check (driver/report safety) */
       violationSampleCap: Int = 10000,
       /** declared column DDL (reference db_types side door): observed
@@ -131,7 +116,7 @@ object Validator {
 
   /** Bounded violation EXAMPLES per (source, check) — the report channel.
     * At 10^12 rows the full violation set can itself be TB-sized when a
-    * check fires broadly; totals come from [[sourceStats]] counters, the
+    * check fires broadly; totals come from the per-source stats counters, the
     * report carries a deterministic bounded sample of identities (the
     * reference's distinct-coverage accumulator semantics,
     * example_data.clj:36-92: keep representatives, stop when covered).
@@ -149,19 +134,10 @@ object Validator {
 
   /** Per-source observed stats + mergeable sketches — the engine's
     * "observed schema with metadata" (extract-then-merge, core.clj:22-27),
-    * one row per source partition. Fused single-walk aggregate (see
-    * [[SuiteStatsAgg]]); [[sourceStatsComposed]] is the composed-builtins
-    * semantic twin, pinned equal by SuiteStatsSpec.
-    */
-  def sourceStats(df: DataFrame, cfg: SuiteConfig): DataFrame =
-    df.groupBy(col("source"))
-      .agg(SuiteStatsAgg.suite_stats(
-        col("doc_id"), col("tokens"), col("n_tok"), cfg).as("__s"))
-      .select(col("source") +: SuiteStatsAgg.schema.fieldNames.toSeq
-        .map(f => col(s"__s.$f").as(f)): _*)
-
-  /** The composed-builtins formulation of [[sourceStats]] — 16 aggregate
-    * expressions over two token-array walks (TokenStats + TokenHistAgg).
+    * one row per source partition — in composed-builtins form: 16
+    * aggregate expressions over two token-array walks (TokenStats +
+    * TokenHistAgg). The semantic reference for the fused single-walk
+    * [[observeStats]], pinned equal by SuiteStatsSpec.
     */
   private[graft] def sourceStatsComposed(df: DataFrame, cfg: SuiteConfig): DataFrame = {
     val flags = rowFlags(cfg).toMap
@@ -187,65 +163,6 @@ object Validator {
       graft.stats.TokenHistAgg.token_hist(col("tokens"),
         cfg.tokenHistBins, cfg.vocabSize).as("hist_token"))
   }
-
-  /** Explicit skew tamer for pathological input layouts: range-partition
-    * on (source, doc_id). Hash partitioning on source alone puts a 90%-hot
-    * source behind one task; the range partitioner SAMPLES the key
-    * distribution and splits the hot source across contiguous doc_id
-    * ranges, so map-heavy stages (the violations scan, feature passes)
-    * lose their stragglers. Aggregation results are layout-invariant
-    * (the stats monoid merges per source regardless), so this is purely a
-    * wall-clock lever — apply it when the upstream layout is skewed, skip
-    * it when the scan is already balanced (it costs one full shuffle).
-    */
-  def balance(df: DataFrame, partitions: Int): DataFrame =
-    df.repartitionByRange(partitions, col("source"), col("doc_id"))
-
-  /** Exact global duplicate keys: the one wide shuffle, over a two-column
-    * projection. Returns (doc_id, n, sources).
-    */
-  def duplicateKeys(df: DataFrame): DataFrame =
-    df.select(col("doc_id"), col("source"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n"), collect_set(col("source")).as("sources"))
-      .filter(col("n") > 1)
-
-  /** Exact duplicate keys with a HASH-FIRST shuffle: phase 1 groups by
-    * `xxhash64(doc_id)` so the wide exchange ships 8-byte longs instead of
-    * key strings (5x+ narrower here; the win grows with key width — URLs,
-    * content IDs). Phase 2 exactly re-groups by the real doc_id ONLY the
-    * rows whose hash bucket held more than one row — 64-bit collisions
-    * between distinct keys are separated there (and at 10^12 rows they DO
-    * occur, ~n^2/2^65 of them), so the result is exact, identical to
-    * [[duplicateKeys]] minus the `sources` column. The candidate set is
-    * violation-rare in healthy data, so phase 2's join broadcasts (AQE)
-    * and its groupBy shuffles almost nothing.
-    */
-  def duplicateKeysHashFirst(df: DataFrame): DataFrame = {
-    val keyed = df.select(col("doc_id"), xxhash64(col("doc_id")).as("__h"))
-    val dupHashes = keyed.groupBy(col("__h"))
-      .agg(count(lit(1)).as("hn")).filter(col("hn") > 1).select("__h")
-    keyed.join(dupHashes, "__h")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-  }
-
-  /** Salted two-phase exact duplicate counting for HOT keys: when a single
-    * doc_id may repeat millions of times, a plain groupBy(doc_id) puts one
-    * reducer behind the hot key. Phase 1 counts per (doc_id, salt) where
-    * salt = partition id (deterministic, no data movement semantics), so
-    * the hot key is spread over `saltBuckets` reducers; phase 2 sums the
-    * per-salt partials — its input has at most saltBuckets rows per key.
-    * Returns (doc_id, n) for keys with n > 1.
-    */
-  def duplicateKeysSalted(df: DataFrame, saltBuckets: Int = 64): DataFrame =
-    df.select(col("doc_id"),
-        pmod(spark_partition_id(), lit(saltBuckets)).as("__salt"))
-      .groupBy(col("doc_id"), col("__salt"))
-      .agg(count(lit(1)).as("pn"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("pn")).as("n"))
-      .filter(col("n") > 1)
 
   /** Assemble the full report. `stats` must be the (possibly
     * resume-merged) per-source stats; `dim` is the sources dimension.
@@ -453,36 +370,40 @@ object Validator {
     }.toSeq.sortBy(t => (t._1, t._2))
   }
 
-  /** (n duplicated keys, n extra rows) under the configured uniqueness
-    * strategy — None when `cfg.exactUniqueness` is off.
+  /** Hash pairs of the doc_ids that occur more than once, with their
+    * count `n` — the one uniqueness exchange. It ships TWO independent
+    * 64-bit hashes of the key instead of the key string (the
+    * dropExactDuplicates payload-free shape, guide §2.3 "shuffle keys'
+    * metadata"): 16 fixed bytes per row and long-pair hash-agg compares,
+    * with joint collision odds ~2^-128 per pair — negligible at any
+    * physical corpus size. The count partially aggregates map-side, so a
+    * hot key collapses to one row per input partition before the exchange.
+    *
+    * Embedded-uniqueness semantics (uniqueness holds over the rows where
+    * the key is defined): NULL doc_ids are filtered out, never grouped as
+    * one shared key — they are reported per source by the `null_docid`
+    * check, not a second time here.
     */
-  private[graft] def dupStats(df: DataFrame, cfg: SuiteConfig): Option[(Long, Long)] =
-    if (!cfg.exactUniqueness) None
-    else {
-      // count-only: the exchange ships TWO independent 64-bit hashes of
-      // the key instead of the key string (the dropExactDuplicates
-      // payload-free shape, guide §2.3 "shuffle keys' metadata"): 16
-      // fixed bytes per row and long-pair hash-agg compares, with joint
-      // collision odds ~2^-128 per pair — negligible at any physical
-      // corpus size. NULL doc_ids: xxhash64 skips null children, so all
-      // nulls share one constant hash pair — exactly how groupBy(doc_id)
-      // groups them (SQL grouping treats NULLs equal), counting as one
-      // duplicated key when 2+ rows; per-source null counts are the
-      // n_null_docid check's job.
-      val dups =
-        if (cfg.uniquenessHashFirst) duplicateKeysHashFirst(df)
-        else df.select(xxhash64(col("doc_id")).as("__h"),
-            graft.ops.Dedup.contentHash2(col("doc_id")).as("__h2"))
-          .groupBy(col("__h"), col("__h2"))
-          .agg(count(lit(1)).as("n")).filter(col("n") > 1)
-      val r = dups.agg(count(lit(1)).as("k"),
-        coalesce(sum(col("n") - 1), lit(0L)).as("extra")).collect()(0)
-      Some((r.getLong(0), r.getLong(1)))
-    }
+  private[graft] def duplicateHashes(df: DataFrame): DataFrame =
+    df.filter(col("doc_id").isNotNull)
+      .select(xxhash64(col("doc_id")).as("__h"),
+        graft.ops.Dedup.contentHash2(col("doc_id")).as("__h2"))
+      .groupBy(col("__h"), col("__h2"))
+      .agg(count(lit(1)).as("n")).filter(col("n") > 1)
+
+  /** (n duplicated keys, n extra rows) over [[duplicateHashes]]. Always
+    * `Some`; the option is [[buildVerdicts]]'s, where the streaming path
+    * passes `None` (it has no global key exchange).
+    */
+  private[graft] def dupStats(df: DataFrame, cfg: SuiteConfig): Option[(Long, Long)] = {
+    val r = duplicateHashes(df).agg(count(lit(1)).as("k"),
+      coalesce(sum(col("n") - 1), lit(0L)).as("extra")).collect()(0)
+    Some((r.getLong(0), r.getLong(1)))
+  }
 
   /** Attach the by-source suite-stats observation to `df`. After exactly
     * ONE action runs over the returned frame, the thunk yields the stats
-    * rows (the [[sourceStats]] schema) — the fused one-scan machinery
+    * rows (the [[sourceStatsComposed]] schema) — the fused one-scan machinery
     * shared by [[validateOneScan]], the resumable runner, and the
     * streaming micro-batch path.
     */
@@ -505,22 +426,12 @@ object Validator {
     (observed, thunk)
   }
 
-  /** One-shot (non-resumable) validation of an in-memory DataFrame. */
-  def validate(spark: SparkSession, df: DataFrame, dim: DataFrame,
-               cfg: SuiteConfig = SuiteConfig()): ValidationReport = {
-    val stats = sourceStats(df, cfg).collect()
-    val viols = violations(df, cfg)
-    val dupAgg = dupStats(df, cfg)
-    val verdicts = buildVerdicts(spark, stats, dim.collect(), dupAgg, cfg)
-    ValidationReport(verdicts, viols, statsToDf(spark, stats))
-  }
-
   /** ONE-SCAN validation: the per-source stats ride the violations scan as
     * an `observe` (CollectMetrics) aggregate ([[SuiteStatsBySourceAgg]]),
     * so the suite's two full-data passes collapse into one — at 100 TB the
-    * table scan IS the cost, and this halves it. Uniqueness is a count-only
-    * exchange over the pruned key column (~1% of table width); set
-    * `cfg.uniquenessHashFirst` on network-bound clusters (see SuiteConfig).
+    * table scan IS the cost, and this halves it. Uniqueness is the
+    * count-only hash-pair exchange of [[dupStats]] over the pruned key
+    * column, the second and last scan.
     *
     * Because observed metrics only materialize when an ACTION runs over
     * the instrumented frame, this method runs the violations action
@@ -529,8 +440,9 @@ object Validator {
     * counts them. The returned report's `violations` frame re-derives
     * violations lazily for further use.
     *
-    * Semantics are pinned identical to [[validate]] by FusedValidateSpec
-    * (same verdicts; same stats up to sketch-internal randomness).
+    * Stats and violations are pinned to the composed reference forms
+    * ([[sourceStatsComposed]], [[violationsComposed]]) by
+    * FusedValidateSpec and SuiteStatsSpec.
     */
   def validateOneScan(spark: SparkSession, df: DataFrame, dim: DataFrame,
                       cfg: SuiteConfig = SuiteConfig(),

@@ -106,7 +106,7 @@ object TokenStats {
   * null_token, 4 = oov_token, 8 = ntok_bounds. Exactly the
   * [[graft.constraints.Validator.rowFlags]] predicates under the
   * violation channel's coalesce(flag, FALSE) defaults (null inputs never
-  * flag here — they have sourceStats counters).
+  * flag here — they have per-source stats counters).
   *
   * Why: predicate pushdown inlines a shared token_stats alias into every
   * field reference of the filter — FIVE interpreted walks of the token

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.constraints.{SuiteStatsAgg, Validator}
+import graft.constraints.Validator
 import graft.sequences.SequenceSynth
 
 /** Stage-level profile of the validation suite: times each of the suite's
@@ -48,9 +48,9 @@ object SuiteProfile {
     def df = spark.read.parquet(dir)
 
     // warm JIT + page cache once with the full suite
-    { val rep = Validator.validate(spark, df,
+    { Validator.validateOneScan(spark, df,
         spark.read.parquet(s"$dir-dim"), suiteCfg)
-      rep.violations.count(); spark.catalog.clearCache() }
+      spark.catalog.clearCache() }
 
     // decode-cost floors
     bestOf("scan_count_only")(df.count())
@@ -61,23 +61,14 @@ object SuiteProfile {
         .getField("max"))).collect())
 
     // suite stages in isolation
-    bestOf("stage_source_stats")(Validator.sourceStats(df, suiteCfg).collect())
     bestOf("stage_violations_count")(Validator.violations(df, suiteCfg).count())
-    bestOf("stage_duplicate_keys") {
-      Validator.duplicateKeys(df)
-        .agg(count(lit(1)), coalesce(sum(col("n") - 1), lit(0L))).collect()
+    bestOf("stage_observed_stats") {
+      val (observed, statsThunk) = Validator.observeStats(df, suiteCfg)
+      Validator.violations(observed, suiteCfg).count()
+      statsThunk()
     }
     bestOf("stage_dup_stats") {
       Validator.dupStats(df, suiteCfg)
-    }
-    bestOf("stage_dup_hash_first") {
-      Validator.duplicateKeysHashFirst(df)
-        .agg(count(lit(1)), coalesce(sum(col("n") - 1), lit(0L))).collect()
-    }
-    bestOf("full_validate") {
-      val rep = Validator.validate(spark, df,
-        spark.read.parquet(s"$dir-dim"), suiteCfg)
-      rep.violations.count()
     }
     bestOf("full_validate_one_scan") {
       Validator.validateOneScan(spark, df,

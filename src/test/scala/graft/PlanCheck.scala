@@ -19,12 +19,8 @@ object PlanCheck {
     val df = spark.read.parquet(s"$dir/seqs")
     val suite = Validator.SuiteConfig()
 
-    println("==== sourceStats ====")
-    Validator.sourceStats(df, suite).explain("formatted")
     println("==== violations ====")
     Validator.violations(df, suite).explain("formatted")
-    println("==== duplicateKeys ====")
-    Validator.duplicateKeys(df).explain("formatted")
     println("==== q17 join (broadcast?) ====")
     Queries.defs.toMap.apply("q17_join_revenue").fn(spark, "/root/testdata/sf0.001")
       .explain("formatted")
@@ -37,9 +33,8 @@ object PlanCheck {
     println("==== fused one-scan suite: violations + observed stats ====")
     val (observed, _) = Validator.observeStats(df, suite)
     Validator.violations(observed, suite).explain("formatted")
-    println("==== count-only uniqueness (validateOneScan) ====")
-    df.select(col("doc_id")).groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n")).filter(col("n") > 1).explain("formatted")
+    println("==== count-only uniqueness: hash-pair exchange (dupStats) ====")
+    Validator.duplicateHashes(df).explain("formatted")
 
     println("==== round 3: miner pair join over the co-partitioned capped cache ====")
     import spark.implicits._

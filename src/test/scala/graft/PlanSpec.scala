@@ -25,16 +25,6 @@ class PlanSpec extends AnyFunSuite {
 
   private val suite = Validator.SuiteConfig()
 
-  test("sourceStats: single scan, map-side partial aggregation before the exchange") {
-    val p = plan(Validator.sourceStats(spark.read.parquet(seqDir), suite))
-    assert(p.contains("partial_suite_stats_agg"), "fused stats must partially aggregate map-side")
-    assert("Scan parquet".r.findAllIn(p).size == 1, "exactly one scan")
-    // the composed twin keeps its own partial-agg guarantees
-    val pc = plan(Validator.sourceStatsComposed(spark.read.parquet(seqDir), suite))
-    assert(pc.contains("partial_kll_sketch_agg") && pc.contains("partial_hll_sketch_agg")
-      && pc.contains("partial_token_hist_agg"))
-  }
-
   test("violations filter evaluates one native mask, never inlined token_stats walks") {
     val p = plan(Validator.violations(spark.read.parquet(seqDir), suite))
     assert(!p.contains("token_stats"), "token_stats must not appear (5x-inline regression)")
@@ -42,11 +32,18 @@ class PlanSpec extends AnyFunSuite {
     assert(inFilter && p.contains("violation_mask"))
   }
 
-  test("duplicateKeys scans only the needed columns") {
-    val p = plan(Validator.duplicateKeys(spark.read.parquet(seqDir))
-      .agg(count(lit(1))))
+  test("dupStats: one exchange of hash pairs, reading the doc_id column only") {
+    def dups = Validator.duplicateHashes(spark.read.parquet(seqDir))
+    val p = plan(dups)
     assert(p.contains("ReadSchema: struct<doc_id:string>"),
       s"uniqueness must read the key column only:\n$p")
+    assert(p.contains("partial_count"), s"the count must partially aggregate map-side:\n$p")
+    val exchanges = exchangeAttrs(dups)
+    assert(exchanges.size == 1, s"expected exactly one exchange: $exchanges")
+    exchanges.foreach { attrs =>
+      assert(!attrs.exists(_.dataType == org.apache.spark.sql.types.StringType),
+        s"an exchange carries a string column: ${attrs.mkString(",")}")
+    }
   }
 
   test("resume-path filter prunes partitions at the scan") {
@@ -222,13 +219,15 @@ class PlanSpec extends AnyFunSuite {
   // same hygiene violation) of the df built by `mk`. Built with AQE off:
   // AdaptiveSparkPlanExec hides its exchanges from collect until
   // execution, and sparkPlan predates EnsureRequirements entirely.
-  private def exchangeOutputs(mk: => DataFrame): Seq[Seq[String]] = {
+  private def exchangeAttrs(mk: => DataFrame)
+      : Seq[Seq[org.apache.spark.sql.catalyst.expressions.Attribute]] = {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try mk.queryExecution.executedPlan.collect {
-      case e: org.apache.spark.sql.execution.exchange.Exchange =>
-        e.output.map(_.name).toSeq
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e.output
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
+  private def exchangeOutputs(mk: => DataFrame): Seq[Seq[String]] =
+    exchangeAttrs(mk).map(_.map(_.name))
 
   test("decontamination shuffles only (hash, id) rows — never text") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

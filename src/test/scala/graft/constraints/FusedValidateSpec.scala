@@ -8,14 +8,14 @@ import graft.SharedSpark
 import graft.sequences.SequenceSynth
 
 /** Pins the ONE-SCAN validation path ([[Validator.validateOneScan]]:
-  * observe-fused stats + count-only uniqueness, with
-  * [[Validator.duplicateKeysHashFirst]] as the opt-in cluster strategy)
-  * semantically identical to the classic two-scan [[Validator.validate]]. Sketch BYTES are exempt
-  * (KLL compaction is randomized and merge order differs between an
-  * exchange and an observe accumulator — CLAUDE.md invariant: assert
-  * verdict decisions, never sketch readouts); everything exact — counters,
-  * min/max, HLL estimates, histograms, verdict decisions, violation
-  * totals, duplicate keys — must match bit-for-bit.
+  * observe-fused stats + count-only hash-pair uniqueness) semantically
+  * identical to the composed reference forms
+  * ([[Validator.sourceStatsComposed]], [[Validator.violationsComposed]]).
+  * Sketch BYTES are exempt (KLL compaction is randomized and merge order
+  * differs between an exchange and an observe accumulator — assert
+  * verdict decisions, never sketch readouts); everything
+  * exact — counters, min/max, histograms, verdict decisions, violation
+  * rows, duplicate keys — must match bit-for-bit.
   */
 class FusedValidateSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -26,7 +26,15 @@ class FusedValidateSpec extends AnyFunSuite {
   lazy val df = SequenceSynth.sequences(spark, cfg).cache()
   lazy val dim = SequenceSynth.sourcesDim(spark, cfg)
 
-  lazy val classic = Validator.validate(spark, df, dim, suite)
+  // the reference report: composed stats + composed violation rows
+  lazy val classic = {
+    val stats = Validator.sourceStatsComposed(df, suite).collect()
+    Validator.ValidationReport(
+      Validator.buildVerdicts(spark, stats, dim.collect(),
+        Validator.dupStats(df, suite), suite),
+      Validator.violationsComposed(df, suite),
+      Validator.statsToDf(spark, stats))
+  }
   lazy val fused = Validator.validateOneScan(spark, df, dim, suite)
 
   // approx_distinct_docid is exempt with the sketch bytes: the datasketches
@@ -77,16 +85,15 @@ class FusedValidateSpec extends AnyFunSuite {
     assert(f.toSeq == c.toSeq)
   }
 
-  test("hash-first duplicate keys == direct groupBy, including null keys") {
+  test("hash-pair dupStats == direct groupBy over the non-NULL keys") {
     val withNulls = df.unionByName(
       df.limit(3).withColumn("doc_id", lit(null.asInstanceOf[String])))
-    val direct = Validator.duplicateKeys(withNulls)
-      .select("doc_id", "n").collect()
-      .map(r => (Option(r.getString(0)), r.getLong(1))).sortBy(_._1)
-    val hashed = Validator.duplicateKeysHashFirst(withNulls).collect()
-      .map(r => (Option(r.getString(0)), r.getLong(1))).sortBy(_._1)
-    assert(hashed.toSeq == direct.toSeq)
-    assert(direct.exists(_._1.isEmpty)) // the planted null group is seen
+    val direct = withNulls.filter(col("doc_id").isNotNull)
+      .groupBy("doc_id").count().filter(col("count") > 1)
+      .agg(count(lit(1)), sum(col("count") - 1)).collect()(0)
+    assert(direct.getLong(0) > 0)
+    assert(Validator.dupStats(withNulls, suite) ==
+      Some((direct.getLong(0), direct.getLong(1))))
   }
 
   test("violationsOut writes the violation rows as part of the one scan") {

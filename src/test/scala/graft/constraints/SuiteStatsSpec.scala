@@ -7,11 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
 import graft.sequences.SequenceSynth
 
-/** The fused [[SuiteStatsAgg]] must equal the composed-builtins stats
-  * plan field-for-field: exact for every counter/min/max/histogram AND
-  * for the HLL estimate (identical bytes feed identical sketches); KLL
-  * compared on n/min/max (compaction is internally randomized, so byte
-  * equality is not meaningful).
+/** The fused stats fold ([[Validator.observeStats]], run the way
+  * production runs it: observed on the violations scan) must equal the
+  * composed-builtins stats plan field-for-field: exact for every
+  * counter/min/max/histogram; KLL compared on n/min/max (compaction is
+  * internally randomized, so byte equality is not meaningful); the HLL
+  * estimate within sketch error, since the observe accumulator merges
+  * partials in a different order than an aggregation exchange (exact
+  * where the merge order is fixed: one input partition, or a corpus as
+  * small as the degenerate-rows one).
   */
 class SuiteStatsSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -23,15 +27,26 @@ class SuiteStatsSpec extends AnyFunSuite {
   private def bySource(df: org.apache.spark.sql.DataFrame): Map[String, Row] =
     df.collect().map(r => r.getAs[String]("source") -> r).toMap
 
+  /** The production stats path: observed on the violations count. */
+  private def observed(df: org.apache.spark.sql.DataFrame): Map[String, Row] = {
+    val (o, stats) = Validator.observeStats(df, suite)
+    Validator.violations(o, suite).count()
+    stats().map(r => r.getAs[String]("source") -> r).toMap
+  }
+
+  private def hllEstimate(r: Row): Double =
+    org.apache.datasketches.hll.HllSketch
+      .heapify(r.getAs[Array[Byte]]("hll_docid")).getEstimate
+
   test("fused suite stats equal the composed plan on the planted-violation corpus") {
     val df = SequenceSynth.sequences(spark, cfg).cache()
-    val fused = bySource(Validator.sourceStats(df, suite))
+    val fused = observed(df)
     val composed = bySource(Validator.sourceStatsComposed(df, suite))
     assert(fused.keySet == composed.keySet)
     for (s <- fused.keySet) {
       val f = fused(s); val c = composed(s)
       for (fld <- Seq("n_rows", "n_ntok_mismatch", "n_null_token", "n_oov_token",
-                      "n_ntok_bounds", "n_null_docid", "approx_distinct_docid"))
+                      "n_ntok_bounds", "n_null_docid"))
         assert(f.getAs[Long](fld) == c.getAs[Long](fld), s"$s.$fld")
       for (fld <- Seq("min_ntok", "max_ntok", "min_token", "max_token",
                       "min_docid_len", "max_docid_len"))
@@ -42,19 +57,31 @@ class SuiteStatsSpec extends AnyFunSuite {
       val ck = graft.stats.KllSketchAgg.fromBytes(c.getAs[Array[Byte]]("kll_ntok"))
       assert(fk.getN == ck.getN && fk.getMinItem == ck.getMinItem &&
         fk.getMaxItem == ck.getMaxItem, s"$s.kll")
-      // HLL bytes are representation-compatible with the union path
-      val fe = org.apache.datasketches.hll.HllSketch
-        .heapify(f.getAs[Array[Byte]]("hll_docid")).getEstimate
-      val ce = org.apache.datasketches.hll.HllSketch
-        .heapify(c.getAs[Array[Byte]]("hll_docid")).getEstimate
-      assert(fe == ce, s"$s.hll")
+      // HLL bytes are representation-compatible with the union path;
+      // different merge trees agree within lgK=12 error (~1.6% RSE)
+      val fe = hllEstimate(f); val ce = hllEstimate(c)
+      assert(math.abs(fe - ce) <= 0.05 * ce, s"$s.hll: $fe vs $ce")
+      val fa = f.getAs[Long]("approx_distinct_docid").toDouble
+      val ca = c.getAs[Long]("approx_distinct_docid").toDouble
+      assert(math.abs(fa - ca) <= 0.05 * ca, s"$s.approx: $fa vs $ca")
+    }
+  }
+
+  test("HLL estimates are exact when the merge order is fixed (one input partition)") {
+    val df = SequenceSynth.sequences(spark, cfg).coalesce(1).cache()
+    val fused = observed(df)
+    val composed = bySource(Validator.sourceStatsComposed(df, suite))
+    for (s <- fused.keySet) {
+      assert(fused(s).getAs[Long]("approx_distinct_docid") ==
+        composed(s).getAs[Long]("approx_distinct_docid"), s"$s.approx")
+      assert(hllEstimate(fused(s)) == hllEstimate(composed(s)), s"$s.hll")
     }
   }
 
   test("fused stats are partition-layout invariant (serialize/merge monoid)") {
     val df = SequenceSynth.sequences(spark, SequenceSynth.Config(rows = 5000)).cache()
-    val one = bySource(Validator.sourceStats(df.coalesce(1), suite))
-    val many = bySource(Validator.sourceStats(df.repartition(13), suite))
+    val one = observed(df.coalesce(1))
+    val many = observed(df.repartition(13))
     assert(one.keySet == many.keySet)
     for (s <- one.keySet) {
       for (fld <- SuiteStatsAgg.schema.fieldNames
@@ -106,13 +133,20 @@ class SuiteStatsSpec extends AnyFunSuite {
       .selectExpr("doc_id", "cast(tokens as array<int>) as tokens",
         "cast(n_tok as int) as n_tok", "source")
       .repartition(7).cache()
-    val fused = bySource(Validator.sourceStats(df, suite))
+    val fused = observed(df)
     val composed = bySource(Validator.sourceStatsComposed(df, suite))
     assert(fused.keySet == composed.keySet)
     for (s <- fused.keySet; fld <- SuiteStatsAgg.schema.fieldNames
-           if fld != "hll_docid" && fld != "kll_ntok" && fld != "hist_token")
+           if fld != "hll_docid" && fld != "kll_ntok" && fld != "hist_token"
+             && fld != "approx_distinct_docid")
       assert(Option(fused(s).getAs[Any](fld)) == Option(composed(s).getAs[Any](fld)),
         s"$s.$fld")
+    // seven input partitions: the observe and exchange merge trees differ
+    for (s <- fused.keySet) {
+      val f = fused(s).getAs[Long]("approx_distinct_docid").toDouble
+      val c = composed(s).getAs[Long]("approx_distinct_docid").toDouble
+      assert(math.abs(f - c) <= 0.05 * c, s"$s.approx: $f vs $c")
+    }
     for (s <- fused.keySet)
       assert(fused(s).getAs[scala.collection.Seq[Long]]("hist_token").toSeq ==
         composed(s).getAs[scala.collection.Seq[Long]]("hist_token").toSeq, s"$s.hist")
@@ -133,7 +167,7 @@ class SuiteStatsSpec extends AnyFunSuite {
     ).toDF("doc_id", "tokens", "n_tok", "source")
       .selectExpr("doc_id", "cast(tokens as array<int>) as tokens",
         "cast(n_tok as int) as n_tok", "source")
-    val fused = bySource(Validator.sourceStats(weird, suite))
+    val fused = observed(weird)
     val composed = bySource(Validator.sourceStatsComposed(weird, suite))
     assert(fused.keySet == composed.keySet)
     for (s <- fused.keySet; fld <- SuiteStatsAgg.schema.fieldNames

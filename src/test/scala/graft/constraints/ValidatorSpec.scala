@@ -14,7 +14,7 @@ class ValidatorSpec extends AnyFunSuite {
     vocabSize = cfg.vocabSize, minNtok = cfg.minNtok, maxNtok = cfg.maxNtok + 1)
   lazy val df = SequenceSynth.sequences(spark, cfg).cache()
   lazy val dim = SequenceSynth.sourcesDim(spark, cfg)
-  lazy val report = Validator.validate(spark, df, dim, suite)
+  lazy val report = Validator.validateOneScan(spark, df, dim, suite)
   lazy val verdicts = report.verdicts.collect()
     .map(r => (r.getString(0), r.getString(1)) -> r.getBoolean(2)).toMap
   lazy val expected = SequenceSynth.expectedViolationCounts(cfg)
@@ -39,7 +39,7 @@ class ValidatorSpec extends AnyFunSuite {
     val shifted = (0 until 1000).map { i =>
       (f"drift$i%05d", Seq.fill(40)(cfg.vocabSize - 1 - (i % 100)), 40, "driftsrc")
     }.toDF("doc_id", "tokens", "n_tok", "source")
-    val rep = Validator.validate(spark, df.unionByName(shifted), dim, suite)
+    val rep = Validator.validateOneScan(spark, df.unionByName(shifted), dim, suite)
     val v = rep.verdicts.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getBoolean(2)).toMap
     assert(!v(("driftsrc", "token_drift")))
@@ -52,7 +52,7 @@ class ValidatorSpec extends AnyFunSuite {
     assert(verdicts(("web", "completeness")))
     assert(verdicts(("chat", "completeness")))
     // drop one source's data entirely -> its dim row fails completeness
-    val rep = Validator.validate(spark, df.filter(col("source") =!= "books"), dim, suite)
+    val rep = Validator.validateOneScan(spark, df.filter(col("source") =!= "books"), dim, suite)
     val v = rep.verdicts.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getBoolean(2)).toMap
     assert(!v(("books", "completeness")))
@@ -75,27 +75,27 @@ class ValidatorSpec extends AnyFunSuite {
     assert(got == fullTop)
   }
 
-  test("hot-source skew: range balance evens partitions; verdicts layout-invariant") {
+  test("hot-source skew: verdicts are layout-invariant") {
     val hotCfg = SequenceSynth.Config(rows = 20000,
       sourceWeights = Seq("web" -> 0.94, "books" -> 0.02, "code" -> 0.02, "chat" -> 0.02))
     val hot = SequenceSynth.sequences(spark, hotCfg)
       // pathological layout: everything hashed on source -> one fat partition
       .repartition(16, col("source"))
       .cache()
-    val balanced = Validator.balance(hot, 16).cache()
+    val even = hot.repartition(16).cache()
     def partSizes(d: org.apache.spark.sql.DataFrame): Seq[Long] =
       d.groupBy(spark_partition_id()).count().collect().map(_.getLong(1)).toSeq
     val before = partSizes(hot)
-    val after = partSizes(balanced)
+    val after = partSizes(even)
     assert(before.max >= 0.9 * 20000, s"hot layout not skewed: $before")
-    assert(after.max <= 3000, s"range partitioner left a straggler: $after")
+    assert(after.max <= 3000, s"round-robin layout left a straggler: $after")
     // results are layout-invariant
     val hotDim = SequenceSynth.sourcesDim(spark, hotCfg)
     val hotSuite = Validator.SuiteConfig(vocabSize = hotCfg.vocabSize,
       minNtok = hotCfg.minNtok, maxNtok = hotCfg.maxNtok + 1)
-    val a = Validator.validate(spark, hot, hotDim, hotSuite).verdicts.collect()
+    val a = Validator.validateOneScan(spark, hot, hotDim, hotSuite).verdicts.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getBoolean(2)).toMap
-    val b = Validator.validate(spark, balanced, hotDim, hotSuite).verdicts.collect()
+    val b = Validator.validateOneScan(spark, even, hotDim, hotSuite).verdicts.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getBoolean(2)).toMap
     assert(a == b)
   }
@@ -107,21 +107,21 @@ class ValidatorSpec extends AnyFunSuite {
     // a dim WITHOUT the spec columns produces no dim_bounds verdicts
     import spark.implicits._
     val bareDim = Seq("web", "books", "code", "chat").toDF("source")
-    val rep = Validator.validate(spark, df, bareDim, suite)
+    val rep = Validator.validateOneScan(spark, df, bareDim, suite)
     assert(!rep.verdicts.collect().exists(_.getString(1) == "dim_bounds"))
     // a NULL spec VALUE skips that source's check (must not unbox to 0
     // and fail everything); sources with full specs are still checked
     val nullSpecDim = dim.withColumn("vocab_size",
       when(col("source") === "books", lit(null).cast("int"))
         .otherwise(col("vocab_size")))
-    val rep2 = Validator.validate(spark, df, nullSpecDim, suite)
+    val rep2 = Validator.validateOneScan(spark, df, nullSpecDim, suite)
     val db = rep2.verdicts.collect()
       .filter(_.getString(1) == "dim_bounds").map(_.getString(0)).toSet
     assert(!db.contains("books") && db.contains("web"), db.toString)
   }
 
   test("suggested DDL is the narrowest column fitting the observed stats") {
-    val stats = Validator.sourceStats(df, suite).collect()
+    val stats = report.sourceStats.collect()
     val ddl = Validator.suggestDdl(stats)
       .map { case (s, c, _, d) => (s, c) -> d }.toMap
     // doc_id is a fixed-width hex-ish string -> varchar(maxLen)
@@ -147,18 +147,23 @@ class ValidatorSpec extends AnyFunSuite {
   }
 
   test("exact global duplicate detection matches planted ground truth") {
-    val dups = Validator.duplicateKeys(df)
-    assert(dups.count() == expected("uniqueness"))
-    assert(dups.agg(max("n")).collect()(0).getLong(0) == 2L)
+    // n keys duplicated with n extra rows: every duplicate key occurs twice
+    val planted = expected("uniqueness")
+    assert(Validator.dupStats(df, suite) == Some((planted, planted)))
   }
 
-  test("salted two-phase duplicate counting agrees with the direct groupBy") {
-    val direct = Validator.duplicateKeys(df)
-      .select(col("doc_id"), col("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Validator.duplicateKeysSalted(df, saltBuckets = 16)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == direct)
+  test("embedded uniqueness: NULL doc_ids fail null_docid, never count as a duplicate key") {
+    val withNulls = df.unionByName(df.filter(col("source") === "books").limit(3)
+      .withColumn("doc_id", lit(null).cast("string")))
+    val v = Validator.validateOneScan(spark, withNulls, dim, suite).verdicts.collect()
+      .map(r => (r.getString(0), r.getString(1)) -> (r.getBoolean(2), r.getString(3)))
+      .toMap
+    val planted = expected("uniqueness")
+    assert(v(("*", "uniqueness"))._2 ==
+      s"$planted duplicated doc_ids ($planted extra rows)")
+    assert(!v(("books", "null_docid"))._1, v(("books", "null_docid"))._2)
+    assert(v(("books", "null_docid"))._2.startsWith("3/"))
+    assert(v(("web", "null_docid"))._1)
   }
 
   test("declared-fit (wider?) verdicts: defaults pass, tight DDL fails") {
@@ -168,7 +173,7 @@ class ValidatorSpec extends AnyFunSuite {
     val tight = suite.copy(declaredDdl = Map(
       "doc_id" -> "varchar(8)",       // doc ids are 17 chars -> truncation
       "n_tok" -> "smallint"))         // fits
-    val rep = Validator.validate(spark, df, dim, tight)
+    val rep = Validator.validateOneScan(spark, df, dim, tight)
     val vs = rep.verdicts.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getBoolean(2)).toMap
     assert(!vs(("web", "declared_fit_doc_id")))
@@ -178,7 +183,7 @@ class ValidatorSpec extends AnyFunSuite {
   test("a clean table passes every constraint") {
     val clean = SequenceSynth.Config(rows = 5000, dupEvery = 0, orphanEvery = 0,
       ntokMismatchEvery = 0, oovEvery = 0, nullTokEvery = 0, driftSource = None)
-    val rep = Validator.validate(spark,
+    val rep = Validator.validateOneScan(spark,
       SequenceSynth.sequences(spark, clean),
       SequenceSynth.sourcesDim(spark, clean),
       Validator.SuiteConfig(vocabSize = clean.vocabSize,

@@ -37,7 +37,7 @@ class StreamingValidatorSpec extends AnyFunSuite {
     val q1 = StreamingValidator.start(spark, inputDir, stateDir, dim, suite)
     q1.awaitTermination()
     val (b1, stats1) = StreamingValidator.readStats(spark, stateDir).get
-    val batchA = Validator.sourceStats(halfA, suite).collect()
+    val batchA = Validator.validateOneScan(spark, halfA, dim, suite).sourceStats.collect()
       .map(r => r.getAs[String]("source") -> r).toMap
     stats1.foreach { r =>
       val exp = batchA(r.getAs[String]("source"))
@@ -52,7 +52,8 @@ class StreamingValidatorSpec extends AnyFunSuite {
     assert(b2 > b1)
 
     // cumulative stats equal a one-shot batch pass over the full corpus
-    val batchFull = Validator.sourceStats(full, suite).collect()
+    val batchReport = Validator.validateOneScan(spark, full, dim, suite)
+    val batchFull = batchReport.sourceStats.collect()
       .map(r => r.getAs[String]("source") -> r).toMap
     assert(stats2.length == batchFull.size)
     stats2.foreach { r =>
@@ -72,8 +73,7 @@ class StreamingValidatorSpec extends AnyFunSuite {
     // verdict DECISIONS match the batch suite (checks they share)
     val streamVerdicts = spark.read.parquet(StreamingValidator.verdictsPath(stateDir))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getBoolean(2)).toMap
-    val batchVerdicts = Validator.validate(spark, full, dim, suite)
-      .verdicts.collect()
+    val batchVerdicts = batchReport.verdicts.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getBoolean(2)).toMap
     batchVerdicts.foreach { case (key @ (_, check), pass) =>
       if (check != "uniqueness") // stream reports uniqueness_approx instead
