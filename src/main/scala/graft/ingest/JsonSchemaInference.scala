@@ -3,7 +3,6 @@ package graft.ingest
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 
-import graft.json.JsonParser
 import graft.types._
 
 /** Distributed schema inference: the reference's whole-dataset fold
@@ -16,6 +15,11 @@ import graft.types._
   *
   * Parse failures do NOT throw (parser.clj:16-28 semantics): they are
   * counted into the buffer and reported alongside the schema.
+  *
+  * The fold is fed by [[TypeExtractor.extractLine]], one walk over each
+  * line's Jackson tokens straight to a SchemaType. `JsonParser.parseJsonLine`
+  * + `extract` is its reference twin: it builds the JValue tree that
+  * value consumers need, and ExtractLineSpec pins the two equal.
   */
 object JsonSchemaInference {
 
@@ -34,9 +38,8 @@ object JsonSchemaInference {
     def zero: Buf = Buf(None, 0L, 0L)
 
     def reduce(b: Buf, line: String): Buf =
-      JsonParser.parseJsonLine(line) match {
-        case Right(obj) =>
-          val t = extractor.extract(obj)
+      extractor.extractLine(line) match {
+        case Right(t) =>
           Buf(Some(b.schema.fold(t)(s => policy.mergeTwo(s, t))), b.seen + 1, b.failed)
         case Left(_) =>
           Buf(b.schema, b.seen + 1, b.failed + 1)

@@ -1,6 +1,6 @@
 package graft.json
 
-import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.core.{JsonFactory, JsonProcessingException}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import graft.types._
@@ -23,6 +23,11 @@ import scala.util.matching.Regex
   */
 object JsonParser {
   private val mapper = new ObjectMapper()
+
+  /** The mapper's own factory: same parser features and read constraints
+    * as [[parseJsonLine]], for token-level readers of the same lines.
+    */
+  private[graft] def factory: JsonFactory = mapper.getFactory
 
   // strict int/real regexes with no leading zeros (parser.clj:62-65)
   private val intRe: Regex = "(^[\\-]?[1-9]\\d*$)|(^[\\-]?0$)".r

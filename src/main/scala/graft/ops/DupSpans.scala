@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -62,19 +63,35 @@ object DupSpans {
       .select(col("id"), col("span_start"), col("span_words"))
   }
 
-  private def windowsOf(df: DataFrame, textCol: String, idCol: String,
-                        windowWords: Int, materialize: Boolean): Cached[DataFrame] = {
+  /** The split count of a scan-rooted frame (projections and filters over
+    * one file scan), read from its physical plan without executing it;
+    * None for any other frame. `df.rdd` would instead run the upstream
+    * stages under AQE at plan time.
+    */
+  private def scanSplits(df: DataFrame): Option[Int] = {
+    val plan = df.queryExecution.sparkPlan
+    val scanRooted = plan.find {
+      case _: ProjectExec | _: FilterExec | _: FileSourceScanExec => false
+      case _ => true
+    }.isEmpty
+    if (scanRooted) plan.collectFirst { case s: FileSourceScanExec => s.inputRDD.getNumPartitions }
+    else None
+  }
+
+  private[graft] def windowsOf(df: DataFrame, textCol: String, idCol: String,
+                               windowWords: Int, materialize: Boolean): Cached[DataFrame] = {
     // unsplittable-input fan-out (guide §2.5): a corpus that arrives as
     // one sub-split file would run the whole window walk in ONE task;
     // when the scan plans fewer partitions than the session's default
     // parallelism, round-robin repartition first. No-op at warehouse
-    // scale (scans plan >= cores splits); results are partition-order
-    // invariant here (counts / min / max / min-struct aggregates only).
+    // scale (scans plan >= cores splits) and for frames that are not
+    // scan-rooted; results are partition-order invariant here (counts /
+    // min / max / min-struct aggregates only).
     // SPARK_GRAFT_FANOUT=0 disables (A/B lever).
     val target = df.sparkSession.sparkContext.defaultParallelism
     val wide =
       if (!sys.env.get("SPARK_GRAFT_FANOUT").contains("0") &&
-          df.rdd.getNumPartitions < target) df.repartition(target)
+          scanSplits(df).exists(_ < target)) df.repartition(target)
       else df
     val w = wide.select(col(idCol).as("id"),
       size(split(col(textCol), " ")).as("n_words"),

@@ -89,16 +89,14 @@ object ExampleData {
     while (!targets.subsetOf(seen) && rows.hasNext) {
       val row = rows.next()
       count += 1
-      JsonParser.parseJsonLine(row).toOption.foreach { obj =>
-        extractor.extract(obj) match {
-          case d: DocT =>
-            val exhibited = RepresentativeSample.exhibitedPairs(d)
-            if (exhibited.exists(p => !seen.contains(p))) { // accept?
-              acc.append(row)
-              seen = seen ++ exhibited // mark-props-seen
-            }
-          case _ => ()
-        }
+      extractor.extractLine(row).toOption.foreach {
+        case d: DocT =>
+          val exhibited = RepresentativeSample.exhibitedPairs(d)
+          if (exhibited.exists(p => !seen.contains(p))) { // accept?
+            acc.append(row)
+            seen = seen ++ exhibited // mark-props-seen
+          }
+        case _ => ()
       }
     }
     (acc, count)

@@ -51,13 +51,11 @@ object RepresentativeSample {
       // scan that dominates this job)
       val extractor = new TypeExtractor(StrictMerge, dateFormats)
       it.flatMap { case (line, idx) =>
-        JsonParser.parseJsonLine(line).toOption.toSeq.flatMap { obj =>
-          extractor.extract(obj) match {
-            case d: DocT =>
-              exhibitedPairs(d).filter(targetB.value.contains)
-                .map { case (p, k) => (p, k, idx, line) }
-            case _ => Nil
-          }
+        extractor.extractLine(line).toOption.toSeq.flatMap {
+          case d: DocT =>
+            exhibitedPairs(d).filter(targetB.value.contains)
+              .map { case (p, k) => (p, k, idx, line) }
+          case _ => Nil
         }
       }
     }.toDF("property", "kind", "row_idx", "line")

@@ -33,9 +33,11 @@ object CcScale {
     val shape = sys.env.getOrElse("CC_SHAPE", "random")
     val raw =
       if (shape == "clusters")
+        // edges 2k and 2k+1 chain nodes 3k, 3k+1, 3k+2 (integer division:
+        // `/` alone divides as doubles)
         spark.range(nEdges).select(
-          ((col("id") / 2) * 3 + pmod(col("id"), lit(2))).as("u"),
-          ((col("id") / 2) * 3 + pmod(col("id"), lit(2)) + 1).as("v"))
+          (floor(col("id") / 2).cast("long") * 3 + pmod(col("id"), lit(2))).as("u"),
+          (floor(col("id") / 2).cast("long") * 3 + pmod(col("id"), lit(2)) + 1).as("v"))
       else {
         val rand = spark.range(nEdges).select(
           pmod(xxhash64(col("id"), lit(1)), lit(nNodes)).as("u"),

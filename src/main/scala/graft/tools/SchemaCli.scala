@@ -1,6 +1,5 @@
 package graft.tools
 
-import graft.json.JsonParser
 import graft.types._
 
 import scala.io.Source
@@ -60,12 +59,11 @@ object SchemaCli {
             schema = Some(schema.fold(t)(s => policy.mergeTwo(s, t)))
           case None =>
             n += 1
-            JsonParser.parseJsonLine(line) match {
+            extractor.extractLine(line) match {
               case Left(err) =>
                 failed += 1
                 System.err.println(s"Line #: $n, $err\n$line\n---------")
-              case Right(obj) =>
-                val t = extractor.extract(obj)
+              case Right(t) =>
                 schema = Some(schema.fold(t)(s => policy.mergeTwo(s, t)))
             }
         }

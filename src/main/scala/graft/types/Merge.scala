@@ -47,10 +47,15 @@ sealed trait MergePolicy extends Serializable {
   protected def mergeable(a: SchemaType, b: SchemaType): Boolean
 
   final def reducer(types: Seq[SchemaType]): Seq[SchemaType] =
-    types.foldLeft(Vector.empty[SchemaType]) { (merged, t) =>
-      val (compatibles, incompatibles) = merged.partition(m => mergeable(t, m))
-      incompatibles :+ compatibles.foldLeft(t)(mergeTwo)
-    }
+    types.foldLeft(Vector.empty[SchemaType])(reduceInto)
+
+  /** One step of [[reducer]]: fold `t` into the clusters reduced so far.
+    * Lets a streaming caller reduce elements as they arrive.
+    */
+  final def reduceInto(merged: Vector[SchemaType], t: SchemaType): Vector[SchemaType] = {
+    val (compatibles, incompatibles) = merged.partition(m => mergeable(t, m))
+    incompatibles :+ compatibles.foldLeft(t)(mergeTwo)
+  }
 
   final def mergeAll(types: Iterable[SchemaType]): SchemaType =
     types.reduce(mergeTwo)
@@ -75,12 +80,14 @@ sealed trait MergePolicy extends Serializable {
   /** Collection normalization (merge_common.clj:162-174): empty -> nothing
     * sentinel, singleton -> that type, else a Union of the reduced set.
     */
-  final def turnIntoCollection(types: Seq[SchemaType]): CollT = {
-    val unique = reducer(types)
+  final def turnIntoCollection(types: Seq[SchemaType]): CollT =
+    reducedCollection(reducer(types))
+
+  /** [[turnIntoCollection]] of element types already run through [[reducer]]. */
+  final def reducedCollection(unique: Seq[SchemaType]): CollT =
     if (unique.isEmpty) CollT.nothing
     else if (unique.size == 1) CollT.of(unique.head)
     else CollT.of(UnionT(unique.toSet))
-  }
 
   /** Per-key full-outer merge of two documents' field maps
     * (reference `merge-with`, merge.clj:52-55 / simplify.clj:36-37).

@@ -271,6 +271,38 @@ class PlanSpec extends AnyFunSuite {
     h.close()
   }
 
+  test("dupSpans fan-out: fires on a single-split scan, runs no job on a frame with an exchange") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("planspec-fanout").toString + "/docs"
+    (0 until 60).map(i => (i.toLong, s"shared boiler plate words here tail$i"))
+      .toDF("id", "text").coalesce(1).write.parquet(dir)
+    val scan = spark.read.parquet(dir)
+    assert(scan.rdd.getNumPartitions == 1)
+    def roundRobin(df: DataFrame): Boolean =
+      graft.ops.DupSpans.windowsOf(df, "text", "id", 4, materialize = false)
+        .value.queryExecution.sparkPlan.toString.contains("RoundRobinPartitioning")
+    assert(roundRobin(scan.filter(col("id") >= 0)), "a one-split scan must fan out")
+
+    // not scan-rooted: the gate must neither fan out nor execute upstream
+    // stages (AQE runs them when `.rdd` is asked for partitions)
+    val grouped = scan.groupBy(col("id")).agg(first(col("text")).as("text"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val fannedOut =
+      try {
+        val r = roundRobin(grouped)
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, "windowsOf launched a job at plan time")
+    assert(!fannedOut, "a frame that is not scan-rooted must be left as is")
+  }
+
   test("miner bucket caps count via groupBy partial agg, not a by-key window") {
     import spark.implicits._
     val docs = (0 until 50).map(i => (i.toLong, s"some words $i repeated here " * 5))

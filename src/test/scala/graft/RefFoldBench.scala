@@ -1,10 +1,14 @@
 package graft
 
+import graft.json.JsonRender
 import graft.types._
 
 /** Single-threaded extract+merge fold rate over reference-shaped records
   * — the ported reference algorithm itself (A1-A8), measured to ground
   * BENCH/BASELINE.md's comparison: `sbt -batch "Test/runMain graft.RefFoldBench"`.
+  * Times two folds over the same records: `extract` over parsed JValue
+  * trees (the reference algorithm), and `extractLine` over the records
+  * rendered as JSON lines (parse included, the engine's inference path).
   */
 object RefFoldBench {
   def main(args: Array[String]): Unit = {
@@ -17,15 +21,24 @@ object RefFoldBench {
         "n_tok" -> JInt(BigInt(180)),
         "source" -> JStr(if (i % 10 < 8) "web" else "books"))
     }
+    val lines = records.map(JsonRender.compact)
     val extractor = TypeExtractor.merging()
-    // warm-up + 3 measured runs
-    (0 until 4).foreach { run =>
-      val t0 = System.nanoTime()
-      val merged = records.iterator.map(extractor.extract)
+    fold("extract + mergeTwo (JValue trees)", n) {
+      records.iterator.map(extractor.extract).reduce(StrictMerge.mergeTwo)
+    }
+    fold("extractLine + mergeTwo (JSON lines)", n) {
+      lines.iterator.map(l => extractor.extractLine(l).toOption.get)
         .reduce(StrictMerge.mergeTwo)
-      val secs = (System.nanoTime() - t0) / 1e9
-      if (run > 0)
-        println(f"run $run: $n records in $secs%.2f s -> ${n / secs}%.0f rec/s/core (${SchemaType.render(merged).take(60)}...)")
     }
   }
+
+  /** Warm-up + 3 measured runs of one fold over `n` records. */
+  private def fold(label: String, n: Int)(run: => SchemaType): Unit =
+    (0 until 4).foreach { i =>
+      val t0 = System.nanoTime()
+      val merged = run
+      val secs = (System.nanoTime() - t0) / 1e9
+      if (i > 0)
+        println(f"$label run $i: $n records in $secs%.2f s -> ${n / secs}%.0f rec/s/core (${SchemaType.render(merged).take(60)}...)")
+    }
 }

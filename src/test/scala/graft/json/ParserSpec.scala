@@ -1,11 +1,26 @@
 package graft.json
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.ingest.JsonSchemaInference
 import graft.types._
 import graft.types.JValue._
 
-/** Parser adversarials ported from the reference's parser_test.clj. */
+/** Parser adversarials ported from the reference's parser_test.clj. Every
+  * line also runs through the token walk (`TypeExtractor.extractLine`),
+  * which must agree with the tree (ExtractLineSpec.twin).
+  */
 class ParserSpec extends AnyFunSuite {
+
+  private val extractors = Seq(
+    TypeExtractor.merging(), TypeExtractor.simplifying(Seq("yyyy-MM-dd")))
+
+  /** `parseJsonLine(line)`, after checking both paths agree on it. */
+  private def parse(line: String): Either[String, JObj] = {
+    extractors.foreach(ExtractLineSpec.twin(_, line))
+    JsonParser.parseJsonLine(line)
+  }
+
+  private val emptyDoc: Either[String, SchemaType] = Right(DocT(Map.empty))
 
   test("stringified-number coercion (parser_test.clj:22-42)") {
     // 64-bit boundary parses as a number
@@ -29,7 +44,7 @@ class ParserSpec extends AnyFunSuite {
     // is a stringified array of stringified objects, escaped once more
     val line =
       """{"id": 7, "payload": "[\"{\\\"a\\\": 1, \\\"b\\\": \\\"x\\\"}\", \"{\\\"a\\\": 2}\"]"}"""
-    val parsed = JsonParser.parseJsonLine(line)
+    val parsed = parse(line)
     assert(parsed.isRight)
     val obj = parsed.toOption.get
     assert(obj.fields("id") == JInt(BigInt(7)))
@@ -44,7 +59,7 @@ class ParserSpec extends AnyFunSuite {
 
   test("embedded unescaped JSON strings are revived") {
     val line = """{"a": "{\"x\": 1}", "b": "[1, 2, 3]", "c": "42", "d": "plain"}"""
-    val obj = JsonParser.parseJsonLine(line).toOption.get
+    val obj = parse(line).toOption.get
     assert(obj.fields("a") == JValue.obj("x" -> JInt(BigInt(1))))
     assert(obj.fields("b") == JValue.arr(JInt(1), JInt(2), JInt(3)))
     assert(obj.fields("c") == JInt(BigInt(42)))
@@ -52,8 +67,8 @@ class ParserSpec extends AnyFunSuite {
   }
 
   test("malformed line goes to the error channel, not an exception (parser.clj:16-28)") {
-    assert(JsonParser.parseJsonLine("""{"a": """).isLeft)
-    assert(JsonParser.parseJsonLine("""not json at all{""").isLeft)
+    assert(parse("""{"a": """).isLeft)
+    assert(parse("""not json at all{""").isLeft)
   }
 
   test("pinned deviation: strings needing >=2 peels of the SAME string are revived") {
@@ -64,12 +79,12 @@ class ParserSpec extends AnyFunSuite {
     // peeling, so the loop is the pinned semantics (JsonParser.scala
     // parseRevived doc).
     val line = """{"deep": "{\\\\\\\"a\\\\\\\":1}"}"""
-    val obj = JsonParser.parseJsonLine(line).toOption.get
+    val obj = parse(line).toOption.get
     assert(obj.fields("deep") == JValue.obj("a" -> JInt(BigInt(1))))
   }
 
   test("values that merely look bracketed but fail to parse stay strings") {
-    val obj = JsonParser.parseJsonLine("""{"a": "[not, valid", "b": "[not valid]"}""")
+    val obj = parse("""{"a": "[not, valid", "b": "[not valid]"}""")
       .toOption.get
     assert(obj.fields("a") == JStr("[not, valid"))
     assert(obj.fields("b") == JStr("[not valid]"))
@@ -85,11 +100,51 @@ class ParserSpec extends AnyFunSuite {
       )
     }
     val extractor = TypeExtractor.merging()
-    val types = lines.map(l => extractor.extract(JsonParser.parseJsonLine(l).toOption.get))
+    val types = lines.map(l => extractor.extract(parse(l).toOption.get))
     val merged = StrictMerge.mergeAll(types)
     merged match {
       case UnionT(ts) => assert(ts.size == 2) // the two record shapes
       case other      => fail(s"expected a 2-branch union, got $other")
+    }
+  }
+
+  // Implicit in Jackson's readTree (2.21) until pinned here; the token
+  // walk reproduces each.
+
+  test("pinned: a blank line is the empty document, seen and not failed") {
+    Seq("", "   ", "\t").foreach { l =>
+      assert(parse(l) == Right(JObj(Map.empty)))
+      assert(TypeExtractor.merging().extractLine(l) == emptyDoc)
+    }
+    val agg = new JsonSchemaInference.SchemaAgg(StrictMerge, Nil)
+    val b = Seq("", """{"a": 1}""", "{").foldLeft(agg.zero)(agg.reduce)
+    assert(b.seen == 3 && b.failed == 1)
+    assert(b.schema.contains(UnionT.of(DocT(Map.empty), DocT(Map("a" -> IntT(1, 1))))))
+  }
+
+  test("pinned: content after the first JSON value is ignored") {
+    Seq("""{"a": 1} xyz""", """{"a": 1}}""", """{"a": 1} {"b": 2}""", """{"a": 1}]""")
+      .foreach(l => assert(parse(l) == Right(obj("a" -> 1)), l))
+    assert(TypeExtractor.merging().extractLine("""{"a": 1} xyz""") ==
+      Right(DocT(Map("a" -> IntT(1, 1)))))
+  }
+
+  test("pinned: a duplicate key keeps its last value") {
+    assert(parse("""{"a": 1, "a": "x"}""") == Right(obj("a" -> "x")))
+    assert(parse("""{"a": {"b": 1, "b": [true]}}""") ==
+      Right(obj("a" -> obj("b" -> arr(true)))))
+    assert(TypeExtractor.merging().extractLine("""{"a": 1, "b": 2, "a": "xy"}""") ==
+      Right(DocT(Map("a" -> StrT(2, 2), "b" -> IntT(2, 2)))))
+  }
+
+  test("pinned: a non-object value is the empty document, a malformed one is Left") {
+    Seq("[1, 2]", "\"s\"", "3", "null", "true", """[{"a": 1}]""").foreach { l =>
+      assert(parse(l) == Right(JObj(Map.empty)), l)
+      assert(TypeExtractor.merging().extractLine(l) == emptyDoc, l)
+    }
+    Seq("[1, 2", "[1, ]", "\"open", "1x", """{"a" 1}""", """[{"a": 1]""").foreach { l =>
+      assert(parse(l).isLeft, l)
+      assert(TypeExtractor.merging().extractLine(l).isLeft, l)
     }
   }
 }

@@ -13,9 +13,9 @@ class ExtractSpec extends AnyFunSuite {
 
   val sniffer = new DateSniffer(Seq(pattern1, pattern2))
   def me(v: JValue): SchemaType =
-    new TypeExtractor(StrictMerge, Seq(pattern1, pattern2)).extract(v)
+    twinExtract(new TypeExtractor(StrictMerge, Seq(pattern1, pattern2)), v)
   def se(v: JValue): SchemaType =
-    new TypeExtractor(SimplifyMerge, Seq(pattern1, pattern2)).extract(v)
+    twinExtract(new TypeExtractor(SimplifyMerge, Seq(pattern1, pattern2)), v)
 
   test("date predicate quirks (extract_test.clj:29-43)") {
     assert(sniffer.isDate("2013-01-01"))

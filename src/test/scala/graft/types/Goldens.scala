@@ -10,9 +10,17 @@ object Goldens {
   val dateFormatPattern = "yyyy-MM-dd"
 
   def mergeExtract(v: JValue): SchemaType =
-    new TypeExtractor(StrictMerge, Seq(dateFormatPattern)).extract(v)
+    twinExtract(new TypeExtractor(StrictMerge, Seq(dateFormatPattern)), v)
   def simplifyExtract(v: JValue): SchemaType =
-    new TypeExtractor(SimplifyMerge, Seq(dateFormatPattern)).extract(v)
+    twinExtract(new TypeExtractor(SimplifyMerge, Seq(dateFormatPattern)), v)
+
+  /** `ex.extract(v)`, after checking the token walk against its tree twin
+    * on `{"v": v}` as a JSON line (ExtractLineSpec.twin).
+    */
+  def twinExtract(ex: TypeExtractor, v: JValue): SchemaType = {
+    ExtractLineSpec.twin(ex, graft.json.JsonRender.compact(obj("v" -> v)))
+    ex.extract(v)
+  }
 
   // scalar-expressions [nil true "Hello" 6 "2013-01-01" 3.14]
   val scalarTypes: Map[String, SchemaType] = Map(
