@@ -1110,25 +1110,15 @@ object Queries {
     val idxDir = q40IndexDir(dir)
     val fs = new org.apache.hadoop.fs.Path(idxDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // completeness gets its OWN marker, created only AFTER the write
-    // returns: round 3's probe checked the writer's _SUCCESS (absent
-    // under the then-dynamic partitioned overwrite — the index silently
-    // rebuilt on EVERY run), and a bare content check would go the other
-    // way (reuse a partially-written dir after a crashed build). The
-    // explicit marker stays correct regardless of the writer's commit
-    // artifacts (writeIndex is a static overwrite since round 5).
-    val marker = fs.makeQualified(
-      new org.apache.hadoop.fs.Path(s"$idxDir/_GRAFT_COMPLETE"))
-    val built =
-      if (fs.exists(marker)) false
-      else {
-        val base = tbl(spark, dir, "documents")
-          .filter(pmod(col("doc_id"), lit(10)) =!= 0)
-        graft.ops.IncrementalDedup.writeIndex(base, "text", "doc_id", idxDir,
-          shingleK, perms, bands)
-        fs.create(marker, true).close()
-        true
-      }
+    // writeIndex commits the index as its last step; an uncommitted dir
+    // (a crashed build) is rebuilt
+    val built = !graft.lineage.Commit.committed(fs, idxDir)
+    if (built) {
+      val base = tbl(spark, dir, "documents")
+        .filter(pmod(col("doc_id"), lit(10)) =!= 0)
+      graft.ops.IncrementalDedup.writeIndex(base, "text", "doc_id", idxDir,
+        shingleK, perms, bands)
+    }
     (idxDir, built)
   }
 

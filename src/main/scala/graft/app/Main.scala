@@ -279,7 +279,7 @@ object Main {
         val inputs = graft.lineage.Checkpoint.inputPartitions(spark, input)
         inputs.sortBy(_.source).foreach { pl =>
           graft.lineage.Checkpoint
-            .readManifestInfo(spark, statePath, pl.source) match {
+            .readManifest(spark, statePath, pl.source) match {
             case Some((Some(fp), n)) if fp == pl.fingerprint =>
               println(f"  state ${pl.source}%-12s current  " +
                 s"n_rows=${n.map(_.toString).getOrElse("?")}")

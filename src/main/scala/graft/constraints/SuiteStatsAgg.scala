@@ -3,6 +3,7 @@ package graft.constraints
 import org.apache.datasketches.hll.{HllSketch, Union => HllUnion}
 import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -115,7 +116,7 @@ object SuiteStatsAgg {
   }
 
   /** Buffer -> stats struct. */
-  private[constraints] def evalBuf(buf: Buf): InternalRow = {
+  private[graft] def evalBuf(buf: Buf): InternalRow = {
     def optI(seen: Boolean, v: Int): Any = if (seen) Int.box(v) else null
     InternalRow(
       buf.nRows, buf.nMismatch, buf.nNullTok, buf.nOov, buf.nBounds,
@@ -195,6 +196,29 @@ object SuiteStatsAgg {
   }
 
   object Buf {
+    /** A stats row ([[schema]] fields, e.g. persisted stream state) back
+      * into a buffer; a NULL min/max means the source saw no such value.
+      */
+    def fromRow(r: Row, kllK: Int): Buf = {
+      val hist = r.getAs[scala.collection.Seq[Long]]("hist_token")
+      val b = new Buf(hist.length, kllK)
+      b.nRows = r.getAs[Long]("n_rows"); b.nMismatch = r.getAs[Long]("n_ntok_mismatch")
+      b.nNullTok = r.getAs[Long]("n_null_token"); b.nOov = r.getAs[Long]("n_oov_token")
+      b.nBounds = r.getAs[Long]("n_ntok_bounds"); b.nNullDocid = r.getAs[Long]("n_null_docid")
+      def range(f: String, set: (Int, Int) => Unit): Boolean = {
+        val mn = r.getAs[Integer](s"min_$f")
+        if (mn != null) set(mn, r.getAs[Integer](s"max_$f"))
+        mn != null
+      }
+      b.seenNtok = range("ntok", (mn, mx) => { b.minNtok = mn; b.maxNtok = mx })
+      b.seenTok = range("token", (mn, mx) => { b.minTok = mn; b.maxTok = mx })
+      b.seenDLen = range("docid_len", (mn, mx) => { b.minDLen = mn; b.maxDLen = mx })
+      hist.copyToArray(b.hist)
+      b.hll = HllSketch.heapify(r.getAs[Array[Byte]]("hll_docid"))
+      b.kll = KllDoublesSketch.heapify(Memory.wrap(r.getAs[Array[Byte]]("kll_ntok")))
+      b
+    }
+
     def fromBytes(bytes: Array[Byte], bins: Int, kllK: Int): Buf = {
       val bb = java.nio.ByteBuffer.wrap(bytes)
       val b = new Buf(bins, kllK)

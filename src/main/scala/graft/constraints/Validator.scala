@@ -214,27 +214,9 @@ object Validator {
       // observed-vs-declared truncation risk: the reference's README
       // use-case (README.md:86-104), evaluated from stats alone
       val declaredFit = {
-        import graft.types.{IntT, StrT}
-        def observed(colName: String): Option[graft.types.SchemaType] = colName match {
-          case "doc_id" =>
-            for {
-              mn <- Option(r.getAs[Integer]("min_docid_len"))
-              mx <- Option(r.getAs[Integer]("max_docid_len"))
-            } yield StrT(mn.toLong, mx.toLong)
-          case "n_tok" =>
-            for {
-              mn <- Option(r.getAs[Integer]("min_ntok"))
-              mx <- Option(r.getAs[Integer]("max_ntok"))
-            } yield IntT(BigInt(mn.toInt), BigInt(mx.toInt))
-          case "tokens_element" =>
-            for {
-              mn <- Option(r.getAs[Integer]("min_token"))
-              mx <- Option(r.getAs[Integer]("max_token"))
-            } yield IntT(BigInt(mn.toInt), BigInt(mx.toInt))
-          case _ => None
-        }
+        val observed = observedTypes(r).toMap
         cfg.declaredDdl.toSeq.sortBy(_._1).flatMap { case (colName, ddl) =>
-          observed(colName).map { obs =>
+          observed.get(colName).map { obs =>
             val declared = cfg.ddlDialect.colTypeToSchemaType(ddl)
             val pass = graft.dbtypes.Wider.eqWidthOrNarrower(obs, declared)
             vRow(s, s"declared_fit_$colName", pass,
@@ -349,25 +331,28 @@ object Validator {
   def suggestDdl(stats: Array[Row],
                  dialect: graft.dbtypes.DbTypeTranslator = graft.dbtypes.MySqlTranslator)
       : Seq[(String, String, String, String)] = {
-    import graft.types.{IntT, StrT}
     stats.flatMap { r =>
-      val s = r.getAs[String]("source")
-      def intObs(mnF: String, mxF: String): Option[graft.types.SchemaType] =
-        for {
-          mn <- Option(r.getAs[Integer](mnF)); mx <- Option(r.getAs[Integer](mxF))
-        } yield IntT(BigInt(mn.toInt), BigInt(mx.toInt))
-      val cols = Seq(
-        "doc_id" -> (for {
-          mn <- Option(r.getAs[Integer]("min_docid_len"))
-          mx <- Option(r.getAs[Integer]("max_docid_len"))
-        } yield StrT(mn.toLong, mx.toLong)),
-        "n_tok" -> intObs("min_ntok", "max_ntok"),
-        "tokens_element" -> intObs("min_token", "max_token"))
-      cols.collect { case (colName, Some(obs)) =>
-        (s, colName, graft.types.SchemaType.render(obs),
+      observedTypes(r).map { case (colName, obs) =>
+        (r.getAs[String]("source"), colName, graft.types.SchemaType.render(obs),
           dialect.schemaTypeToColType(obs))
       }
     }.toSeq.sortBy(t => (t._1, t._2))
+  }
+
+  /** The observed SchemaType of each declared-fit column in one stats row,
+    * from its min/max fields; a column whose min/max is NULL (no value
+    * seen) is absent.
+    */
+  private def observedTypes(r: Row): Seq[(String, graft.types.SchemaType)] = {
+    import graft.types.{IntT, StrT}
+    def range(f: String): Option[(Int, Int)] = for {
+      mn <- Option(r.getAs[Integer](s"min_$f")); mx <- Option(r.getAs[Integer](s"max_$f"))
+    } yield (mn.toInt, mx.toInt)
+    Seq(
+      "doc_id" -> range("docid_len").map { case (mn, mx) => StrT(mn.toLong, mx.toLong) },
+      "n_tok" -> range("ntok").map { case (mn, mx) => IntT(BigInt(mn), BigInt(mx)) },
+      "tokens_element" -> range("token").map { case (mn, mx) => IntT(BigInt(mn), BigInt(mx)) })
+      .collect { case (colName, Some(t)) => colName -> t }
   }
 
   /** Hash pairs of the doc_ids that occur more than once, with their
@@ -401,6 +386,12 @@ object Validator {
     Some((r.getLong(0), r.getLong(1)))
   }
 
+  /** The per-source stats row: `source` + the [[SuiteStatsAgg.schema]]
+    * fields.
+    */
+  private[graft] val statsSchema: StructType = StructType(
+    StructField("source", StringType, nullable = true) +: SuiteStatsAgg.schema.fields)
+
   /** Attach the by-source suite-stats observation to `df`. After exactly
     * ONE action runs over the returned frame, the thunk yields the stats
     * rows (the [[sourceStatsComposed]] schema) — the fused one-scan machinery
@@ -414,9 +405,6 @@ object Validator {
       SuiteStatsBySourceAgg.suite_stats_by_source(
         col("source"), col("doc_id"), col("tokens"), col("n_tok"), cfg)
         .as("stats"))
-    val statsSchema = StructType(
-      StructField("source", StringType, nullable = true) +:
-        SuiteStatsAgg.schema.fields)
     val thunk = () => obs.get("stats")
       .asInstanceOf[scala.collection.Seq[Row]]
       .map { r =>

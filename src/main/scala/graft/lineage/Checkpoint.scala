@@ -10,8 +10,9 @@ import java.nio.charset.StandardCharsets
   * jar ships in this environment; the interface is catalog-agnostic).
   *
   * Each input partition (`source=<v>` directory) is fingerprinted by its
-  * file list (name, length, mtime). A completed validation writes the
-  * partition's stats/violations plus a manifest carrying the fingerprint;
+  * data-file list (name, length, mtime). A completed validation writes the
+  * partition's stats/violations, then, LAST, a manifest carrying the
+  * fingerprint (replaced atomically, [[Commit.writeAtomic]]);
   * a restarted run revalidates ONLY partitions whose fingerprint changed —
   * the skip is a real scan skip, because the remaining sources are read
   * with a partition-pruning filter.
@@ -39,7 +40,7 @@ object Checkpoint {
       .map { st =>
         val source = st.getPath.getName.stripPrefix("source=")
         val files = system.listStatus(st.getPath).toSeq
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
+          .filter(f => f.isFile && Commit.isData(f.getPath.getName))
           .sortBy(_.getPath.getName)
           .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
         val fp = java.security.MessageDigest.getInstance("MD5")
@@ -52,11 +53,13 @@ object Checkpoint {
   private def manifestPath(statePath: String, source: String): Path =
     new Path(s"$statePath/manifests/$source.json")
 
-  /** ONE manifest parse site: (fingerprint?, n_rows?) from the manifest
-    * body, None when no manifest exists. Every reader derives from this
-    * so the audit can never be stricter than the rerun planner.
+  /** The one manifest reader: (fingerprint?, n_rows?) from the manifest
+    * body, None when no manifest exists. [[plan]] (a rerun) matches on the
+    * fingerprint alone, so n_rows is OPTIONAL: a manifest whose
+    * fingerprint parses but whose row count is garbled still skips on a
+    * rerun, and the audit reports what the rerun will do.
     */
-  private def readManifestFields(spark: SparkSession, statePath: String,
+  def readManifest(spark: SparkSession, statePath: String,
       source: String): Option[(Option[String], Option[Long])] = {
     val p = manifestPath(statePath, source)
     val system = fs(spark, statePath)
@@ -74,21 +77,6 @@ object Checkpoint {
     }
   }
 
-  /** The checkpointed fingerprint — what [[plan]] (and thus a rerun)
-    * matches on.
-    */
-  def readManifest(spark: SparkSession, statePath: String, source: String): Option[String] =
-    readManifestFields(spark, statePath, source).flatMap(_._1)
-
-  /** The audit-surface reader: present manifest -> (fingerprint?,
-    * n_rows?). n_rows is OPTIONAL on purpose — a manifest whose
-    * fingerprint parses but whose row count is garbled still skips on a
-    * rerun, and the audit must report what the rerun will do.
-    */
-  def readManifestInfo(spark: SparkSession, statePath: String,
-      source: String): Option[(Option[String], Option[Long])] =
-    readManifestFields(spark, statePath, source)
-
   /** Manifest sources present in the state dir (for orphan detection —
     * a manifest whose partition left the input).
     */
@@ -102,15 +90,10 @@ object Checkpoint {
   }
 
   def writeManifest(spark: SparkSession, statePath: String,
-                    lineage: PartitionLineage, nRows: Long): Unit = {
-    val p = manifestPath(statePath, lineage.source)
-    val system = fs(spark, statePath)
-    val out = system.create(p, true)
-    try out.write(
+                    lineage: PartitionLineage, nRows: Long): Unit =
+    Commit.writeAtomic(fs(spark, statePath), manifestPath(statePath, lineage.source),
       s"""{"source": "${lineage.source}", "fingerprint": "${lineage.fingerprint}", "n_rows": $nRows}"""
         .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
 
   /** State tables are source-partitioned parquet written with DYNAMIC
     * partition overwrite, so revalidating k of N partitions rewrites k
@@ -124,7 +107,7 @@ object Checkpoint {
   def plan(spark: SparkSession, inputPath: String, statePath: String)
       : (Seq[PartitionLineage], Seq[PartitionLineage]) =
     inputPartitions(spark, inputPath).partition { pl =>
-      readManifest(spark, statePath, pl.source).contains(pl.fingerprint)
+      readManifest(spark, statePath, pl.source).flatMap(_._1).contains(pl.fingerprint)
     }
 
   def readParquetIfExists(spark: SparkSession, path: String): Option[DataFrame] = {

@@ -87,12 +87,8 @@ object DupSpans {
     // scale (scans plan >= cores splits) and for frames that are not
     // scan-rooted; results are partition-order invariant here (counts /
     // min / max / min-struct aggregates only).
-    // SPARK_GRAFT_FANOUT=0 disables (A/B lever).
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val wide =
-      if (!sys.env.get("SPARK_GRAFT_FANOUT").contains("0") &&
-          scanSplits(df).exists(_ < target)) df.repartition(target)
-      else df
+    val wide = if (scanSplits(df).exists(_ < target)) df.repartition(target) else df
     val w = wide.select(col(idCol).as("id"),
       size(split(col(textCol), " ")).as("n_words"),
       posexplode(TextOps.shingles(col(textCol), windowWords))

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.lineage.Commit
+
 /** Incremental near-duplicate detection against a PERSISTED LSH signature
   * index — the append-mode shape of [[Dedup.minhashCandidates]]: when a
   * corpus grows by a fraction, only the new documents are shingled and
@@ -11,11 +13,8 @@ import org.apache.spark.sql.functions._
   *
   * Index layout: one parquet row per (band, band_hash, id, sig),
   * partitioned by `band` so a probe's per-band join prunes to its own
-  * directory. Within a band the join key is band_hash — at warehouse scale
-  * use [[writeIndexBucketed]] — the same rows as a table bucketed by
-  * (band, band_hash), so the probe join co-locates without a shuffle of
-  * the index side once the batch outgrows the broadcast threshold.
-  * Appends are plain parquet appends (the layout is append-stable).
+  * directory; within a band the join key is band_hash. Appends are plain
+  * parquet appends (the layout is append-stable).
   *
   * Giant buckets are capped by COMBINED size (index + batch rows per
   * (band, band_hash)), the same `maxBucket` semantics as full mining
@@ -37,13 +36,6 @@ object IncrementalDedup {
         col("bandinfo.band_hash").as("band_hash"),
         col("id"), col("sig"))
 
-  /** Build (mode=overwrite) or grow (mode=append) the index. A rebuild
-    * is a STATIC overwrite (the whole path is replaced): the earlier
-    * dynamic-overwrite setting only replaced band partitions present in
-    * the NEW data, so rebuilding with fewer bands (or from a shrunken
-    * corpus) left stale partitions that probes would happily read —
-    * candidate pairs against deleted documents.
-    */
   /** Per-bucket count sidecar location. The underscore prefix keeps the
     * sidecar invisible to `spark.read.parquet(path)` partition discovery
     * (Spark skips `_`/`.`-prefixed paths), so index readers are
@@ -51,67 +43,41 @@ object IncrementalDedup {
     */
   private[graft] def countsPath(path: String): String = s"$path/_graft_counts"
 
+  /** Build (mode=overwrite) or grow (mode=append) the index. A rebuild
+    * is a STATIC overwrite (the whole path is replaced): the earlier
+    * dynamic-overwrite setting only replaced band partitions present in
+    * the NEW data, so rebuilding with fewer bands (or from a shrunken
+    * corpus) left stale partitions that probes would happily read —
+    * candidate pairs against deleted documents.
+    *
+    * Rows and sidecar are written as ONE [[Commit.write]]: a crash between
+    * the row append and the sidecar rewrite leaves the index uncommitted,
+    * and the probe then derives counts from the rows instead of trusting
+    * a stale sidecar.
+    */
   def writeIndex(df: DataFrame, textCol: String, idCol: String, path: String,
                  shingleK: Int = 3, perms: Int = 32, bands: Int = 16,
                  mode: String = "overwrite"): Unit = {
     val spark = df.sparkSession
-    signatureRows(df, textCol, idCol, shingleK, perms, bands)
-      .write.mode(mode)
-      .partitionBy("band").parquet(path)
-    // per-bucket count sidecar: probes need the index's bucket sizes for
-    // the combined-cap decision, and deriving them per probe costs a
-    // second full scan of the index (at warehouse scale: half the probe
-    // I/O). Counts are index METADATA maintained at write time — like a
-    // table format's manifest stats — recomputed from the index's rows
-    // after every write, appends included (a 2-column pruned read of the
-    // index; never a second signature pass over the corpus), and
-    // statically overwritten, so the sidecar always covers every row.
-    // Pre-sidecar indexes simply lack the dir; probes fall back to
-    // deriving counts from the rows.
-    spark.read.parquet(path)
-      .groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("ic"))
-      .write.mode("overwrite").parquet(countsPath(path))
-  }
-
-  /** The warehouse-scale index layout: the same rows saved as a table
-    * BUCKETED (and sorted) by the probe join's exact key set
-    * (band, band_hash) — the bucketed scan reports that HashPartitioning,
-    * so the INDEX SIDE joins without any exchange and only the (small)
-    * batch side shuffles to match. (The keys must match the join's
-    * clustering exactly: spark.sql.requireAllClusterKeysForCoPartition
-    * defaults to true, so a band_hash-only bucket spec would NOT be
-    * reused.) This matters exactly when the batch outgrows the broadcast
-    * threshold: the plain-parquet layout reshuffles the whole index
-    * under it (pinned in IncrementalDedupSpec). Appends are
-    * `mode=append` (bucketed tables append bucket-stably). Requires a
-    * session catalog that persists table metadata across sessions for
-    * production (any metastore); same row shape as [[writeIndex]].
-    */
-  def writeIndexBucketed(df: DataFrame, textCol: String, idCol: String,
-                         table: String, buckets: Int = 64,
-                         shingleK: Int = 3, perms: Int = 32, bands: Int = 16,
-                         mode: String = "overwrite"): Unit =
-    signatureRows(df, textCol, idCol, shingleK, perms, bands)
-      .write.mode(mode)
-      .bucketBy(buckets, "band", "band_hash").sortBy("band", "band_hash")
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** [[newDocCandidatesH]] against a BUCKETED index table (see
-    * [[writeIndexBucketed]]).
-    */
-  def newDocCandidatesBucketedH(spark: SparkSession, newDocs: DataFrame,
-                                textCol: String, idCol: String, table: String,
-                                shingleK: Int = 3, perms: Int = 32,
-                                bands: Int = 16, minJaccard: Double = 0.5,
-                                maxBucket: Int = 64,
-                                materialize: Boolean = true): Cached[DataFrame] = {
-    val rows = signatureRows(newDocs, textCol, idCol, shingleK, perms, bands)
-    val fresh = if (materialize) rows.persist() else rows
-    Cached(candidatePairs(fresh, Some(spark.table(table)),
-        perms, minJaccard, maxBucket),
-      if (materialize) Seq(fresh) else Nil)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Commit.write(fs, path) {
+      signatureRows(df, textCol, idCol, shingleK, perms, bands)
+        .write.mode(mode)
+        .partitionBy("band").parquet(path)
+      // per-bucket count sidecar: probes need the index's bucket sizes for
+      // the combined-cap decision, and deriving them per probe costs a
+      // second full scan of the index (at warehouse scale: half the probe
+      // I/O). Counts are index METADATA maintained at write time — like a
+      // table format's manifest stats — recomputed from the index's rows
+      // after every write, appends included (a 2-column pruned read of the
+      // index; never a second signature pass over the corpus), and
+      // statically overwritten, so the sidecar always covers every row.
+      spark.read.parquet(path)
+        .groupBy(col("band"), col("band_hash"))
+        .agg(count(lit(1)).as("ic"))
+        .write.mode("overwrite").parquet(countsPath(path))
+    }
   }
 
   /** Candidate pairs from prepared signature rows: (fresh x index) +
@@ -217,12 +183,13 @@ object IncrementalDedup {
       org.apache.spark.sql.types.StructField("band_hash", freshT("band_hash")),
       org.apache.spark.sql.types.StructField("ic",
         org.apache.spark.sql.types.LongType)))
-    // use the build-time count sidecar when this index has one (pre-
-    // sidecar indexes fall back to deriving counts from the rows)
+    // the build-time count sidecar covers every row only when the index
+    // is committed; otherwise (a crashed write, or an index older than the
+    // commit marker) counts are derived from the rows
     val fs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val counts =
-      if (fs.exists(new org.apache.hadoop.fs.Path(countsPath(indexPath))))
+      if (Commit.committed(fs, indexPath))
         Some(spark.read.schema(countsSchema).parquet(countsPath(indexPath)))
       else None
     Cached(candidatePairs(fresh,

@@ -152,24 +152,33 @@ object Ivf {
   /** Persist an index: the assigned table partitioned BY CELL (so a probe
     * reads only its nProbe/nlist slice of the corpus via partition
     * pruning — `PartitionFilters: [__cell IN (...)]` in the probe scan,
-    * pinned by PlanSpec) plus the KB-sized centroid table.
+    * pinned by PlanSpec) plus the KB-sized centroid table, both inside
+    * one [[graft.lineage.Commit.write]].
     */
   def writeIndex(index: Index, dir: String): Unit = {
     val spark = index.assigned.sparkSession
-    index.assigned.write.mode("overwrite")
-      .partitionBy("__cell").parquet(s"$dir/assigned")
     import spark.implicits._
-    index.centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+    graft.lineage.Commit.write(fs(spark, dir), dir) {
+      index.assigned.write.mode("overwrite")
+        .partitionBy("__cell").parquet(s"$dir/assigned")
+      index.centroids.zipWithIndex
+        .map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cell", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+    }
   }
 
-  /** Reopen a persisted index. The assigned frame is the partitioned
-    * parquet scan — filters on `__cell` prune at the file-listing level,
-    * never touching unprobed cells' bytes.
+  private def fs(spark: org.apache.spark.sql.SparkSession, dir: String) =
+    new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Reopen a persisted index; only a committed one is read (a crashed
+    * rewrite can pair new cells with old centroids). The assigned frame is
+    * the partitioned parquet scan — filters on `__cell` prune at the
+    * file-listing level, never touching unprobed cells' bytes.
     */
   def readIndex(spark: org.apache.spark.sql.SparkSession, dir: String): Index = {
+    require(graft.lineage.Commit.committed(fs(spark, dir), dir),
+      s"$dir holds no committed IVF index; rebuild it with writeIndex")
     val byCell = spark.read.parquet(s"$dir/centroids").collect()
       .map(r => r.getInt(0) -> r.getSeq[Any](1).map {
         case f: Float => f

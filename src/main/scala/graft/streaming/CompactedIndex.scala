@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.lineage.Commit
+
 /** Replay-safe base+delta layout for the streaming pipelines' persisted
   * indexes (content-hash and banded-signature). The round-4 layout grew
   * one `batch_id=N` partition per micro-batch FOREVER — at 10^5 batches
@@ -24,12 +26,13 @@ import org.apache.spark.sql.functions._
   * {{{
   *   root/deltas/batch_id=N/[sub=.../]        one partition per batch
   *   root/base/gen-N/[sub=.../]               compacted generations
-  *   root/base/gen-N/_GRAFT_COMMITTED         marker: generation is live
+  *   root/base/gen-N/<Commit.Marker>          marker: generation is live
   * }}}
   * A generation named `gen-N` covers every batch_id <= N-1 (its
   * WATERMARK — encoded in the name, no pointer content to parse). The
   * live generation is the highest-numbered COMMITTED one; commit is the
-  * creation of the empty marker file, the LAST step of a compaction.
+  * creation of the empty marker file, the LAST step of a compaction
+  * ([[Commit.write]]).
   * A probe reads base(live) ∪ deltas(batch_id > watermark), minus the
   * excluded batch.
   *
@@ -55,11 +58,6 @@ private[graft] object CompactedIndex {
   def deltasPath(root: String) = s"$root/deltas"
   def basePath(root: String) = s"$root/base"
 
-  /** Marker whose EXISTENCE inside a generation dir commits it (shared
-    * with [[StreamingValidator]]'s stats generations).
-    */
-  private[streaming] val Marker = "_GRAFT_COMMITTED"
-
   /** (live generation dir name if any, highest batch_id folded into it). */
   final case class State(gen: Option[String], watermark: Long)
 
@@ -72,16 +70,10 @@ private[graft] object CompactedIndex {
     if (!fs.exists(base)) Nil
     else fs.listStatus(base).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen-") &&
-        fs.exists(new Path(s.getPath, Marker)))
+        Commit.committed(fs, s.getPath.toString))
       .map(_.getPath.getName.stripPrefix("gen-").toLong)
       .sorted
   }
-
-  /** Commit `gen-N` under `dir` by creating its marker (the LAST step of
-    * a generation write).
-    */
-  private[streaming] def commitGen(fs: FileSystem, dir: String, n: Long): Unit =
-    fs.create(new Path(s"$dir/gen-$n/$Marker"), true).close()
 
   /** Retention shared by every generation layout: keep the two newest
     * COMMITTED generations (an external reader that resolved the live one
@@ -140,10 +132,8 @@ private[graft] object CompactedIndex {
     val p = fs.makeQualified(new Path(deltasPath(root)))
     if (!fs.exists(p)) return false
     val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val n = it.next().getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) return true
-    }
+    while (it.hasNext)
+      if (Commit.isData(it.next().getPath.getName)) return true
     false
   }
 
@@ -223,13 +213,11 @@ private[graft] object CompactedIndex {
           .withColumn("batch_id", col("batch_id").cast("long")))
     }
     val genDir = s"${basePath(root)}/gen-$batchId"
-    val writer = folded.write.mode("overwrite")
-    (if (subPartitionCols.nonEmpty) writer.partitionBy(subPartitionCols: _*)
-     else writer).parquet(genDir)
-    // the commit: marker existence IS the committed state (created after
-    // the data is fully written; overwrite above wipes any stale marker
-    // from a crashed earlier attempt first)
-    commitGen(fs, basePath(root), batchId)
+    Commit.write(fs, genDir) {
+      val writer = folded.write.mode("overwrite")
+      (if (subPartitionCols.nonEmpty) writer.partitionBy(subPartitionCols: _*)
+       else writer).parquet(genDir)
+    }
 
     // prune AFTER the commit — but only deltas already covered by the
     // PREVIOUS watermark. The just-folded deltas stay one grace cycle:

@@ -2,24 +2,19 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Filesystem checks shared by the streaming state layouts. (q40's
-  * build-once index deliberately does NOT use this: a bare content check
-  * would reuse a partially-written dir after a crashed build, so it has
-  * an explicit completion marker instead — Queries.ensureQ40Index.)
-  */
+import graft.lineage.Commit
+
+/** Filesystem checks shared by the streaming state layouts. */
 private[graft] object StateFs {
-  /** True iff `path` exists AND holds at least one non-hidden entry.
-    * Bare existence is NOT enough for "this index has content": a
-    * partitioned write of an empty frame leaves the directory present
-    * but file-less (dynamic-partition commits write no root _SUCCESS at
-    * all), and feeding such a dir to a parquet read fails schema
-    * inference.
+  /** True iff `path` exists AND holds at least one data entry
+    * ([[Commit.isData]]). Bare existence is NOT enough for "this index has
+    * content": a partitioned write of an empty frame leaves the directory
+    * present but file-less (dynamic-partition commits write no root
+    * _SUCCESS at all), and feeding such a dir to a parquet read fails
+    * schema inference.
     */
   def nonEmptyDir(fs: FileSystem, path: String): Boolean = {
     val p = fs.makeQualified(new Path(path))
-    fs.exists(p) && fs.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
+    fs.exists(p) && fs.listStatus(p).exists(s => Commit.isData(s.getPath.getName))
   }
 }

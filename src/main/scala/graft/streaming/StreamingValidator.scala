@@ -5,9 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.constraints.Validator
+import graft.constraints.{SuiteStatsAgg, Validator}
 import graft.constraints.Validator.SuiteConfig
-import graft.stats.KllSketchAgg
+import graft.lineage.Commit
 
 /** Continuous validation of a GROWING sequences directory — the streaming
   * twin of [[graft.constraints.ResumableValidator]]. New parquet files
@@ -39,54 +39,20 @@ object StreamingValidator {
   def checkpointPath(statePath: String) = s"$statePath/checkpoint"
 
   /** Merge two per-source stats row sets (driver-side: one small row per
-    * source). Null-safe min/max; sketch bytes merged with their native
-    * unions.
+    * source) with the suite's own monoid: each row becomes a
+    * [[SuiteStatsAgg.Buf]], buffers of a source fold by `mergeIn`, and
+    * `evalBuf` reads the result back — the same counters, min/max, HLL_8
+    * union, KLL merge and histogram add as the one-pass aggregate.
     */
   def mergeStatsRows(a: Array[Row], b: Array[Row], kllK: Int): Array[Row] = {
-    if (a.isEmpty) return b
-    if (b.isEmpty) return a
-    val schema = a.headOption.getOrElse(b.head).schema
-    val bySource = (a ++ b).groupBy(_.getAs[String]("source"))
-    bySource.toArray.sortBy(_._1).map { case (_, rows) =>
-      if (rows.length == 1) rows(0)
-      else {
-        def sumL(f: String) = rows.map(_.getAs[Long](f)).sum
-        def minI(f: String): Any = {
-          val vs = rows.flatMap(r => Option(r.getAs[Integer](f)).map(_.toInt))
-          if (vs.isEmpty) null else Int.box(vs.min)
-        }
-        def maxI(f: String): Any = {
-          val vs = rows.flatMap(r => Option(r.getAs[Integer](f)).map(_.toInt))
-          if (vs.isEmpty) null else Int.box(vs.max)
-        }
-        val hll = unionHll(rows.map(_.getAs[Array[Byte]]("hll_docid")))
-        val kll = KllSketchAgg.mergeBytes(
-          rows.map(_.getAs[Array[Byte]]("kll_ntok")), kllK).toByteArray
-        val values: Array[Any] = schema.fieldNames.map {
-          case "source" => rows(0).getAs[String]("source")
-          case f @ ("n_rows" | "n_ntok_mismatch" | "n_null_token" |
-                    "n_oov_token" | "n_ntok_bounds" | "n_null_docid") => Long.box(sumL(f))
-          case f @ ("min_ntok" | "min_token" | "min_docid_len") => minI(f)
-          case f @ ("max_ntok" | "max_token" | "max_docid_len") => maxI(f)
-          case "approx_distinct_docid" =>
-            Long.box(math.round(
-              org.apache.datasketches.hll.HllSketch.heapify(hll).getEstimate))
-          case "hll_docid" => hll
-          case "kll_ntok" => kll
-          case "hist_token" =>
-            rows.map(_.getAs[scala.collection.Seq[Long]]("hist_token").toArray)
-              .reduce(graft.stats.TokenHistAgg.add).toSeq
-          case other => throw new IllegalStateException(s"unknown stats field $other")
-        }
-        new GenericRowWithSchema(values, schema): Row
-      }
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(SuiteStatsAgg.schema)
+    (a ++ b).groupBy(_.getAs[String]("source")).toArray.sortBy(_._1).map {
+      case (source, rows) =>
+        val merged = rows.map(SuiteStatsAgg.Buf.fromRow(_, kllK)).reduce(_ mergeIn _)
+        val stats = toRow(SuiteStatsAgg.evalBuf(merged)).asInstanceOf[Row]
+        new GenericRowWithSchema((source +: stats.toSeq).toArray, Validator.statsSchema): Row
     }
-  }
-
-  private def unionHll(sketches: Seq[Array[Byte]]): Array[Byte] = {
-    val u = new org.apache.datasketches.hll.Union(12)
-    sketches.foreach(b => u.update(org.apache.datasketches.hll.HllSketch.heapify(b)))
-    u.getResult.toUpdatableByteArray
   }
 
   /** Estimated duplicate mass from merged HLL vs total rows seen (the
@@ -96,11 +62,10 @@ object StreamingValidator {
                               tolerance: Double = 0.02): DataFrame = {
     import spark.implicits._
     val totalRows = stats.map(_.getAs[Long]("n_rows")).sum
-    val est =
-      if (stats.isEmpty) 0L
-      else math.round(org.apache.datasketches.hll.HllSketch
-        .heapify(unionHll(stats.map(_.getAs[Array[Byte]]("hll_docid")).toSeq))
-        .getEstimate)
+    val u = new org.apache.datasketches.hll.Union(12)
+    stats.foreach(r => u.update(
+      org.apache.datasketches.hll.HllSketch.heapify(r.getAs[Array[Byte]]("hll_docid"))))
+    val est = math.round(u.getEstimate)
     val pass = totalRows == 0 || est >= totalRows * (1.0 - tolerance)
     Seq(("*", "uniqueness_approx", pass,
       s"~$est distinct doc_ids / $totalRows rows (HLL)",
@@ -192,7 +157,7 @@ object StreamingValidator {
     * drift baseline reset and the old gens got pruned as orphans. Fail
     * loudly instead, mirroring CompactedIndex.rejectLegacyLayout: the
     * operator migrates by committing the pointed-at generation with the
-    * new marker (touch gen-N/_GRAFT_COMMITTED, delete CURRENT).
+    * new marker (create gen-N/[[Commit.Marker]], delete CURRENT).
     */
   private def rejectLegacyStats(fs: org.apache.hadoop.fs.FileSystem,
                                 dir: String): Unit = {
@@ -200,7 +165,7 @@ object StreamingValidator {
     if (fs.exists(cur))
       sys.error(s"$dir holds a pre-marker-protocol stats state (CURRENT " +
         "pointer file). Migrate by creating " +
-        s"$dir/gen-<N>/${CompactedIndex.Marker} for the generation CURRENT " +
+        s"$dir/gen-<N>/${Commit.Marker} for the generation CURRENT " +
         "points at and deleting CURRENT, or rebuild the state — reading " +
         "it as empty would silently reset the drift baseline.")
   }
@@ -208,9 +173,8 @@ object StreamingValidator {
   private def writeStats(spark: SparkSession, statePath: String,
                          batchId: Long, stats: Array[Row]): Unit = {
     val df = Validator.statsToDf(spark, stats).withColumn("last_batch_id", lit(batchId))
-    // two-generation layout, committed by marker EXISTENCE (shared
-    // protocol — CompactedIndex.commitGen/pruneGens): write the new
-    // generation fully, then create its marker. Readers never see a
+    // two-generation layout, one Commit.write per generation (retention
+    // shared with CompactedIndex.pruneGens). Readers never see a
     // half-written directory; a crashed write leaves an invisible
     // (markerless) orphan the next prune removes. The earlier
     // CURRENT-pointer flip used truncate-then-write, so a crash mid-flip
@@ -219,8 +183,7 @@ object StreamingValidator {
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     rejectLegacyStats(fs, statsPath(statePath))
-    df.coalesce(1).write.mode("overwrite").parquet(gen)
-    CompactedIndex.commitGen(fs, statsPath(statePath), batchId)
+    Commit.write(fs, gen)(df.coalesce(1).write.mode("overwrite").parquet(gen))
     CompactedIndex.pruneGens(fs, statsPath(statePath), batchId)
   }
 

@@ -92,7 +92,7 @@ class ResumeSpec extends AnyFunSuite {
     // every input partition's manifest parses with its row count
     val inputs = Checkpoint.inputPartitions(spark, inPath)
     inputs.foreach { pl =>
-      val info = Checkpoint.readManifestInfo(spark, statePath, pl.source)
+      val info = Checkpoint.readManifest(spark, statePath, pl.source)
       assert(info.exists(_._1.contains(pl.fingerprint)), pl.source)
       assert(info.exists(_._2.exists(_ > 0L)), s"${pl.source} n_rows")
     }
@@ -106,18 +106,18 @@ class ResumeSpec extends AnyFunSuite {
     f.setLastModified(f.lastModified() + 60000)
     val booksNow = Checkpoint.inputPartitions(spark, inPath)
       .find(_.source == "books").get
-    assert(!Checkpoint.readManifestInfo(spark, statePath, "books")
+    assert(!Checkpoint.readManifest(spark, statePath, "books")
       .exists(_._1.contains(booksNow.fingerprint)))
     // audit leniency == rerun planner: a garbled n_rows must not demote
     // a fingerprint-current manifest to NEW (plan() matches on the
     // fingerprint alone)
-    val webFp = Checkpoint.readManifest(spark, statePath, "web").get
+    val webFp = Checkpoint.readManifest(spark, statePath, "web").flatMap(_._1).get
     val mp = new java.io.File(s"$statePath/manifests/web.json")
     java.nio.file.Files.writeString(mp.toPath,
       s"""{"source": "web", "fingerprint": "$webFp", "n_rows": garbled}""")
     // the raw edit invalidates Hadoop LocalFileSystem's checksum sidecar
     new java.io.File(s"$statePath/manifests/.web.json.crc").delete()
-    val webInfo = Checkpoint.readManifestInfo(spark, statePath, "web")
+    val webInfo = Checkpoint.readManifest(spark, statePath, "web")
     assert(webInfo.exists(i => i._1.contains(webFp) && i._2.isEmpty))
 
     def rmAll(p: java.io.File): Unit = {

@@ -81,10 +81,12 @@ class IncrementalDedupSpec extends AnyFunSuite {
         "text", "doc_id", dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val withSidecar = mined
-    // pre-sidecar index shape: delete the sidecar — the probe must fall
-    // back to deriving counts and return identical candidates
-    val p = new org.apache.hadoop.fs.Path(IncrementalDedup.countsPath(dir))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    // pre-sidecar index shape: no sidecar and no commit marker — the
+    // probe must fall back to deriving counts and return identical
+    // candidates
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(IncrementalDedup.countsPath(dir)), true)
+    fs.delete(new org.apache.hadoop.fs.Path(dir, graft.lineage.Commit.Marker), false)
     assert(mined == withSidecar)
     assert(withSidecar == Set((1L, 10L), (2L, 10L), (4L, 10L)))
     spark.catalog.clearCache()
@@ -106,50 +108,5 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val batchIds = Set(10L, 11L)
     assert(incremental ==
       full.filter(p => batchIds.contains(p._1) || batchIds.contains(p._2)))
-  }
-
-  test("bucketed index: same pairs as the parquet layout, index side joins without an exchange") {
-    val dir = java.nio.file.Files.createTempDirectory("incdedup-b").toString + "/idx"
-    val corpus = docs(1L -> s"$base one", 2L -> s"$base two", 3L -> other)
-    val batch = docs(10L -> s"$base ten", 11L -> s"$other alpha")
-    IncrementalDedup.writeIndex(corpus, "text", "doc_id", dir)
-    IncrementalDedup.writeIndexBucketed(corpus, "text", "doc_id",
-      "incdedup_bucketed_idx", buckets = 8)
-    try {
-      val plain = IncrementalDedup.newDocCandidates(spark, batch,
-          "text", "doc_id", dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val h = IncrementalDedup.newDocCandidatesBucketedH(spark, batch,
-        "text", "doc_id", "incdedup_bucketed_idx")
-      val bucketed = h.value
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(bucketed == plain)
-
-      // force the shuffled-join regime (no broadcast) with AQE off so the
-      // exchanges are visible, and count exchanges in each plan: the
-      // bucketed scan's HashPartitioning(band_hash) satisfies the join
-      // (band_hash is a subset of the join keys), so the INDEX side needs
-      // none where the parquet layout reshuffles the whole index
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        def nExchanges(df: org.apache.spark.sql.DataFrame): Int =
-          df.queryExecution.executedPlan.collect {
-            case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-          }.size
-        val planPlain = nExchanges(IncrementalDedup.newDocCandidates(spark,
-          batch, "text", "doc_id", dir, materialize = false))
-        val planBucketed = nExchanges(
-          IncrementalDedup.newDocCandidatesBucketedH(spark, batch,
-            "text", "doc_id", "incdedup_bucketed_idx",
-            materialize = false).value)
-        assert(planBucketed < planPlain,
-          s"bucketed probe must drop index-side exchanges: $planBucketed vs $planPlain")
-      } finally {
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-      }
-      h.close()
-    } finally spark.sql("DROP TABLE IF EXISTS incdedup_bucketed_idx")
   }
 }

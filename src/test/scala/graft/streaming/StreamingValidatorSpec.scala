@@ -129,6 +129,42 @@ class StreamingValidatorSpec extends AnyFunSuite {
     assert(spark.read.parquet(StreamingValidator.verdictsPath(stateDir)).count() > 0)
   }
 
+  test("stats merge is the one-pass monoid: a NULL-only first batch merges like one scan") {
+    val web = full.filter(col("source") === "web")
+    // every n_tok and tokens value NULL: the batch's min/max are NULL
+    val nullBatch = web.filter(pmod(xxhash64(col("doc_id")), lit(4)) === 0)
+      .withColumn("doc_id", concat(col("doc_id"), lit("-n")))
+      .withColumn("n_tok", lit(null).cast("int"))
+      .withColumn("tokens", lit(null).cast(web.schema("tokens").dataType))
+    def stats(df: org.apache.spark.sql.DataFrame) = {
+      val (observed, thunk) = Validator.observeStats(df, suite)
+      observed.count()
+      thunk().map(r => r.getAs[String]("source") -> r).toMap
+    }
+    val nullOnly = stats(nullBatch)("web")
+    assert(nullOnly.isNullAt(nullOnly.fieldIndex("min_ntok")) &&
+      nullOnly.isNullAt(nullOnly.fieldIndex("max_token")))
+    val merged = StreamingValidator.mergeStatsRows(
+      Array(nullOnly), stats(web).values.toArray, suite.kllK)
+    val onePass = stats(nullBatch.unionByName(web))("web")
+    assert(merged.length == 1)
+    val m = merged(0)
+    for (f <- Seq("n_rows", "n_ntok_mismatch", "n_null_token", "n_oov_token",
+                  "n_ntok_bounds", "n_null_docid", "min_ntok", "max_ntok", "min_token", "max_token",
+                  "min_docid_len", "max_docid_len"))
+      assert(m.getAs[Any](f) == onePass.getAs[Any](f), f)
+    assert(m.getAs[scala.collection.Seq[Long]]("hist_token") ==
+      onePass.getAs[scala.collection.Seq[Long]]("hist_token"))
+    // the merged sketches are the aggregate's own types and counts (the
+    // HLL estimate depends on the merge order, so it is held to 5%)
+    val est = m.getAs[Long]("approx_distinct_docid").toDouble
+    assert(math.abs(est - onePass.getAs[Long]("approx_distinct_docid")) <= 0.05 * est)
+    val hll = org.apache.datasketches.hll.HllSketch.heapify(m.getAs[Array[Byte]]("hll_docid"))
+    assert(hll.getTgtHllType == org.apache.datasketches.hll.TgtHllType.HLL_8)
+    assert(graft.stats.KllSketchAgg.fromBytes(m.getAs[Array[Byte]]("kll_ntok")).getN ==
+      graft.stats.KllSketchAgg.fromBytes(onePass.getAs[Array[Byte]]("kll_ntok")).getN)
+  }
+
   test("legacy CURRENT-pointer stats state is rejected loudly, not read as empty") {
     val stateDir = tmp("stream-legacy")
     val stats = StreamingValidator.statsPath(stateDir)
