@@ -40,8 +40,6 @@ object Validator {
       /** token-ID distribution drift: histogram bins + PSI threshold */
       tokenHistBins: Int = 64,
       tokenPsiThreshold: Double = 0.25,
-      /** cap violation rows sampled per check (driver/report safety) */
-      violationSampleCap: Int = 10000,
       /** declared column DDL (reference db_types side door): observed
         * stats are checked against these capacities with the `wider?`
         * truncation predicate (db_types/common.clj:20-115)
@@ -112,24 +110,6 @@ object Validator {
       .filter(anyFlag)
       .select(col("doc_id"), col("source"), col("n_tok"),
         col("__ts.n").as("n_tokens"), reasons.as("checks"))
-  }
-
-  /** Bounded violation EXAMPLES per (source, check) — the report channel.
-    * At 10^12 rows the full violation set can itself be TB-sized when a
-    * check fires broadly; totals come from the per-source stats counters, the
-    * report carries a deterministic bounded sample of identities (the
-    * reference's distinct-coverage accumulator semantics,
-    * example_data.clj:36-92: keep representatives, stop when covered).
-    * One shuffle keyed (source, check); rank by doc_id for determinism.
-    */
-  def violationExamples(df: DataFrame, cfg: SuiteConfig): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("source"), col("check")).orderBy(col("doc_id"))
-    violations(df, cfg)
-      .withColumn("check", explode(col("checks")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= cfg.violationSampleCap)
-      .drop("__rn", "checks")
   }
 
   /** Per-source observed stats + mergeable sketches — the engine's

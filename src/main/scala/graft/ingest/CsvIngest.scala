@@ -46,17 +46,4 @@ object CsvIngest {
     // one partial per partition survives; the driver folds the handful
     types.collect().reduceOption((a, b) => policy.mergeTwo(a, b))
   }
-
-  def inferFile(spark: SparkSession, path: String,
-                delimiter: String = ",",
-                headerInFirstLine: Boolean = false,
-                policy: MergePolicy = StrictMerge): Option[SchemaType] = {
-    import spark.implicits._
-    val lines = spark.read.textFile(path)
-    if (headerInFirstLine) {
-      val first = lines.head()
-      val header = first.split(delimiter, -1).toSeq.map(_.trim)
-      inferSchema(lines.filter(l => l != first), delimiter, Some(header), policy)
-    } else inferSchema(lines, delimiter, None, policy)
-  }
 }

@@ -35,9 +35,9 @@ object JsonSchemaInference {
 
     @transient private lazy val extractor = new TypeExtractor(policy, dateFormats)
 
-    def zero: Buf = Buf(None, 0L, 0L)
+    override def zero: Buf = Buf(None, 0L, 0L)
 
-    def reduce(b: Buf, line: String): Buf =
+    override def reduce(b: Buf, line: String): Buf =
       extractor.extractLine(line) match {
         case Right(t) =>
           Buf(Some(b.schema.fold(t)(s => policy.mergeTwo(s, t))), b.seen + 1, b.failed)
@@ -45,7 +45,7 @@ object JsonSchemaInference {
           Buf(b.schema, b.seen + 1, b.failed + 1)
       }
 
-    def merge(a: Buf, b: Buf): Buf = {
+    override def merge(a: Buf, b: Buf): Buf = {
       val merged = (a.schema, b.schema) match {
         case (Some(x), Some(y)) => Some(policy.mergeTwo(x, y))
         case (x, y)             => x.orElse(y)
@@ -53,10 +53,10 @@ object JsonSchemaInference {
       Buf(merged, a.seen + b.seen, a.failed + b.failed)
     }
 
-    def finish(b: Buf): Result = Result(b.schema, b.seen, b.failed)
+    override def finish(b: Buf): Result = Result(b.schema, b.seen, b.failed)
 
-    def bufferEncoder: Encoder[Buf] = Encoders.kryo[Buf]
-    def outputEncoder: Encoder[Result] = Encoders.kryo[Result]
+    override def bufferEncoder: Encoder[Buf] = Encoders.kryo[Buf]
+    override def outputEncoder: Encoder[Result] = Encoders.kryo[Result]
   }
 
   /** Infer the merged observed schema of a Dataset of JSON lines. */

@@ -1,7 +1,7 @@
 package graft.lineage
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import java.nio.charset.StandardCharsets
 
@@ -109,9 +109,4 @@ object Checkpoint {
     inputPartitions(spark, inputPath).partition { pl =>
       readManifest(spark, statePath, pl.source).flatMap(_._1).contains(pl.fingerprint)
     }
-
-  def readParquetIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
-    val system = fs(spark, path)
-    if (system.exists(new Path(path))) Some(spark.read.parquet(path)) else None
-  }
 }

@@ -4,8 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The one commit protocol for persisted state. A directory artifact
   * (checkpoint tables, the LSH index and its count sidecar, compacted
-  * generations, stream stats, IVF indexes) is COMMITTED iff it holds the
-  * empty [[Marker]] file. [[write]] deletes the marker FIRST and creates
+  * generations, stream stats) is COMMITTED iff it holds the empty
+  * [[Marker]] file. [[write]] deletes the marker FIRST and creates
   * it LAST, so a crash at any step in between leaves the directory
   * uncommitted, and a reader trusts only a committed directory. The
   * decision is by EXISTENCE, never by file content: an empty file cannot

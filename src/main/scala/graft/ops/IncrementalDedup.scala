@@ -6,15 +6,17 @@ import org.apache.spark.sql.functions._
 import graft.lineage.Commit
 
 /** Incremental near-duplicate detection against a PERSISTED LSH signature
-  * index — the append-mode shape of [[Dedup.minhashCandidates]]: when a
+  * index — the incremental shape of [[Dedup.minhashCandidates]]: when a
   * corpus grows by a fraction, only the new documents are shingled and
   * only (new x old) + (new x new) bucket pairs are generated, never the
   * old-x-old work that already ran.
   *
   * Index layout: one parquet row per (band, band_hash, id, sig),
   * partitioned by `band` so a probe's per-band join prunes to its own
-  * directory; within a band the join key is band_hash. Appends are plain
-  * parquet appends (the layout is append-stable).
+  * directory; within a band the join key is band_hash. Every write
+  * rebuilds the whole index; a corpus that grows is re-indexed as a
+  * whole (streaming grows its own index through
+  * [[graft.streaming.CompactedIndex]]).
   *
   * Giant buckets are capped by COMBINED size (index + batch rows per
   * (band, band_hash)), the same `maxBucket` semantics as full mining
@@ -43,36 +45,34 @@ object IncrementalDedup {
     */
   private[graft] def countsPath(path: String): String = s"$path/_graft_counts"
 
-  /** Build (mode=overwrite) or grow (mode=append) the index. A rebuild
-    * is a STATIC overwrite (the whole path is replaced): the earlier
-    * dynamic-overwrite setting only replaced band partitions present in
-    * the NEW data, so rebuilding with fewer bands (or from a shrunken
-    * corpus) left stale partitions that probes would happily read —
-    * candidate pairs against deleted documents.
+  /** Build the index. The write is a STATIC overwrite (the whole path is
+    * replaced): the earlier dynamic-overwrite setting only replaced band
+    * partitions present in the NEW data, so rebuilding with fewer bands
+    * (or from a shrunken corpus) left stale partitions that probes would
+    * happily read — candidate pairs against deleted documents.
     *
     * Rows and sidecar are written as ONE [[Commit.write]]: a crash between
-    * the row append and the sidecar rewrite leaves the index uncommitted,
+    * the row write and the sidecar rewrite leaves the index uncommitted,
     * and the probe then derives counts from the rows instead of trusting
     * a stale sidecar.
     */
   def writeIndex(df: DataFrame, textCol: String, idCol: String, path: String,
-                 shingleK: Int = 3, perms: Int = 32, bands: Int = 16,
-                 mode: String = "overwrite"): Unit = {
+                 shingleK: Int = 3, perms: Int = 32, bands: Int = 16): Unit = {
     val spark = df.sparkSession
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     Commit.write(fs, path) {
       signatureRows(df, textCol, idCol, shingleK, perms, bands)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("band").parquet(path)
       // per-bucket count sidecar: probes need the index's bucket sizes for
       // the combined-cap decision, and deriving them per probe costs a
       // second full scan of the index (at warehouse scale: half the probe
       // I/O). Counts are index METADATA maintained at write time — like a
       // table format's manifest stats — recomputed from the index's rows
-      // after every write, appends included (a 2-column pruned read of the
-      // index; never a second signature pass over the corpus), and
-      // statically overwritten, so the sidecar always covers every row.
+      // after every write (a 2-column pruned read of the index; never a
+      // second signature pass over the corpus), and statically
+      // overwritten, so the sidecar always covers every row.
       spark.read.parquet(path)
         .groupBy(col("band"), col("band_hash"))
         .agg(count(lit(1)).as("ic"))

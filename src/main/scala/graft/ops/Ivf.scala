@@ -13,11 +13,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * A coarse quantizer of `nlist` centroids (deterministic hash-sampled
   * seeds refined by Lloyd iterations over a bounded hash-sample)
   * partitions vectors into cells; a query probes the `nProbe` nearest
-  * cells and reranks exactly. At cluster scale the assigned table is
-  * built once (one scan + a KB-sized broadcast of centroids), written
-  * partitioned/bucketed by cell, and each query reads only its probed
-  * cells — candidate volume ~ nProbe/nlist of the corpus, with recall
-  * that tracks the data distribution instead of random hyperplanes.
+  * cells and reranks exactly. The assigned table is built in one scan
+  * (plus a KB-sized broadcast of centroids) and held in memory; a query
+  * keeps only its probed cells — candidate volume ~ nProbe/nlist of the
+  * corpus, with recall that tracks the data distribution instead of
+  * random hyperplanes.
   *
   * Everything driver-side is O(nlist*dim + sample); the per-row
   * assignment is one native expression (no per-element interpreted
@@ -97,9 +97,7 @@ object Ivf {
   }
 
   /** Assign every vector to its nearest centroid (one scan, native
-    * expression, centroids broadcast inside the plan). The returned
-    * `assigned` frame is what a production pipeline persists partitioned
-    * by `cell`.
+    * expression, centroids broadcast inside the plan).
     */
   def build(df: DataFrame, vecCol: String, idCol: String,
             nlist: Int = 64, seed: Long = 7L, refineIters: Int = 2,
@@ -139,8 +137,8 @@ object Ivf {
   }
 
   /** One-shot convenience: train + assign + query in a single call.
-    * For repeated queries build once and either keep the [[Index]] or
-    * [[writeIndex]] it — retraining per query is the expensive part.
+    * For repeated queries build once and keep the [[Index]] — retraining
+    * per query is the expensive part.
     */
   def ivfTopK(df: DataFrame, vecCol: String, idCol: String,
               query: Seq[Float], k: Int, nlist: Int = 64, nProbe: Int = 8,
@@ -148,45 +146,6 @@ object Ivf {
               sampleMod: Int = 1): DataFrame =
     topK(build(df, vecCol, idCol, nlist, seed, refineIters, sampleMod),
       vecCol, idCol, query, k, nProbe)
-
-  /** Persist an index: the assigned table partitioned BY CELL (so a probe
-    * reads only its nProbe/nlist slice of the corpus via partition
-    * pruning — `PartitionFilters: [__cell IN (...)]` in the probe scan,
-    * pinned by PlanSpec) plus the KB-sized centroid table, both inside
-    * one [[graft.lineage.Commit.write]].
-    */
-  def writeIndex(index: Index, dir: String): Unit = {
-    val spark = index.assigned.sparkSession
-    import spark.implicits._
-    graft.lineage.Commit.write(fs(spark, dir), dir) {
-      index.assigned.write.mode("overwrite")
-        .partitionBy("__cell").parquet(s"$dir/assigned")
-      index.centroids.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    }
-  }
-
-  private def fs(spark: org.apache.spark.sql.SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Reopen a persisted index; only a committed one is read (a crashed
-    * rewrite can pair new cells with old centroids). The assigned frame is
-    * the partitioned parquet scan — filters on `__cell` prune at the
-    * file-listing level, never touching unprobed cells' bytes.
-    */
-  def readIndex(spark: org.apache.spark.sql.SparkSession, dir: String): Index = {
-    require(graft.lineage.Commit.committed(fs(spark, dir), dir),
-      s"$dir holds no committed IVF index; rebuild it with writeIndex")
-    val byCell = spark.read.parquet(s"$dir/centroids").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Any](1).map {
-        case f: Float => f
-        case d: Double => d.toFloat
-        case null => 0f
-      }.toArray).toMap
-    Index(Array.tabulate(byCell.size)(byCell), spark.read.parquet(s"$dir/assigned"))
-  }
 
   def nearestCell(vec: Column, centroids: Array[Array[Float]]): Column =
     ColumnBridge.column(NearestCell(ColumnBridge.expression(vec), centroids.map(_.toSeq).toSeq))

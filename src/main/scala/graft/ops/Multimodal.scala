@@ -24,19 +24,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Canonical media-table schema. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),  // image|audio|video
-    StructField("bytes", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("sample_rate", IntegerType, nullable = true),
-      StructField("duration_ms", LongType, nullable = true)
-    )), nullable = true)
-  ))
-
   /** Typed row of the pruned input projection (encoder-backed — the
     * mapPartitions stages stay inside one logical plan instead of
     * dropping to an RDD and re-attaching a schema).
@@ -46,11 +33,6 @@ object Multimodal {
   /** Typed feature row ([[featureSchema]] is its encoder schema). */
   final case class MediaFeature(media_id: Long, kind: String, n_bytes: Int,
                                 ok: Boolean, feature: Array[Float])
-
-  /** Typed resized row ([[resizedSchema]] is its encoder schema). */
-  final case class ResizedMedia(media_id: Long, kind: String,
-                                bytes: Array[Byte], width: Int, height: Int,
-                                ok: Boolean)
 
   val featureSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -438,63 +420,6 @@ object Multimodal {
           }
         }
       }.toDF()
-  }
-
-  val resizedSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = true),
-    StructField("bytes", BinaryType, nullable = true),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("ok", BooleanType, nullable = false)))
-
-  /** Resize plumbing: per-partition batched transform binary->binary with
-    * typed (width, height) metadata on the output. The pixel work is
-    * stubbed (deterministic byte fold to a w*h-proportional payload); the
-    * schema contract, batching, and corrupt channel are the real pipeline.
-    */
-  def resize(media: DataFrame, width: Int, height: Int,
-             batchSize: Int = 64): DataFrame = {
-    import media.sparkSession.implicits._
-    val outLen = math.max(1, (width * height) / 256)
-    media.select("media_id", "kind", "bytes").as[MediaIn]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { rows =>
-          rows.map { m =>
-            if (m.bytes == null || m.bytes.isEmpty)
-              ResizedMedia(m.media_id, m.kind, null, width, height, ok = false)
-            else {
-              val in = m.bytes
-              val out = new Array[Byte](outLen)
-              var i = 0
-              while (i < in.length) { // stub: fold source bytes into the target
-                out(i % outLen) = (out(i % outLen) ^ in(i)).toByte
-                i += 1
-              }
-              ResizedMedia(m.media_id, m.kind, out, width, height, ok = true)
-            }
-          }
-        }
-      }.toDF()
-  }
-
-  /** Frame sampling for video rows: EXPLODE each video into every
-    * `everyNth` frame (built-in generator — violation of no-UDTF rule not
-    * needed). Frame count derives from metadata duration (stub: one frame
-    * per 40 ms); frame payloads are deterministic byte slices standing in
-    * for the decoded frames.
-    */
-  def sampleFrames(media: DataFrame, everyNth: Int = 10): DataFrame = {
-    val nFrames = (coalesce(col("meta.duration_ms"), lit(4000L)) / lit(40L)).cast("long")
-    media.filter(col("kind") === "video" && col("bytes").isNotNull)
-      .withColumn("frame_idx",
-        explode(sequence(lit(0L), greatest(nFrames - 1, lit(0L)), lit(everyNth.toLong))))
-      .select(col("media_id"), col("frame_idx"),
-        // stub frame payload: rotate the source bytes by the frame index
-        concat(
-          substring(col("bytes"), (pmod(col("frame_idx"), lit(8)) + 1).cast("int"), lit(1 << 20)),
-          substring(col("bytes"), lit(1), pmod(col("frame_idx"), lit(8)).cast("int")))
-          .as("frame_bytes"))
   }
 
   /** Deterministic synthetic media table for tests/benchmarks. */

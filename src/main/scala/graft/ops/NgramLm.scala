@@ -36,8 +36,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * plan before the collect — the standard pruned-LM trade (CCNet ships
   * exactly such a pruned count model to every worker); N and V come from
   * full-table aggregates, so pruning only zeroes tail counts that
-  * smoothing already dominates. Scoring is one codegen'd native walk per
-  * document with the count tables riding the plan as a reference object.
+  * smoothing already dominates. A bigram is kept only if its context
+  * unigram is: a kept (p, w) under a cut c(p) would read
+  * (c(p, w) + 1) / V, which can exceed 1. Scoring is one codegen'd
+  * native walk per document with the count tables riding the plan as a
+  * reference object.
   */
 object NgramLm {
 
@@ -68,7 +71,8 @@ object NgramLm {
 
   /** Distributed training over a reference DataFrame: two count passes
     * (unigrams, bigrams), both capped to the most frequent `maxEntries`
-    * rows (ties by key ASC) before the driver collect. N and V are exact
+    * rows (ties by key ASC) before the driver collect; bigrams whose
+    * context fell to the unigram cap are then dropped. N and V are exact
     * full-table aggregates regardless of the cap.
     */
   def train(ref: DataFrame, textCol: String,
@@ -99,7 +103,8 @@ object NgramLm {
         substring_index(col("g"), " ", -1).as("w"), col("c"))
       .orderBy(col("c").desc, col("p"), col("w"))
       .limit(maxEntries).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      .collect { case r if uni.contains(r.getString(0)) =>
+        (r.getString(0), r.getString(1)) -> r.getLong(2) }.toMap
     Model(uni, bi, nTok, vocab + 1L)
   }
 

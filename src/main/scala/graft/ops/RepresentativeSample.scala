@@ -34,8 +34,12 @@ object RepresentativeSample {
   def exhibitedPairs(recordType: DocT): Seq[(String, String)] =
     recordType.fields.toSeq.map { case (p, t) => (p, t.kind.name) }
 
-  /** Select representative JSON lines: returns (line, coveredPairs) rows,
-    * one line per covered (property, kind) pair (first by line order).
+  /** Select representative JSON lines: returns (property, kind, row_idx,
+    * line) rows, one line per covered (property, kind) pair (first by
+    * line order). `row_idx` is an ORDER key, not a dense line number:
+    * `monotonically_increasing_id` orders by partition first, then by
+    * position within it — the input's line order, as `zipWithIndex` would
+    * give, with gaps between partitions.
     */
   def fromJsonLines(lines: Dataset[String],
                     schema: DocT,
@@ -45,20 +49,23 @@ object RepresentativeSample {
     val targets = coverageTargets(schema)
     val targetB = spark.sparkContext.broadcast(targets)
 
-    val pairs = lines.rdd.zipWithIndex().mapPartitions { it =>
-      // one extractor per TASK, not per row (it carries merge/date-format
-      // state; per-row construction was pure allocation pressure in the
-      // scan that dominates this job)
-      val extractor = new TypeExtractor(StrictMerge, dateFormats)
-      it.flatMap { case (line, idx) =>
-        extractor.extractLine(line).toOption.toSeq.flatMap {
-          case d: DocT =>
-            exhibitedPairs(d).filter(targetB.value.contains)
-              .map { case (p, k) => (p, k, idx, line) }
-          case _ => Nil
+    val pairs = lines
+      .select(col(lines.columns.head), monotonically_increasing_id())
+      .as[(String, Long)]
+      .mapPartitions { it =>
+        // one extractor per TASK, not per row (it carries merge/date-format
+        // state; per-row construction was pure allocation pressure in the
+        // scan that dominates this job)
+        val extractor = new TypeExtractor(StrictMerge, dateFormats)
+        it.flatMap { case (line, idx) =>
+          extractor.extractLine(line).toOption.toSeq.flatMap {
+            case d: DocT =>
+              exhibitedPairs(d).filter(targetB.value.contains)
+                .map { case (p, k) => (p, k, idx, line) }
+            case _ => Nil
+          }
         }
-      }
-    }.toDF("property", "kind", "row_idx", "line")
+      }.toDF("property", "kind", "row_idx", "line")
 
     // first exhibiting row per pair
     pairs.groupBy($"property", $"kind")

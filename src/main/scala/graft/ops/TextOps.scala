@@ -88,20 +88,6 @@ object TextOps {
       .otherwise("und")
   }
 
-  /** Composite quality score in [0,1]: favors alphabetic text with sane
-    * word lengths and some stopword mass; penalizes digit/punct soup.
-    */
-  def qualityScore(text: Column): Column = {
-    val nTok = tokenCountWs(text).cast("double")
-    val meanWordLen = when(nTok > 0, (length(text) - nTok + 1) / nTok).otherwise(0.0)
-    val wordLenOk = when(meanWordLen >= 2.5 && meanWordLen <= 10.0, 1.0).otherwise(0.4)
-    val allStop = stopwordHits(text, stopwords.values.flatten.toSeq).cast("double")
-    val stopRatio = when(nTok > 0, least(allStop / nTok * 5.0, lit(1.0))).otherwise(0.0)
-    round(least(
-      greatest(alphaRatio(text) * 0.5 + wordLenOk * 0.25 + stopRatio * 0.25, lit(0.0)),
-      lit(1.0)), 6)
-  }
-
   /** Rolling-hash document fingerprint over whitespace words: a fold that
     * chains each word's hash into the accumulator (order-sensitive, like a
     * polynomial rolling hash, but overflow-free under ANSI arithmetic).

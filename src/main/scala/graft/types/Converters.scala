@@ -1,21 +1,12 @@
 package graft.types
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** Scalar up-converters (reference data_converters.clj): coerce raw data of
   * one type to another with the reference's truthiness rules — numbers are
   * truthy, bools become 1/0, non-numerics become null, and ->integer
   * ROUNDS-HALF-UP (num-tower round, data_converters.clj:23-31), not
-  * truncates.
-  *
-  * Two surfaces: pure JValue functions (golden-testable) and Spark Column
-  * expressions (the distributed path; note `round(c, 0)` not
-  * `cast("long")` for the half-up semantics).
+  * truncates. Pure JValue functions, pinned by the reference goldens.
   */
 object Converters {
-
-  // ---- pure JValue domain ---------------------------------------------
 
   def toNull(v: JValue): JValue = JNull
 
@@ -62,37 +53,4 @@ object Converters {
     */
   def makeTypeConverters(doc: DocT): Map[String, JValue => JValue] =
     doc.fields.map { case (k, t) => k -> byKind(t.kind) }
-
-  // ---- Spark Column domain ---------------------------------------------
-
-  def toBoolCol(c: Column): Column =
-    when(c.isNull, lit(null).cast("boolean")).otherwise(
-      when(c.cast("string") === "false", false).otherwise(true))
-
-  def toIntegerCol(c: Column): Column =
-    when(c.cast("string").isin("true", "false"), when(c.cast("string") === "true", 1L).otherwise(0L))
-      .otherwise(floor(try_cast(c, "double") + 0.5).cast("long"))
-
-  def toRealCol(c: Column): Column =
-    when(c.cast("string").isin("true", "false"), when(c.cast("string") === "true", 1.0).otherwise(0.0))
-      .otherwise(try_cast(c, "double"))
-
-  def toStrCol(c: Column): Column = c.cast("string")
-
-  private def try_cast(c: Column, t: String): Column = c.try_cast(t)
-
-  /** Column converter plan for a document type: apply to a DataFrame with
-    * matching column names (F2, data_converters.clj:51-56).
-    */
-  def columnPlan(doc: DocT): Map[String, Column => Column] =
-    doc.fields.map { case (k, t) =>
-      val fn: Column => Column = t.kind match {
-        case Kind.Null => (_: Column) => lit(null)
-        case Kind.Bool => toBoolCol
-        case Kind.Int  => toIntegerCol
-        case Kind.Real => toRealCol
-        case _         => toStrCol
-      }
-      k -> fn
-    }
 }

@@ -88,7 +88,6 @@ final case class DocT(fields: Map[String, SchemaType]) extends SchemaType {
 /** `elem == None` is the empty-collection sentinel `:nothing`. */
 final case class CollT(elem: Option[SchemaType]) extends SchemaType {
   def kind: Kind = Kind.Collection
-  def isEmptyColl: Boolean = elem.isEmpty
 }
 object CollT {
   val nothing: CollT = CollT(None)
@@ -107,7 +106,6 @@ final case class SpecialT(name: String) extends SchemaType {
 final case class UnionT(types: Set[SchemaType]) extends SchemaType {
   def kind: Kind = Kind.Union
   def documents: Set[DocT] = types.collect { case d: DocT => d }
-  def nonDocuments: Set[SchemaType] = types.filterNot(_.isInstanceOf[DocT])
 }
 object UnionT { def of(ts: SchemaType*): UnionT = UnionT(ts.toSet) }
 
@@ -117,7 +115,6 @@ object SchemaType {
   /** Registry overload (reference types.clj:82-87 scalar-type? arity-2). */
   def isScalar(registry: Set[Kind], t: SchemaType): Boolean =
     registry.contains(t.kind)
-  def sameKind(a: SchemaType, b: SchemaType): Boolean = a.kind == b.kind
 
   /** Same-typed scalar combine (reference types.clj:125-161):
     * ranged scalars take range union, dates take format-set union,

@@ -81,28 +81,6 @@ class PlanSpec extends AnyFunSuite {
       s"corpus must be shingled once, plan:\n$p")
   }
 
-  test("IVF probe over a persisted index prunes unprobed cells at the scan") {
-    import graft.ops.{Ivf, Similarity}
-    import spark.implicits._
-    val vecs = (0 until 400).map { i =>
-      (i.toLong, Seq.tabulate(8)(j => math.sin(i * 13 + j * 5).toFloat))
-    }.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivfidx").toString
-    Ivf.writeIndex(Ivf.build(vecs, "embedding", "vec_id", nlist = 8), dir)
-    val idx = Ivf.readIndex(spark, dir)
-    val query = Seq.tabulate(8)(j => math.sin(3 * 13 + j * 5).toFloat)
-    val probed = Ivf.topK(idx, "embedding", "vec_id", query, 5, nProbe = 2)
-    val p = plan(probed)
-    assert(p.contains("PartitionFilters: [__cell"),
-      s"probe must prune by cell partition:\n$p")
-    // probing all cells over the persisted index == brute force
-    val full = Ivf.topK(idx, "embedding", "vec_id", query, 5, nProbe = 8)
-      .collect().map(_.getLong(0)).toSeq
-    val brute = Similarity.bruteTopK(vecs, "embedding", "vec_id", query, 5)
-      .collect().map(_.getLong(0)).toSeq
-    assert(full == brute)
-  }
-
   test("IVF training is bit-deterministic across runs") {
     import graft.ops.Ivf
     import spark.implicits._

@@ -59,22 +59,6 @@ class ValidatorSpec extends AnyFunSuite {
     assert(v(("web", "completeness")))
   }
 
-  test("violation examples are capped per (source, check) and deterministic") {
-    val ex = Validator.violationExamples(df, suite.copy(violationSampleCap = 3))
-    val counts = ex.groupBy("source", "check").count().collect()
-    assert(counts.nonEmpty)
-    counts.foreach(r => assert(r.getLong(2) <= 3, r.toString))
-    // the kept examples are the smallest doc_ids of the full set
-    val fullTop = Validator.violations(df, suite)
-      .withColumn("check", explode(col("checks")))
-      .filter(col("source") === "web" && col("check") === "oov_token")
-      .orderBy(col("doc_id")).limit(3)
-      .select("doc_id").collect().map(_.getString(0)).toSeq
-    val got = ex.filter(col("source") === "web" && col("check") === "oov_token")
-      .orderBy(col("doc_id")).select("doc_id").collect().map(_.getString(0)).toSeq
-    assert(got == fullTop)
-  }
-
   test("hot-source skew: verdicts are layout-invariant") {
     val hotCfg = SequenceSynth.Config(rows = 20000,
       sourceWeights = Seq("web" -> 0.94, "books" -> 0.02, "code" -> 0.02, "chat" -> 0.02))

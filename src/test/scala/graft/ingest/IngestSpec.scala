@@ -68,6 +68,46 @@ class IngestSpec extends AnyFunSuite {
     assert(!selected.contains("""{"a": 2, "b": "z"}"""))
   }
 
+  test("representative lines over several partitions: the first occurrence of each pair wins") {
+    import spark.implicits._
+    // every line is distinct; `a` cycles int/str/bool, and `b<k>` first
+    // shows up from line 10 on, so some first occurrences sit in later
+    // partitions and every pair recurs across partitions
+    val lines = (0 until 48).map { i =>
+      val a = i % 3 match {
+        case 0 => i.toString
+        case 1 => s""""s$i""""
+        case _ => "true"
+      }
+      if (i < 10) s"""{"a": $a, "i": $i}"""
+      else s"""{"a": $a, "b${i % 7}": $i, "i": $i}"""
+    } :+ "broken{"
+    val ds = spark.sparkContext.parallelize(lines, 4).toDS()
+    assert(ds.rdd.getNumPartitions >= 3)
+    val schema = doc(
+      (Seq("a" -> union(int(0, 1), str(1), BoolT), "i" -> int(0, 1)) ++
+        (0 until 7).map(k => s"b$k" -> int(0, 1))): _*)
+    val targets = RepresentativeSample.coverageTargets(schema)
+
+    // driver-side scan in line order: the first line exhibiting each pair
+    val extractor = new TypeExtractor(StrictMerge, Nil)
+    val firstByPair = scala.collection.mutable.LinkedHashMap[(String, String), String]()
+    lines.foreach { line =>
+      extractor.extractLine(line).toOption.collect { case d: DocT => d }.foreach { d =>
+        RepresentativeSample.exhibitedPairs(d).filter(targets.contains)
+          .foreach(p => if (!firstByPair.contains(p)) firstByPair(p) = line)
+      }
+    }
+    assert(firstByPair.keySet == targets)
+
+    val picked = RepresentativeSample.fromJsonLines(ds, schema).collect()
+    assert(picked.map(r => (r.getString(0), r.getString(1)) -> r.getString(3)).toMap ==
+      firstByPair.toMap)
+    // row_idx orders the picked lines as the input does
+    val byIdx = picked.sortBy(_.getLong(2)).map(_.getString(3)).distinct.toSeq
+    assert(byIdx == byIdx.sortBy(lines.indexOf(_)))
+  }
+
   test("binned examples collect capped distinct values per property (example_data.clj:94-115)") {
     import spark.implicits._
     val lines = (1 to 30).map(i => s"""{"a": ${i % 5}, "b": "x"}""")

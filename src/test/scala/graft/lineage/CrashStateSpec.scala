@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
 import graft.constraints.{ResumableValidator, Validator}
-import graft.ops.{IncrementalDedup, Ivf}
+import graft.ops.IncrementalDedup
 import graft.sequences.SequenceSynth
 import graft.streaming.CompactedIndex
 
@@ -96,35 +96,38 @@ class CrashStateSpec extends AnyFunSuite {
       assert(!fs(state).exists(Commit.tempPath(manifest(state, "web"))))
     })
 
-  // ---- index append plus sidecar: the combined-cap corpus (every bucket
-  // of 5 indexed + 2 appended + 2 probed identical docs holds 9 rows)
+  // ---- index rebuild plus sidecar: the combined-cap corpus (every bucket
+  // of 5 + 2 indexed and 2 probed identical docs holds 9 rows); a growing
+  // corpus is re-indexed as a whole, over an index of the first 5
   private val same = "the quick brown fox jumps over the lazy dog near the river bank same"
   private def docs(ids: Long*) = ids.map(i => (i, same)).toDF("doc_id", "text")
   private def indexed = docs(1L to 5L: _*)
-  private def appended = docs(10L, 11L)
+  private def grown = indexed.unionByName(docs(10L, 11L))
   private def mine(dir: String, cap: Int): Set[(Long, Long)] =
     IncrementalDedup.newDocCandidates(spark, docs(20L, 21L), "text", "doc_id", dir,
       maxBucket = cap).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   private val caps = Seq(8, 10) // 9-row buckets: dropped at 8, mined at 10
   private lazy val scratchMined = {
     val dir = s"${tmp("crash-idx-scratch")}/idx"
-    IncrementalDedup.writeIndex(indexed.unionByName(appended), "text", "doc_id", dir)
+    IncrementalDedup.writeIndex(grown, "text", "doc_id", dir)
     caps.map(mine(dir, _))
   }
 
-  private val indexAppend = Writer("index append plus sidecar",
+  private val indexRebuild = Writer("index rebuild plus sidecar",
     Seq(
-      "rows appended" -> { root =>
+      // the static overwrite drops the old sidecar with the old rows: a
+      // probe must derive counts here, never read `_graft_counts`
+      "rows rewritten" -> { root =>
         val dir = s"$root/idx"
         IncrementalDedup.writeIndex(indexed, "text", "doc_id", dir)
         uncommit(dir)
-        IncrementalDedup.signatureRows(appended, "text", "doc_id", 3, 32, 16)
-          .write.mode("append").partitionBy("band").parquet(dir)
+        IncrementalDedup.signatureRows(grown, "text", "doc_id", 3, 32, 16)
+          .write.mode("overwrite").partitionBy("band").parquet(dir)
       },
       "sidecar rewritten" -> { root =>
         val dir = s"$root/idx"
         IncrementalDedup.writeIndex(indexed, "text", "doc_id", dir)
-        IncrementalDedup.writeIndex(appended, "text", "doc_id", dir, mode = "append")
+        IncrementalDedup.writeIndex(grown, "text", "doc_id", dir)
         uncommit(dir)
       }),
     root => {
@@ -158,39 +161,7 @@ class CrashStateSpec extends AnyFunSuite {
       assert(readIds(root, 3L) == batchIds(0L, 1L, 2L))
     })
 
-  // ---- Ivf: a rebuild (index B over index A) writes assigned, then centroids
-  private def vecs(seed: Int) = (0 until 200).map { i =>
-    (i.toLong, Seq.tabulate(8)(j => math.sin(i * seed + j * 5).toFloat))
-  }.toDF("vec_id", "embedding")
-  private def indexB = Ivf.build(vecs(11), "embedding", "vec_id", nlist = 8)
-  private val query = Seq.tabulate(8)(j => math.cos(j * 3).toFloat)
-  private def probe(dir: String) = {
-    val idx = Ivf.readIndex(spark, dir)
-    (idx.centroids.map(_.toSeq).toSeq,
-      Ivf.topK(idx, "embedding", "vec_id", query, 5, nProbe = 2).collect().map(_.getLong(0)).toSeq)
-  }
-  private lazy val scratchProbe = {
-    val dir = s"${tmp("crash-ivf-scratch")}/ivf"
-    Ivf.writeIndex(indexB, dir)
-    probe(dir)
-  }
-
-  private val ivf = Writer("Ivf",
-    Seq("assigned rewritten" -> { root =>
-      val dir = s"$root/ivf"
-      Ivf.writeIndex(Ivf.build(vecs(13), "embedding", "vec_id", nlist = 4), dir)
-      uncommit(dir)
-      indexB.assigned.write.mode("overwrite").partitionBy("__cell").parquet(s"$dir/assigned")
-    }),
-    root => {
-      val dir = s"$root/ivf"
-      // the reader refuses new cells under old centroids; the rerun rebuilds
-      intercept[IllegalArgumentException](Ivf.readIndex(spark, dir))
-      Ivf.writeIndex(indexB, dir)
-      assert(probe(dir) == scratchProbe)
-    })
-
-  for (w <- Seq(validateResume, indexAppend, compaction, ivf); (step, crash) <- w.steps)
+  for (w <- Seq(validateResume, indexRebuild, compaction); (step, crash) <- w.steps)
     test(s"${w.name}: crash after $step, the next run equals a from-scratch run") {
       val dir = tmp("crash")
       crash(dir)

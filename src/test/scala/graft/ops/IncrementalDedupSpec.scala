@@ -14,12 +14,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
 
   def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
 
-  test("append-mode mining: new-vs-old and new-vs-new found, old-vs-old never re-emitted") {
+  test("incremental mining: new-vs-old and new-vs-new found, old-vs-old never re-emitted") {
     val dir = java.nio.file.Files.createTempDirectory("incdedup").toString + "/idx"
     // initial corpus: docs 1 and 2 are near-dups of each other
-    IncrementalDedup.writeIndex(
-      docs(1L -> s"$base one", 2L -> s"$base two", 3L -> other),
-      "text", "doc_id", dir)
+    val corpus = docs(1L -> s"$base one", 2L -> s"$base two", 3L -> other)
+    IncrementalDedup.writeIndex(corpus, "text", "doc_id", dir)
 
     // batch: 10 near-dups 1/2, 11 near-dups 12 (within batch), 13 is novel
     val batch = docs(
@@ -37,8 +36,8 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(!cands.contains((1L, 2L)), "old x old must not be re-mined")
     assert(!cands.exists(p => p._1 == 13L || p._2 == 13L))
 
-    // grow the index with the batch; a later batch sees corpus + batch
-    IncrementalDedup.writeIndex(batch, "text", "doc_id", dir, mode = "append")
+    // grow the index by a rebuild over corpus + batch; a later batch sees both
+    IncrementalDedup.writeIndex(corpus.unionByName(batch), "text", "doc_id", dir)
     val cands2 = IncrementalDedup.newDocCandidates(spark,
         docs(20L -> s"$base twenty"), "text", "doc_id", dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -62,10 +61,10 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("incdedup4").toString + "/idx"
     val old = docs(1L -> s"$base one", 2L -> s"$base two", 3L -> other)
     IncrementalDedup.writeIndex(old, "text", "doc_id", dir)
-    // append must leave the sidecar covering EVERY row (recount + static
-    // overwrite), never just the appended batch
-    IncrementalDedup.writeIndex(docs(4L -> s"$base four"), "text", "doc_id",
-      dir, mode = "append")
+    // a rebuild over the grown corpus must leave the sidecar covering EVERY
+    // row (recount + static overwrite), never just the first corpus
+    IncrementalDedup.writeIndex(old.unionByName(docs(4L -> s"$base four")),
+      "text", "doc_id", dir)
     // band is a partition-dir column: parquet inference reads it back as
     // IntegerType (CLAUDE.md lesson) — compare via Number
     def rows3(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>

@@ -71,4 +71,16 @@ class NgramLmSpec extends AnyFunSuite {
     assert(m.totalTokens == 5L && m.vocabSize == 4L) // full-table aggregates
     assert(m.unigrams == Map("a" -> 3L)) // only the most frequent survives
   }
+
+  test("under the cap a bigram survives only with its context unigram") {
+    // unigrams a, b, x, y tie at 10; the cap of 2 keeps a and b (key ASC),
+    // while the one bigram (x, y) would survive its own cap
+    val ref = (Seq.fill(10)("a") ++ Seq.fill(10)("b") ++ Seq.fill(10)("x y")).toDF("text")
+    val m = NgramLm.train(ref, "text", maxEntries = 2)
+    assert(m.unigrams == Map("a" -> 10L, "b" -> 10L))
+    assert(m.bigrams.keys.forall { case (p, _) => m.unigrams.contains(p) }, m.bigrams)
+    // a kept (x, y) under a cut c(x) reads P(y|x) = 11/5: adding a token
+    // would RAISE the log-likelihood
+    assert(NgramLm.scoreString("x y", m)._3 <= NgramLm.scoreString("x", m)._3)
+  }
 }

@@ -563,35 +563,6 @@ class OpsSpec extends AnyFunSuite {
       st8.rms.toFloat, 2f, st8.meanAbs.toFloat))
   }
 
-  test("multimodal resize + frame sampling: schema contract, determinism, corrupt channel") {
-    val media = Multimodal.synthMedia(spark, 300)
-    val resized = Multimodal.resize(media, 32, 32)
-    assert(resized.schema == Multimodal.resizedSchema)
-    val rs = resized.collect().map(r => r.getLong(0) -> r).toMap
-    assert(rs.size == 300)
-    // corrupt payloads flow through the error channel, not exceptions
-    assert(rs.values.exists(!_.getBoolean(5)))
-    rs.values.filter(_.getBoolean(5)).foreach { r =>
-      assert(r.getAs[Array[Byte]]("bytes").length == (32 * 32) / 256)
-    }
-    // batch-shape invariance: same results at different batch sizes
-    val rs2 = Multimodal.resize(media, 32, 32, batchSize = 7).collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bytes")).toMap
-    rs.foreach { case (id, r) =>
-      assert(java.util.Arrays.equals(r.getAs[Array[Byte]]("bytes"), rs2(id)))
-    }
-
-    val frames = Multimodal.sampleFrames(media, everyNth = 20)
-    val byMedia = frames.collect().groupBy(_.getLong(0))
-    assert(byMedia.nonEmpty)
-    // only video rows explode; frame indices step by everyNth
-    byMedia.values.foreach { fs =>
-      val idxs = fs.map(_.getLong(1)).sorted
-      assert(idxs.head == 0L && idxs.forall(_ % 20 == 0))
-      fs.foreach(f => assert(f.getAs[Array[Byte]]("frame_bytes").nonEmpty))
-    }
-  }
-
   test("token counts and ratios agree with simple definitions") {
     val df = Seq(("a bb ccc", 1)).toDF("text", "x")
     val r = df.select(
