@@ -3,7 +3,7 @@ package graft.app
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.constraints.{ResumableValidator, Validator}
+import graft.constraints.{ResumableValidator, SuiteStatsBySourceAgg, Validator}
 import graft.sequences.SequenceSynth
 
 /** spark-submit entry point: synth | validate | throughput.
@@ -250,10 +250,10 @@ object Main {
 
       case "state-audit" =>
         // lineage audit of a validation state dir vs its input: per
-        // partition, is the checkpoint CURRENT (fingerprint matches —
-        // a rerun skips it), CHANGED (input files moved under it), or
-        // NEW (never validated)? Plus manifests whose partition left
-        // the input (ORPHANED). Read-only; run it before `validate` to
+        // partition, is the checkpoint CURRENT (fingerprint and suite key
+        // match — a rerun skips it), CHANGED (input files or suite config
+        // changed), or NEW (never validated)? Plus state files whose
+        // partition left the input (ORPHANED). Read-only; run it before `validate` to
         // see what a rerun will actually do.
         val input = opts("input")
         val statePath = opts("state") // no default: validate has none,
@@ -271,31 +271,25 @@ object Main {
           require(hits != null && hits.nonEmpty,
             s"input path matches nothing: $input")
         }
-        val manifests = graft.lineage.Checkpoint
-          .manifestSources(spark, statePath)
-        require(manifests.nonEmpty,
-          s"no manifests under $statePath/manifests: wrong --state, " +
-            "or validate has not run yet")
+        val stored = graft.lineage.Checkpoint.stateSources(spark, statePath)
+        require(stored.nonEmpty, s"no state files under $statePath/sources: wrong " +
+          "--state, validate has not run yet, or an old state layout (manifests/ + " +
+          "stats/), whose partitions the next validate revalidates once")
+        val key = SuiteStatsBySourceAgg.suiteKey(Validator.SuiteConfig())
         val inputs = graft.lineage.Checkpoint.inputPartitions(spark, input)
         inputs.sortBy(_.source).foreach { pl =>
-          graft.lineage.Checkpoint
-            .readManifest(spark, statePath, pl.source) match {
-            case Some((Some(fp), n)) if fp == pl.fingerprint =>
-              println(f"  state ${pl.source}%-12s current  " +
-                s"n_rows=${n.map(_.toString).getOrElse("?")}")
-            case Some((Some(_), n)) =>
-              println(f"  state ${pl.source}%-12s CHANGED  " +
-                s"(was n_rows=${n.map(_.toString).getOrElse("?")}; " +
-                "revalidation needed)")
-            case Some((None, _)) =>
-              println(f"  state ${pl.source}%-12s UNPARSEABLE manifest " +
-                "(no fingerprint; a rerun revalidates)")
+          graft.lineage.Checkpoint.readState(spark, statePath, pl.source) match {
+            case Some((fp, payload)) =>
+              val (k, m) = SuiteStatsBySourceAgg.decodeState(payload)
+              val n = m.values.map(_.nRows).sum
+              println(f"  state ${pl.source}%-12s " + (if (fp == pl.fingerprint && k == key)
+                s"current  n_rows=$n" else s"CHANGED  (was n_rows=$n; revalidation needed)"))
             case None =>
               println(f"  state ${pl.source}%-12s NEW      (never validated)")
           }
         }
         val live = inputs.map(_.source).toSet
-        manifests.filterNot(live).sorted
+        stored.filterNot(live).sorted
           .foreach(s => println(f"  state $s%-12s ORPHANED (partition left the input)"))
 
       case "chunk" =>

@@ -196,7 +196,7 @@ object SuiteStatsAgg {
   }
 
   object Buf {
-    /** A stats row ([[schema]] fields, e.g. persisted stream state) back
+    /** A stats row ([[schema]] fields, e.g. an observed stats row) back
       * into a buffer; a NULL min/max means the source saw no such value.
       */
     def fromRow(r: Row, kllK: Int): Buf = {

@@ -2,9 +2,9 @@ package graft.constraints
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericRowWithSchema}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -43,22 +43,20 @@ case class SuiteStatsBySourceAgg(
     kllK: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[Option[String], SuiteStatsAgg.Buf]] {
+  extends TypedImperativeAggregate[SuiteStatsBySourceAgg.Bufs] {
   import SuiteStatsAgg.Buf
+  import SuiteStatsBySourceAgg.Bufs
 
   override def children: Seq[Expression] = Seq(source, docId, tokens, nTok)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): SuiteStatsBySourceAgg =
     copy(source = c(0), docId = c(1), tokens = c(2), nTok = c(3))
 
-  override def createAggregationBuffer(): mutable.HashMap[Option[String], Buf] =
-    mutable.HashMap.empty
+  override def createAggregationBuffer(): Bufs = mutable.HashMap.empty
 
   private lazy val binLut: Array[Int] =
     Array.tabulate(vocab)(t => (t.toLong * bins / vocab).toInt)
 
-  override def update(
-      m: mutable.HashMap[Option[String], Buf],
-      input: InternalRow): mutable.HashMap[Option[String], Buf] = {
+  override def update(m: Bufs, input: InternalRow): Bufs = {
     val s = Option(source.eval(input).asInstanceOf[UTF8String]).map(_.toString)
     val buf = m.getOrElseUpdate(s, new Buf(bins, kllK))
     SuiteStatsAgg.updateRow(buf,
@@ -69,9 +67,38 @@ case class SuiteStatsBySourceAgg(
     m
   }
 
-  override def merge(
-      a: mutable.HashMap[Option[String], Buf],
-      b: mutable.HashMap[Option[String], Buf]): mutable.HashMap[Option[String], Buf] = {
+  override def merge(a: Bufs, b: Bufs): Bufs = SuiteStatsBySourceAgg.merge(a, b)
+
+  override def eval(m: Bufs): Any =
+    new GenericArrayData(
+      m.toSeq.sortBy(_._1).map { case (s, buf) =>
+        InternalRow(
+          s.map(UTF8String.fromString).orNull,
+          SuiteStatsAgg.evalBuf(buf))
+      }.toArray[Any])
+
+  override def serialize(m: Bufs): Array[Byte] = SuiteStatsBySourceAgg.serialize(m)
+  override def deserialize(bytes: Array[Byte]): Bufs =
+    SuiteStatsBySourceAgg.deserialize(bytes, bins, kllK)
+
+  override def withNewMutableAggBufferOffset(o: Int): SuiteStatsBySourceAgg =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): SuiteStatsBySourceAgg =
+    copy(inputAggBufferOffset = o)
+
+  override def dataType: DataType = SuiteStatsBySourceAgg.dataTypeDef
+  override def nullable: Boolean = false
+  override def prettyName: String = "suite_stats_by_source"
+}
+
+object SuiteStatsBySourceAgg {
+  import SuiteStatsAgg.Buf
+
+  /** source -> buffer: [[serialize]]d between tasks and in state files. */
+  type Bufs = mutable.HashMap[Option[String], Buf]
+
+  /** Fold `b` into `a`: buffers of a source merge, new sources join. */
+  def merge(a: Bufs, b: Bufs): Bufs = {
     b.foreach { case (s, buf) =>
       a.get(s) match {
         case Some(mine) => mine.mergeIn(buf)
@@ -81,15 +108,7 @@ case class SuiteStatsBySourceAgg(
     a
   }
 
-  override def eval(m: mutable.HashMap[Option[String], Buf]): Any =
-    new GenericArrayData(
-      m.toSeq.sortBy(_._1).map { case (s, buf) =>
-        InternalRow(
-          s.map(UTF8String.fromString).orNull,
-          SuiteStatsAgg.evalBuf(buf))
-      }.toArray[Any])
-
-  override def serialize(m: mutable.HashMap[Option[String], Buf]): Array[Byte] = {
+  def serialize(m: Bufs): Array[Byte] = {
     val entries = m.toSeq.map { case (s, buf) =>
       (s.map(_.getBytes("UTF-8")), buf.toBytes)
     }
@@ -108,7 +127,7 @@ case class SuiteStatsBySourceAgg(
     out.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[Option[String], Buf] = {
+  def deserialize(bytes: Array[Byte], bins: Int, kllK: Int): Bufs = {
     val in = java.nio.ByteBuffer.wrap(bytes)
     val m = mutable.HashMap.empty[Option[String], Buf]
     val n = in.getInt()
@@ -125,17 +144,38 @@ case class SuiteStatsBySourceAgg(
     m
   }
 
-  override def withNewMutableAggBufferOffset(o: Int): SuiteStatsBySourceAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): SuiteStatsBySourceAgg =
-    copy(inputAggBufferOffset = o)
+  /** Stats rows ([[Validator.statsSchema]]) back into buffers. */
+  def fromRows(rows: Array[Row], kllK: Int): Bufs =
+    rows.foldLeft(new Bufs)((m, r) =>
+      merge(m, mutable.HashMap(Option(r.getAs[String]("source")) -> Buf.fromRow(r, kllK))))
 
-  override def dataType: DataType = SuiteStatsBySourceAgg.dataTypeDef
-  override def nullable: Boolean = false
-  override def prettyName: String = "suite_stats_by_source"
-}
+  /** Buffers as stats rows ([[Validator.statsSchema]]), sorted by source. */
+  def statsRows(m: Bufs): Array[Row] = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(SuiteStatsAgg.schema)
+    m.toSeq.sortBy(_._1).map { case (s, buf) =>
+      val stats = toRow(SuiteStatsAgg.evalBuf(buf)).asInstanceOf[Row]
+      new GenericRowWithSchema((s.orNull +: stats.toSeq).toArray, Validator.statsSchema): Row
+    }.toArray
+  }
 
-object SuiteStatsBySourceAgg {
+  /** The suite fields stats and violations depend on. */
+  def suiteKey(cfg: Validator.SuiteConfig): Seq[Int] =
+    Seq(cfg.vocabSize, cfg.minNtok, cfg.maxNtok, cfg.tokenHistBins, cfg.kllK)
+
+  /** Persisted stats (resume and stream state): suite key, then buffers. */
+  def encodeState(key: Seq[Int], m: Bufs): Array[Byte] = {
+    val out = java.nio.ByteBuffer.allocate(4 * key.size)
+    key.foreach(out.putInt)
+    out.array() ++ serialize(m)
+  }
+
+  /** The stored key, and the buffers decoded with its bins and kllK. */
+  def decodeState(bytes: Array[Byte]): (Seq[Int], Bufs) = {
+    val in = java.nio.ByteBuffer.wrap(bytes)
+    val key = Seq.fill(5)(in.getInt())
+    (key, deserialize(bytes.drop(4 * key.size), bins = key(3), kllK = key(4)))
+  }
+
   val dataTypeDef: ArrayType = ArrayType(StructType(Seq(
     StructField("source", StringType, nullable = true),
     StructField("stats", SuiteStatsAgg.schema, nullable = false))),

@@ -11,8 +11,9 @@ import java.nio.charset.StandardCharsets
   *
   * Each input partition (`source=<v>` directory) is fingerprinted by its
   * data-file list (name, length, mtime). A completed validation writes the
-  * partition's stats/violations, then, LAST, a manifest carrying the
-  * fingerprint (replaced atomically, [[Commit.writeAtomic]]);
+  * partition's violations, then, LAST, its state file `sources/<source>`:
+  * the fingerprint plus the caller's payload (the partition's stats),
+  * replaced atomically ([[Commit.writeAtomic]]) and read on the driver;
   * a restarted run revalidates ONLY partitions whose fingerprint changed —
   * the skip is a real scan skip, because the remaining sources are read
   * with a partition-pruning filter.
@@ -50,63 +51,46 @@ object Checkpoint {
       }
   }
 
-  private def manifestPath(statePath: String, source: String): Path =
-    new Path(s"$statePath/manifests/$source.json")
+  private def stateFile(statePath: String, source: String): Path =
+    new Path(s"$statePath/sources/$source")
 
-  /** The one manifest reader: (fingerprint?, n_rows?) from the manifest
-    * body, None when no manifest exists. [[plan]] (a rerun) matches on the
-    * fingerprint alone, so n_rows is OPTIONAL: a manifest whose
-    * fingerprint parses but whose row count is garbled still skips on a
-    * rerun, and the audit reports what the rerun will do.
-    */
-  def readManifest(spark: SparkSession, statePath: String,
-      source: String): Option[(Option[String], Option[Long])] = {
-    val p = manifestPath(statePath, source)
-    val system = fs(spark, statePath)
-    if (!system.exists(p)) None
-    else {
+  /** A partition's stored (fingerprint, payload); None: no state file. */
+  def readState(spark: SparkSession, statePath: String,
+                source: String): Option[(String, Array[Byte])] = {
+    val (system, p) = (fs(spark, statePath), stateFile(statePath, source))
+    Option.when(system.exists(p)) {
       val in = system.open(p)
-      try {
-        val body = new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        Some((
-          "\"fingerprint\"\\s*:\\s*\"([0-9a-f]+)\"".r
-            .findFirstMatchIn(body).map(_.group(1)),
-          "\"n_rows\"\\s*:\\s*(\\d+)".r
-            .findFirstMatchIn(body).map(_.group(1).toLong)))
-      } finally in.close()
+      val bytes = try in.readAllBytes() finally in.close()
+      val nl = bytes.indexOf('\n'.toByte)
+      (new String(bytes, 0, nl, StandardCharsets.UTF_8), bytes.drop(nl + 1))
     }
   }
 
-  /** Manifest sources present in the state dir (for orphan detection —
-    * a manifest whose partition left the input).
-    */
-  def manifestSources(spark: SparkSession, statePath: String): Seq[String] = {
-    val dir = new Path(s"$statePath/manifests")
+  /** Partitions with a state file (orphans: their partition left the input). */
+  def stateSources(spark: SparkSession, statePath: String): Seq[String] = {
+    val dir = new Path(s"$statePath/sources")
     val system = fs(spark, statePath)
     if (!system.exists(dir)) Nil
     else system.listStatus(dir).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".json"))
-      .map(_.getPath.getName.stripSuffix(".json"))
+      .filter(st => st.isFile && Commit.isData(st.getPath.getName))
+      .map(_.getPath.getName)
   }
 
-  def writeManifest(spark: SparkSession, statePath: String,
-                    lineage: PartitionLineage, nRows: Long): Unit =
-    Commit.writeAtomic(fs(spark, statePath), manifestPath(statePath, lineage.source),
-      s"""{"source": "${lineage.source}", "fingerprint": "${lineage.fingerprint}", "n_rows": $nRows}"""
-        .getBytes(StandardCharsets.UTF_8))
+  def writeState(spark: SparkSession, statePath: String,
+                 lineage: PartitionLineage, payload: Array[Byte]): Unit =
+    Commit.writeAtomic(fs(spark, statePath), stateFile(statePath, lineage.source),
+      s"${lineage.fingerprint}\n".getBytes(StandardCharsets.UTF_8) ++ payload)
 
-  /** State tables are source-partitioned parquet written with DYNAMIC
-    * partition overwrite, so revalidating k of N partitions rewrites k
-    * directories in one job (not N jobs, not a full rewrite).
+  /** Violations are row data: source-partitioned parquet written with
+    * DYNAMIC partition overwrite, so revalidating k of N partitions
+    * rewrites k directories in one job.
     */
-  def statsPath(statePath: String): String = s"$statePath/stats"
   def violationsPath(statePath: String): String = s"$statePath/violations"
-  def verdictsPath(statePath: String): String = s"$statePath/verdicts"
 
-  /** Split input partitions into (validated-and-unchanged, needs-work). */
+  /** Split input partitions into (fingerprint-current, needs-work). */
   def plan(spark: SparkSession, inputPath: String, statePath: String)
       : (Seq[PartitionLineage], Seq[PartitionLineage]) =
     inputPartitions(spark, inputPath).partition { pl =>
-      readManifest(spark, statePath, pl.source).flatMap(_._1).contains(pl.fingerprint)
+      readState(spark, statePath, pl.source).exists(_._1 == pl.fingerprint)
     }
 }

@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * it LAST, so a crash at any step in between leaves the directory
   * uncommitted, and a reader trusts only a committed directory. The
   * decision is by EXISTENCE, never by file content: an empty file cannot
-  * be half-written. A small single-file artifact (a checkpoint manifest)
+  * be half-written. A small single-file artifact (a checkpoint state file)
   * is replaced by [[writeAtomic]] instead.
   */
 object Commit {

@@ -52,12 +52,6 @@ object UrlOps {
   def registrableDomain(url: Column): Column =
     ColumnBridge.column(RegDomain(ColumnBridge.expression(url)))
 
-  /** Per-registrable-domain URL stats: one map-side-partial groupBy. */
-  def domainStats(df: DataFrame, urlCol: String): DataFrame =
-    df.filter(col(urlCol).isNotNull)
-      .groupBy(registrableDomain(canonicalizeUrl(col(urlCol))).as("domain"))
-      .agg(count(lit(1)).as("n_urls"))
-
   /** Drop rows whose registrable domain is blocklisted (the list is a
     * literal IN — at blocklist scale it becomes a broadcast anti-join,
     * same plan shape as the eval-source filters). NULL urls pass: no

@@ -1,11 +1,12 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.constraints.{SuiteStatsAgg, Validator}
+import graft.constraints.{SuiteStatsAgg, SuiteStatsBySourceAgg, Validator}
+import graft.constraints.SuiteStatsBySourceAgg._
 import graft.constraints.Validator.SuiteConfig
 import graft.lineage.Commit
 
@@ -24,8 +25,9 @@ import graft.lineage.Commit
   *  - violations are written partitioned by batch_id with dynamic
   *    partition overwrite — a replayed batch overwrites its own output
   *    instead of duplicating it;
-  *  - cumulative stats carry `last_batch_id`; a replayed batch whose id
-  *    is <= the stored watermark is skipped (the merge is NOT re-applied).
+  *  - cumulative stats are one file per batch, `gen-<batchId>/stats` (the
+  *    aggregate's own buffer bytes); a replayed batch whose id is <= the
+  *    newest committed generation's is skipped (the merge is NOT re-applied).
   *
   * Global exact uniqueness is a cross-history shuffle and is intentionally
   * NOT recomputed per batch at stream scale; the verdict uses the merged
@@ -39,21 +41,12 @@ object StreamingValidator {
   def checkpointPath(statePath: String) = s"$statePath/checkpoint"
 
   /** Merge two per-source stats row sets (driver-side: one small row per
-    * source) with the suite's own monoid: each row becomes a
-    * [[SuiteStatsAgg.Buf]], buffers of a source fold by `mergeIn`, and
-    * `evalBuf` reads the result back — the same counters, min/max, HLL_8
-    * union, KLL merge and histogram add as the one-pass aggregate.
+    * source) with the suite's own monoid: the rows become
+    * [[SuiteStatsAgg.Buf]]s, buffers of a source fold by `mergeIn`, and
+    * `evalBuf` reads the result back.
     */
-  def mergeStatsRows(a: Array[Row], b: Array[Row], kllK: Int): Array[Row] = {
-    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToScalaConverter(SuiteStatsAgg.schema)
-    (a ++ b).groupBy(_.getAs[String]("source")).toArray.sortBy(_._1).map {
-      case (source, rows) =>
-        val merged = rows.map(SuiteStatsAgg.Buf.fromRow(_, kllK)).reduce(_ mergeIn _)
-        val stats = toRow(SuiteStatsAgg.evalBuf(merged)).asInstanceOf[Row]
-        new GenericRowWithSchema((source +: stats.toSeq).toArray, Validator.statsSchema): Row
-    }
-  }
+  def mergeStatsRows(a: Array[Row], b: Array[Row], kllK: Int): Array[Row] =
+    statsRows(SuiteStatsBySourceAgg.merge(fromRows(a, kllK), fromRows(b, kllK)))
 
   /** Estimated duplicate mass from merged HLL vs total rows seen (the
     * stream-scale uniqueness signal; tolerance covers HLL error).
@@ -116,85 +109,82 @@ object StreamingValidator {
   private[streaming] def processBatch(spark: SparkSession, batch: DataFrame,
                                       batchId: Long, statePath: String,
                                       dimRows: Array[Row], cfg: SuiteConfig): Unit = {
-    val prev = readStats(spark, statePath)
-    val lastBatch = prev.map(_._1).getOrElse(-1L)
-    if (batchId <= lastBatch) {
-      // replay of an already-merged batch: the merge must NOT re-apply,
-      // but a crash between writeStats and the verdicts write would have
-      // left verdicts stale — rewrite them from the stored stats so the
-      // replay repairs the partial commit (idempotent either way)
-      prev.foreach { case (_, rows) =>
-        verdictsFromStats(spark, rows, dimRows, cfg)
-          .coalesce(1).write.mode("overwrite").parquet(verdictsPath(statePath))
-      }
-      return
+    val fs = stateFs(spark, statePath)
+    val prev = readState(fs, statePath)
+    // a replayed batch (id <= the newest generation's) is already merged:
+    // the merge must NOT re-apply, but a crash between writeStats and the
+    // verdicts write would have left verdicts stale, so they are rewritten
+    // from the stored stats either way
+    val stats = if (batchId <= prev.fold(-1L)(_._1)) prev.get._3 else {
+      val key = suiteKey(cfg)
+      require(prev.forall(_._2 == key), s"${statsPath(statePath)} holds the stats of " +
+        "another suite config, which cannot be recomputed: use a fresh state dir")
+      // ONE pass over the micro-batch: the per-source stats ride the
+      // violations write as an observe aggregate (Validator.observeStats)
+      val (observed, statsThunk) = Validator.observeStats(batch, cfg)
+      Validator.violations(observed, cfg)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(violationsPath(statePath))
+      val merged = SuiteStatsBySourceAgg.merge(prev.fold(new Bufs)(_._3),
+        fromRows(statsThunk(), cfg.kllK))
+      if (merged.nonEmpty) writeStats(fs, statePath, batchId, encodeState(key, merged))
+      merged
     }
-
-    // ONE pass over the micro-batch: the per-source stats ride the
-    // violations write as an observe aggregate (Validator.observeStats)
-    val (observed, statsThunk) = Validator.observeStats(batch, cfg)
-    Validator.violations(observed, cfg)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(violationsPath(statePath))
-
-    val merged = mergeStatsRows(
-      prev.map(_._2).getOrElse(Array.empty[Row]),
-      statsThunk(),
-      cfg.kllK)
-    if (merged.nonEmpty) {
-      writeStats(spark, statePath, batchId, merged)
-      verdictsFromStats(spark, merged, dimRows, cfg)
+    if (stats.nonEmpty)
+      verdictsFromStats(spark, statsRows(stats), dimRows, cfg)
         .coalesce(1).write.mode("overwrite").parquet(verdictsPath(statePath))
-    }
   }
 
-  /** Legacy-state guard (round-6 ADVICE): pre-round-5 stats state used a
-    * mutable CURRENT pointer next to markerless gen dirs. After the
-    * marker-protocol switch that layout silently read as None — the
-    * drift baseline reset and the old gens got pruned as orphans. Fail
-    * loudly instead, mirroring CompactedIndex.rejectLegacyLayout: the
-    * operator migrates by committing the pointed-at generation with the
-    * new marker (create gen-N/[[Commit.Marker]], delete CURRENT).
+  /** Old layouts fail loudly, never read as empty (that would reset the
+    * drift baseline, and pruneGens would delete their generations): a
+    * CURRENT pointer (before the marker protocol, as
+    * CompactedIndex.rejectLegacyLayout), or a committed generation with
+    * no `stats` file (parquet generations).
     */
-  private def rejectLegacyStats(fs: org.apache.hadoop.fs.FileSystem,
-                                dir: String): Unit = {
-    val cur = new org.apache.hadoop.fs.Path(dir, "CURRENT")
-    if (fs.exists(cur))
+  private def rejectLegacyStats(fs: FileSystem, dir: String, gen: Option[Long]): Unit = {
+    if (fs.exists(new Path(dir, "CURRENT")))
       sys.error(s"$dir holds a pre-marker-protocol stats state (CURRENT " +
         "pointer file). Migrate by creating " +
         s"$dir/gen-<N>/${Commit.Marker} for the generation CURRENT " +
         "points at and deleting CURRENT, or rebuild the state — reading " +
         "it as empty would silently reset the drift baseline.")
+    gen.filterNot(n => fs.exists(statsFile(dir, n))).foreach(n => sys.error(
+      s"$dir/gen-$n holds parquet stats, the layout before stats files. They " +
+        "cannot be recomputed (the source checkpoint consumed their files): " +
+        "use a fresh state dir."))
   }
 
-  private def writeStats(spark: SparkSession, statePath: String,
-                         batchId: Long, stats: Array[Row]): Unit = {
-    val df = Validator.statsToDf(spark, stats).withColumn("last_batch_id", lit(batchId))
-    // two-generation layout, one Commit.write per generation (retention
-    // shared with CompactedIndex.pruneGens). Readers never see a
-    // half-written directory; a crashed write leaves an invisible
-    // (markerless) orphan the next prune removes. The earlier
-    // CURRENT-pointer flip used truncate-then-write, so a crash mid-flip
-    // corrupted the state permanently (round-5 review).
-    val gen = s"${statsPath(statePath)}/gen-$batchId"
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    rejectLegacyStats(fs, statsPath(statePath))
-    Commit.write(fs, gen)(df.coalesce(1).write.mode("overwrite").parquet(gen))
-    CompactedIndex.pruneGens(fs, statsPath(statePath), batchId)
+  private def statsFile(dir: String, batchId: Long) = new Path(s"$dir/gen-$batchId/stats")
+
+  private def writeStats(fs: FileSystem, statePath: String, batchId: Long,
+                         bytes: Array[Byte]): Unit = {
+    // one Commit.write per generation, two kept (CompactedIndex.pruneGens):
+    // a crashed write leaves a markerless orphan the next prune removes
+    val dir = statsPath(statePath)
+    Commit.write(fs, s"$dir/gen-$batchId") {
+      val out = fs.create(statsFile(dir, batchId), true)
+      try out.write(bytes) finally out.close()
+    }
+    CompactedIndex.pruneGens(fs, dir, batchId)
   }
 
-  def readStats(spark: SparkSession, statePath: String): Option[(Long, Array[Row])] = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    rejectLegacyStats(fs, statsPath(statePath))
-    CompactedIndex.committedGenNumbers(fs, statsPath(statePath)).lastOption.map { n =>
-      val df = spark.read.parquet(s"${statsPath(statePath)}/gen-$n")
-      val batchId = df.select(col("last_batch_id")).head().getLong(0)
-      (batchId, df.drop("last_batch_id").collect())
+  /** The newest committed generation: batch id (dir name), key, buffers. */
+  private def readState(fs: FileSystem, statePath: String): Option[(Long, Seq[Int], Bufs)] = {
+    val dir = statsPath(statePath)
+    val last = CompactedIndex.committedGenNumbers(fs, dir).lastOption
+    rejectLegacyStats(fs, dir, last)
+    last.map { n =>
+      val in = fs.open(statsFile(dir, n))
+      try { val (key, m) = decodeState(in.readAllBytes()); (n, key, m) } finally in.close()
     }
   }
+
+  def readStats(spark: SparkSession, statePath: String): Option[(Long, Array[Row])] =
+    readState(stateFs(spark, statePath), statePath).map { case (n, _, m) => (n, statsRows(m)) }
+
+  private def stateFs(spark: SparkSession, statePath: String): FileSystem =
+    new Path(statePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 }

@@ -264,20 +264,9 @@ class PlanSpec extends AnyFunSuite {
     // not scan-rooted: the gate must neither fan out nor execute upstream
     // stages (AQE runs them when `.rdd` is asked for partitions)
     val grouped = scan.groupBy(col("id")).agg(first(col("text")).as("text"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val fannedOut =
-      try {
-        val r = roundRobin(grouped)
-        org.apache.spark.ListenerBusDrain(spark.sparkContext)
-        r
-      } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 0, "windowsOf launched a job at plan time")
+    val (fannedOut, jobs) =
+      org.apache.spark.ListenerBusDrain.countJobs(spark.sparkContext)(roundRobin(grouped))
+    assert(jobs == 0, "windowsOf launched a job at plan time")
     assert(!fannedOut, "a frame that is not scan-rooted must be left as is")
   }
 

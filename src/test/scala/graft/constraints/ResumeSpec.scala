@@ -54,10 +54,11 @@ class ResumeSpec extends AnyFunSuite {
     val dim = SequenceSynth.sourcesDim(spark, cfg)
 
     val first = ResumableValidator.run(spark, inPath, dim, suite, statePath)
-    // simulate a crash that lost two partitions' manifests (data writes are
-    // idempotent; manifests are written last)
-    new java.io.File(s"$statePath/manifests/web.json").delete()
-    new java.io.File(s"$statePath/manifests/chat.json").delete()
+    // simulate a crash that lost two partitions' state files, each the
+    // partition's manifest (violation writes are idempotent; state files
+    // are written last)
+    new java.io.File(s"$statePath/sources/web").delete()
+    new java.io.File(s"$statePath/sources/chat").delete()
 
     val resumed = ResumableValidator.run(spark, inPath, dim, suite, statePath)
     assert(resumed.validatedSources.toSet == Set("web", "chat"))
@@ -87,38 +88,34 @@ class ResumeSpec extends AnyFunSuite {
     val (inPath, statePath) = (s"$dir/seqs", s"$dir/state")
     SequenceSynth.write(spark, cfg, inPath, buckets = 4)
     val dim = SequenceSynth.sourcesDim(spark, cfg)
-    ResumableValidator.run(spark, inPath, dim, suite, statePath)
+    val first = ResumableValidator.run(spark, inPath, dim, suite, statePath)
+    val rows = first.report.sourceStats.collect()
+      .map(r => r.getAs[String]("source") -> r.getAs[Long]("n_rows")).toMap
 
-    // every input partition's manifest parses with its row count
+    // every input partition's state file (its manifest) holds its
+    // fingerprint, the run's suite key and its own stats
+    val key = SuiteStatsBySourceAgg.suiteKey(suite)
     val inputs = Checkpoint.inputPartitions(spark, inPath)
     inputs.foreach { pl =>
-      val info = Checkpoint.readManifest(spark, statePath, pl.source)
-      assert(info.exists(_._1.contains(pl.fingerprint)), pl.source)
-      assert(info.exists(_._2.exists(_ > 0L)), s"${pl.source} n_rows")
+      val (fp, payload) = Checkpoint.readState(spark, statePath, pl.source).get
+      val (k, m) = SuiteStatsBySourceAgg.decodeState(payload)
+      assert(fp == pl.fingerprint && k == key, pl.source)
+      assert(m.keySet == Set(Some(pl.source)) && m.values.head.nRows == rows(pl.source),
+        s"${pl.source} n_rows")
     }
-    assert(Checkpoint.manifestSources(spark, statePath).toSet ==
+    assert(Checkpoint.stateSources(spark, statePath).toSet ==
       inputs.map(_.source).toSet)
 
     // a touched partition reads CHANGED (fingerprint mismatch), a
-    // removed one leaves its manifest ORPHANED
+    // removed one leaves its state file ORPHANED
     val f = new java.io.File(s"$inPath/source=books").listFiles()
       .filter(_.getName.endsWith(".parquet")).head
     f.setLastModified(f.lastModified() + 60000)
     val booksNow = Checkpoint.inputPartitions(spark, inPath)
       .find(_.source == "books").get
-    assert(!Checkpoint.readManifest(spark, statePath, "books")
-      .exists(_._1.contains(booksNow.fingerprint)))
-    // audit leniency == rerun planner: a garbled n_rows must not demote
-    // a fingerprint-current manifest to NEW (plan() matches on the
-    // fingerprint alone)
-    val webFp = Checkpoint.readManifest(spark, statePath, "web").flatMap(_._1).get
-    val mp = new java.io.File(s"$statePath/manifests/web.json")
-    java.nio.file.Files.writeString(mp.toPath,
-      s"""{"source": "web", "fingerprint": "$webFp", "n_rows": garbled}""")
-    // the raw edit invalidates Hadoop LocalFileSystem's checksum sidecar
-    new java.io.File(s"$statePath/manifests/.web.json.crc").delete()
-    val webInfo = Checkpoint.readManifest(spark, statePath, "web")
-    assert(webInfo.exists(i => i._1.contains(webFp) && i._2.isEmpty))
+    assert(!Checkpoint.readState(spark, statePath, "books")
+      .exists(_._1 == booksNow.fingerprint))
+    assert(Checkpoint.plan(spark, inPath, statePath)._2.map(_.source) == Seq("books"))
 
     def rmAll(p: java.io.File): Unit = {
       if (p.isDirectory) p.listFiles().foreach(rmAll); p.delete()
@@ -126,6 +123,52 @@ class ResumeSpec extends AnyFunSuite {
     rmAll(new java.io.File(s"$inPath/source=ghost"))
     val live = Checkpoint.inputPartitions(spark, inPath).map(_.source).toSet
     assert(!live("ghost"))
-    assert(Checkpoint.manifestSources(spark, statePath).contains("ghost"))
+    assert(Checkpoint.stateSources(spark, statePath).contains("ghost"))
+  }
+
+  test("a changed suite config revalidates every partition: resumed equals from-scratch") {
+    val dir = java.nio.file.Files.createTempDirectory("resume5").toString
+    val (inPath, statePath) = (s"$dir/seqs", s"$dir/state")
+    SequenceSynth.write(spark, cfg, inPath, buckets = 4)
+    val dim = SequenceSynth.sourcesDim(spark, cfg)
+    ResumableValidator.run(spark, inPath, dim, suite, statePath)
+
+    // half the vocabulary: most tokens turn out-of-vocabulary, and fewer
+    // histogram bins change the stored buffer's shape
+    val changed = suite.copy(vocabSize = suite.vocabSize / 2, tokenHistBins = 32)
+    val resumed = ResumableValidator.run(spark, inPath, dim, changed, statePath)
+    val scratch = ResumableValidator.run(spark, inPath, dim, changed, s"$dir/scratch")
+    assert(resumed.validatedSources.toSet == scratch.validatedSources.toSet)
+    assert(resumed.skippedSources.isEmpty)
+    def exact(s: ResumableValidator.RunSummary) = s.report.sourceStats
+      .select("source", "n_rows", "n_oov_token", "n_ntok_bounds", "hist_token")
+      .collect().map(_.toSeq).toSet
+    assert(exact(resumed) == exact(scratch))
+    assert(resumed.report.sourceStats.agg(sum("n_oov_token")).head().getLong(0) > 0)
+    assert(resumed.report.violations.count() == scratch.report.violations.count())
+    assert(verdictSet(resumed) == verdictSet(scratch))
+  }
+
+  test("a no-op rerun reads its state with no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("resume6").toString
+    val (inPath, statePath) = (s"$dir/seqs", s"$dir/state")
+    SequenceSynth.write(spark, cfg, inPath, buckets = 4)
+    val dim = SequenceSynth.sourcesDim(spark, cfg)
+    ResumableValidator.run(spark, inPath, dim, suite, statePath)
+    val sc = spark.sparkContext
+
+    val (noop, noopJobs) = org.apache.spark.ListenerBusDrain.countJobs(sc) {
+      ResumableValidator.run(spark, inPath, dim, suite, statePath)
+    }
+    assert(noop.validatedSources.isEmpty)
+    // the same run's work on the input and on the violations (row data),
+    // with the stats state left out
+    val (_, nonStateJobs) = org.apache.spark.ListenerBusDrain.countJobs(sc) {
+      val input = spark.read.parquet(inPath)
+      spark.read.parquet(Checkpoint.violationsPath(statePath))
+      Validator.dupStats(input, suite)
+      dim.collect()
+    }
+    assert(noopJobs == nonStateJobs, s"no-op rerun: $noopJobs jobs, $nonStateJobs without state")
   }
 }

@@ -8,7 +8,7 @@ import graft.SharedSpark
 import graft.constraints.{ResumableValidator, Validator}
 import graft.ops.IncrementalDedup
 import graft.sequences.SequenceSynth
-import graft.streaming.CompactedIndex
+import graft.streaming.{CompactedIndex, StreamingValidator}
 
 /** Crash consistency of every persisted artifact. For each writer and each
   * of its write steps, a case builds in a fresh directory the state the
@@ -33,7 +33,8 @@ class CrashStateSpec extends AnyFunSuite {
   private final case class Writer(name: String, steps: Seq[(String, String => Unit)],
                                   nextRunEqualsScratch: String => Unit)
 
-  // ---- validate-resume: violations, stats, manifests (atomic), verdicts
+  // ---- validate-resume: violations, then one state file per source
+  // (lineage + stats, atomic)
   private val seqCfg = SequenceSynth.Config(rows = 8000)
   private val suite = Validator.SuiteConfig(vocabSize = seqCfg.vocabSize,
     minNtok = seqCfg.minNtok, maxNtok = seqCfg.maxNtok + 1)
@@ -68,23 +69,18 @@ class CrashStateSpec extends AnyFunSuite {
   /** A finished first run, cut back to the state after one step. */
   private def resumeState(cut: String => Unit)(state: String): Unit = {
     ResumableValidator.run(spark, seqInput, seqDim, suite, state)
-    rm(Checkpoint.verdictsPath(state))
     cut(state)
   }
-  private def manifest(state: String, source: String) =
-    new Path(s"$state/manifests/$source.json")
+  private def stateFile(state: String, source: String) = new Path(s"$state/sources/$source")
 
   private val validateResume = Writer("validate-resume",
     Seq(
-      "violations written" -> resumeState { st =>
-        rm(Checkpoint.statsPath(st)); rm(s"$st/manifests")
-      },
-      "stats written" -> resumeState(st => rm(s"$st/manifests")),
+      "violations written" -> resumeState(st => rm(s"$st/sources")),
       // delete-then-rename died between its two steps: the temp file is
-      // written, the old manifest is gone and nothing took its place
-      "manifest temp written" -> resumeState { st =>
-        val m = manifest(st, "web")
-        fs(st).rename(m, Commit.tempPath(m))
+      // written, the old state file is gone and nothing took its place
+      "state file temp written" -> resumeState { st =>
+        val f = stateFile(st, "web")
+        fs(st).rename(f, Commit.tempPath(f))
       }),
     state => {
       assert(Checkpoint.plan(spark, seqInput, state)._2.nonEmpty,
@@ -93,7 +89,41 @@ class CrashStateSpec extends AnyFunSuite {
         scratchRun)
       val (done, todo) = Checkpoint.plan(spark, seqInput, state)
       assert(todo.isEmpty && done.size == 5)
-      assert(!fs(state).exists(Commit.tempPath(manifest(state, "web"))))
+      assert(!fs(state).exists(Commit.tempPath(stateFile(state, "web"))))
+    })
+
+  // ---- stream stats: each micro-batch commits gen-<batchId>/stats; three
+  // one-file batches over the sequences rows
+  private lazy val streamInput = {
+    val p = s"${tmp("crash-stream")}/in"
+    SequenceSynth.sequences(spark, seqCfg).repartition(3, col("doc_id")).write.parquet(p)
+    p
+  }
+  private def streamRun(state: String): Set[Seq[Any]] = {
+    StreamingValidator.start(spark, streamInput, state, seqDim, suite,
+      maxFilesPerTrigger = Some(1)).awaitTermination()
+    val exact = Seq("source", "n_rows", "n_ntok_mismatch", "n_null_token", "n_oov_token",
+      "n_ntok_bounds", "n_null_docid", "min_ntok", "max_ntok", "min_token", "max_token",
+      "min_docid_len", "max_docid_len", "hist_token")
+    StreamingValidator.readStats(spark, state).get._2
+      .map(r => exact.map(r.getAs[Any])).toSet
+  }
+  private lazy val scratchStream = streamRun(s"${tmp("crash-stream-scratch")}/state")
+
+  private val streamStats = Writer("stream stats",
+    Seq(
+      // batch 2 wrote its generation and died before the marker (and so
+      // before the stream committed the batch): batch 2 replays, merging
+      // from gen-1
+      "stats generation written, marker not" -> { state =>
+        streamRun(state)
+        uncommit(s"${StreamingValidator.statsPath(state)}/gen-2")
+        rm(s"${StreamingValidator.checkpointPath(state)}/commits/2")
+        assert(StreamingValidator.readStats(spark, state).map(_._1).contains(1L))
+      }),
+    state => {
+      assert(streamRun(state) == scratchStream)
+      assert(StreamingValidator.readStats(spark, state).map(_._1).contains(2L))
     })
 
   // ---- index rebuild plus sidecar: the combined-cap corpus (every bucket
@@ -161,7 +191,7 @@ class CrashStateSpec extends AnyFunSuite {
       assert(readIds(root, 3L) == batchIds(0L, 1L, 2L))
     })
 
-  for (w <- Seq(validateResume, indexRebuild, compaction); (step, crash) <- w.steps)
+  for (w <- Seq(validateResume, streamStats, indexRebuild, compaction); (step, crash) <- w.steps)
     test(s"${w.name}: crash after $step, the next run equals a from-scratch run") {
       val dir = tmp("crash")
       crash(dir)

@@ -55,7 +55,7 @@ class UrlOpsSpec extends AnyFunSuite {
     assert(d("http://example.com:8080/x") == "example.com") // port ignored
   }
 
-  test("column path == driver path; domainStats; blocklist keeps NULL urls") {
+  test("column path == driver path; blocklist keeps NULL urls") {
     val urls = Seq(
       (1L, "HTTP://WWW.SpamCo.COM:80/a?utm_x=1&id=1"),
       (2L, "https://news.site.co.uk/b#frag"),
@@ -72,10 +72,6 @@ class UrlOpsSpec extends AnyFunSuite {
       val c = UrlOps.canonical(u)
       assert(got(id) == ((c, UrlOps.regDomain(c))), s"doc $id")
     }
-
-    val stats = UrlOps.domainStats(urls, "url").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(stats == Map("spamco.com" -> 2L, "site.co.uk" -> 1L, "good.org" -> 1L))
 
     val kept = UrlOps.filterBlocked(urls, "url", Seq("spamco.com"))
       .select("doc_id").collect().map(_.getLong(0)).toSet

@@ -98,7 +98,12 @@ class StreamingValidatorSpec extends AnyFunSuite {
     val dimRows = dim.collect()
     val half = full.limit(5000)
     StreamingValidator.processBatch(spark, half, 0L, stateDir, dimRows, suite)
-    val (_, once) = StreamingValidator.readStats(spark, stateDir).get
+    // the stats generation is one file read on the driver: no Spark job
+    val (read, readJobs) = org.apache.spark.ListenerBusDrain.countJobs(spark.sparkContext) {
+      StreamingValidator.readStats(spark, stateDir)
+    }
+    assert(readJobs == 0, s"readStats launched $readJobs Spark jobs")
+    val (_, once) = read.get
     // replay the same batch id: state must not change
     StreamingValidator.processBatch(spark, half, 0L, stateDir, dimRows, suite)
     val (bid, twice) = StreamingValidator.readStats(spark, stateDir).get
@@ -127,6 +132,13 @@ class StreamingValidatorSpec extends AnyFunSuite {
       StreamingValidator.verdictsPath(stateDir)), true)
     StreamingValidator.processBatch(spark, half, 1L, stateDir, dimRows, suite)
     assert(spark.read.parquet(StreamingValidator.verdictsPath(stateDir)).count() > 0)
+
+    // stats of another suite config cannot be merged into (nor recomputed)
+    intercept[IllegalArgumentException] {
+      StreamingValidator.processBatch(spark, half, 3L, stateDir, dimRows,
+        suite.copy(tokenHistBins = 32))
+    }
+    assert(StreamingValidator.readStats(spark, stateDir).map(_._1).contains(2L))
   }
 
   test("stats merge is the one-pass monoid: a NULL-only first batch merges like one scan") {
@@ -181,9 +193,26 @@ class StreamingValidatorSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("CURRENT"), e.getMessage)
     // migration path from the message: commit the pointed-at gen with the
-    // marker, delete CURRENT -> the same state now reads (parquet content
-    // is exercised by the other tests; here the guard must just lift)
+    // marker, delete CURRENT -> the guard lifts (stats content is
+    // exercised by the other tests)
     fs.delete(new org.apache.hadoop.fs.Path(s"$stats/CURRENT"), false)
     assert(StreamingValidator.readStats(spark, stateDir).isEmpty)
+
+    // the parquet generation layout: a committed gen holding a parquet
+    // stats table with `last_batch_id`, no `stats` file. Its stats cannot
+    // be recomputed (the source checkpoint consumed their files), so both
+    // the reader and the next batch must refuse it
+    val gen = s"$stats/gen-8"
+    import spark.implicits._
+    Seq(("web", 10L, 8L)).toDF("source", "n_rows", "last_batch_id").write.parquet(gen)
+    fs.create(new org.apache.hadoop.fs.Path(gen, graft.lineage.Commit.Marker), true).close()
+    val e2 = intercept[RuntimeException] {
+      StreamingValidator.readStats(spark, stateDir)
+    }
+    assert(e2.getMessage.contains("gen-8") && e2.getMessage.contains("parquet"), e2.getMessage)
+    intercept[RuntimeException] {
+      StreamingValidator.processBatch(spark, full.limit(100), 9L, stateDir, dim.collect(), suite)
+    }
+    assert(fs.exists(new org.apache.hadoop.fs.Path(gen)), "the old generation must survive")
   }
 }
