@@ -2,6 +2,7 @@ package graft.constraints
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.lineage.Checkpoint
 import SuiteStatsBySourceAgg._
@@ -66,14 +67,15 @@ object ResumableValidator {
     }
 
     val rows = statsRows(stats)
-    // an all-clean run writes no violation files; fall back to an empty
-    // frame with the canonical schema
+    // read under the schema the write produces (the partition column
+    // `source` last), so no job infers it; an all-clean run writes no
+    // violation files, so fall back to an empty frame
+    val empty = Validator.violations(input.limit(0), cfg)
+    val written = StructType(empty.schema.filterNot(_.name == "source") :+ empty.schema("source"))
     val viols =
-      try spark.read.parquet(Checkpoint.violationsPath(statePath))
+      try spark.read.schema(written).parquet(Checkpoint.violationsPath(statePath))
         .filter(col("source").isin(allSources: _*))
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        Validator.violations(input.limit(0), cfg)
-      }
+      catch { case _: org.apache.spark.sql.AnalysisException => empty }
 
     // global uniqueness always reruns: it is cross-partition by nature and
     // scans a one-column projection of the full table

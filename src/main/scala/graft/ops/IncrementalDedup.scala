@@ -45,6 +45,14 @@ object IncrementalDedup {
     */
   private[graft] def countsPath(path: String): String = s"$path/_graft_counts"
 
+  /** The sidecar's data files. Spark ignores a read whose root path is
+    * `_`-named (it warns "All paths were ignored"), so the sidecar is read
+    * by its files.
+    */
+  private def countsFiles(fs: org.apache.hadoop.fs.FileSystem, path: String): Seq[String] =
+    fs.listStatus(new org.apache.hadoop.fs.Path(countsPath(path)))
+      .map(_.getPath).filter(p => Commit.isData(p.getName)).map(_.toString).toSeq
+
   /** Build the index. The write is a STATIC overwrite (the whole path is
     * replaced): the earlier dynamic-overwrite setting only replaced band
     * partitions present in the NEW data, so rebuilding with fewer bands
@@ -190,7 +198,8 @@ object IncrementalDedup {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val counts =
       if (Commit.committed(fs, indexPath))
-        Some(spark.read.schema(countsSchema).parquet(countsPath(indexPath)))
+        Some(countsFiles(fs, indexPath)).filter(_.nonEmpty)
+          .map(files => spark.read.schema(countsSchema).parquet(files: _*))
       else None
     Cached(candidatePairs(fresh,
         Some(spark.read.schema(indexSchema).parquet(indexPath)),

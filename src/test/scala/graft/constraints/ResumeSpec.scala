@@ -1,5 +1,6 @@
 package graft.constraints
 
+import org.apache.spark.graftbridge.JobLog
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -157,18 +158,21 @@ class ResumeSpec extends AnyFunSuite {
     ResumableValidator.run(spark, inPath, dim, suite, statePath)
     val sc = spark.sparkContext
 
-    val (noop, noopJobs) = org.apache.spark.ListenerBusDrain.countJobs(sc) {
+    val (noop, noopJobs) = JobLog.record(sc) {
       ResumableValidator.run(spark, inPath, dim, suite, statePath)
     }
     assert(noop.validatedSources.isEmpty)
-    // the same run's work on the input and on the violations (row data),
-    // with the stats state left out
-    val (_, nonStateJobs) = org.apache.spark.ListenerBusDrain.countJobs(sc) {
+    assert(noop.report.violations.schema ==
+      spark.read.parquet(Checkpoint.violationsPath(statePath)).schema,
+      "the violations read under the written schema must match an inferred read")
+    // the same run's work on the input, with the state left out: the
+    // violations are read under their known schema, with no job
+    val (_, nonStateJobs) = JobLog.record(sc) {
       val input = spark.read.parquet(inPath)
-      spark.read.parquet(Checkpoint.violationsPath(statePath))
       Validator.dupStats(input, suite)
       dim.collect()
     }
-    assert(noopJobs == nonStateJobs, s"no-op rerun: $noopJobs jobs, $nonStateJobs without state")
+    assert(noopJobs.size == nonStateJobs.size,
+      s"no-op rerun: ${noopJobs.size} jobs, ${nonStateJobs.size} without state")
   }
 }

@@ -99,10 +99,10 @@ class StreamingValidatorSpec extends AnyFunSuite {
     val half = full.limit(5000)
     StreamingValidator.processBatch(spark, half, 0L, stateDir, dimRows, suite)
     // the stats generation is one file read on the driver: no Spark job
-    val (read, readJobs) = org.apache.spark.ListenerBusDrain.countJobs(spark.sparkContext) {
+    val (read, readJobs) = org.apache.spark.graftbridge.JobLog.record(spark.sparkContext) {
       StreamingValidator.readStats(spark, stateDir)
     }
-    assert(readJobs == 0, s"readStats launched $readJobs Spark jobs")
+    assert(readJobs.isEmpty, s"readStats launched ${readJobs.size} Spark jobs")
     val (_, once) = read.get
     // replay the same batch id: state must not change
     StreamingValidator.processBatch(spark, half, 0L, stateDir, dimRows, suite)
