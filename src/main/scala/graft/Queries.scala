@@ -142,7 +142,7 @@ object Queries {
   /** Exact deduplication summary (hash-groupBy on content). */
   private def q07(spark: SparkSession, dir: String): DataFrame = {
     val groups = Dedup.exactGroups(tbl(spark, dir, "documents"),
-      col("text"), col("doc_id"))
+      col("text"), col("doc_id")).value
     groups.agg(
       count(lit(1)).cast("long").as("n_dup_groups"),
       coalesce(sum(col("n") - 1), lit(0L)).cast("long").as("n_extra"))
@@ -542,7 +542,7 @@ object Queries {
   private def rerankedPairs(docs: DataFrame, cands: DataFrame,
                             threshold: Double): DataFrame =
     Dedup.ngramJaccard(docs, cands.select(col("id_a"), col("id_b")),
-        "text", "doc_id", k = 3)
+        "text", "doc_id", k = 3).value
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .orderBy(col("id_a"), col("id_b"))
@@ -555,7 +555,7 @@ object Queries {
   private def q19(spark: SparkSession, dir: String): DataFrame = {
     val docs = tbl(spark, dir, "documents")
     val cands = Dedup.minhashCandidates(docs, "text", "doc_id",
-      shingleK = 3, perms = 32, bands = 16, minJaccard = 0.2)
+      shingleK = 3, perms = 32, bands = 16, minJaccard = 0.2).value
     rerankedPairs(docs, cands, 0.5)
   }
 
@@ -568,7 +568,7 @@ object Queries {
   private def q20(spark: SparkSession, dir: String): DataFrame = {
     val docs = tbl(spark, dir, "documents")
     val cands = Dedup.simhashCandidates(docs, "text", "doc_id",
-      maxHamming = 16, blocks = 4, tables = 8, seed = 6, maxBucket = 512)
+      maxHamming = 16, blocks = 4, tables = 8, seed = 6, maxBucket = 512).value
     rerankedPairs(docs, cands, 0.5)
   }
 
@@ -581,7 +581,7 @@ object Queries {
     */
   private def q21(spark: SparkSession, dir: String): DataFrame =
     Dedup.embeddingNearDups(tbl(spark, dir, "embeddings"),
-        "embedding", "vec_id", threshold = 0.4, planes = 4, tables = 24)
+        "embedding", "vec_id", threshold = 0.4, planes = 4, tables = 24).value
       .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
       .filter(col("cosine") >= 0.45)
       .orderBy(col("id_a"), col("id_b"))
@@ -596,7 +596,7 @@ object Queries {
   private def q33(spark: SparkSession, dir: String): DataFrame = {
     val docs = tbl(spark, dir, "documents")
     val cands = Dedup.minhashCandidates(docs, "text", "doc_id",
-      shingleK = 3, perms = 32, bands = 16, minJaccard = 0.2)
+      shingleK = 3, perms = 32, bands = 16, minJaccard = 0.2).value
     val pairs = rerankedPairs(docs, cands, 0.5).select(col("id_a"), col("id_b"))
     graft.ops.Components.dupClusters(pairs, "id_a", "id_b")
       .select(col("component"), col("n_docs"),
@@ -640,7 +640,7 @@ object Queries {
     val pairs = graft.ops.Decontamination.containmentPairs(
       docs.filter(!col("source").isin(evalSources: _*)),
       docs.filter(col("source").isin(evalSources: _*)),
-      "text", "doc_id", k = 3, minContainment = 0.85)
+      "text", "doc_id", k = 3, minContainment = 0.85).value
     pairs.select(col("train_id"), col("eval_id"),
         round(col("containment"), 6).as("containment"))
       .filter(col("containment") >= 0.9)
@@ -848,7 +848,7 @@ object Queries {
     */
   private def q39(spark: SparkSession, dir: String): DataFrame =
     graft.ops.DupSpans.dupSpans(tbl(spark, dir, "documents"),
-        "text", "doc_id", windowWords = 8)
+        "text", "doc_id", windowWords = 8).value
       .orderBy(col("id"), col("span_start"))
 
   private val q39Sql =
@@ -1129,7 +1129,7 @@ object Queries {
     val (idxDir, _) = ensureQ40Index(spark, dir)
     val cands = graft.ops.IncrementalDedup.newDocCandidates(spark, batch,
       "text", "doc_id", idxDir, shingleK, perms, bands,
-      minJaccard = 0.2)
+      minJaccard = 0.2).value
     rerankedPairs(docs, cands, 0.5)
   }
 
@@ -1151,7 +1151,7 @@ object Queries {
       .orderBy(col("source"), col("rank"))
 
   /** Batch kNN over embeddings via multi-table RHP-LSH buckets
-    * ([[Similarity.bucketedKnnH]]): top-5 neighbors per vector among
+    * ([[Similarity.bucketedKnn]]): top-5 neighbors per vector among
     * cosine >= 0.45, graded against the brute-force all-pairs per-id
     * ranking. Blocking params (planes=4, tables=24, seed=7) are exactly
     * q21's, whose green all-pairs grading proves full recall of every
@@ -1162,10 +1162,11 @@ object Queries {
     * float64 folds, the q32 parity) and threshold on the rounded value.
     */
   private def q42(spark: SparkSession, dir: String): DataFrame =
-    // session-cache variant: the query contract returns a lazy frame, so
-    // a handle could not be closed here anyway — Bench/Verify clearCache
+    // the handle is leaked on purpose: the query contract returns a lazy
+    // frame, so it could not be closed here anyway — Bench/Verify
+    // clearCache
     Similarity.bucketedKnn(tbl(spark, dir, "embeddings"),
-        "embedding", "vec_id", k = 5, planes = 4, tables = 24, seed = 7L)
+        "embedding", "vec_id", k = 5, planes = 4, tables = 24, seed = 7L).value
       .select(col("id"), col("rank").cast("long").as("rank"),
         col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
       .filter(col("cosine") >= 0.45)
@@ -1246,7 +1247,7 @@ object Queries {
   private def q44(spark: SparkSession, dir: String): DataFrame = {
     val docs = tbl(spark, dir, "documents")
     val cands = Dedup.minhashCandidates(docs, "text", "doc_id",
-      shingleK = 3, perms = 32, bands = 16, minJaccard = 0.2)
+      shingleK = 3, perms = 32, bands = 16, minJaccard = 0.2).value
     val pairs = rerankedPairs(docs, cands, 0.5).select(col("id_a"), col("id_b"))
     graft.ops.Split.leakFreeSplit(docs, "doc_id", pairs, valPermille = 200,
         key = graft.ops.Split.multiplicativeKey)
@@ -1340,7 +1341,8 @@ object Queries {
     */
   private def q46(spark: SparkSession, dir: String): DataFrame = {
     val docs = tbl(spark, dir, "documents")
-    graft.ops.SourceOverlap.overlapMatrix(docs, "text", "source", shingleK = 3)
+    graft.ops.SourceOverlap.overlapMatrix(docs, "text", "source",
+        shingleK = 3).value
       .orderBy(col("source_a"), col("source_b"))
   }
 
@@ -1407,7 +1409,7 @@ object Queries {
   private def q48(spark: SparkSession, dir: String): DataFrame = {
     val docs = tbl(spark, dir, "documents")
     val cands = Dedup.minhashCandidates(docs, "text", "doc_id",
-      shingleK = 3, perms = 32, bands = 16, minJaccard = 0.2)
+      shingleK = 3, perms = 32, bands = 16, minJaccard = 0.2).value
     // the small pair-id set feeds three consumers (components + both
     // report joins): eagerly checkpoint it so downstream analysis never
     // re-embeds the mining tree (round-5 lesson)
@@ -1519,7 +1521,7 @@ object Queries {
   private def q50(spark: SparkSession, dir: String): DataFrame = {
     val docs = tbl(spark, dir, "documents")
     val toCut = graft.ops.DupSpans.dupSpansKeepFirst(
-      docs, "text", "doc_id", windowWords = 8)
+      docs, "text", "doc_id", windowWords = 8).value
     graft.ops.DupSpans.cutSpans(docs, "text", "doc_id", toCut)
       .select(col("doc_id").as("id"), col("text_cut"))
       .orderBy(col("id"))

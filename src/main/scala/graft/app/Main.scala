@@ -230,7 +230,7 @@ object Main {
         val window = flagOr(opts, "window", "8").toInt
         val maxDf = flagOr(opts, "max-window-df", Long.MaxValue.toString).toLong
         val docs = spark.read.parquet(input)
-        val spans = graft.ops.DupSpans.dupSpansKeepFirstH(
+        val spans = graft.ops.DupSpans.dupSpansKeepFirst(
           docs, "text", "doc_id", window, maxDf)
         // before/after character counts ride the WRITE as an observation
         // (the one-scan pattern) — no extra scan for the report, and

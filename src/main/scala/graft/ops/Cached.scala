@@ -6,10 +6,12 @@ import org.apache.spark.sql.DataFrame
   * The candidate miners persist their narrow signature tables so one
   * shingle/signature pass feeds both sides of the bucket self-join; the
   * persisted frame must outlive the returned (lazy) DataFrame, so the
-  * miner cannot unpersist it itself. This handle gives the CALLER that
-  * power deterministically — consume `value`, then `close()` — instead of
-  * the round-1/2 contract of "call spark.catalog.clearCache() eventually"
-  * which nukes every cached table in the session.
+  * miner cannot unpersist it itself. Every operator that pins tables
+  * returns this handle, with one contract: consume `value`, then either
+  * `close()` to unpersist exactly what the call pinned, or deliberately
+  * leak the tables (a caller that wants later plans to ride them, until
+  * `spark.catalog.clearCache()`, which drops every cached table in the
+  * session).
   */
 final case class Cached[+A](value: A, handles: Seq[DataFrame])
     extends AutoCloseable {
@@ -18,8 +20,4 @@ final case class Cached[+A](value: A, handles: Seq[DataFrame])
     * consuming `value`).
     */
   override def close(): Unit = handles.foreach(_.unpersist())
-}
-
-object Cached {
-  def apply[A](value: A): Cached[A] = Cached(value, Nil)
 }

@@ -25,10 +25,10 @@ import org.apache.spark.storage.StorageLevel
   */
 object Decontamination {
 
-  def containmentPairsH(train: DataFrame, eval: DataFrame,
-                        textCol: String, idCol: String,
-                        k: Int = 3, minContainment: Double = 0.8,
-                        maxShingleDf: Int = Int.MaxValue): Cached[DataFrame] = {
+  def containmentPairs(train: DataFrame, eval: DataFrame,
+                       textCol: String, idCol: String,
+                       k: Int = 3, minContainment: Double = 0.8,
+                       maxShingleDf: Int = Int.MaxValue): Cached[DataFrame] = {
     def distinctShingles(c: Column): Column =
       array_distinct(TextOps.shingles(c, k))
 
@@ -67,14 +67,4 @@ object Decontamination {
       .select(col("train_id"), col("eval_id"), col("containment")),
       pinned)
   }
-
-  /** Session-cache variant of [[containmentPairsH]] (pins nothing unless
-    * `maxShingleDf` is finite).
-    */
-  def containmentPairs(train: DataFrame, eval: DataFrame,
-                       textCol: String, idCol: String,
-                       k: Int = 3, minContainment: Double = 0.8,
-                       maxShingleDf: Int = Int.MaxValue): DataFrame =
-    containmentPairsH(train, eval, textCol, idCol, k, minContainment,
-      maxShingleDf).value
 }

@@ -11,13 +11,12 @@ import org.apache.spark.storage.StorageLevel
   * collects to the driver.
   *
   * Caching note: the candidate-mining functions persist their narrow
-  * signature tables (id + a few longs per doc) when `materialize = true`
-  * so the corpus is shingled/hashed ONCE instead of once per join side.
-  * The `...H` variants return a [[Cached]] handle — consume the pairs,
-  * then `close()` to unpersist deterministically (what Pipeline does).
-  * The plain variants leave the table cached for the session (callers
-  * may `spark.catalog.clearCache()`), or pass `materialize = false` to
-  * trade the second scan for zero cache footprint.
+  * signature tables (id + a few longs per doc) so the corpus is
+  * shingled/hashed ONCE instead of once per join side, and return a
+  * [[Cached]] handle: consume `value`, then `close()` to unpersist
+  * deterministically (what Pipeline does), or deliberately leak the
+  * tables for the session (what the query battery does, so later plans
+  * can ride the cache until `spark.catalog.clearCache()`).
   */
 object Dedup {
 
@@ -62,9 +61,8 @@ object Dedup {
     * also correctly skips when the child's row count is statically known
     * to be <= the limit — a tiny LocalRelation won't show the node.)
     */
-  def exactGroupsH(df: DataFrame, text: Column, id: Column,
-                   maxIds: Int = 256,
-                   materialize: Boolean = true): Cached[DataFrame] = {
+  def exactGroups(df: DataFrame, text: Column, id: Column,
+                  maxIds: Int = 256): Cached[DataFrame] = {
     require(maxIds >= 1, "maxIds must be >= 1 (0 would drop every group)")
     val threshold = df.sparkSession.sessionState.conf
       .getConfString("spark.sql.optimizer.windowGroupLimitThreshold", "1000")
@@ -77,11 +75,9 @@ object Dedup {
         "alongside maxIds if a bigger sample is really needed")
     // persisted so the stats and sample subplans share one scan + hash
     // pass (narrow (hash, hash2, id) rows)
-    val hashed0 = df.select(xxhash64(text).as("dup_hash"),
-      contentHash2(text).as("dup_hash2"), id.as("__id"))
-    val hashed =
-      if (materialize) hashed0.persist(StorageLevel.MEMORY_AND_DISK)
-      else hashed0
+    val hashed = df.select(xxhash64(text).as("dup_hash"),
+        contentHash2(text).as("dup_hash2"), id.as("__id"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val keys = Seq(col("dup_hash"), col("dup_hash2"))
     val stats = hashed.groupBy(keys: _*)
       .agg(count(lit(1)).as("n"), min(col("__id")).as("keep_id"))
@@ -95,13 +91,8 @@ object Dedup {
     Cached(stats.join(sampled, Seq("dup_hash", "dup_hash2"))
       .select(col("dup_hash"), col("dup_hash2"), col("n"), col("keep_id"),
         col("all_ids")),
-      if (materialize) Seq(hashed) else Nil)
+      Seq(hashed))
   }
-
-  /** Session-cache variant of [[exactGroupsH]]. */
-  def exactGroups(df: DataFrame, text: Column, id: Column,
-                  maxIds: Int = 256): DataFrame =
-    exactGroupsH(df, text, id, maxIds).value
 
   /** Exact dedup keeping the minimum id per content key (idCol must be
     * unique). Grouping by TWO independent 64-bit content hashes (not the
@@ -123,19 +114,15 @@ object Dedup {
     * exchange of this plan.
     *
     * The narrow projection feeds two subplans (the group stats and the
-    * drop-id expansion); with `materialize` it is persisted (16 bytes/row)
-    * so the text column is scanned and hashed ONCE — close() the handle
-    * after the dedup output is consumed. With `materialize = false` the
-    * projection is recomputed per consumer (two map-side scans, zero
-    * cache footprint — still no payload shuffle either way).
+    * drop-id expansion); it is persisted (16 bytes/row) so the text
+    * column is scanned and hashed ONCE — close() the handle after the
+    * dedup output is consumed.
     */
-  def dropExactDuplicatesH(df: DataFrame, textCol: String, idCol: String,
-                           materialize: Boolean = true): Cached[DataFrame] = {
-    val hashed0 = df.select(xxhash64(col(textCol)).as("__h"),
-      contentHash2(col(textCol)).as("__h2"), col(idCol).as("__id"))
-    val hashed =
-      if (materialize) hashed0.persist(StorageLevel.MEMORY_AND_DISK)
-      else hashed0
+  def dropExactDuplicates(df: DataFrame, textCol: String,
+                          idCol: String): Cached[DataFrame] = {
+    val hashed = df.select(xxhash64(col(textCol)).as("__h"),
+        contentHash2(col(textCol)).as("__h2"), col(idCol).as("__id"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val dupGroups = hashed.groupBy(col("__h"), col("__h2"))
       .agg(count(lit(1)).as("__n"), min(col("__id")).as("__keep"))
       .filter(col("__n") > 1)
@@ -147,12 +134,8 @@ object Dedup {
     // column must not make the anti-join condition ambiguous (the same
     // collision class as round-2's cutSpans idCol bug)
     Cached(df.join(dropIds, df(idCol) === dropIds("__id"), "left_anti"),
-      if (materialize) Seq(hashed) else Nil)
+      Seq(hashed))
   }
-
-  /** Session-cache variant of [[dropExactDuplicatesH]]. */
-  def dropExactDuplicates(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    dropExactDuplicatesH(df, textCol, idCol).value
 
   /** MinHash signature: `perms` independent min-hashes over the shingle
     * set (standard construction). Delegates to the native [[MinHash64]]
@@ -186,10 +169,10 @@ object Dedup {
     * exact-Jaccard rerank on the signatures. The band groupBy is the only
     * shuffle of full signatures; the pair join is bucket-local.
     */
-  def minhashCandidatesH(df: DataFrame, textCol: String, idCol: String,
-                         shingleK: Int = 3, perms: Int = 32, bands: Int = 8,
-                         minJaccard: Double = 0.5, maxBucket: Int = 64,
-                         materialize: Boolean = true): Cached[DataFrame] = {
+  def minhashCandidates(df: DataFrame, textCol: String, idCol: String,
+                        shingleK: Int = 3, perms: Int = 32, bands: Int = 8,
+                        minJaccard: Double = 0.5,
+                        maxBucket: Int = 64): Cached[DataFrame] = {
     val sigs = df.select(col(idCol).as("id"),
         minhashSignature(TextOps.shingles(col(textCol), shingleK), perms).as("sig"))
       .withColumn("bandinfo", explode(lshBands(col("sig"), bands, perms)))
@@ -201,8 +184,7 @@ object Dedup {
     // shingles) would dominate the join without finding near-dups. One
     // window pass over the (band, band_hash) shuffle does it — no second
     // scan + agg + join.
-    val pruned = capBuckets(sigs, Seq("band", "band_hash"), maxBucket,
-      materialize)
+    val pruned = capBuckets(sigs, Seq("band", "band_hash"), maxBucket)
 
     // bucket-local pair generation: same (band, band_hash), id < id2;
     // est_jaccard is computed INSIDE the join and only narrow columns
@@ -221,14 +203,6 @@ object Dedup {
       .filter(col("est_jaccard") >= minJaccard)
       .dropDuplicates("id_a", "id_b"))
   }
-
-  /** Session-cache variant of [[minhashCandidatesH]]. */
-  def minhashCandidates(df: DataFrame, textCol: String, idCol: String,
-                        shingleK: Int = 3, perms: Int = 32, bands: Int = 8,
-                        minJaccard: Double = 0.5, maxBucket: Int = 64,
-                        materialize: Boolean = true): DataFrame =
-    minhashCandidatesH(df, textCol, idCol, shingleK, perms, bands,
-      minJaccard, maxBucket, materialize).value
 
   /** Deterministic bit-partition masks for multi-table SimHash blocking:
     * `tables` independent partitions of the 64 signature bits into
@@ -270,11 +244,10 @@ object Dedup {
     * the B^2/2 pair blowup of degenerate blocks, mirroring
     * [[minhashCandidates]].
     */
-  def simhashCandidatesH(df: DataFrame, textCol: String, idCol: String,
-                         maxHamming: Int = 6, blocks: Int = 4,
-                         tables: Int = 1, seed: Long = 7L,
-                         maxBucket: Int = 256,
-                         materialize: Boolean = true): Cached[DataFrame] = {
+  def simhashCandidates(df: DataFrame, textCol: String, idCol: String,
+                        maxHamming: Int = 6, blocks: Int = 4,
+                        tables: Int = 1, seed: Long = 7L,
+                        maxBucket: Int = 256): Cached[DataFrame] = {
     require(blocks >= 1 && blocks <= 16, "blocks must be in [1, 16]")
     require(tables >= 1, "need at least one table")
     val masks = blockMasks(blocks, tables, seed)
@@ -287,8 +260,7 @@ object Dedup {
       .withColumn("piece", explode(array(pieces: _*)))
       .select(col("id"), col("sig"),
         col("piece.blk").as("blk"), col("piece.key").as("key"))
-    val pruned = capBuckets(sigs, Seq("blk", "key"), maxBucket,
-      materialize)
+    val pruned = capBuckets(sigs, Seq("blk", "key"), maxBucket)
     val l = pruned.value.alias("l"); val r = pruned.value.alias("r")
     pruned.copy(value =
       l.join(r, col("l.blk") === col("r.blk") && col("l.key") === col("r.key") &&
@@ -298,15 +270,6 @@ object Dedup {
         .filter(col("hamming") <= maxHamming)
         .dropDuplicates("id_a", "id_b"))
   }
-
-  /** Session-cache variant of [[simhashCandidatesH]]. */
-  def simhashCandidates(df: DataFrame, textCol: String, idCol: String,
-                        maxHamming: Int = 6, blocks: Int = 4,
-                        tables: Int = 1, seed: Long = 7L,
-                        maxBucket: Int = 256,
-                        materialize: Boolean = true): DataFrame =
-    simhashCandidatesH(df, textCol, idCol, maxHamming, blocks, tables, seed,
-      maxBucket, materialize).value
 
   /** Exact n-gram Jaccard similarity for given candidate id pairs
     * (rerank step after LSH blocking). Only PAIR-TOUCHED documents are
@@ -318,8 +281,8 @@ object Dedup {
     * the lazy pairs plan would re-run the whole candidate mining once
     * per consumer (measured 2x+ on q19).
     */
-  def ngramJaccardH(df: DataFrame, pairs: DataFrame, textCol: String,
-                    idCol: String, k: Int = 3): Cached[DataFrame] = {
+  def ngramJaccard(df: DataFrame, pairs: DataFrame, textCol: String,
+                   idCol: String, k: Int = 3): Cached[DataFrame] = {
     // persist, NOT localCheckpoint: truncating here would shrink each
     // consumer's analysis tree but breaks cross-query plan-cache
     // matching on the pair set (checkpoint RDD ids differ per call) —
@@ -349,16 +312,6 @@ object Dedup {
       Seq(p, sh))
   }
 
-  /** Session-cache variant of [[ngramJaccardH]]: the persisted pair set
-    * stays cached until `spark.catalog.clearCache()` (what Bench/Verify
-    * do between measurements) — long-lived sessions should use the
-    * handle variant. Note the cache also means a repeat run of the same
-    * rerank is faster than the first (warm-run protocol as usual).
-    */
-  def ngramJaccard(df: DataFrame, pairs: DataFrame, textCol: String,
-                   idCol: String, k: Int = 3): DataFrame =
-    ngramJaccardH(df, pairs, textCol, idCol, k).value
-
   /** Embedding near-duplicates: cosine >= threshold among candidate pairs
     * blocked by `tables` INDEPENDENT random-hyperplane signature tables
     * (seeds seed..seed+tables-1), OR'd — the standard banded-LSH recall
@@ -369,13 +322,12 @@ object Dedup {
     * trades recall against join size; scale corpora up by raising
     * `planes` and compensating with `tables`.
     */
-  def embeddingNearDupsH(df: DataFrame, vecCol: String, idCol: String,
-                         threshold: Double = 0.95, planes: Int = 8,
-                         tables: Int = 16, seed: Long = 7L,
-                         maxBucket: Int = 1 << 20,
-                         materialize: Boolean = true): Cached[DataFrame] = {
+  def embeddingNearDups(df: DataFrame, vecCol: String, idCol: String,
+                        threshold: Double = 0.95, planes: Int = 8,
+                        tables: Int = 16, seed: Long = 7L,
+                        maxBucket: Int = 1 << 20): Cached[DataFrame] = {
     val pruned = rhpBuckets(df, vecCol, idCol, planes, tables, seed,
-      maxBucket, materialize)
+      maxBucket)
     val l = pruned.value.alias("l"); val r = pruned.value.alias("r")
     // cosine is evaluated inside the bucket-local join (once per shared
     // table); only (id_a, id_b, cosine) survives into the pair dedup
@@ -388,15 +340,6 @@ object Dedup {
         .dropDuplicates("id_a", "id_b"))
   }
 
-  /** Session-cache variant of [[embeddingNearDupsH]]. */
-  def embeddingNearDups(df: DataFrame, vecCol: String, idCol: String,
-                        threshold: Double = 0.95, planes: Int = 8,
-                        tables: Int = 16, seed: Long = 7L,
-                        maxBucket: Int = 1 << 20,
-                        materialize: Boolean = true): DataFrame =
-    embeddingNearDupsH(df, vecCol, idCol, threshold, planes, tables, seed,
-      maxBucket, materialize).value
-
   /** The shared multi-table RHP blocking stage of [[embeddingNearDups]]
     * and [[Similarity.bucketedKnn]]: `tables` independent signature
     * tables (seeds seed..seed+tables-1), exploded to (id, v, t, blk)
@@ -404,8 +347,7 @@ object Dedup {
     */
   private[ops] def rhpBuckets(df: DataFrame, vecCol: String, idCol: String,
                               planes: Int, tables: Int, seed: Long,
-                              maxBucket: Int,
-                              materialize: Boolean): Cached[DataFrame] = {
+                              maxBucket: Int): Cached[DataFrame] = {
     val sigStructs = (0 until tables).map { t =>
       struct(lit(t).as("t"),
         Similarity.rhpSignature(col("v"), planes, seed + t).as("blk"))
@@ -414,7 +356,7 @@ object Dedup {
       .withColumn("piece", explode(array(sigStructs: _*)))
       .select(col("id"), col("v"),
         col("piece.t").as("t"), col("piece.blk").as("blk"))
-    capBuckets(sigs, Seq("t", "blk"), maxBucket, materialize)
+    capBuckets(sigs, Seq("t", "blk"), maxBucket)
   }
 
   /** Drop buckets larger than `maxBucket` from the signature table.
@@ -426,9 +368,9 @@ object Dedup {
     * fix). Over-cap keys are at most n/maxBucket rows and in practice a
     * handful; the anti-join against them is AQE-broadcast.
     *
-    * With `materialize`, TWO narrow tables are pinned: the raw signature
-    * rows (so the corpus is shingled/hashed once — counts and cap read
-    * it) and the capped frame REPARTITIONED by the bucket keys — the
+    * TWO narrow tables are pinned: the raw signature rows (so the
+    * corpus is shingled/hashed once — counts and cap read it) and the
+    * capped frame REPARTITIONED by the bucket keys — the
     * pair self-join then needs NO exchange at all (both sides read the
     * co-partitioned cache), and because degenerate buckets are removed
     * BEFORE this one shuffle, no partition of it can be hot. Without the
@@ -436,19 +378,16 @@ object Dedup {
     * (round-3 interim shape: 2 exchanges of vector-bearing rows, ~2.5x
     * on q21).
     */
-  private def capBuckets(sigs: DataFrame, keyNames: Seq[String], maxBucket: Int,
-                         materialize: Boolean): Cached[DataFrame] = {
+  private def capBuckets(sigs: DataFrame, keyNames: Seq[String],
+                         maxBucket: Int): Cached[DataFrame] = {
     val keys = keyNames.map(col)
-    val raw =
-      if (materialize) sigs.persist(StorageLevel.MEMORY_AND_DISK) else sigs
+    val raw = sigs.persist(StorageLevel.MEMORY_AND_DISK)
     val hot = raw.groupBy(keys: _*).agg(count(lit(1)).as("__bsz"))
       .filter(col("__bsz") > maxBucket)
       .select(keys: _*)
-    val capped = raw.join(hot, keyNames, "left_anti")
-    if (materialize) {
-      val coPart = capped.repartition(keys: _*)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      Cached(coPart, Seq(raw, coPart))
-    } else Cached(capped)
+    val coPart = raw.join(hot, keyNames, "left_anti")
+      .repartition(keys: _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    Cached(coPart, Seq(raw, coPart))
   }
 }

@@ -79,7 +79,7 @@ object DupSpans {
   }
 
   private[graft] def windowsOf(df: DataFrame, textCol: String, idCol: String,
-                               windowWords: Int, materialize: Boolean): Cached[DataFrame] = {
+                               windowWords: Int): DataFrame = {
     // unsplittable-input fan-out (guide §2.5): a corpus that arrives as
     // one sub-split file would run the whole window walk in ONE task;
     // when the scan plans fewer partitions than the session's default
@@ -89,14 +89,10 @@ object DupSpans {
     // min / max / min-struct aggregates only).
     val target = df.sparkSession.sparkContext.defaultParallelism
     val wide = if (scanSplits(df).exists(_ < target)) df.repartition(target) else df
-    val w = wide.select(col(idCol).as("id"),
+    wide.select(col(idCol).as("id"),
       size(split(col(textCol), " ")).as("n_words"),
       posexplode(TextOps.shingles(col(textCol), windowWords))
         .as(Seq("pos", "h")))
-    if (materialize) {
-      val p = w.persist(StorageLevel.MEMORY_AND_DISK)
-      Cached(p, Seq(p))
-    } else Cached(w)
   }
 
   /** (id, span_start, span_words) — maximal duplicated spans, where
@@ -113,22 +109,15 @@ object DupSpans {
     * shingle pass feeds both the stats aggregate and the join back —
     * `close()` it after consuming the spans.
     */
-  def dupSpansH(df: DataFrame, textCol: String, idCol: String,
-                windowWords: Int = 8,
-                materialize: Boolean = true): Cached[DataFrame] = {
-    val windows = windowsOf(df, textCol, idCol, windowWords, materialize)
-    val flagged = windows.value
-      .join(hashStats(windows.value, needFirst = false), "h")
-      .select(col("id"), col("n_words"), col("pos"))
-    windows.copy(value = islands(flagged, windowWords))
-  }
-
-  /** Session-cache variant of [[dupSpansH]] (the persisted windows table
-    * stays cached until `spark.catalog.clearCache()`).
-    */
   def dupSpans(df: DataFrame, textCol: String, idCol: String,
-               windowWords: Int = 8): DataFrame =
-    dupSpansH(df, textCol, idCol, windowWords).value
+               windowWords: Int = 8): Cached[DataFrame] = {
+    val windows = windowsOf(df, textCol, idCol, windowWords)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val flagged = windows
+      .join(hashStats(windows, needFirst = false), "h")
+      .select(col("id"), col("n_words"), col("pos"))
+    Cached(islands(flagged, windowWords), Seq(windows))
+  }
 
   /** Spans to CUT under keep-first semantics: like [[dupSpans]], but each
     * duplicated window's globally-first occurrence (minimum (id, pos)) is
@@ -145,27 +134,22 @@ object DupSpans {
     * exists to cut; exempting one "first" of 10^8 copies is noise). The
     * default (unbounded) keeps strict keep-first semantics everywhere.
     */
-  def dupSpansKeepFirstH(df: DataFrame, textCol: String, idCol: String,
-                         windowWords: Int = 8,
-                         maxWindowDf: Long = Long.MaxValue,
-                         materialize: Boolean = true): Cached[DataFrame] = {
-    val windows = windowsOf(df, textCol, idCol, windowWords, materialize)
-    val flagged = windows.value
-      .join(hashStats(windows.value, needFirst = true), "h")
+  def dupSpansKeepFirst(df: DataFrame, textCol: String, idCol: String,
+                        windowWords: Int = 8,
+                        maxWindowDf: Long = Long.MaxValue)
+      : Cached[DataFrame] = {
+    val windows = windowsOf(df, textCol, idCol, windowWords)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val flagged = windows
+      .join(hashStats(windows, needFirst = true), "h")
       .filter(col("__df") > lit(maxWindowDf) ||
         !(col("__first.id") === col("id") && col("__first.pos") === col("pos")))
       .select(col("id"), col("n_words"), col("pos"))
-    windows.copy(value = islands(flagged, windowWords))
+    Cached(islands(flagged, windowWords), Seq(windows))
   }
 
-  /** Session-cache variant of [[dupSpansKeepFirstH]]. */
-  def dupSpansKeepFirst(df: DataFrame, textCol: String, idCol: String,
-                        windowWords: Int = 8,
-                        maxWindowDf: Long = Long.MaxValue): DataFrame =
-    dupSpansKeepFirstH(df, textCol, idCol, windowWords, maxWindowDf).value
-
   /** Boilerplate inventory — the audit report a pipeline operator reads
-    * BEFORE choosing [[dupSpansKeepFirstH]]'s `maxWindowDf` cap: every
+    * BEFORE choosing [[dupSpansKeepFirst]]'s `maxWindowDf` cap: every
     * L-word window occurring at least `minDf` times corpus-wide, with
     * its occurrence count, distinct-document count (within-doc loops and
     * cross-doc boilerplate read very differently), and the window's TEXT
@@ -182,9 +166,9 @@ object DupSpans {
     */
   def boilerplate(df: DataFrame, textCol: String, idCol: String,
                   windowWords: Int = 8, minDf: Long = 3L): DataFrame = {
-    val windows = windowsOf(df, textCol, idCol, windowWords,
-      materialize = false)
-    val hot = windows.value.groupBy(col("h"))
+    // single consumer: the stats aggregate is the only reader, so the
+    // windows stay unpersisted
+    val hot = windowsOf(df, textCol, idCol, windowWords).groupBy(col("h"))
       .agg(count(lit(1)).as("df"),
         countDistinct(col("id")).as("n_docs"),
         min(struct(col("id"), col("pos"))).as("__first"))

@@ -159,18 +159,19 @@ object IncrementalDedup {
     * against the full corpus. Parameters must match the index's build
     * parameters (they define the banding).
     *
-    * `materialize = true` persists the batch's narrow signature table so
-    * the count/new-new/new-old subplans share one shingle pass — consume
-    * the candidates, then `close()` the handle (what long-running loops
-    * and [[graft.streaming.StreamingDedup]] do).
+    * The batch's narrow signature table is persisted so the
+    * count/new-new/new-old subplans share one shingle pass — consume the
+    * candidates, then `close()` the returned [[Cached]] handle (what
+    * long-running loops do; [[graft.streaming.StreamingDedup]] persists
+    * its own signature rows around [[candidatePairs]]).
     */
-  def newDocCandidatesH(spark: SparkSession, newDocs: DataFrame,
-                        textCol: String, idCol: String, indexPath: String,
-                        shingleK: Int = 3, perms: Int = 32, bands: Int = 16,
-                        minJaccard: Double = 0.5, maxBucket: Int = 64,
-                        materialize: Boolean = true): Cached[DataFrame] = {
-    val rows = signatureRows(newDocs, textCol, idCol, shingleK, perms, bands)
-    val fresh = if (materialize) rows.persist() else rows
+  def newDocCandidates(spark: SparkSession, newDocs: DataFrame,
+                       textCol: String, idCol: String, indexPath: String,
+                       shingleK: Int = 3, perms: Int = 32, bands: Int = 16,
+                       minJaccard: Double = 0.5,
+                       maxBucket: Int = 64): Cached[DataFrame] = {
+    val fresh = signatureRows(newDocs, textCol, idCol, shingleK, perms, bands)
+      .persist()
     // explicit read schemas: the index's row shape is BY CONSTRUCTION the
     // probe side's (band partition dirs + the signatureRows projection),
     // so per-call parquet schema inference (footer reads + partition
@@ -204,15 +205,6 @@ object IncrementalDedup {
     Cached(candidatePairs(fresh,
         Some(spark.read.schema(indexSchema).parquet(indexPath)),
         perms, minJaccard, maxBucket, counts),
-      if (materialize) Seq(fresh) else Nil)
+      Seq(fresh))
   }
-
-  /** Session-cache variant of [[newDocCandidatesH]]. */
-  def newDocCandidates(spark: SparkSession, newDocs: DataFrame,
-                       textCol: String, idCol: String, indexPath: String,
-                       shingleK: Int = 3, perms: Int = 32, bands: Int = 16,
-                       minJaccard: Double = 0.5, maxBucket: Int = 64,
-                       materialize: Boolean = true): DataFrame =
-    newDocCandidatesH(spark, newDocs, textCol, idCol, indexPath, shingleK,
-      perms, bands, minJaccard, maxBucket, materialize).value
 }

@@ -164,7 +164,7 @@ object Pipeline {
 
   /** The miner's candidate floor: pairs below this estimated Jaccard
     * never enter the reranked set (the `minJaccard` passed to
-    * [[Dedup.minhashCandidatesH]] below), so no downstream filter can
+    * [[Dedup.minhashCandidates]] below), so no downstream filter can
     * see them.
     */
   val MiningFloor: Double = 0.2
@@ -225,18 +225,16 @@ object Pipeline {
           .drop("__cal_score")
     }
 
-    val exactH = Dedup.dropExactDuplicatesH(train, "text", "doc_id")
+    val exactH = Dedup.dropExactDuplicates(train, "text", "doc_id")
     val exact = exactH.value.persist(StorageLevel.MEMORY_AND_DISK)
 
-    // the handle variants persist the banded signature tables (one
-    // shingle pass feeds both self-join sides) and the candidate pair
-    // set (feeds the touched-id prune + both rerank joins);
-    // Result.unpersist closes all of them — the round-2 shape traded the
-    // cache away (materialize=false) because the miner gave the caller
-    // no release handle
-    val mined = Dedup.minhashCandidatesH(exact, "text", "doc_id",
+    // the miners persist the banded signature tables (one shingle pass
+    // feeds both self-join sides) and the candidate pair set (feeds the
+    // touched-id prune + both rerank joins); Result.unpersist closes all
+    // of them
+    val mined = Dedup.minhashCandidates(exact, "text", "doc_id",
       bands = 16, minJaccard = MiningFloor)
-    val reranked = Dedup.ngramJaccardH(exact,
+    val reranked = Dedup.ngramJaccard(exact,
       mined.value.select("id_a", "id_b"), "text", "doc_id")
     val miner = Cached(mined.value,
       exactH.handles ++ mined.handles ++ reranked.handles)
@@ -256,7 +254,7 @@ object Pipeline {
       case Some(ev) =>
         canonical.join(
           Decontamination.containmentPairs(canonical, ev, "text", "doc_id",
-              minContainment = cfg.containmentThreshold)
+              minContainment = cfg.containmentThreshold).value
             .select(col("train_id").as("doc_id")).distinct(),
           Seq("doc_id"), "left_anti")
     }).persist(StorageLevel.MEMORY_AND_DISK)

@@ -127,11 +127,11 @@ object Similarity {
     * (id_a < id_b, one cosine per pair) and mirrored before the per-id
     * rank, so each pair's cosine is computed once.
     */
-  def bucketedKnnH(df: DataFrame, vecCol: String, idCol: String,
-                   k: Int, planes: Int = 8, tables: Int = 8,
-                   seed: Long = 7L, maxBucket: Int = 1 << 20,
-                   materialize: Boolean = true): Cached[DataFrame] = {
-    // same guard as Dedup.exactGroupsH: past the threshold Catalyst skips
+  def bucketedKnn(df: DataFrame, vecCol: String, idCol: String,
+                  k: Int, planes: Int = 8, tables: Int = 8,
+                  seed: Long = 7L,
+                  maxBucket: Int = 1 << 20): Cached[DataFrame] = {
+    // same guard as Dedup.exactGroups: past the threshold Catalyst skips
     // the partial WindowGroupLimit rewrite and the per-id rank degrades
     // to the unbounded single-partition window (hot-id straggler)
     val threshold = df.sparkSession.sessionState.conf
@@ -141,7 +141,7 @@ object Similarity {
       s"k ($k) must be in [1, windowGroupLimitThreshold $threshold) — " +
         "raise the conf alongside k if a bigger neighborhood is needed")
     val pruned = Dedup.rhpBuckets(df, vecCol, idCol, planes, tables, seed,
-      maxBucket, materialize)
+      maxBucket)
     val l = pruned.value.alias("l"); val r = pruned.value.alias("r")
     // Mirror each bucket-local pair into BOTH directions with one explode
     // (a union of two selects would embed the join subtree twice — and
@@ -175,12 +175,4 @@ object Similarity {
       .filter(col("rank") <= k)
       .dropDuplicates("id", "neighbor_id"))
   }
-
-  /** Session-cache variant of [[bucketedKnnH]]. */
-  def bucketedKnn(df: DataFrame, vecCol: String, idCol: String,
-                  k: Int, planes: Int = 8, tables: Int = 8,
-                  seed: Long = 7L, maxBucket: Int = 1 << 20,
-                  materialize: Boolean = true): DataFrame =
-    bucketedKnnH(df, vecCol, idCol, k, planes, tables, seed, maxBucket,
-      materialize).value
 }

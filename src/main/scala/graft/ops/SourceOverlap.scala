@@ -51,16 +51,15 @@ object SourceOverlap {
     * explosion keeps self-pairs (a <= b), so the diagonal co(s, s) IS
     * |S| (collect_set already deduped sources per hash). Sizes and
     * intersections are then two filters of one sources^2-sized frame —
-    * persisted (with `materialize`) so the corpus pass, the per-hash
+    * persisted so the corpus pass, the per-hash
     * aggregation, and the pair count all run exactly once no matter how
     * many consumers the matrix has. The returned [[Cached]] handle
     * unpersists it deterministically (same contract as the dedup
     * miners).
     */
-  def overlapMatrixH(df: DataFrame, textCol: String, sourceCol: String,
-                     shingleK: Int = 3,
-                     materialize: Boolean = true): Cached[DataFrame] = {
-    val co0 = df
+  def overlapMatrix(df: DataFrame, textCol: String, sourceCol: String,
+                    shingleK: Int = 3): Cached[DataFrame] = {
+    val co = df
       .select(col(sourceCol).as("__src"),
         explode(TextOps.shingles(col(textCol), shingleK)).as("__h"))
       .groupBy(col("__h"))
@@ -73,8 +72,7 @@ object SourceOverlap {
       .filter(col("source_a") <= col("source_b"))
       .groupBy(col("source_a"), col("source_b"))
       .agg(count(lit(1)).as("__co"))
-    val co = if (materialize) co0.persist(StorageLevel.MEMORY_AND_DISK)
-             else co0
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val sizeA = co.filter(col("source_a") === col("source_b"))
       .select(col("source_a"), col("__co").as("__na"))
     val sizeB = sizeA.select(col("source_a").as("source_b"),
@@ -88,13 +86,6 @@ object SourceOverlap {
         col("union_sh"),
         round(col("intersect_sh").cast("double") / col("union_sh"), 6)
           .as("jaccard"))
-    Cached(out, if (materialize) Seq(co) else Nil)
+    Cached(out, Seq(co))
   }
-
-  /** [[overlapMatrixH]] without the cache handle (the sources^2-sized
-    * co-occurrence cache stays pinned for the frame's lifetime).
-    */
-  def overlapMatrix(df: DataFrame, textCol: String, sourceCol: String,
-                    shingleK: Int = 3): DataFrame =
-    overlapMatrixH(df, textCol, sourceCol, shingleK).value
 }

@@ -23,7 +23,7 @@ object Vocab {
 
   def topKExact(df: DataFrame, groupCol: String, textCol: String,
                 k: Int): DataFrame = {
-    // same guard as Dedup.exactGroupsH: past the threshold Catalyst skips
+    // same guard as Dedup.exactGroups: past the threshold Catalyst skips
     // the partial-WindowGroupLimit rewrite below and a hot group's whole
     // vocabulary lands in one window partition
     val threshold = df.sparkSession.sessionState.conf

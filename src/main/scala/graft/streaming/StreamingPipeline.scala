@@ -236,13 +236,13 @@ object StreamingPipeline {
                 if (priorTouched.length <= p.maxRerankPushdownIds)
                   train.filter(col("doc_id")
                     .isin(priorTouched.toSeq.map(Long.box): _*))
-                else train // overflow: scan + ngramJaccardH's semi-join
+                else train // overflow: scan + ngramJaccard's semi-join
               batchTexts.unionByName(
                 priorTexts.select(col("doc_id"), col("text")))
             }
           }
         }
-        val reranked = graft.ops.Dedup.ngramJaccardH(textPool, pairIds,
+        val reranked = graft.ops.Dedup.ngramJaccard(textPool, pairIds,
           "text", "doc_id", p.shingleK)
         try {
         val confirmed = reranked.value

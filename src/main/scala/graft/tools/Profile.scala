@@ -249,19 +249,19 @@ object Profile {
     step("redaction", nDocs)(
       Redaction.annotate(docs, "text")
         .agg(sum(col("n_email") + col("n_phone"))).head().getLong(0))
-    step("exact_dedup", nDocs)(Dedup.dropExactDuplicates(docs, "text", "doc_id").count())
+    step("exact_dedup", nDocs)(Dedup.dropExactDuplicates(docs, "text", "doc_id").value.count())
     step("windows_derive", nDocs)(
       docs.select(col("doc_id"), posexplode(TextOps.shingles(col("text"), 8))).count())
-    step("dup_spans", nDocs)(DupSpans.dupSpans(docs, "text", "doc_id").count())
+    step("dup_spans", nDocs)(DupSpans.dupSpans(docs, "text", "doc_id").value.count())
     step("dup_spans_keepfirst", nDocs)(
-      DupSpans.dupSpansKeepFirst(docs, "text", "doc_id").count())
+      DupSpans.dupSpansKeepFirst(docs, "text", "doc_id").value.count())
 
     // 20 two-word spans per doc: the composed twin pays words x spans
     // interpreted lambdas per row, the native walk words + spans log spans
     def denseSpans = docs.crossJoin(spark.range(0, 20).select(col("id").as("i")))
       .select(col("doc_id").as("id"), (col("i") * 3).as("span_start"),
         lit(2L).as("span_words"))
-    def keepFirstSpans = DupSpans.dupSpansKeepFirst(docs, "text", "doc_id")
+    def keepFirstSpans = DupSpans.dupSpansKeepFirst(docs, "text", "doc_id").value
     for ((kind, spans) <- Seq("cut_only" -> (() => keepFirstSpans), "dense_cut" -> (() => denseSpans));
          (twin, cut) <- Seq("native" -> (DupSpans.cutSpans _), "hof" -> (DupSpans.cutSpansComposed _))) {
       val mined = persisted(spans())
@@ -270,7 +270,7 @@ object Profile {
     }
 
     step("minhash_pairs", nDocs)(
-      Dedup.minhashCandidates(docs, "text", "doc_id", bands = 16, minJaccard = 0.8).count())
+      Dedup.minhashCandidates(docs, "text", "doc_id", bands = 16, minJaccard = 0.8).value.count())
     step("packing", nDocs)(
       Packing.packGreedy(docs.withColumn("len", length(col("text"))),
         "source", "doc_id", "len", 4096).count())
@@ -281,7 +281,7 @@ object Profile {
       Decontamination.containmentPairs(
         docs.filter(pmod(col("doc_id"), lit(50)) =!= 0),
         docs.filter(pmod(col("doc_id"), lit(50)) === 0),
-        "text", "doc_id", minContainment = 0.9).count())
+        "text", "doc_id", minContainment = 0.9).value.count())
     step.done.toSeq
   }
 
@@ -326,7 +326,7 @@ object Profile {
     codegenStep("cosine_sim", nVecs)(
       vecs.select(CosineSim.cosine_sim(col("va"), col("vb")).as("c"))
         .agg(sum(col("c"))).head().getDouble(0))
-    val spans = persisted(DupSpans.dupSpansKeepFirst(docs, "text", "doc_id"))
+    val spans = persisted(DupSpans.dupSpansKeepFirst(docs, "text", "doc_id").value)
     codegenStep("cut_spans", nDocs)(
       DupSpans.cutSpans(docs, "text", "doc_id", spans)
         .agg(sum(length(col("text_cut")))).head().getLong(0))

@@ -40,11 +40,11 @@ object PlanCheck {
     import spark.implicits._
     val docs = (0 until 50).map(i => (i.toLong, s"some words $i repeated here " * 5))
       .toDF("id", "text")
-    val mh = graft.ops.Dedup.minhashCandidatesH(docs, "text", "id")
+    val mh = graft.ops.Dedup.minhashCandidates(docs, "text", "id")
     mh.value.explain("formatted")
     mh.close()
     println("==== round 3: de-skewed dupSpans (partial agg + join-back, one per-doc window) ====")
-    val ds = graft.ops.DupSpans.dupSpansKeepFirstH(docs, "text", "id", 4)
+    val ds = graft.ops.DupSpans.dupSpansKeepFirst(docs, "text", "id", 4)
     ds.value.explain("formatted")
     ds.close()
     println("==== round 3: q08 rank top-k (partial WindowGroupLimit) ====")

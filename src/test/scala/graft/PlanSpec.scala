@@ -71,7 +71,7 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = (0 until 50).map(i => (i.toLong, s"some words $i repeated here " * 5))
       .toDF("id", "text")
-    val p = plan(graft.ops.Dedup.minhashCandidates(docs, "text", "id"))
+    val p = plan(graft.ops.Dedup.minhashCandidates(docs, "text", "id").value)
     // both join sides must come from the persisted signature table
     assert(p.contains("InMemoryTableScan"),
       s"expected cached signature scan in:\n$p")
@@ -126,7 +126,7 @@ class PlanSpec extends AnyFunSuite {
     val docs = (0L until 60L).map { i =>
       (i, s"s${i % 4}", s"word${i % 7} alpha beta gamma delta word${i % 5} tail")
     }.toDF("doc_id", "source", "text")
-    val h = graft.ops.SourceOverlap.overlapMatrixH(docs, "text", "source")
+    val h = graft.ops.SourceOverlap.overlapMatrix(docs, "text", "source")
     try {
       val p = plan(h.value)
       // all three consumers (off-diagonal + two size broadcasts) must
@@ -194,15 +194,26 @@ class PlanSpec extends AnyFunSuite {
   }
 
   // Exchange nodes (shuffle AND broadcast — a broadcast of text is the
-  // same hygiene violation) of the df built by `mk`. Built with AQE off:
-  // AdaptiveSparkPlanExec hides its exchanges from collect until
-  // execution, and sparkPlan predates EnsureRequirements entirely.
+  // same hygiene violation) of the df built by `mk`, including those in
+  // the plans of cached tables it reads (an InMemoryTableScanExec is a
+  // leaf: its cached plan is not among its children, and may itself be
+  // adaptive). Built with AQE off: AdaptiveSparkPlanExec hides its
+  // exchanges from collect until execution, and sparkPlan predates
+  // EnsureRequirements entirely.
   private def exchangeAttrs(mk: => DataFrame)
       : Seq[Seq[org.apache.spark.sql.catalyst.expressions.Attribute]] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def walk(p: SparkPlan): Seq[Seq[org.apache.spark.sql.catalyst.expressions.Attribute]] =
+      p.collect {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => Seq(e.output)
+        case s: InMemoryTableScanExec => walk(s.relation.cachedPlan)
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      }.flatten
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try mk.queryExecution.executedPlan.collect {
-      case e: org.apache.spark.sql.execution.exchange.Exchange => e.output
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try walk(mk.queryExecution.executedPlan)
+    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
   private def exchangeOutputs(mk: => DataFrame): Seq[Seq[String]] =
     exchangeAttrs(mk).map(_.map(_.name))
@@ -211,7 +222,7 @@ class PlanSpec extends AnyFunSuite {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val pairs = graft.ops.Decontamination.containmentPairs(
       docs.filter(col("doc_id") % 5 =!= 0), docs.filter(col("doc_id") % 5 === 0),
-      "text", "doc_id")
+      "text", "doc_id").value
     val exchanges = exchangeOutputs(pairs)
     assert(exchanges.nonEmpty)
     exchanges.foreach { cols =>
@@ -233,7 +244,7 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = (0 until 60).map(i => (i.toLong,
       s"shared boiler plate words here always tail$i plus filler")).toDF("id", "text")
-    val h = graft.ops.DupSpans.dupSpansKeepFirstH(docs, "text", "id",
+    val h = graft.ops.DupSpans.dupSpansKeepFirst(docs, "text", "id",
       windowWords = 4)
     val p = plan(h.value)
     // per-hash stats (count + first occurrence) must partially aggregate
@@ -257,8 +268,8 @@ class PlanSpec extends AnyFunSuite {
     val scan = spark.read.parquet(dir)
     assert(scan.rdd.getNumPartitions == 1)
     def roundRobin(df: DataFrame): Boolean =
-      graft.ops.DupSpans.windowsOf(df, "text", "id", 4, materialize = false)
-        .value.queryExecution.sparkPlan.toString.contains("RoundRobinPartitioning")
+      graft.ops.DupSpans.windowsOf(df, "text", "id", 4)
+        .queryExecution.sparkPlan.toString.contains("RoundRobinPartitioning")
     assert(roundRobin(scan.filter(col("id") >= 0)), "a one-split scan must fan out")
 
     // not scan-rooted: the gate must neither fan out nor execute upstream
@@ -274,7 +285,7 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = (0 until 50).map(i => (i.toLong, s"some words $i repeated here " * 5))
       .toDF("id", "text")
-    val h = graft.ops.Dedup.minhashCandidatesH(docs, "text", "id")
+    val h = graft.ops.Dedup.minhashCandidates(docs, "text", "id")
     assert(!plan(h.value).contains("Window"),
       "no window anywhere in the candidate-mining plan")
     h.close()
@@ -323,8 +334,9 @@ class PlanSpec extends AnyFunSuite {
     // map-side partial agg, skew-safe) and the payload side anti-joins
     // the small drop-id set.
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val h = graft.ops.Dedup.dropExactDuplicatesH(docs, "text", "doc_id",
-      materialize = false)
+    val h = graft.ops.Dedup.dropExactDuplicates(docs, "text", "doc_id")
+    // exchangeOutputs also walks the persisted (hash, hash2, id) table's
+    // own plan, so a text-carrying exchange cannot hide behind the cache
     val exchanges = exchangeOutputs(h.value)
     exchanges.foreach { cols =>
       assert(!cols.exists(_.contains("text")),
@@ -332,6 +344,7 @@ class PlanSpec extends AnyFunSuite {
     }
     assert(!plan(h.value).contains("Window"),
       "no by-key window anywhere in the dedup plan (hot-content straggler)")
+    h.close()
   }
 
   test("bucketed packing key raises exchange parallelism above #sources") {

@@ -135,7 +135,7 @@ class CrashStateSpec extends AnyFunSuite {
   private def grown = indexed.unionByName(docs(10L, 11L))
   private def mine(dir: String, cap: Int): Set[(Long, Long)] =
     IncrementalDedup.newDocCandidates(spark, docs(20L, 21L), "text", "doc_id", dir,
-      maxBucket = cap).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      maxBucket = cap).value.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   private val caps = Seq(8, 10) // 9-row buckets: dropped at 8, mined at 10
   private lazy val scratchMined = {
     val dir = s"${tmp("crash-idx-scratch")}/idx"

@@ -128,7 +128,7 @@ class CutSpansSpec extends AnyFunSuite {
     val docs = Seq(
       1L -> s"one two three $phrase four five six",
       2L -> s"$phrase seven eight nine ten eleven twelve").toDF("doc_id", "text")
-    val spans = DupSpans.dupSpansKeepFirst(docs, "text", "doc_id", windowWords = 4)
+    val spans = DupSpans.dupSpansKeepFirst(docs, "text", "doc_id", windowWords = 4).value
     val cut = DupSpans.cutSpans(docs, "text", "doc_id", spans)
       .select("doc_id", "text_cut").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap

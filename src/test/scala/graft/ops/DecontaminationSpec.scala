@@ -13,7 +13,7 @@ class DecontaminationSpec extends AnyFunSuite {
     Decontamination.containmentPairs(
         train.toDF("doc_id", "text"), eval.toDF("doc_id", "text"),
         "text", "doc_id", k = 3, minContainment = min, maxShingleDf = maxDf)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      .value.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
 
   test("containment = shared distinct shingles / eval shingles") {
     val train = Seq(1L -> "a b c d e f", 2L -> "x y z w")
@@ -69,8 +69,8 @@ class DecontaminationSpec extends AnyFunSuite {
     assert(pairs(train, eval, min = 0.75) == Map((1L, 10L) -> 1.0))
   }
 
-  test("containmentPairsH releases the capped path's shingle cache on close()") {
-    val h = Decontamination.containmentPairsH(
+  test("containmentPairs releases the capped path's shingle cache on close()") {
+    val h = Decontamination.containmentPairs(
       Seq(1L -> "a b c d e f", 2L -> "a b c d e f").toDF("doc_id", "text"),
       Seq(10L -> "a b c d").toDF("doc_id", "text"),
       "text", "doc_id", k = 3, minContainment = 0.0, maxShingleDf = 10)
@@ -80,7 +80,7 @@ class DecontaminationSpec extends AnyFunSuite {
     h.handles.foreach(f => assert(
       f.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
     // the uncapped path pins nothing
-    val h2 = Decontamination.containmentPairsH(
+    val h2 = Decontamination.containmentPairs(
       Seq(1L -> "a b c d e f").toDF("doc_id", "text"),
       Seq(10L -> "a b c d").toDF("doc_id", "text"), "text", "doc_id")
     assert(h2.handles.isEmpty)

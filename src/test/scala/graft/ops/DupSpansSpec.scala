@@ -12,7 +12,7 @@ class DupSpansSpec extends AnyFunSuite {
   def spans(rows: (Long, String)*): Set[(Long, Long, Long)] =
     DupSpans.dupSpans(rows.toDF("doc_id", "text"), "text", "doc_id",
         windowWords = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      .value.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   // 8 unique filler words + a 6-word phrase shared verbatim
   val phrase = "alpha bravo charlie delta echo foxtrot"
@@ -45,11 +45,11 @@ class DupSpansSpec extends AnyFunSuite {
       2L -> s"$phrase seven eight nine ten eleven twelve"
     ).toDF("doc_id", "text")
     val toCut = DupSpans.dupSpansKeepFirst(docs, "text", "doc_id", windowWords = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      .value.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(toCut == Set((2L, 0L, 6L))) // only doc 2's copy is flagged
 
     val cut = DupSpans.cutSpans(docs, "text", "doc_id",
-        DupSpans.dupSpansKeepFirst(docs, "text", "doc_id", windowWords = 4))
+        DupSpans.dupSpansKeepFirst(docs, "text", "doc_id", windowWords = 4).value)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("text_cut"))
       .toMap
     assert(cut(1L) == s"one two three $phrase four five six") // untouched
@@ -88,7 +88,7 @@ class DupSpansSpec extends AnyFunSuite {
 
       val got = DupSpans.dupSpans(docs.toDF("doc_id", "text"),
           "text", "doc_id", windowWords = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        .value.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(got == brute, s"seed $seed")
     }
   }
@@ -99,17 +99,17 @@ class DupSpansSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     // unbounded: strict keep-first — doc 1's copy is exempt
     val strict = DupSpans.dupSpansKeepFirst(docs, "text", "doc_id", windowWords = 4)
-      .select("id").collect().map(_.getLong(0)).toSet
+      .value.select("id").collect().map(_.getLong(0)).toSet
     assert(strict == Set(2L, 3L, 4L, 5L))
     // capped below the df: flag-whole-island — doc 1's copy is cut too
     val capped = DupSpans.dupSpansKeepFirst(docs, "text", "doc_id",
         windowWords = 4, maxWindowDf = 4L)
-      .select("id").collect().map(_.getLong(0)).toSet
+      .value.select("id").collect().map(_.getLong(0)).toSet
     assert(capped == Set(1L, 2L, 3L, 4L, 5L))
     // a cap ABOVE the df changes nothing
     val loose = DupSpans.dupSpansKeepFirst(docs, "text", "doc_id",
         windowWords = 4, maxWindowDf = 100L)
-      .select("id").collect().map(_.getLong(0)).toSet
+      .value.select("id").collect().map(_.getLong(0)).toSet
     assert(loose == strict)
   }
 
@@ -122,7 +122,7 @@ class DupSpansSpec extends AnyFunSuite {
     val docs = spark.range(0, 100000)
       .select(col("id").as("doc_id"),
         concat(lit(boiler), lit(" tail"), col("id").cast("string")).as("text"))
-    val h = DupSpans.dupSpansKeepFirstH(docs, "text", "doc_id",
+    val h = DupSpans.dupSpansKeepFirst(docs, "text", "doc_id",
       windowWords = 8, maxWindowDf = 1000L)
     // every doc's boilerplate prefix is flagged (df 1e5 > cap -> no exemption)
     assert(h.value.count() == 100000L)
@@ -138,7 +138,7 @@ class DupSpansSpec extends AnyFunSuite {
         4L -> null.asInstanceOf[String])
       .toDF("doc_id", "text")
     val cut = DupSpans.cutSpans(docs, "text", "doc_id",
-        DupSpans.dupSpansKeepFirst(docs, "text", "doc_id", windowWords = 4))
+        DupSpans.dupSpansKeepFirst(docs, "text", "doc_id", windowWords = 4).value)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("text_cut"))
       .toMap
     // NULL text passes through as NULL — no windows to mine, nothing to

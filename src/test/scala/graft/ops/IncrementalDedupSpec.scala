@@ -28,7 +28,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       13L -> "utterly unrelated content in every single shingle position here")
     val cands = IncrementalDedup.newDocCandidates(spark, batch,
         "text", "doc_id", dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .value.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     assert(cands.contains((1L, 10L)) && cands.contains((2L, 10L))) // new x old
     assert(cands.contains((11L, 12L)))                             // new x new
@@ -40,7 +40,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     IncrementalDedup.writeIndex(corpus.unionByName(batch), "text", "doc_id", dir)
     val cands2 = IncrementalDedup.newDocCandidates(spark,
         docs(20L -> s"$base twenty"), "text", "doc_id", dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .value.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cands2 == Set((1L, 20L), (2L, 20L), (10L, 20L)))
   }
 
@@ -51,7 +51,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val batch = docs(10L -> s"$base same", 11L -> s"$base same")
     IncrementalDedup.writeIndex(old, "text", "doc_id", dir)
     def mine(cap: Int) = IncrementalDedup.newDocCandidates(spark, batch,
-        "text", "doc_id", dir, maxBucket = cap).count()
+        "text", "doc_id", dir, maxBucket = cap).value.count()
     assert(mine(4) == 0L, "7-row buckets must be dropped at cap 4, like full mining")
     assert(mine(10) == 11L) // 2 new x 5 old + 1 new-new pair
     spark.catalog.clearCache()
@@ -78,7 +78,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val batch = docs(10L -> s"$base ten")
     def mined = IncrementalDedup.newDocCandidates(spark, batch,
         "text", "doc_id", dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .value.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val withSidecar = mined
     // pre-sidecar index shape: no sidecar and no commit marker — the
     // probe must fall back to deriving counts and return identical
@@ -99,10 +99,10 @@ class IncrementalDedupSpec extends AnyFunSuite {
 
     val incremental = IncrementalDedup.newDocCandidates(spark, batch,
         "text", "doc_id", dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .value.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val full = Dedup.minhashCandidates(old.unionByName(batch),
         "text", "doc_id", bands = 16, minJaccard = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .value.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // full mining restricted to pairs touching the batch == incremental
     val batchIds = Set(10L, 11L)
     assert(incremental ==

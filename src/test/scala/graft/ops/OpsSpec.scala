@@ -23,11 +23,11 @@ class OpsSpec extends AnyFunSuite {
   ).toDF("id", "text")
 
   test("exact dedup finds the planted duplicate group") {
-    val groups = Dedup.exactGroups(corpus, col("text"), col("id")).collect()
+    val groups = Dedup.exactGroups(corpus, col("text"), col("id")).value.collect()
     assert(groups.length == 1)
     assert(groups(0).getAs[Long]("n") == 2)
     assert(groups(0).getAs[Long]("keep_id") == 0L)
-    val kept = Dedup.dropExactDuplicates(corpus, "text", "id")
+    val kept = Dedup.dropExactDuplicates(corpus, "text", "id").value
     assert(kept.count() == 7)
     assert(kept.filter(col("id") === 1).isEmpty)
   }
@@ -38,7 +38,7 @@ class OpsSpec extends AnyFunSuite {
     // carrying them must not make the anti-join ambiguous
     val corpus = Seq((1L, "same", 9L), (2L, "same", 8L), (3L, "other", 7L))
       .toDF("id", "text", "__id")
-    val kept = Dedup.dropExactDuplicates(corpus, "text", "id")
+    val kept = Dedup.dropExactDuplicates(corpus, "text", "id").value
     assert(kept.select("id").collect().map(_.getLong(0)).toSet == Set(1L, 3L))
     assert(kept.columns.toSeq == Seq("id", "text", "__id"))
   }
@@ -46,7 +46,7 @@ class OpsSpec extends AnyFunSuite {
   test("exactGroups bounds all_ids at maxIds while n stays the exact group size") {
     val docs = (1L to 50L).map(i => (i, "the very same text")).toDF("doc_id", "text")
     val g = Dedup.exactGroups(docs, col("text"), col("doc_id"), maxIds = 8)
-      .collect()
+      .value.collect()
     assert(g.length == 1)
     assert(g(0).getAs[Long]("n") == 50L) // exact count survives the cap
     assert(g(0).getAs[Long]("keep_id") == 1L)
@@ -62,13 +62,13 @@ class OpsSpec extends AnyFunSuite {
       .select(col("id").as("doc_id"),
         substring(concat(lit("same text"), col("id").cast("string")), 1, 9).as("text"))
     val p = Dedup.exactGroups(big, col("text"), col("doc_id"))
-      .queryExecution.executedPlan.toString
+      .value.queryExecution.executedPlan.toString
     assert(p.contains("WindowGroupLimit") && p.contains("Partial"), p)
   }
 
   test("minhash LSH surfaces the near-duplicate pair and not unrelated docs") {
     val cands = Dedup.minhashCandidates(corpus, "text", "id", minJaccard = 0.4)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      .value.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(cands.contains((0L, 1L)), s"exact pair missing: $cands")
     assert(cands((0L, 1L)) == 1.0)
     assert(cands.contains((0L, 2L)) || cands.contains((1L, 2L)),
@@ -80,7 +80,7 @@ class OpsSpec extends AnyFunSuite {
   test("ngram Jaccard rerank: exact dup = 1.0, near dup high, reranks candidates") {
     val pairs = Seq((0L, 1L), (0L, 2L), (0L, 6L)).toDF("id_a", "id_b")
     val j = Dedup.ngramJaccard(corpus, pairs, "text", "id")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      .value.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(j((0L, 1L)) == 1.0)
     assert(j((0L, 2L)) > 0.5)
     assert(j((0L, 6L)) < 0.1)
@@ -98,7 +98,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("simhash rotation blocking finds every pair within hamming <= blocks-1, wherever the bits differ") {
     val cands = Dedup.simhashCandidates(corpus, "text", "id", maxHamming = 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+      .value.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
     // brute-force truth over the collected signatures
     val sigs = corpus.select(col("id"),
       SimHash64.simhash(TextOps.shingles(col("text"), 3)).as("sig"))
@@ -137,18 +137,18 @@ class OpsSpec extends AnyFunSuite {
     val vecs = rows.toDF("vec_id", "embedding")
     val found = Dedup.embeddingNearDups(vecs, "embedding", "vec_id",
         threshold = 0.9, planes = 8, tables = 16)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .value.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val planted = (0 until 40).map(i => (2L * i, 2L * i + 1)).toSet
     val recall = (planted & found).size.toDouble / planted.size
     assert(recall >= 0.95, s"recall $recall; missed ${planted -- found}")
     // and everything reported truly clears the threshold (exact rerank)
     val exact = Dedup.embeddingNearDups(vecs, "embedding", "vec_id",
         threshold = 0.9, planes = 8, tables = 16)
-      .collect().map(_.getDouble(2))
+      .value.collect().map(_.getDouble(2))
     exact.foreach(c => assert(c >= 0.9))
   }
 
-  test("bucketedKnn multi-table blocking: recall >= 0.9 vs brute-force top-k, handle releases cache") {
+  test("bucketedKnn multi-table blocking: recall >= 0.9 vs brute-force top-k") {
     // same planted construction as the near-dup test: 40 (unit, cosine-0.92
     // partner) pairs — each id's true nearest neighbor is its partner
     val dim = 16
@@ -167,9 +167,9 @@ class OpsSpec extends AnyFunSuite {
       Seq((2L * i, unit.map(_.toFloat).toSeq), (2L * i + 1, v2.map(_.toFloat).toSeq))
     }
     val vecs = rows.toDF("vec_id", "embedding")
-    val h = Similarity.bucketedKnnH(vecs, "embedding", "vec_id",
-      k = 3, planes = 8, tables = 16)
-    val neighbors = h.value.collect()
+    val neighbors = Similarity.bucketedKnn(vecs, "embedding", "vec_id",
+        k = 3, planes = 8, tables = 16)
+      .value.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // ground truth: brute-force top-3 per id (cosine desc, id asc — the
     // op's own tie-break); the planted partner is only ONE of the true
@@ -188,14 +188,51 @@ class OpsSpec extends AnyFunSuite {
     }.toSet
     val recall = (trueTop & neighbors).size.toDouble / trueTop.size
     assert(recall >= 0.9, s"recall $recall vs brute-force top-3")
-    // the handle unpersists the signature table deterministically
-    assert(h.handles.nonEmpty)
-    assert(h.handles.forall(_.storageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE))
-    h.close()
-    h.handles.foreach { f =>
-      assert(f.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-        "signature table still cached after close()")
+  }
+
+  test("every operator's Cached handle pins its tables until close(), then releases them") {
+    import org.apache.spark.storage.StorageLevel
+    val vecs = (0 until 12).map(i =>
+        (i.toLong, Seq.tabulate(4)(j => math.sin(i * 3 + j).toFloat)))
+      .toDF("vec_id", "embedding")
+    val withSource = corpus.withColumn("source",
+      concat(lit("s"), (col("id") % 3).cast("string")))
+    val idx = java.nio.file.Files.createTempDirectory("handles").toString + "/idx"
+    IncrementalDedup.writeIndex(corpus.filter(col("id") < 4), "text", "id", idx)
+    val pairs = Seq((0L, 1L), (0L, 2L)).toDF("id_a", "id_b")
+    val handles: Seq[(String, () => Cached[org.apache.spark.sql.DataFrame])] = Seq(
+      "exactGroups" -> (() => Dedup.exactGroups(corpus, col("text"), col("id"))),
+      "dropExactDuplicates" -> (() => Dedup.dropExactDuplicates(corpus, "text", "id")),
+      "minhashCandidates" -> (() => Dedup.minhashCandidates(corpus, "text", "id")),
+      "simhashCandidates" -> (() => Dedup.simhashCandidates(corpus, "text", "id")),
+      "ngramJaccard" -> (() => Dedup.ngramJaccard(corpus, pairs, "text", "id")),
+      "embeddingNearDups" -> (() =>
+        Dedup.embeddingNearDups(vecs, "embedding", "vec_id", planes = 2, tables = 2)),
+      "bucketedKnn" -> (() =>
+        Similarity.bucketedKnn(vecs, "embedding", "vec_id", k = 2, planes = 2, tables = 2)),
+      "newDocCandidates" -> (() => IncrementalDedup.newDocCandidates(spark,
+        corpus.filter(col("id") >= 4), "text", "id", idx)),
+      "overlapMatrix" -> (() => SourceOverlap.overlapMatrix(withSource, "text", "source")),
+      "dupSpans" -> (() => DupSpans.dupSpans(corpus, "text", "id", windowWords = 4)),
+      "dupSpansKeepFirst" -> (() =>
+        DupSpans.dupSpansKeepFirst(corpus, "text", "id", windowWords = 4)),
+      // the default maxShingleDf pins nothing; a finite cap persists the
+      // train shingle rows
+      "containmentPairs" -> (() => Decontamination.containmentPairs(
+        corpus.filter(col("id") =!= 1), corpus.filter(col("id") === 1),
+        "text", "id", maxShingleDf = 10)))
+    assert(handles.size == 12)
+    // one at a time: two operators over the same input persist equal
+    // plans, which the cache stores once
+    for ((name, mine) <- handles) {
+      val h = mine()
+      h.value.count()
+      assert(h.handles.nonEmpty, s"$name pinned nothing")
+      h.handles.foreach(f => assert(f.storageLevel != StorageLevel.NONE,
+        s"$name: a pinned table is not cached before close()"))
+      h.close()
+      h.handles.foreach(f => assert(f.storageLevel == StorageLevel.NONE,
+        s"$name: a pinned table is still cached after close()"))
     }
   }
 
@@ -388,7 +425,7 @@ class OpsSpec extends AnyFunSuite {
     assert(!ivf.collect().map(_.getLong(0)).contains(99L))
 
     val knn = Similarity.bucketedKnn(vecs, "embedding", "vec_id", k = 3,
-      planes = 2, tables = 4)
+      planes = 2, tables = 4).value
     assert(!knn.select("neighbor_id").collect().map(_.getLong(0)).contains(99L))
   }
 
@@ -666,7 +703,7 @@ class OpsSpec extends AnyFunSuite {
       (4L, "C", "entirely disjoint vocabulary nothing shared here at all")
     ).toDF("doc_id", "source", "text")
     val got = SourceOverlap.overlapMatrix(docs, "text", "source", shingleK = 3)
-      .collect().map(r => ((r.getString(0), r.getString(1)),
+      .value.collect().map(r => ((r.getString(0), r.getString(1)),
         (r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
 
     val sets = Map(

@@ -52,7 +52,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     val full = graft.ops.Dedup.minhashCandidates(
         b0.unionByName(b1), "text", "doc_id",
         bands = p.bands, minJaccard = p.minJaccard)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .value.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairsOf(dir).keySet == full)
   }
 
