@@ -2,6 +2,7 @@ package graft.app
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.constraints.{ResumableValidator, SuiteStatsBySourceAgg, Validator}
 import graft.sequences.SequenceSynth
@@ -52,6 +53,15 @@ object Main {
   private def flagOr(opts: Map[String, String], key: String,
                      default: String): String =
     opts.get(key).filter(_.nonEmpty).getOrElse(default)
+
+  /** The streaming commands' trigger: AvailableNow (one scheduled run
+    * over what is there), or `--follow [interval]` (default 30 seconds)
+    * for the always-on daemon.
+    */
+  private def streamTrigger(opts: Map[String, String]): Trigger =
+    if (opts.contains("follow"))
+      Trigger.ProcessingTime(flagOr(opts, "follow", "30 seconds"))
+    else Trigger.AvailableNow()
 
   // ONE list both error paths share — the unknown-command message had
   // drifted five subcommands behind the usage banner
@@ -139,13 +149,8 @@ object Main {
         val input = opts("input")
         val statePath = flagOr(opts, "state", s"$input-stream-state")
         val dim = spark.read.parquet(flagOr(opts, "dim", s"$input-dim"))
-        val trigger =
-          if (opts.contains("follow"))
-            org.apache.spark.sql.streaming.Trigger.ProcessingTime(
-              flagOr(opts, "follow", "30 seconds"))
-          else org.apache.spark.sql.streaming.Trigger.AvailableNow()
         val q = graft.streaming.StreamingValidator.start(
-          spark, input, statePath, dim, Validator.SuiteConfig(), trigger)
+          spark, input, statePath, dim, Validator.SuiteConfig(), streamTrigger(opts))
         q.awaitTermination()
         graft.streaming.StreamingValidator.readStats(spark, statePath).foreach {
           case (batchId, stats) =>
@@ -351,56 +356,37 @@ object Main {
               r.getAs[Long]("n_docs")}%-6d ${r.getAs[String]("window_text")}")
           }
 
-      case "dedup-stream" =>
-        // near-dup mining over a growing documents directory
-        // (graft.streaming.StreamingDedup): probe the signature index,
-        // write per-batch candidate pairs, append the batch's signatures.
-        // AvailableNow by default (the scheduled rerun deployment);
-        // --follow <interval> runs the always-on daemon, like `stream`
+      case "dedup-stream" | "pipeline-stream" =>
+        // near-dup mining (graft.streaming.StreamingDedup: probe the
+        // signature index, write per-batch candidate pairs, append the
+        // batch's signatures) or the FULL prep chain
+        // (graft.streaming.StreamingPipeline: quality -> scrub -> exact
+        // dedup -> near dedup, keep-first vs everything kept so far) over
+        // a growing documents directory. AvailableNow by default (the
+        // scheduled rerun deployment); --follow <interval> runs the
+        // always-on daemon, like `stream`
         val input = opts("input")
-        val statePath = flagOr(opts, "state", s"$input-dedup-state")
+        val dedup = cmd == "dedup-stream"
+        val statePath = flagOr(opts, "state", s"$input-${cmd.stripSuffix("-stream")}-state")
         val schema = scala.util.Try(spark.read.parquet(input).schema).toOption
         if (schema.isEmpty)
-          println(s"No parquet files under $input yet; nothing to mine.")
-        else {
-          val trigger =
-            if (opts.contains("follow"))
-              org.apache.spark.sql.streaming.Trigger.ProcessingTime(
-                flagOr(opts, "follow", "30 seconds"))
-            else org.apache.spark.sql.streaming.Trigger.AvailableNow()
-          val q = graft.streaming.StreamingDedup.start(spark, input, statePath,
+          println(s"No parquet files under $input yet; nothing to ${
+            if (dedup) "mine" else "process"}.")
+        else if (dedup) {
+          graft.streaming.StreamingDedup.start(spark, input, statePath,
             graft.streaming.StreamingDedup.Params(
               minJaccard = flagOr(opts, "jaccard", "0.5").toDouble),
-            trigger, schema)
-          q.awaitTermination()
+            streamTrigger(opts), schema).awaitTermination()
           val n = scala.util.Try(spark.read.parquet(
               graft.streaming.StreamingDedup.candidatesPath(statePath)).count())
             .getOrElse(0L)
           println(s"Candidate near-dup pairs so far: $n (state at $statePath)")
-        }
-
-      case "pipeline-stream" =>
-        // the FULL prep chain (quality -> scrub -> exact dedup -> near
-        // dedup, keep-first vs everything kept so far) as the streaming
-        // deployment over a growing documents directory
-        // (graft.streaming.StreamingPipeline)
-        val input = opts("input")
-        val statePath = flagOr(opts, "state", s"$input-pipeline-state")
-        val schema = scala.util.Try(spark.read.parquet(input).schema).toOption
-        if (schema.isEmpty)
-          println(s"No parquet files under $input yet; nothing to process.")
-        else {
-          val trigger =
-            if (opts.contains("follow"))
-              org.apache.spark.sql.streaming.Trigger.ProcessingTime(
-                flagOr(opts, "follow", "30 seconds"))
-            else org.apache.spark.sql.streaming.Trigger.AvailableNow()
-          val q = graft.streaming.StreamingPipeline.start(spark, input, statePath,
+        } else {
+          graft.streaming.StreamingPipeline.start(spark, input, statePath,
             graft.streaming.StreamingPipeline.Params(
               minJaccardEst = flagOr(opts, "est-jaccard", "0.2").toDouble,
               jaccardThreshold = flagOr(opts, "jaccard", "0.8").toDouble),
-            trigger, schema)
-          q.awaitTermination()
+            streamTrigger(opts), schema).awaitTermination()
           def cnt(p: String): Long =
             scala.util.Try(spark.read.parquet(p).count()).getOrElse(0L)
           println("Streaming pipeline state: " +
@@ -413,9 +399,8 @@ object Main {
           // pre-round-6 state simply HAS no funnel dir, but a corrupted
           // one must error loudly, not silently print nothing
           val funnelDir = graft.streaming.StreamingPipeline.funnelPath(statePath)
-          val ffs = new org.apache.hadoop.fs.Path(funnelDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (graft.streaming.StateFs.nonEmptyDir(ffs, funnelDir))
+          if (graft.streaming.MicroBatch.nonEmptyDir(
+              graft.streaming.MicroBatch.fs(spark, funnelDir), funnelDir))
             graft.streaming.StreamingPipeline.funnelTotals(spark, statePath)
               .groupBy(col("stage_idx"), col("stage"))
               .agg(sum(col("n_docs")).as("n"))

@@ -162,8 +162,10 @@ object IncrementalDedup {
     * The batch's narrow signature table is persisted so the
     * count/new-new/new-old subplans share one shingle pass — consume the
     * candidates, then `close()` the returned [[Cached]] handle (what
-    * long-running loops do; [[graft.streaming.StreamingDedup]] persists
-    * its own signature rows around [[candidatePairs]]).
+    * long-running loops do). The streaming deduplicators probe their
+    * own base+delta index instead, through one shared step
+    * ([[graft.streaming.MicroBatch.indexStep]]) that persists the batch's
+    * signature rows around [[candidatePairs]] and appends the kept ones.
     */
   def newDocCandidates(spark: SparkSession, newDocs: DataFrame,
                        textCol: String, idCol: String, indexPath: String,

@@ -382,15 +382,15 @@ object Pipeline {
       (3, "near_dedup", res.canonical), (4, "decontaminated", res.kept),
       (5, "shipped", res.corpusPreOrder)), gridSource = res.scrubbed)
 
-  /** The (source, stage) survivor grid both funnels share — batch
-    * ([[sourceFunnel]]) and streaming (per batch). COMPLETE over the
+  /** [[sourceFunnel]]'s (source, stage) survivor grid. COMPLETE over the
     * sources seen in `gridSource`, explicit zeros, and a NULL-SAFE
     * source match: a NULL-source row group must match its own grid row,
-    * not read 0 at every stage (EqualTo never matches NULL). One copy so
-    * the next grid/join lesson can't silently miss a funnel.
+    * not read 0 at every stage (EqualTo never matches NULL). The
+    * streaming funnel needs no grid: it counts every stage in one
+    * aggregate over its per-batch decision frame.
     */
-  def funnelGrid(stages: Seq[(Int, String, DataFrame)],
-                 gridSource: DataFrame): DataFrame = {
+  private def funnelGrid(stages: Seq[(Int, String, DataFrame)],
+                         gridSource: DataFrame): DataFrame = {
     val counts = stages.map { case (idx, name, df) =>
       df.groupBy(col("source")).agg(count(lit(1)).as("__n"))
         .withColumn("stage_idx", lit(idx)).withColumn("stage", lit(name))

@@ -168,6 +168,12 @@ private[graft] object CompactedIndex {
     all.map(_.filter(col("batch_id") =!= excludeBatchId))
   }
 
+  /** Every row of the index at `root`, base and deltas: the inspection
+    * read. None before the first append.
+    */
+  def contents(spark: SparkSession, root: String): Option[DataFrame] =
+    read(spark, MicroBatch.fs(spark, root), root, -1L)
+
   /** Idempotent per-batch append: a dynamic-overwrite `batch_id=N`
     * partition (sub-keys nested under it).
     */
@@ -221,7 +227,7 @@ private[graft] object CompactedIndex {
 
     // prune AFTER the commit — but only deltas already covered by the
     // PREVIOUS watermark. The just-folded deltas stay one grace cycle:
-    // an external reader (the index()/hashIndex() inspection surfaces)
+    // an external reader (the `contents` inspection read)
     // that resolved the OLD watermark just before this commit still has
     // base(old) ∪ deltas(> old watermark) in flight — deleting the
     // just-folded partitions under it would FileNotFound mid-scan. New

@@ -1,30 +1,25 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
 
-import graft.ops.IncrementalDedup
+import graft.ops.Cached
 
 /** Continuous near-duplicate mining over a GROWING documents directory —
-  * the streaming deployment of [[graft.ops.IncrementalDedup]]: each
-  * micro-batch PROBES the persisted signature index for
-  * (new x all-prior) + (new x new) candidate pairs, writes them, and then
-  * appends its own signatures so later batches see it. Old x old work is
-  * never repeated — per-batch shuffle and pair mining are proportional
-  * to the batch, not the corpus (the probe's SCAN of the narrow
-  * signature index is the one corpus-proportional term, amortized by
-  * batch sizing — see BENCH/SCALE.md). The batch's signature table is
-  * persisted for the batch (one
-  * shingle pass feeds the bucket counts, both joins, AND the index
-  * append) and released before the batch returns.
+  * the streaming deployment of [[graft.ops.IncrementalDedup]]. Each
+  * micro-batch is the shared signature-index step
+  * ([[MicroBatch.indexStep]]) with the simplest decision: write the
+  * candidate pairs, keep every id. Old x old work is never repeated —
+  * per-batch shuffle and pair mining are proportional to the batch, not
+  * the corpus (the probe's SCAN of the narrow signature index is the one
+  * corpus-proportional term, amortized by batch sizing — see
+  * BENCH/SCALE.md).
   *
   * Exactly-once across restarts, without a watermark file:
   *  - each batch's candidates land in their own `batch_id=N` directory
-  *    (full overwrite — idempotent on replay, readable even when a batch
-  *    finds zero pairs);
+  *    ([[MicroBatch.writeBatchDir]]: full overwrite — idempotent on
+  *    replay, readable even when a batch finds zero pairs);
   *  - the index uses the [[CompactedIndex]] base+delta layout: appends
   *    are dynamic-overwrite `batch_id=N` delta partitions (idempotent on
   *    replay), and once more than `Params.maxIndexDeltas` deltas
@@ -32,13 +27,9 @@ import graft.ops.IncrementalDedup
   *    probe listing cost stays O(maxIndexDeltas + 1) instead of growing
   *    one directory per batch forever (round-4 VERDICT);
   *  - a replay that probes an index already containing its own batch
-  *    (crash between the two writes) EXCLUDES its own batch_id from the
-  *    probe: without that filter the combined bucket counts would count
-  *    the batch twice, and buckets between maxBucket/2 and maxBucket
-  *    would be dropped on replay only — fewer pairs than the original
-  *    run (the near-cap replay test pins this). The running batch is
-  *    never folded into the base, so the exclusion stays exact across
-  *    compactions.
+  *    (crash between the two writes) excludes its own batch_id from the
+  *    probe, so it emits the same pairs as the original run even near the
+  *    bucket cap (the near-cap replay test pins this).
   */
 object StreamingDedup {
 
@@ -54,70 +45,26 @@ object StreamingDedup {
                             */
                           maxIndexDeltas: Int = 16)
 
-  /** The full signature index contents (base + deltas) — inspection and
-    * test surface; probes inside [[processBatch]] exclude their own
-    * batch. None before the first append (a schemaless empty frame would
-    * throw on any column reference).
-    */
-  def index(spark: SparkSession, statePath: String): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    CompactedIndex.read(spark, fs, indexPath(statePath), -1L)
-  }
-
   private[streaming] def processBatch(spark: SparkSession, batch: DataFrame,
                                       batchId: Long, statePath: String,
-                                      p: Params): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    val fresh = IncrementalDedup.signatureRows(batch, "text", "doc_id",
-        p.shingleK, p.perms, p.bands)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // replay guard: a crash between the candidates write and the index
-      // append leaves the index already containing THIS batch's
-      // signatures; probing them back would double-count the batch in the
-      // combined bucket sizes, so buckets near maxBucket could be dropped
-      // on replay only (replay-idempotence bug, round-2 ADVICE).
-      // CompactedIndex.read excludes the batch (and the running batch is
-      // never folded into the base, so the exclusion is exact).
-      val index = CompactedIndex.read(spark, fs, indexPath(statePath), batchId)
-      // per-batch directory, full overwrite: idempotent on replay and a
-      // zero-pair batch still writes a schema-bearing (empty) file, so
-      // the candidates root stays readable from the first batch on
-      IncrementalDedup.candidatePairs(fresh, index,
-          p.perms, p.minJaccard, p.maxBucket)
-        .repartition(1)
-        .write.mode("overwrite")
-        .parquet(s"${candidatesPath(statePath)}/batch_id=$batchId")
-
-      // append AFTER probing (a batch must not meet itself via the index),
-      // compact AFTER appending (only batches < this one ever fold)
-      CompactedIndex.append(fresh, indexPath(statePath), batchId, Seq("band"))
-      CompactedIndex.maybeCompact(spark, fs, indexPath(statePath), batchId,
-        p.maxIndexDeltas, Seq("band"))
-    } finally fresh.unpersist()
-  }
+                                      p: Params): Unit =
+    MicroBatch.indexStep(spark, batch, batchId, indexPath(statePath),
+        p.shingleK, p.perms, p.bands, p.minJaccard, p.maxBucket,
+        p.maxIndexDeltas) { cands =>
+      MicroBatch.writeBatchDir(cands,
+        s"${candidatesPath(statePath)}/batch_id=$batchId")
+      Cached(None, Nil)
+    }
 
   /** Start the stream over a flat directory of parquet document files.
     * AvailableNow by default (the scheduled incremental-batch deployment).
     * Pass `schema` when deploying against a directory that may still be
-    * empty — without it the schema is inferred from a batch read of the
-    * existing files.
+    * empty.
     */
   def start(spark: SparkSession, inputDir: String, statePath: String,
             params: Params = Params(),
             trigger: Trigger = Trigger.AvailableNow(),
-            schema: Option[StructType] = None): StreamingQuery = {
-    val s = schema.getOrElse(spark.read.parquet(inputDir).schema)
-    spark.readStream.schema(s).parquet(inputDir)
-      .writeStream
-      .option("checkpointLocation", checkpointPath(statePath))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId, statePath, params)
-      }
-      .start()
-  }
+            schema: Option[StructType] = None): StreamingQuery =
+    MicroBatch.start(spark, inputDir, checkpointPath(statePath), trigger,
+      schema)(processBatch(spark, _, _, statePath, params))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
-import graft.ops.{IncrementalDedup, QualityFilter, Redaction}
+import graft.ops.{Cached, QualityFilter, Redaction}
 
 /** The full training-data preparation chain as a STREAMING deployment
   * over a growing documents directory — the incremental counterpart of
@@ -49,14 +49,15 @@ import graft.ops.{IncrementalDedup, QualityFilter, Redaction}
   * (connected components, keep cluster-min) differ on chains the same
   * way.
   *
-  * Exactly-once across restarts, the [[StreamingDedup]] layout: per-batch
-  * output directories (full overwrite — idempotent on replay), indexes in
-  * the [[CompactedIndex]] base+delta layout (dynamic-overwrite batch_id
-  * deltas, periodically folded into a compacted base so listing cost is
-  * bounded instead of one directory per batch forever), and every index
-  * read EXCLUDES the current batch_id so a replay that crashed between
-  * the output write and the index append cannot meet itself (the running
-  * batch is never folded, so the exclusion survives compaction).
+  * Each batch tags every document once with the stage that rejected it
+  * (`quality`, `exact_dup`, `near_dup`; NULL: kept), and its rejects,
+  * train and funnel outputs and both index appends all read that one
+  * decision frame. Exactly-once across restarts, the [[MicroBatch]] shape
+  * it shares with [[StreamingDedup]]: per-batch output directories (full
+  * overwrite — idempotent on replay), both indexes in the
+  * [[CompactedIndex]] base+delta layout, and every index read EXCLUDES
+  * the current batch_id so a replay that crashed between the output
+  * write and the index append cannot meet itself.
   */
 object StreamingPipeline {
 
@@ -94,20 +95,6 @@ object StreamingPipeline {
         */
       maxRerankPushdownIds: Int = 100000)
 
-  /** Full index contents (base + deltas) — inspection/test surface.
-    * None before the first append (a schemaless empty frame would throw
-    * on any column reference).
-    */
-  def hashIndex(spark: SparkSession, statePath: String): Option[DataFrame] =
-    readFullIndex(spark, hashIndexPath(statePath))
-  def sigIndex(spark: SparkSession, statePath: String): Option[DataFrame] =
-    readFullIndex(spark, sigIndexPath(statePath))
-  private def readFullIndex(spark: SparkSession, root: String): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    CompactedIndex.read(spark, fs, root, -1L)
-  }
-
   /** All batches' kept documents (batch_id is a partition column). */
   def train(spark: SparkSession, statePath: String): DataFrame =
     spark.read.parquet(trainPath(statePath))
@@ -136,29 +123,28 @@ object StreamingPipeline {
       .groupBy(col("source"), col("stage_idx"), col("stage"))
       .agg(sum(col("n_docs")).as("n_docs"))
 
-  private[graft] def processBatch(spark: SparkSession, batch: DataFrame,
-                                      batchId: Long, statePath: String,
-                                      p: Params): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def have(path: String): Boolean = StateFs.nonEmptyDir(fs, path)
+  private val FunnelStages = Seq("input", "scrubbed", "exact_dedup", "near_dedup")
 
-    // ---- quality gate + scrub (pure projections)
-    val annotated = QualityFilter.annotate(batch, "text", p.rules)
-    val qualityRejects = annotated.filter(!col("keep"))
-      .select(col("doc_id"), lit("quality").as("stage"), col("reasons"))
-    val clean = annotated.filter(col("keep")).drop("keep", "reasons")
-      .withColumn("text", Redaction.redact(col("text")))
+  private[graft] def processBatch(spark: SparkSession, batch: DataFrame,
+                                  batchId: Long, statePath: String,
+                                  p: Params): Unit = {
+    val fs = MicroBatch.fs(spark, statePath)
+    val keep = col("keep")
+    // ---- quality gate + scrub + content key: one persisted pass over
+    // the batch (quality rejects keep no text). TWO independent hashes —
+    // the ~2^-128 joint-collision key of Dedup.dropExactDuplicates (a
+    // single 64-bit key false-drops ~10^4 docs at 10^12 rows).
+    val staged = QualityFilter.annotate(batch, "text", p.rules)
+      .withColumn("text", when(keep, Redaction.redact(col("text"))))
+      .withColumn("dup_hash", xxhash64(col("text")))
+      .withColumn("dup_hash2", graft.ops.Dedup.contentHash2(col("text")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // ---- exact dedup: narrow (hash, hash2, id) rows only; a doc is
-      // dropped if its content key was KEPT in any prior batch, or if a
-      // smaller-id doc of this batch shares it. TWO independent hashes —
-      // the same ~2^-128 joint-collision key as Dedup.dropExactDuplicates
-      // (a single 64-bit key false-drops ~10^4 docs at 10^12 rows).
-      val hashed = clean.select(col("doc_id"),
-        xxhash64(col("text")).as("dup_hash"),
-        graft.ops.Dedup.contentHash2(col("text")).as("dup_hash2"))
+      // ---- exact dedup over narrow (id, hash, hash2) rows: a doc is
+      // dropped if its content key was KEPT in a prior batch, or if a
+      // smaller-id doc of this batch shares it
+      val hashed = staged.filter(keep)
+        .select(col("doc_id"), col("dup_hash"), col("dup_hash2"))
       val dropWithin = hashed
         .join(hashed.groupBy(col("dup_hash"), col("dup_hash2"))
             .agg(min(col("doc_id")).as("__keep_id")),
@@ -174,153 +160,137 @@ object StreamingPipeline {
             Seq("dup_hash", "dup_hash2"), "left_semi")
           .select(col("doc_id"))
       }
-      val exactDropIds = dropWithin.unionByName(dropPrior).distinct()
-      val exactRejects = exactDropIds
-        .select(col("doc_id"), lit("exact_dup").as("stage"),
-          array(lit("exact_duplicate")).as("reasons"))
-      val afterExact = clean.join(exactDropIds, Seq("doc_id"), "left_anti")
+      // checkpointed, not persisted: this is the one plan that reads
+      // hash-index/deltas, and the hash-index append below writes that
+      // path. A write refreshes every cached plan over the path it
+      // writes; with the read left in the lineage, the signature append
+      // after it shingled, mined and reranked the whole batch again
+      // (61-70 jobs instead of 3 for a ~2k-doc batch on 4 cores). The cut
+      // keeps the path out of every frame the batch still reads.
+      val exactDrops = dropWithin.unionByName(dropPrior).distinct()
+        .localCheckpoint(true)
+      val afterExact = staged.filter(keep)
+        .join(exactDrops, Seq("doc_id"), "left_anti")
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
-      // ---- near-dup vs kept corpus + within batch (keep-first)
-      val fresh = IncrementalDedup.signatureRows(afterExact, "text", "doc_id",
-          p.shingleK, p.perms, p.bands)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val priorSigs = CompactedIndex.read(spark, fs,
-          sigIndexPath(statePath), batchId)
-        val cands = IncrementalDedup.candidatePairs(fresh, priorSigs,
-          p.perms, p.minJaccardEst, p.maxBucket)
-        // the candidate set is tiny (bucket-capped) but its LOGICAL plan
-        // embeds the whole mining join, and the rerank replays that plan
-        // three times (id prune + both text joins) inside every
-        // downstream write — without truncation, per-action Catalyst
-        // analysis went super-linear (a round-5 test run sat minutes in
-        // TreeNode.exists). localCheckpoint materializes the pair ids
-        // eagerly and cuts the lineage; losing the blocks just fails the
-        // batch, and the batch is replay-idempotent by construction.
-        val pairIds = cands.select(col("id_a"), col("id_b"))
-          .localCheckpoint(true)
-        // rerank the estimator candidates on exact n-gram Jaccard — the
-        // SAME drop decision as batch Pipeline.run. Pair text is durably
-        // at hand on both sides: batch ids from the micro-batch, prior
-        // KEPT ids from train/ (excluding own batch_id — a replay that
-        // crashed after the train write must not rerank against itself;
-        // candidate ids can't reference own-batch train rows anyway since
-        // the sig probe excludes them). The prior-side ids are collected
-        // to the driver (bounded: at most 2x the bucket-capped pair
-        // count) and PUSHED into the train scan — without the pushed
-        // filter the rerank's semi-join still SCANNED every kept
-        // document's text each batch (O(corpus) per batch, the exact
-        // regression the header forbids); with it, parquet row-group
-        // stats skip untouched files. A degenerate pair explosion beyond
-        // the push-down cap falls back to the scan-and-semi-join shape
-        // instead of building a pathological In filter.
-        val textPool = {
-          val batchTexts = afterExact.select(col("doc_id"), col("text"))
-          if (!have(trainPath(statePath))) batchTexts
-          else {
-            val touched = pairIds.select(col("id_a").as("id"))
-              .unionByName(pairIds.select(col("id_b").as("id"))).distinct()
-            // limit BEFORE collect: the cap must bound the driver
-            // materialization itself, not just the In-filter size — cap+1
-            // rows distinguishes "fits" from "overflowed, fall back"
-            val priorTouched = touched
-              .join(afterExact.select(col("doc_id").as("id")), Seq("id"), "left_anti")
-              .limit(p.maxRerankPushdownIds + 1)
-              .collect().map(_.getLong(0))
-            if (priorTouched.isEmpty) batchTexts
-            else {
-              val train = spark.read.parquet(trainPath(statePath))
-                .filter(col("batch_id") =!= batchId)
-              val priorTexts =
-                if (priorTouched.length <= p.maxRerankPushdownIds)
-                  train.filter(col("doc_id")
-                    .isin(priorTouched.toSeq.map(Long.box): _*))
-                else train // overflow: scan + ngramJaccard's semi-join
-              batchTexts.unionByName(
-                priorTexts.select(col("doc_id"), col("text")))
-            }
-          }
+        // ---- near dedup (keep-first) through the shared signature-index
+        // step: only KEPT documents join the index
+        MicroBatch.indexStep(spark, afterExact, batchId,
+            sigIndexPath(statePath), p.shingleK, p.perms, p.bands,
+            p.minJaccardEst, p.maxBucket, p.maxIndexDeltas) { cands =>
+          val nearDrops = nearDuplicates(spark, afterExact, cands, batchId,
+            statePath, p)
+          val drops = exactDrops.withColumn("__stage", lit("exact_dup"))
+            .withColumn("__why", array(lit("exact_duplicate")))
+            .unionByName(nearDrops.value.withColumn("__stage", lit("near_dup"))
+              .withColumn("__why", array(lit("near_duplicate"))))
+          // ---- the decision frame: every batch document once
+          val decided = staged.join(drops, Seq("doc_id"), "left")
+            .withColumn("stage", when(!keep, lit("quality")).otherwise(col("__stage")))
+            .withColumn("reasons", coalesce(col("__why"), col("reasons")))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          val kept = decided.filter(col("stage").isNull)
+          val done = Cached(Some(kept.select(col("doc_id"))),
+            decided +: nearDrops.handles)
+          try {
+            MicroBatch.writeBatchDir(decided.filter(col("stage").isNotNull)
+                .select(col("doc_id"), col("stage"), col("reasons")),
+              s"${rejectsPath(statePath)}/batch_id=$batchId")
+            MicroBatch.writeBatchDir(kept.select(batch.columns.toSeq.map(col): _*),
+              s"${trainPath(statePath)}/batch_id=$batchId")
+            // ---- source funnel in ONE aggregate: a doc survives stage i
+            // iff it left after it; grouping by source gives every batch
+            // source (NULL included) its row, count(when) its zeros
+            val leftAt = coalesce(array_position(array(
+              lit("quality"), lit("exact_dup"), lit("near_dup")), col("stage")), lit(4))
+            MicroBatch.writeBatchDir(decided.groupBy(col("source"))
+                .agg(array(FunnelStages.indices.map(i =>
+                  count(when(leftAt > i, 1))): _*).as("__n"))
+                .select(col("source"),
+                  posexplode(col("__n")).as(Seq("stage_idx", "n_docs")))
+                .select(col("source"), col("stage_idx"),
+                  array(FunnelStages.map(lit): _*)(col("stage_idx")).as("stage"),
+                  col("n_docs")),
+              s"${funnelPath(statePath)}/batch_id=$batchId")
+            // index appends after the outputs; compact after appending —
+            // only batches < this one ever fold
+            CompactedIndex.append(
+              kept.select(col("doc_id"), col("dup_hash"), col("dup_hash2")),
+              hashIndexPath(statePath), batchId, Nil)
+            CompactedIndex.maybeCompact(spark, fs, hashIndexPath(statePath),
+              batchId, p.maxIndexDeltas, Nil)
+            done
+          } catch { case e: Throwable => done.close(); throw e }
         }
-        val reranked = graft.ops.Dedup.ngramJaccard(textPool, pairIds,
-          "text", "doc_id", p.shingleK)
-        try {
-        val confirmed = reranked.value
-          .filter(col("jaccard") >= p.jaccardThreshold)
-        // each pair drops its "later" side: the batch doc when the other
-        // side is prior-kept, the larger id when both are batch docs
-        val batchIds = afterExact.select(col("doc_id").as("other"))
-          .withColumn("__other_new", lit(true))
-        val dirs = confirmed.select(col("id_a").as("doc_id"), col("id_b").as("other"))
-          .unionByName(
-            confirmed.select(col("id_b").as("doc_id"), col("id_a").as("other")))
-        // persisted: this id frame feeds THREE actions (the rejects
-        // write, the empty-check, the kept write) — without the persist
-        // the whole candidate-mining + rerank join would re-run per action
-        val nearDropIds = dirs
-          .join(afterExact.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          .join(batchIds, Seq("other"), "left")
-          .filter(col("__other_new").isNull || col("other") < col("doc_id"))
-          .select(col("doc_id")).distinct()
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-        val nearRejects = nearDropIds
-          .select(col("doc_id"), lit("near_dup").as("stage"),
-            array(lit("near_duplicate")).as("reasons"))
-        val kept = afterExact.join(nearDropIds, Seq("doc_id"), "left_anti")
-
-        // ---- idempotent writes: per-batch dirs first, index appends
-        // LAST (a batch must never meet itself — reads above exclude
-        // this batch_id in case a replay crashed between the two)
-        // natural partitioning — NEVER repartition(1) a corpus-sized
-        // output (the 1M-doc soak run OOMed the single write task). But
-        // an EMPTY frame written naturally emits zero part files and the
-        // root becomes unreadable, so only that case forces one (empty,
-        // schema-bearing) file — pinned by the all-rejected-batch spec.
-        def writeBatchDir(df: DataFrame, path: String): Unit =
-          (if (df.isEmpty) df.repartition(1) else df)
-            .write.mode("overwrite").parquet(path)
-        writeBatchDir(
-          qualityRejects.unionByName(exactRejects).unionByName(nearRejects),
-          s"${rejectsPath(statePath)}/batch_id=$batchId")
-        writeBatchDir(kept, s"${trainPath(statePath)}/batch_id=$batchId")
-
-        // ---- per-batch source funnel: survivors per (source, stage)
-        // over the batch's cached frames (clean/afterExact persisted
-        // above; kept is two anti-joins over them). Complete grid with
-        // explicit zeros and a NULL-SAFE source match — the batch
-        // funnel's q-class lessons (EqualTo gives NULL sources 0 at
-        // every stage; a missing grid row reads as "never seen").
-        locally {
-          val funnelRows = graft.ops.Pipeline.funnelGrid(
-            Seq((0, "input", batch), (1, "scrubbed", clean),
-              (2, "exact_dedup", afterExact), (3, "near_dedup", kept)),
-            gridSource = batch)
-          writeBatchDir(funnelRows,
-            s"${funnelPath(statePath)}/batch_id=$batchId")
-        }
-
-        val keptIds = kept.select(col("doc_id"))
-        CompactedIndex.append(
-          hashed.join(keptIds, Seq("doc_id"), "left_semi"),
-          hashIndexPath(statePath), batchId, Nil)
-        CompactedIndex.append(
-          fresh.join(keptIds, fresh("id") === keptIds("doc_id"), "left_semi"),
-          sigIndexPath(statePath), batchId, Seq("band"))
-        // compact AFTER appending — only batches < this one ever fold, so
-        // the replay self-exclusion stays exact
-        CompactedIndex.maybeCompact(spark, fs, hashIndexPath(statePath),
-          batchId, p.maxIndexDeltas, Nil)
-        CompactedIndex.maybeCompact(spark, fs, sigIndexPath(statePath),
-          batchId, p.maxIndexDeltas, Seq("band"))
-        // every persist released on ALL paths — a failed batch in a
-        // long-lived (follow-mode / StreamBench) session must not pin
-        // batch-sized cache blocks
-        } finally nearDropIds.unpersist()
-        } finally reranked.close()
-      } finally fresh.unpersist()
+        // every persist is released on ALL paths: a failed batch in a
+        // long-lived (follow-mode) session must not pin batch-sized blocks
       } finally afterExact.unpersist()
-    } finally clean.unpersist()
+    } finally staged.unpersist()
+  }
+
+  /** The batch ids that confirmed near-duplicate pairs drop, with the
+    * rerank's pinned tables. A candidate is confirmed when its exact
+    * n-gram Jaccard, reranked against the pair's real text, is >=
+    * jaccardThreshold (batch Pipeline.run's decision). A pair drops its
+    * later side: the batch doc when the other is prior-kept, the larger
+    * id when both are batch docs.
+    */
+  private def nearDuplicates(spark: SparkSession, afterExact: DataFrame,
+                             cands: DataFrame, batchId: Long,
+                             statePath: String, p: Params): Cached[DataFrame] = {
+    // the bucket-capped candidate set is tiny, but its LOGICAL plan
+    // embeds the whole mining join and the rerank replays it three times
+    // in every downstream write — per-action Catalyst analysis went
+    // super-linear (round 5). An eager localCheckpoint cuts the lineage;
+    // losing its blocks just fails the replay-idempotent batch.
+    val pairIds = cands.select(col("id_a"), col("id_b"))
+      .localCheckpoint(true)
+    // pair text: batch ids from the micro-batch, prior KEPT ids from
+    // train/ minus this batch_id (a replay that crashed after its train
+    // write must not rerank against itself). The prior ids (at most 2x
+    // the pair count) are collected and PUSHED into the train scan, so
+    // row-group stats skip untouched files instead of scanning the whole
+    // kept corpus each batch; past the push-down cap a degenerate pair
+    // explosion falls back to the scan-and-semi-join shape.
+    val textPool = {
+      val batchTexts = afterExact.select(col("doc_id"), col("text"))
+      val trainDir = trainPath(statePath)
+      if (!MicroBatch.nonEmptyDir(MicroBatch.fs(spark, trainDir), trainDir)) batchTexts
+      else {
+        val touched = pairIds.select(col("id_a").as("id"))
+          .unionByName(pairIds.select(col("id_b").as("id"))).distinct()
+        // limit BEFORE collect: cap+1 rows bounds the driver side and
+        // tells "fits" from "overflowed, fall back"
+        val priorTouched = touched
+          .join(afterExact.select(col("doc_id").as("id")), Seq("id"), "left_anti")
+          .limit(p.maxRerankPushdownIds + 1)
+          .collect().map(_.getLong(0))
+        if (priorTouched.isEmpty) batchTexts
+        else {
+          val train = spark.read.parquet(trainDir)
+            .filter(col("batch_id") =!= batchId)
+          val priorTexts =
+            if (priorTouched.length <= p.maxRerankPushdownIds)
+              train.filter(col("doc_id")
+                .isin(priorTouched.toSeq.map(Long.box): _*))
+            else train // overflow: scan + ngramJaccard's semi-join
+          batchTexts.unionByName(
+            priorTexts.select(col("doc_id"), col("text")))
+        }
+      }
+    }
+    val reranked = graft.ops.Dedup.ngramJaccard(textPool, pairIds,
+      "text", "doc_id", p.shingleK)
+    val confirmed = reranked.value.filter(col("jaccard") >= p.jaccardThreshold)
+    val batchIds = afterExact.select(col("doc_id").as("other"))
+      .withColumn("__other_new", lit(true))
+    reranked.copy(value = confirmed
+      .select(col("id_a").as("doc_id"), col("id_b").as("other"))
+      .unionByName(confirmed.select(col("id_b").as("doc_id"), col("id_a").as("other")))
+      .join(afterExact.select(col("doc_id")), Seq("doc_id"), "left_semi")
+      .join(batchIds, Seq("other"), "left")
+      .filter(col("__other_new").isNull || col("other") < col("doc_id"))
+      .select(col("doc_id")).distinct())
   }
 
   /** Start the stream over a flat directory of parquet document files
@@ -330,15 +300,7 @@ object StreamingPipeline {
   def start(spark: SparkSession, inputDir: String, statePath: String,
             params: Params = Params(),
             trigger: Trigger = Trigger.AvailableNow(),
-            schema: Option[StructType] = None): StreamingQuery = {
-    val s = schema.getOrElse(spark.read.parquet(inputDir).schema)
-    spark.readStream.schema(s).parquet(inputDir)
-      .writeStream
-      .option("checkpointLocation", checkpointPath(statePath))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId, statePath, params)
-      }
-      .start()
-  }
+            schema: Option[StructType] = None): StreamingQuery =
+    MicroBatch.start(spark, inputDir, checkpointPath(statePath), trigger,
+      schema)(processBatch(spark, _, _, statePath, params))
 }

@@ -45,7 +45,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     StreamingDedup.processBatch(spark, b1, 1L, dir, p)
     assert(pairsOf(dir) ==
       Map((1L, 2L) -> 0L, (1L, 10L) -> 1L, (2L, 10L) -> 1L))
-    val idx = StreamingDedup.index(spark, dir).get
+    val idx = CompactedIndex.contents(spark, StreamingDedup.indexPath(dir)).get
     assert(idx.count() == idx.dropDuplicates("band", "band_hash", "id").count())
 
     // stream == batch: the union of per-batch pairs equals full mining
@@ -86,7 +86,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     // still holds each doc's signatures exactly once
     StreamingDedup.processBatch(spark, b(5), 5L, compacted, p.copy(maxIndexDeltas = 1))
     assert(pairsOf(compacted) == pairsOf(flat))
-    val idx = StreamingDedup.index(spark, compacted).get
+    val idx = CompactedIndex.contents(spark, StreamingDedup.indexPath(compacted)).get
     assert(idx.count() == idx.dropDuplicates("band", "band_hash", "id").count())
     assert(idx.select("id").distinct().count() == 6)
   }

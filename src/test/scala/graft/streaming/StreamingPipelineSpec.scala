@@ -94,9 +94,9 @@ class StreamingPipelineSpec extends AnyFunSuite {
     assert(keptIds(dir) == Set(10L))
     assert(rejectStages(dir)(1L) == "near_dup")
     // the quality-rejected doc 3 is in no index
-    val hashIdx = StreamingPipeline.hashIndex(spark, dir).get
+    val hashIdx = CompactedIndex.contents(spark, StreamingPipeline.hashIndexPath(dir)).get
     assert(hashIdx.select("doc_id").collect().map(_.getLong(0)).toSet == Set(10L))
-    val sigIdx = StreamingPipeline.sigIndex(spark, dir).get
+    val sigIdx = CompactedIndex.contents(spark, StreamingPipeline.sigIndexPath(dir)).get
     assert(sigIdx.select("id").distinct().collect().map(_.getLong(0)).toSet == Set(10L))
   }
 
@@ -105,13 +105,13 @@ class StreamingPipelineSpec extends AnyFunSuite {
     StreamingPipeline.processBatch(spark, df(1L, 2L, 3L), 0L, dir, p)
     StreamingPipeline.processBatch(spark, df(10L, 11L, 12L, 13L), 1L, dir, p)
     val kept1 = keptIds(dir); val stages1 = rejectStages(dir)
-    val hashCount = StreamingPipeline.hashIndex(spark, dir).get.count()
+    val hashCount = CompactedIndex.contents(spark, StreamingPipeline.hashIndexPath(dir)).get.count()
     // the crash model: batch 1's indexes are already written; replaying
     // batch 1 must yield the identical state (reads exclude own batch_id)
     StreamingPipeline.processBatch(spark, df(10L, 11L, 12L, 13L), 1L, dir, p)
     assert(keptIds(dir) == kept1)
     assert(rejectStages(dir) == stages1)
-    assert(StreamingPipeline.hashIndex(spark, dir).get.count() == hashCount)
+    assert(CompactedIndex.contents(spark, StreamingPipeline.hashIndexPath(dir)).get.count() == hashCount)
   }
 
   test("an all-rejected first batch leaves train/rejects roots readable") {
@@ -122,6 +122,22 @@ class StreamingPipelineSpec extends AnyFunSuite {
     // and a later batch still lands normally
     StreamingPipeline.processBatch(spark, df(1L), 1L, dir, p)
     assert(keptIds(dir) == Set(1L))
+  }
+
+  test("a batch over both prior indexes runs in a bounded number of jobs") {
+    // a write refreshes every cached plan that reads the path it writes:
+    // while the batch's persisted frames read hash-index/deltas, the
+    // signature append after the hash-index append recomputed the whole
+    // batch (this batch then took 164 jobs; 70 once nothing the batch
+    // still reads names that path, with no isEmpty pre-checks and a
+    // one-aggregate funnel)
+    val dir = java.nio.file.Files.createTempDirectory("spipe-jobs").toString
+    StreamingPipeline.processBatch(spark, df(1L, 2L, 3L), 0L, dir, p)
+    val (_, jobs) = org.apache.spark.graftbridge.JobLog.record(spark.sparkContext) {
+      StreamingPipeline.processBatch(spark, df(10L, 11L, 12L, 13L), 1L, dir, p)
+    }
+    assert(keptIds(dir) == Set(1L, 2L, 12L))
+    assert(jobs.size <= 70, s"batch 1 launched ${jobs.size} Spark jobs")
   }
 
   test("fuzz: batched keep-first equals an independent sequential fold") {
@@ -327,9 +343,9 @@ class StreamingPipelineSpec extends AnyFunSuite {
     assert(deltaDirs(StreamingPipeline.sigIndexPath(flat)) == 8) // the old growth, for contrast
 
     // full index contents agree across layouts
-    assert(StreamingPipeline.hashIndex(spark, compacted).get
+    assert(CompactedIndex.contents(spark, StreamingPipeline.hashIndexPath(compacted)).get
       .select("doc_id").collect().map(_.getLong(0)).toSet ==
-      StreamingPipeline.hashIndex(spark, flat).get
+      CompactedIndex.contents(spark, StreamingPipeline.hashIndexPath(flat)).get
         .select("doc_id").collect().map(_.getLong(0)).toSet)
 
     // crash mid-compaction model: a generation written but never
