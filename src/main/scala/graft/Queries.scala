@@ -424,8 +424,7 @@ object Queries {
       |   AS n_without_orders""".stripMargin
 
   /** Batch sessionization via window functions (gap > 30 min starts a new
-    * session): sessions per user, avg events per session. The streaming
-    * twin is EventStream.sessionize.
+    * session): sessions per user, avg events per session.
     */
   private def q27(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))

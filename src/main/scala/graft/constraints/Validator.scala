@@ -30,25 +30,36 @@ import graft.stats.{Drift, KllSketchAgg}
   */
 object Validator {
 
+  /** The suite's two inputs besides the data and the dim table: the
+    * table bounds and the declared column DDL (reference db_types side
+    * door: observed stats are checked against these capacities with the
+    * `wider?` truncation predicate, db_types/common.clj:20-115). The
+    * sketch sizes are engine constants; with the bounds they form the
+    * persisted [[SuiteStatsBySourceAgg.suiteKey]].
+    */
   final case class SuiteConfig(
       vocabSize: Int = 50000,
       minNtok: Int = 16,
       maxNtok: Int = 513,
-      kllK: Int = 200,
-      psiThreshold: Double = 0.25,
-      ksThreshold: Double = 0.30,
-      /** token-ID distribution drift: histogram bins + PSI threshold */
-      tokenHistBins: Int = 64,
-      tokenPsiThreshold: Double = 0.25,
-      /** declared column DDL (reference db_types side door): observed
-        * stats are checked against these capacities with the `wider?`
-        * truncation predicate (db_types/common.clj:20-115)
-        */
       declaredDdl: Map[String, String] = Map(
         "doc_id" -> "varchar(32)",
         "n_tok" -> "int",
-        "tokens_element" -> "int"),
-      ddlDialect: graft.dbtypes.DbTypeTranslator = graft.dbtypes.MySqlTranslator)
+        "tokens_element" -> "int")) {
+    /** KLL sketch size of the n_tok drift sketches. */
+    val kllK: Int = 200
+    /** Id-range bins of the token-ID drift histogram. */
+    val tokenHistBins: Int = 64
+  }
+
+  /** n_tok drift (PSI and KS over KLL sketches) and token-ID drift (PSI
+    * over the histograms) thresholds.
+    */
+  private val PsiThreshold = 0.25
+  private val KsThreshold = 0.30
+  private val TokenPsiThreshold = 0.25
+
+  /** The dialect of [[SuiteConfig.declaredDdl]] and [[suggestDdl]]. */
+  private val DdlDialect: graft.dbtypes.DbTypeTranslator = graft.dbtypes.MySqlTranslator
 
   final case class ValidationReport(
       verdicts: DataFrame,
@@ -197,7 +208,7 @@ object Validator {
         val observed = observedTypes(r).toMap
         cfg.declaredDdl.toSeq.sortBy(_._1).flatMap { case (colName, ddl) =>
           observed.get(colName).map { obs =>
-            val declared = cfg.ddlDialect.colTypeToSchemaType(ddl)
+            val declared = DdlDialect.colTypeToSchemaType(ddl)
             val pass = graft.dbtypes.Wider.eqWidthOrNarrower(obs, declared)
             vRow(s, s"declared_fit_$colName", pass,
               graft.types.SchemaType.render(obs),
@@ -223,9 +234,9 @@ object Validator {
           sketches.collect { case (o, b) if o != s => b }, cfg.kllK)
         val psi = Drift.psi(rest, self)
         val ks = Drift.ks(rest, self)
-        vRow(s, "ntok_drift", psi <= cfg.psiThreshold && ks <= cfg.ksThreshold,
+        vRow(s, "ntok_drift", psi <= PsiThreshold && ks <= KsThreshold,
           f"PSI=$psi%.4f KS=$ks%.4f",
-          f"PSI<=${cfg.psiThreshold} KS<=${cfg.ksThreshold}")
+          f"PSI<=$PsiThreshold KS<=$KsThreshold")
       }.toSeq
     }
 
@@ -287,9 +298,9 @@ object Validator {
           .reduceOption(graft.stats.TokenHistAgg.add)
           .getOrElse(new Array[Long](self.length))
         val psi = Drift.psiCounts(rest, self)
-        vRow(s, "token_drift", psi <= cfg.tokenPsiThreshold,
+        vRow(s, "token_drift", psi <= TokenPsiThreshold,
           f"PSI=$psi%.4f over ${self.length} id-range bins",
-          f"PSI<=${cfg.tokenPsiThreshold}")
+          f"PSI<=$TokenPsiThreshold")
       }.toSeq
     }
 
@@ -308,13 +319,11 @@ object Validator {
     * mysql.clj:169-204, emits the column that WOULD fit). Driver-side
     * over the KB-sized stats rows.
     */
-  def suggestDdl(stats: Array[Row],
-                 dialect: graft.dbtypes.DbTypeTranslator = graft.dbtypes.MySqlTranslator)
-      : Seq[(String, String, String, String)] = {
+  def suggestDdl(stats: Array[Row]): Seq[(String, String, String, String)] = {
     stats.flatMap { r =>
       observedTypes(r).map { case (colName, obs) =>
         (r.getAs[String]("source"), colName, graft.types.SchemaType.render(obs),
-          dialect.schemaTypeToColType(obs))
+          DdlDialect.schemaTypeToColType(obs))
       }
     }.toSeq.sortBy(t => (t._1, t._2))
   }
@@ -403,24 +412,19 @@ object Validator {
     *
     * Because observed metrics only materialize when an ACTION runs over
     * the instrumented frame, this method runs the violations action
-    * itself: `violationsOut = Some(path)` writes the violation rows as
-    * parquet (the pipeline shape — the scan does double duty), `None`
-    * counts them. The returned report's `violations` frame re-derives
-    * violations lazily for further use.
+    * itself: it counts the violation rows. The returned report's
+    * `violations` frame re-derives them lazily for further use; the
+    * scan where the stats ride a violations WRITE is
+    * [[ResumableValidator]]'s.
     *
     * Stats and violations are pinned to the composed reference forms
     * ([[sourceStatsComposed]], [[violationsComposed]]) by
     * FusedValidateSpec and SuiteStatsSpec.
     */
   def validateOneScan(spark: SparkSession, df: DataFrame, dim: DataFrame,
-                      cfg: SuiteConfig = SuiteConfig(),
-                      violationsOut: Option[String] = None): ValidationReport = {
+                      cfg: SuiteConfig = SuiteConfig()): ValidationReport = {
     val (observed, statsThunk) = observeStats(df, cfg)
-    val viols = violations(observed, cfg)
-    violationsOut match {
-      case Some(path) => viols.write.mode("overwrite").parquet(path)
-      case None       => viols.count()
-    }
+    violations(observed, cfg).count()
     val stats = statsThunk()
     val verdicts = buildVerdicts(spark, stats, dim.collect(), dupStats(df, cfg), cfg)
     ValidationReport(verdicts, violations(df, cfg), statsToDf(spark, stats))

@@ -15,12 +15,8 @@ import org.apache.spark.sql.functions._
   * diameter rounds (a chain of borderline near-dups can be arbitrarily
   * long). Each round is two hash-shuffles of the (long, long) edge list —
   * no driver-side state, no collect; per-round frames are persisted and
-  * lineage-truncated so the plan does not grow with the iteration count.
-  * `reliableCheckpoint = true` uses `checkpoint()` (requires
-  * `spark.sparkContext.setCheckpointDir`) — the durable truncation for
-  * long cluster runs where an executor loss must not recompute the whole
-  * round history; the default `localCheckpoint` keeps blocks on
-  * executors (fast, fine for a single box or short jobs).
+  * truncated with `localCheckpoint` (blocks stay on the executors, no
+  * checkpoint dir), so the plan does not grow with the iteration count.
   */
 object Components {
 
@@ -138,6 +134,11 @@ object Components {
       }.toDF("u", "v")
   }
 
+  /** Round cap of [[connectedComponents]]: O(log^2 n) rounds converge
+    * far below it at any corpus size.
+    */
+  private val MaxIter = 50
+
   /** (id, component) for every id appearing in a non-self pair (self-pairs
     * (a, a) are dropped by canonicalization — a node with no real edge
     * belongs to no component), where component is the minimum id of the
@@ -145,29 +146,7 @@ object Components {
     * keys through a dictionary first.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 50,
-                          reliableCheckpoint: Boolean = false,
                           contractMaxNodes: Int = 8 << 20): DataFrame = {
-    def truncate(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
-    // reliable checkpoints are NOT reclaimed by the ContextCleaner
-    // (cleanCheckpoints defaults false) and survive application exit —
-    // without explicit deletion a 30-round run leaves 30 full edge-list
-    // copies in the checkpoint dir. Each round deletes the round it
-    // superseded AFTER the new checkpoint has materialized (eager=true);
-    // the FINAL round's files back the returned frame and stay (the
-    // caller owns the checkpoint dir's lifecycle).
-    def checkpointFile(df: DataFrame): Option[String] =
-      if (reliableCheckpoint)
-        org.apache.spark.sql.graftbridge.RddBridge.checkpointFile(df)
-      else None
-    def deleteCheckpoint(path: Option[String]): Unit =
-      path.foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(pairs.sparkSession.sparkContext.hadoopConfiguration)
-          .delete(hp, true)
-      }
     def canon(df: DataFrame): DataFrame =
       df.filter(col("u") =!= col("v"))
         .select(greatest(col("u"), col("v")).as("u"),
@@ -201,7 +180,7 @@ object Components {
       sc.setJobDescription(desc)
       try f finally sc.setJobDescription(prev)
     }
-    var edges = labeled("cc: canon")(truncate(canon(raw)))
+    var edges = labeled("cc: canon")(canon(raw).localCheckpoint(true))
     // carried across rounds: one action per round
     var edgesSig = labeled("cc: sig 0")(sig(edges))
 
@@ -221,16 +200,14 @@ object Components {
     // (OPTIMIZATION_r07.md). contractMaxNodes <= 0 disables.
     if (contractMaxNodes > 0 && edgesSig._1 > 0 &&
         edgesSig._1 <= contractMaxNodes) {
-      val superseded = checkpointFile(edges)
       edges = labeled("cc: contract")(
-        truncate(canon(localContract(edges.coalesce(1), contractMaxNodes))))
+        canon(localContract(edges.coalesce(1), contractMaxNodes)).localCheckpoint(true))
       edgesSig = labeled("cc: contract sig")(sig(edges))
-      deleteCheckpoint(superseded)
     }
 
     var it = 0
     var converged = edgesSig._1 == 0L
-    while (!converged && it < maxIter) {
+    while (!converged && it < MaxIter) {
       // large-star: every node attaches its strictly-larger neighbors to
       // the minimum of its neighborhood (including itself)
       val nbrs = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
@@ -258,22 +235,19 @@ object Components {
       // superseded rounds: dropping the `edges` reference is what frees a
       // localCheckpoint'd frame — its blocks belong to the checkpointed
       // RDD and are reclaimed by the ContextCleaner once unreachable
-      // (Dataset.unpersist would be a no-op on it); a superseded RELIABLE
-      // checkpoint's files are deleted explicitly (the cleaner never
-      // touches them). The round's two actions both run over the
-      // truncated frame: the checkpoint materializes ss once, the sig
-      // scan reads the materialized blocks (the pre-round-7 shape paid an
-      // extra persist/unpersist cycle for the same two actions).
-      val superseded = checkpointFile(edges)
-      edges = labeled(s"cc: round ${it + 1} star")(truncate(ss))
+      // (Dataset.unpersist would be a no-op on it). The round's two
+      // actions both run over the truncated frame: the checkpoint
+      // materializes ss once, the sig scan reads the materialized blocks
+      // (the pre-round-7 shape paid an extra persist/unpersist cycle for
+      // the same two actions).
+      edges = labeled(s"cc: round ${it + 1} star")(ss.localCheckpoint(true))
       val ssSig = labeled(s"cc: round ${it + 1} sig")(sig(edges))
       converged = ssSig == edgesSig
       edgesSig = ssSig
-      deleteCheckpoint(superseded)
       it += 1
     }
-    require(converged || it < maxIter,
-      s"connectedComponents did not converge in $maxIter rounds")
+    require(converged || it < MaxIter,
+      s"connectedComponents did not converge in $MaxIter rounds")
 
     // converged edges form stars (non-root, root): the assignment is the
     // star edges plus a self-assignment for each root

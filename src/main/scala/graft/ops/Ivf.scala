@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * data-adaptive complement to the RHP-LSH bucket path in [[Similarity]].
   *
   * A coarse quantizer of `nlist` centroids (deterministic hash-sampled
-  * seeds refined by Lloyd iterations over a bounded hash-sample)
+  * seeds refined by Lloyd iterations over the vectors)
   * partitions vectors into cells; a query probes the `nProbe` nearest
   * cells and reranks exactly. The assigned table is built in one scan
   * (plus a KB-sized broadcast of centroids) and held in memory; a query
@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * corpus, with recall that tracks the data distribution instead of
   * random hyperplanes.
   *
-  * Everything driver-side is O(nlist*dim + sample); the per-row
+  * Everything driver-side is O(nlist*dim); the per-row
   * assignment is one native expression (no per-element interpreted
   * lambdas, no UDF).
   */
@@ -48,13 +48,13 @@ object Ivf {
     *  - seeds: the `nlist` rows with smallest xxhash64(id, seed) — a
     *    uniform deterministic sample, planned as TakeOrderedAndProject
     *    (per-partition heaps, no global sort);
-    *  - refinement: `refineIters` Lloyd steps over a deterministic
-    *    hash-sample of ~rows/sampleMod vectors (bounded shuffle:
-    *    sample x dim rows through a (cell, pos) hash aggregate).
+    *  - refinement: `refineIters` Lloyd steps over every vector (rows x
+    *    dim through a (cell, pos) hash aggregate, partially merged
+    *    map-side to at most nlist x dim sums per task).
     */
   def trainCentroids(df: DataFrame, vecCol: String, idCol: String,
-                     nlist: Int, seed: Long = 7L, refineIters: Int = 2,
-                     sampleMod: Int = 1): Array[Array[Float]] = {
+                     nlist: Int, seed: Long = 7L,
+                     refineIters: Int = 2): Array[Array[Float]] = {
     var cents: Array[Array[Float]] =
       df.select(col(vecCol).as("v"), col(idCol).as("i"),
           xxhash64(col(idCol), lit(seed)).as("h"))
@@ -62,21 +62,18 @@ object Ivf {
         .select(col("v")).collect()
         .map(rowVec)
 
-    val sample0 =
-      if (sampleMod <= 1) df.select(col(vecCol).as("v"))
-      else df.filter(pmod(xxhash64(col(idCol), lit(seed + 1)), lit(sampleMod)) === 0)
-        .select(col(vecCol).as("v"))
-    // every Lloyd iteration consumes the sample — persist it so the
-    // corpus is scanned/filtered once, not once per refinement
-    val sample =
-      if (refineIters > 1) sample0.persist() else sample0
+    val vecs0 = df.select(col(vecCol).as("v"))
+    // every Lloyd iteration consumes the vectors — persist them so the
+    // corpus is scanned once, not once per refinement
+    val vecs =
+      if (refineIters > 1) vecs0.persist() else vecs0
     try {
     var it = 0
     while (it < refineIters) {
-      // assign sample -> quantized-sum mean per (cell, dimension); empty
+      // assign vectors -> quantized-sum mean per (cell, dimension); empty
       // cells keep their previous centroid (standard Lloyd degenerate-
       // cell rule)
-      val means = sample
+      val means = vecs
         .withColumn("cell", nearestCell(col("v"), cents))
         .select(col("cell"),
           posexplode(col("v").cast("array<double>")).as(Seq("pos", "x")))
@@ -92,7 +89,7 @@ object Ivf {
       cents = next
       it += 1
     }
-    } finally if (refineIters > 1) sample.unpersist()
+    } finally if (refineIters > 1) vecs.unpersist()
     cents
   }
 
@@ -100,9 +97,8 @@ object Ivf {
     * expression, centroids broadcast inside the plan).
     */
   def build(df: DataFrame, vecCol: String, idCol: String,
-            nlist: Int = 64, seed: Long = 7L, refineIters: Int = 2,
-            sampleMod: Int = 1): Index = {
-    val cents = trainCentroids(df, vecCol, idCol, nlist, seed, refineIters, sampleMod)
+            nlist: Int = 64, seed: Long = 7L, refineIters: Int = 2): Index = {
+    val cents = trainCentroids(df, vecCol, idCol, nlist, seed, refineIters)
     Index(cents, df.withColumn("__cell", nearestCell(col(vecCol), cents)))
   }
 
@@ -142,9 +138,8 @@ object Ivf {
     */
   def ivfTopK(df: DataFrame, vecCol: String, idCol: String,
               query: Seq[Float], k: Int, nlist: Int = 64, nProbe: Int = 8,
-              seed: Long = 7L, refineIters: Int = 2,
-              sampleMod: Int = 1): DataFrame =
-    topK(build(df, vecCol, idCol, nlist, seed, refineIters, sampleMod),
+              seed: Long = 7L, refineIters: Int = 2): DataFrame =
+    topK(build(df, vecCol, idCol, nlist, seed, refineIters),
       vecCol, idCol, query, k, nProbe)
 
   def nearestCell(vec: Column, centroids: Array[Array[Float]]): Column =

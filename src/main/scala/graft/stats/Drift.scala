@@ -9,22 +9,30 @@ import org.apache.datasketches.kll.KllDoublesSketch
   */
 object Drift {
 
-  /** Population Stability Index over `bins` equi-probable bins of the
-    * reference sketch. eps-smoothed so empty bins don't blow up.
+  /** Smoothing floor of a bin's mass, so empty bins don't blow up PSI. */
+  private val Eps = 1e-6
+
+  /** Equi-probable bins of the reference sketch in [[psi]]. */
+  private val PsiBins = 10
+
+  /** Quantile probes per sketch in [[ks]]. */
+  private val KsProbes = 100
+
+  /** Population Stability Index over [[PsiBins]] equi-probable bins of
+    * the reference sketch, eps-smoothed.
     * Rule of thumb: <0.1 stable, 0.1-0.25 moderate, >0.25 drifted.
     */
-  def psi(reference: KllDoublesSketch, observed: KllDoublesSketch,
-          bins: Int = 10, eps: Double = 1e-6): Double = {
+  def psi(reference: KllDoublesSketch, observed: KllDoublesSketch): Double = {
     if (reference.isEmpty || observed.isEmpty) return 0.0
     // bin edges = reference quantiles at i/bins
-    val edges = (1 until bins).map(i => reference.getQuantile(i.toDouble / bins)).toArray
+    val edges = (1 until PsiBins).map(i => reference.getQuantile(i.toDouble / PsiBins)).toArray
     val p = massByBins(reference, edges)
     val q = massByBins(observed, edges)
     var s = 0.0
     var i = 0
     while (i < p.length) {
-      val pi = math.max(p(i), eps)
-      val qi = math.max(q(i), eps)
+      val pi = math.max(p(i), Eps)
+      val qi = math.max(q(i), Eps)
       s += (pi - qi) * math.log(pi / qi)
       i += 1
     }
@@ -35,8 +43,7 @@ object Drift {
     * vectors) — the categorical-distribution twin of [[psi]]. Counts are
     * normalized to masses with eps smoothing; empty histograms -> 0.
     */
-  def psiCounts(reference: Array[Long], observed: Array[Long],
-                eps: Double = 1e-6): Double = {
+  def psiCounts(reference: Array[Long], observed: Array[Long]): Double = {
     require(reference.length == observed.length)
     val rn = reference.sum.toDouble
     val on = observed.sum.toDouble
@@ -44,8 +51,8 @@ object Drift {
     var s = 0.0
     var i = 0
     while (i < reference.length) {
-      val pi = math.max(reference(i) / rn, eps)
-      val qi = math.max(observed(i) / on, eps)
+      val pi = math.max(reference(i) / rn, Eps)
+      val qi = math.max(observed(i) / on, Eps)
       s += (pi - qi) * math.log(pi / qi)
       i += 1
     }
@@ -81,11 +88,11 @@ object Drift {
   /** Kolmogorov-Smirnov statistic: max |CDF_a - CDF_b| probed at both
     * sketches' quantile grids.
     */
-  def ks(a: KllDoublesSketch, b: KllDoublesSketch, probes: Int = 100): Double = {
+  def ks(a: KllDoublesSketch, b: KllDoublesSketch): Double = {
     if (a.isEmpty || b.isEmpty) return 0.0
     val points =
-      (0 to probes).map(i => a.getQuantile(i.toDouble / probes)) ++
-      (0 to probes).map(i => b.getQuantile(i.toDouble / probes))
+      (0 to KsProbes).map(i => a.getQuantile(i.toDouble / KsProbes)) ++
+      (0 to KsProbes).map(i => b.getQuantile(i.toDouble / KsProbes))
     points.map(x => math.abs(cdf(a, x) - cdf(b, x))).max
   }
 

@@ -49,11 +49,11 @@ object StreamingValidator {
     statsRows(SuiteStatsBySourceAgg.merge(fromRows(a, kllK), fromRows(b, kllK)))
 
   /** Estimated duplicate mass from merged HLL vs total rows seen (the
-    * stream-scale uniqueness signal; tolerance covers HLL error).
+    * stream-scale uniqueness signal; the 2% tolerance covers HLL error).
     */
-  def approxUniquenessVerdict(spark: SparkSession, stats: Array[Row],
-                              tolerance: Double = 0.02): DataFrame = {
+  def approxUniquenessVerdict(spark: SparkSession, stats: Array[Row]): DataFrame = {
     import spark.implicits._
+    val tolerance = 0.02
     val totalRows = stats.map(_.getAs[Long]("n_rows")).sum
     val u = new org.apache.datasketches.hll.Union(12)
     stats.foreach(r => u.update(
@@ -109,7 +109,7 @@ object StreamingValidator {
   private[streaming] def processBatch(spark: SparkSession, batch: DataFrame,
                                       batchId: Long, statePath: String,
                                       dimRows: Array[Row], cfg: SuiteConfig): Unit = {
-    val fs = stateFs(spark, statePath)
+    val fs = MicroBatch.fs(spark, statePath)
     val prev = readState(fs, statePath)
     // a replayed batch (id <= the newest generation's) is already merged:
     // the merge must NOT re-apply, but a crash between writeStats and the
@@ -183,8 +183,5 @@ object StreamingValidator {
   }
 
   def readStats(spark: SparkSession, statePath: String): Option[(Long, Array[Row])] =
-    readState(stateFs(spark, statePath), statePath).map { case (n, _, m) => (n, statsRows(m)) }
-
-  private def stateFs(spark: SparkSession, statePath: String): FileSystem =
-    new Path(statePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    readState(MicroBatch.fs(spark, statePath), statePath).map { case (n, _, m) => (n, statsRows(m)) }
 }

@@ -15,7 +15,7 @@ import graft.constraints.Validator
 import graft.lineage.Commit
 import graft.ops._
 import graft.sequences.{SequenceSynth, TokenStats}
-import graft.streaming.StreamingPipeline
+import graft.streaming.{MicroBatch, StreamingPipeline}
 
 /** The profiler: times a named target's steps in one session, so
   * optimization effort goes where the seconds are. A diagnostic, not part
@@ -297,12 +297,14 @@ object Profile {
       if (docs.columns.contains("source")) docs else docs.withColumn("source", lit("s"))
     val p = StreamingPipeline.Params(maxIndexDeltas = maxDeltas)
     val step = new Steps(spark, 1, "docs")
-    for (b <- 0 until batches) {
-      step(s"batch $b")(StreamingPipeline.processBatch(spark,
-        withSource.filter(pmod(col("doc_id"), lit(batches)) === b), b.toLong, state, p))
-      println(s"    kept corpus: ${spark.read.parquet(StreamingPipeline.trainPath(state)).count()}")
-    }
-    step.done.toSeq
+    try {
+      for (b <- 0 until batches) {
+        step(s"batch $b")(StreamingPipeline.processBatch(spark,
+          withSource.filter(pmod(col("doc_id"), lit(batches)) === b), b.toLong, state, p))
+        println(s"    kept corpus: ${spark.read.parquet(StreamingPipeline.trainPath(state)).count()}")
+      }
+      step.done.toSeq
+    } finally MicroBatch.fs(spark, state).delete(new Path(state), true)
   }
 
   /** The projection-side native expressions on inputs big enough to swamp

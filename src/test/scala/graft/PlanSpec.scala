@@ -16,7 +16,7 @@ class PlanSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
 
   private lazy val seqDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("planspec").toString
+    val dir = SharedSpark.tempDir("planspec")
     SequenceSynth.write(spark, SequenceSynth.Config(rows = 5000), s"$dir/seqs", 2)
     s"$dir/seqs"
   }
@@ -262,7 +262,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("dupSpans fan-out: fires on a single-split scan, runs no job on a frame with an exchange") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("planspec-fanout").toString + "/docs"
+    val dir = SharedSpark.tempDir("planspec-fanout") + "/docs"
     (0 until 60).map(i => (i.toLong, s"shared boiler plate words here tail$i"))
       .toDF("id", "text").coalesce(1).write.parquet(dir)
     val scan = spark.read.parquet(dir)

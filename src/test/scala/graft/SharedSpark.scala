@@ -16,4 +16,22 @@ object SharedSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh temp dir that is deleted, with everything under it, when
+    * the test JVM exits.
+    */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(d)
+    d.getAbsolutePath
+  }
+
+  sys.addShutdownHook(tempDirs.forEach(d => deleteTree(d)))
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete()
+  }
 }

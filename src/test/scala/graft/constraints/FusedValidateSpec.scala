@@ -96,15 +96,6 @@ class FusedValidateSpec extends AnyFunSuite {
       Some((direct.getLong(0), direct.getLong(1))))
   }
 
-  test("violationsOut writes the violation rows as part of the one scan") {
-    val out = java.nio.file.Files.createTempDirectory("fused-viols").toString + "/v"
-    val rep = Validator.validateOneScan(spark, df, dim, suite, Some(out))
-    assert(spark.read.parquet(out).count() == classic.violations.count())
-    // stats were still observed on that same writing scan
-    assert(rep.sourceStats.collect().map(statKey).sortBy(_._1).toSeq ==
-      classic.sourceStats.collect().map(statKey).sortBy(_._1).toSeq)
-  }
-
   test("the fused plan carries the stats as CollectMetrics on the violations scan") {
     val obs = org.apache.spark.sql.Observation()
     val observed = df.observe(obs,

@@ -29,7 +29,7 @@ class ResumeSpec extends AnyFunSuite {
     }.toSet
 
   test("rerun skips all checkpointed partitions and reproduces identical verdicts") {
-    val dir = java.nio.file.Files.createTempDirectory("resume").toString
+    val dir = SharedSpark.tempDir("resume")
     val (inPath, statePath) = (s"$dir/seqs", s"$dir/state")
     SequenceSynth.write(spark, cfg, inPath, buckets = 4)
     val dim = SequenceSynth.sourcesDim(spark, cfg)
@@ -49,7 +49,7 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("kill-mid-run: partitions without a manifest are revalidated, others skipped") {
-    val dir = java.nio.file.Files.createTempDirectory("resume2").toString
+    val dir = SharedSpark.tempDir("resume2")
     val (inPath, statePath) = (s"$dir/seqs", s"$dir/state")
     SequenceSynth.write(spark, cfg, inPath, buckets = 4)
     val dim = SequenceSynth.sourcesDim(spark, cfg)
@@ -68,7 +68,7 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("changed input lineage invalidates exactly that partition") {
-    val dir = java.nio.file.Files.createTempDirectory("resume3").toString
+    val dir = SharedSpark.tempDir("resume3")
     val (inPath, statePath) = (s"$dir/seqs", s"$dir/state")
     SequenceSynth.write(spark, cfg, inPath, buckets = 4)
     val dim = SequenceSynth.sourcesDim(spark, cfg)
@@ -85,7 +85,7 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("state audit readers: manifest info, current/changed split, orphans") {
-    val dir = java.nio.file.Files.createTempDirectory("resume4").toString
+    val dir = SharedSpark.tempDir("resume4")
     val (inPath, statePath) = (s"$dir/seqs", s"$dir/state")
     SequenceSynth.write(spark, cfg, inPath, buckets = 4)
     val dim = SequenceSynth.sourcesDim(spark, cfg)
@@ -96,6 +96,10 @@ class ResumeSpec extends AnyFunSuite {
     // every input partition's state file (its manifest) holds its
     // fingerprint, the run's suite key and its own stats
     val key = SuiteStatsBySourceAgg.suiteKey(suite)
+    // the default suite's key is pinned: a drifted engine constant would
+    // silently revalidate every stored partition
+    assert(SuiteStatsBySourceAgg.suiteKey(Validator.SuiteConfig()) ==
+      Seq(50000, 16, 513, 64, 200))
     val inputs = Checkpoint.inputPartitions(spark, inPath)
     inputs.foreach { pl =>
       val (fp, payload) = Checkpoint.readState(spark, statePath, pl.source).get
@@ -128,15 +132,14 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("a changed suite config revalidates every partition: resumed equals from-scratch") {
-    val dir = java.nio.file.Files.createTempDirectory("resume5").toString
+    val dir = SharedSpark.tempDir("resume5")
     val (inPath, statePath) = (s"$dir/seqs", s"$dir/state")
     SequenceSynth.write(spark, cfg, inPath, buckets = 4)
     val dim = SequenceSynth.sourcesDim(spark, cfg)
     ResumableValidator.run(spark, inPath, dim, suite, statePath)
 
-    // half the vocabulary: most tokens turn out-of-vocabulary, and fewer
-    // histogram bins change the stored buffer's shape
-    val changed = suite.copy(vocabSize = suite.vocabSize / 2, tokenHistBins = 32)
+    // half the vocabulary: most tokens turn out-of-vocabulary
+    val changed = suite.copy(vocabSize = suite.vocabSize / 2)
     val resumed = ResumableValidator.run(spark, inPath, dim, changed, statePath)
     val scratch = ResumableValidator.run(spark, inPath, dim, changed, s"$dir/scratch")
     assert(resumed.validatedSources.toSet == scratch.validatedSources.toSet)
@@ -151,7 +154,7 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("a no-op rerun reads its state with no Spark job") {
-    val dir = java.nio.file.Files.createTempDirectory("resume6").toString
+    val dir = SharedSpark.tempDir("resume6")
     val (inPath, statePath) = (s"$dir/seqs", s"$dir/state")
     SequenceSynth.write(spark, cfg, inPath, buckets = 4)
     val dim = SequenceSynth.sourcesDim(spark, cfg)

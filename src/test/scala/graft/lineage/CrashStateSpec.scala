@@ -22,7 +22,7 @@ class CrashStateSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def fs(p: String) = new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def tmp(name: String) = java.nio.file.Files.createTempDirectory(name).toString
+  private def tmp(name: String) = SharedSpark.tempDir(name)
   private def rm(p: String): Unit = fs(p).delete(new Path(p), true)
   private def uncommit(dir: String): Unit = rm(s"$dir/${Commit.Marker}")
 

@@ -111,29 +111,4 @@ class ComponentsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(rows.toSeq == Seq((3L, 3L, 3L, 9L), (100L, 2L, 100L, 101L)))
   }
-
-  test("reliableCheckpoint variant computes identical components and deletes superseded rounds") {
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L),
-      (5L, 5L)).toDF("id_a", "id_b")
-    def result(reliable: Boolean) =
-      Components.connectedComponents(pairs, "id_a", "id_b",
-          reliableCheckpoint = reliable)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val reliable = result(true)
-    assert(reliable == result(false))
-    assert(reliable == Set((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (5L, 1L),
-      (10L, 10L), (11L, 10L)))
-    // only the FINAL round's checkpoint files survive — per-round
-    // reliable checkpoints are deleted as they are superseded (the
-    // ContextCleaner never reclaims them)
-    val rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-    var n = 0
-    while (rddDirs.hasNext) {
-      if (rddDirs.next().getFileName.toString.startsWith("rdd-")) n += 1
-    }
-    assert(n == 1, s"expected exactly the final round's checkpoint, found $n")
-  }
 }

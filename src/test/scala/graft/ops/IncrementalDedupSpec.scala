@@ -15,7 +15,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
 
   test("incremental mining: new-vs-old and new-vs-new found, old-vs-old never re-emitted") {
-    val dir = java.nio.file.Files.createTempDirectory("incdedup").toString + "/idx"
+    val dir = SharedSpark.tempDir("incdedup") + "/idx"
     // initial corpus: docs 1 and 2 are near-dups of each other
     val corpus = docs(1L -> s"$base one", 2L -> s"$base two", 3L -> other)
     IncrementalDedup.writeIndex(corpus, "text", "doc_id", dir)
@@ -45,7 +45,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("bucket cap measures the COMBINED (index + batch) bucket size") {
-    val dir = java.nio.file.Files.createTempDirectory("incdedup3").toString + "/idx"
+    val dir = SharedSpark.tempDir("incdedup3") + "/idx"
     // 5 indexed + 2 new docs with IDENTICAL text: every bucket has 7 rows
     val old = docs((1L to 5L).map(i => i -> s"$base same"): _*)
     val batch = docs(10L -> s"$base same", 11L -> s"$base same")
@@ -58,7 +58,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("count sidecar matches derived counts; sidecar-less probe falls back identically") {
-    val dir = java.nio.file.Files.createTempDirectory("incdedup4").toString + "/idx"
+    val dir = SharedSpark.tempDir("incdedup4") + "/idx"
     val old = docs(1L -> s"$base one", 2L -> s"$base two", 3L -> other)
     IncrementalDedup.writeIndex(old, "text", "doc_id", dir)
     // a rebuild over the grown corpus must leave the sidecar covering EVERY
@@ -92,7 +92,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("incremental candidates agree with full-corpus mining on the union") {
-    val dir = java.nio.file.Files.createTempDirectory("incdedup2").toString + "/idx"
+    val dir = SharedSpark.tempDir("incdedup2") + "/idx"
     val old = docs(1L -> s"$base one", 2L -> s"$base two", 3L -> other)
     val batch = docs(10L -> s"$base ten", 11L -> s"$other gamma")
     IncrementalDedup.writeIndex(old, "text", "doc_id", dir)

@@ -197,7 +197,7 @@ class OpsSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     val withSource = corpus.withColumn("source",
       concat(lit("s"), (col("id") % 3).cast("string")))
-    val idx = java.nio.file.Files.createTempDirectory("handles").toString + "/idx"
+    val idx = SharedSpark.tempDir("handles") + "/idx"
     IncrementalDedup.writeIndex(corpus.filter(col("id") < 4), "text", "id", idx)
     val pairs = Seq((0L, 1L), (0L, 2L)).toDF("id_a", "id_b")
     val handles: Seq[(String, () => Cached[org.apache.spark.sql.DataFrame])] = Seq(

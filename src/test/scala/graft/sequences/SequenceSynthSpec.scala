@@ -17,7 +17,7 @@ class SequenceSynthSpec extends AnyFunSuite {
   }
 
   test("per-row token-array equality: generator vs parquet readback (input_hint invariant)") {
-    val dir = java.nio.file.Files.createTempDirectory("synth").toString
+    val dir = SharedSpark.tempDir("synth")
     SequenceSynth.write(spark, cfg, s"$dir/seqs", buckets = 4)
     val readback = spark.read.parquet(s"$dir/seqs")
     val expected = SequenceSynth.sequences(spark, cfg)

@@ -30,7 +30,7 @@ class CompactedIndexSpec extends AnyFunSuite {
   test("fuzz: read == union of appends across random fold schedules and replays") {
     for (seed <- Seq(3, 19)) {
       val rng = new scala.util.Random(seed)
-      val root = java.nio.file.Files.createTempDirectory(s"cidx$seed").toString
+      val root = SharedSpark.tempDir(s"cidx$seed")
       val maxDeltas = 1 + rng.nextInt(2) // fold early and often
       val reference = scala.collection.mutable.Map[Long, Set[Long]]()
       for (b <- 0L until 10L) {
@@ -69,7 +69,7 @@ class CompactedIndexSpec extends AnyFunSuite {
   }
 
   test("an uncommitted (markerless) generation is invisible and later garbage-collected") {
-    val root = java.nio.file.Files.createTempDirectory("cidx-orphan").toString
+    val root = SharedSpark.tempDir("cidx-orphan")
     for (b <- 0L until 3L)
       CompactedIndex.append(rowsOf(b, 2), root, b, Nil)
     // crashed fold at batch 3: generation data written, marker never created

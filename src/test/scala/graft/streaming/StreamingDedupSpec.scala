@@ -20,14 +20,14 @@ class StreamingDedupSpec extends AnyFunSuite {
         r.getAs[Number]("batch_id").longValue()).toMap
 
   test("a zero-pair batch still leaves the candidates root readable") {
-    val dir = java.nio.file.Files.createTempDirectory("sdedup0").toString
+    val dir = SharedSpark.tempDir("sdedup0")
     val lonely = Seq(1L -> s"$base one", 2L -> other).toDF("doc_id", "text")
     StreamingDedup.processBatch(spark, lonely, 0L, dir, p)
     assert(spark.read.parquet(StreamingDedup.candidatesPath(dir)).count() == 0)
   }
 
   test("per-batch mining: each batch pays for itself, replay is idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("sdedup").toString
+    val dir = SharedSpark.tempDir("sdedup")
     val b0 = Seq(1L -> s"$base one", 2L -> s"$base two", 3L -> other)
       .toDF("doc_id", "text")
     val b1 = Seq(10L -> s"$base ten", 11L -> ("utterly unrelated content in " +
@@ -63,7 +63,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     // often)
     def b(i: Int) = Seq((100L + i) -> s"$base v$i").toDF("doc_id", "text")
     def run(params: StreamingDedup.Params): String = {
-      val dir = java.nio.file.Files.createTempDirectory("sdedup-compact").toString
+      val dir = SharedSpark.tempDir("sdedup-compact")
       (0 until 6).foreach(i => StreamingDedup.processBatch(spark, b(i), i.toLong, dir, params))
       dir
     }
@@ -98,7 +98,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     // exclusion the combined bucket count doubles (3 index + 3 fresh = 6
     // > maxBucket 4) and the replay silently drops pairs the original
     // run emitted.
-    val dir = java.nio.file.Files.createTempDirectory("sdedup-cap").toString
+    val dir = SharedSpark.tempDir("sdedup-cap")
     val trio = Seq(
       20L -> s"$base twin", 21L -> s"$base twin", 22L -> s"$base twin")
       .toDF("doc_id", "text")

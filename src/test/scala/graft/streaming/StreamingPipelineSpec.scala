@@ -62,7 +62,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
       .toMap
 
   test("increments == one batch on a chain-free corpus; stages attributed") {
-    val incDir = java.nio.file.Files.createTempDirectory("spipe-inc").toString
+    val incDir = SharedSpark.tempDir("spipe-inc")
     StreamingPipeline.processBatch(spark, df(1L, 2L, 3L), 0L, incDir, p)
     assert(keptIds(incDir) == Set(1L, 2L))
     assert(rejectStages(incDir) == Map(3L -> "quality"))
@@ -75,7 +75,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
       10L -> "near_dup",   // pairs with prior-kept doc 1
       13L -> "near_dup"))  // pairs with smaller-id batch doc 12
 
-    val oneDir = java.nio.file.Files.createTempDirectory("spipe-one").toString
+    val oneDir = SharedSpark.tempDir("spipe-one")
     StreamingPipeline.processBatch(spark,
       df(1L, 2L, 3L, 10L, 11L, 12L, 13L), 0L, oneDir, p)
     assert(keptIds(oneDir) == keptIds(incDir))
@@ -83,7 +83,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
   }
 
   test("only kept docs enter the indexes; a rejected doc never blocks a future one") {
-    val dir = java.nio.file.Files.createTempDirectory("spipe-keep").toString
+    val dir = SharedSpark.tempDir("spipe-keep")
     // batch 0: doc 10 (the near-dup EDIT of famA) arrives FIRST and is
     // kept; doc 3 is a quality reject
     StreamingPipeline.processBatch(spark, df(10L, 3L), 0L, dir, p)
@@ -101,7 +101,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
   }
 
   test("replay of a batch (crash between writes) is idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("spipe-replay").toString
+    val dir = SharedSpark.tempDir("spipe-replay")
     StreamingPipeline.processBatch(spark, df(1L, 2L, 3L), 0L, dir, p)
     StreamingPipeline.processBatch(spark, df(10L, 11L, 12L, 13L), 1L, dir, p)
     val kept1 = keptIds(dir); val stages1 = rejectStages(dir)
@@ -115,7 +115,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
   }
 
   test("an all-rejected first batch leaves train/rejects roots readable") {
-    val dir = java.nio.file.Files.createTempDirectory("spipe-empty").toString
+    val dir = SharedSpark.tempDir("spipe-empty")
     StreamingPipeline.processBatch(spark, df(3L), 0L, dir, p) // quality reject
     assert(keptIds(dir) == Set.empty)
     assert(rejectStages(dir) == Map(3L -> "quality"))
@@ -131,7 +131,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
     // batch (this batch then took 164 jobs; 70 once nothing the batch
     // still reads names that path, with no isEmpty pre-checks and a
     // one-aggregate funnel)
-    val dir = java.nio.file.Files.createTempDirectory("spipe-jobs").toString
+    val dir = SharedSpark.tempDir("spipe-jobs")
     StreamingPipeline.processBatch(spark, df(1L, 2L, 3L), 0L, dir, p)
     val (_, jobs) = org.apache.spark.graftbridge.JobLog.record(spark.sparkContext) {
       StreamingPipeline.processBatch(spark, df(10L, 11L, 12L, 13L), 1L, dir, p)
@@ -216,7 +216,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
       }
 
       // the system under test
-      val dir = java.nio.file.Files.createTempDirectory(s"spipe-fuzz$seed").toString
+      val dir = SharedSpark.tempDir(s"spipe-fuzz$seed")
       batches.zipWithIndex.foreach { case (batch, b) =>
         val bdf = docs.filter(d => batch.contains(d._1)).toSeq
           .toDF("doc_id", "text", "source")
@@ -260,7 +260,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
       s"planted pair must fail the rerank (J ${trueJaccard(famA, fpDoc)})")
 
     // streaming, id-ordered batches (keep-first == keep-min-id then)
-    val dir = java.nio.file.Files.createTempDirectory("spipe-fp").toString
+    val dir = SharedSpark.tempDir("spipe-fp")
     val cdf = corpus.toDF("doc_id", "text", "source")
     StreamingPipeline.processBatch(spark, cdf.filter(col("doc_id") <= 2), 0L, dir, p)
     StreamingPipeline.processBatch(spark, cdf.filter(col("doc_id") > 2), 1L, dir, p)
@@ -278,7 +278,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
     // pushdown-overflow fallback parity: with the cap at 0 every rerank
     // takes the full-scan semi-join branch instead of the pushed In
     // filter — identical decisions either way
-    val dirFb = java.nio.file.Files.createTempDirectory("spipe-fp-fb").toString
+    val dirFb = SharedSpark.tempDir("spipe-fp-fb")
     val pFb = p.copy(maxRerankPushdownIds = 0)
     StreamingPipeline.processBatch(spark, cdf.filter(col("doc_id") <= 2), 0L, dirFb, pFb)
     StreamingPipeline.processBatch(spark, cdf.filter(col("doc_id") > 2), 1L, dirFb, pFb)
@@ -301,7 +301,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
         (10L * i + 3, edit(fam(prefixes(i - 4)), prefixes(i - 4) + "aq", "zulu"), "web")) // near dup
     }
     def run(params: StreamingPipeline.Params): String = {
-      val dir = java.nio.file.Files.createTempDirectory("spipe-compact").toString
+      val dir = SharedSpark.tempDir("spipe-compact")
       (0 until 8).foreach { i =>
         StreamingPipeline.processBatch(spark,
           batchDocs(i).toDF("doc_id", "text", "source"), i.toLong, dir, params)
@@ -365,8 +365,8 @@ class StreamingPipelineSpec extends AnyFunSuite {
   }
 
   test("streaming wiring: AvailableNow over a growing directory, checkpoint resumes") {
-    val in = java.nio.file.Files.createTempDirectory("spipe-in").toString
-    val state = java.nio.file.Files.createTempDirectory("spipe-state").toString
+    val in = SharedSpark.tempDir("spipe-in")
+    val state = SharedSpark.tempDir("spipe-state")
     df(1L, 2L, 3L).repartition(1).write.parquet(s"$in/f0")
     // the file source wants a flat dir of files; write then move parquet parts
     val q1 = StreamingPipeline.start(spark, s"$in/f0", state, p)
@@ -381,7 +381,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
   }
 
   test("funnel: complete zero-filled per-batch grid, NULL-safe sources, totals == batch Pipeline funnel") {
-    val dir = java.nio.file.Files.createTempDirectory("spipe-funnel").toString
+    val dir = SharedSpark.tempDir("spipe-funnel")
     // shared fixture plus one NULL-source survivor — the grid must carry
     // it with real counts at every stage (the batch funnel's <=> lesson)
     val extra = Seq((20L, fam("golf"), null.asInstanceOf[String]))

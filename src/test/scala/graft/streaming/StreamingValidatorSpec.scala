@@ -22,7 +22,7 @@ class StreamingValidatorSpec extends AnyFunSuite {
   lazy val dim = SequenceSynth.sourcesDim(spark, cfg)
 
   private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
+    val d = new java.io.File(SharedSpark.tempDir(name))
     d.delete(); d.getAbsolutePath
   }
 
@@ -136,7 +136,7 @@ class StreamingValidatorSpec extends AnyFunSuite {
     // stats of another suite config cannot be merged into (nor recomputed)
     intercept[IllegalArgumentException] {
       StreamingValidator.processBatch(spark, half, 3L, stateDir, dimRows,
-        suite.copy(tokenHistBins = 32))
+        suite.copy(maxNtok = suite.maxNtok + 1))
     }
     assert(StreamingValidator.readStats(spark, stateDir).map(_._1).contains(2L))
   }
