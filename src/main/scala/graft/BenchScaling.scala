@@ -51,7 +51,7 @@ object BenchScaling {
     val times = (1 to runs).map { i =>
       val t0 = System.nanoTime()
       val df = spark.read.parquet(input)
-      // one-scan path, same as Bench (stats observed on the violations scan)
+      // one-scan path, same as Bench (stats observed under the uniqueness exchange)
       Validator.validateOneScan(spark, df, dim, suite)
       val secs = (System.nanoTime() - t0) / 1e9
       val tput = rows / secs

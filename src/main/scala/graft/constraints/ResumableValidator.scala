@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import graft.lineage.Checkpoint
 import SuiteStatsBySourceAgg._
 import Validator.{SuiteConfig, ValidationReport}
@@ -14,7 +16,9 @@ import Validator.{SuiteConfig, ValidationReport}
   * ([[SuiteStatsBySourceAgg.suiteKey]]) changed; unchanged partitions'
   * stats (the aggregate's own buffer bytes, in the partition's
   * [[Checkpoint]] state file) and violations are served from state — the
-  * scan skip is real partition pruning on the `source=` filter.
+  * scan skip is real partition pruning on the `source=` filter. Global
+  * uniqueness is served from its own state file while no input partition
+  * changed, so a no-op rerun reads no table rows.
   */
 object ResumableValidator {
 
@@ -28,9 +32,10 @@ object ResumableValidator {
           cfg: SuiteConfig, statePath: String): RunSummary = {
 
     val key = suiteKey(cfg)
+    val partitions = Checkpoint.inputPartitions(spark, inputPath)
     // stored buffers of each partition whose lineage AND suite key are
     // current; every other partition is revalidated
-    val (done, todo) = Checkpoint.inputPartitions(spark, inputPath).map { pl =>
+    val (done, todo) = partitions.map { pl =>
       pl -> Checkpoint.readState(spark, statePath, pl.source).collect {
         case (pl.fingerprint, payload) => decodeState(payload)
       }.collect { case (`key`, m) => m }
@@ -77,11 +82,21 @@ object ResumableValidator {
         .filter(col("source").isin(allSources: _*))
       catch { case _: org.apache.spark.sql.AnalysisException => empty }
 
-    // global uniqueness always reruns: it is cross-partition by nature and
-    // scans a one-column projection of the full table
-    val dupAgg = Validator.dupStats(input, cfg)
+    // global uniqueness is cross-partition by nature: it is served from
+    // state only while EVERY partition is unchanged, else recomputed over
+    // a one-column projection of the full table and its file written last
+    val inputKey = Checkpoint.inputFingerprint(partitions)
+    val dups = Checkpoint.readUniqueness(spark, statePath).collect {
+      case (`inputKey`, payload) =>
+        val Array(k, extra) = new String(payload, UTF_8).split(' ').map(_.toLong)
+        (k, extra)
+    }.getOrElse {
+      val (k, extra) = Validator.dupStats(input, cfg).get
+      Checkpoint.writeUniqueness(spark, statePath, inputKey, s"$k $extra".getBytes(UTF_8))
+      (k, extra)
+    }
 
-    val verdicts = Validator.buildVerdicts(spark, rows, dim.collect(), dupAgg, cfg)
+    val verdicts = Validator.buildVerdicts(spark, rows, dim.collect(), Some(dups), cfg)
     RunSummary(
       ValidationReport(verdicts, viols, Validator.statsToDf(spark, rows)),
       validatedSources = todo.map(_._1.source),

@@ -13,8 +13,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** The [[SuiteStatsAgg]] fold keyed by source INSIDE one global
   * aggregate, so the whole per-source stats table can ride a
-  * `df.observe(...)` CollectMetrics node on the violations scan — stats
-  * and violations share ONE full-data pass. At 100 TB that is the
+  * `df.observe(...)` CollectMetrics node on the table scan — under the
+  * uniqueness exchange in [[Validator.validateOneScan]], on the violations
+  * write in the resumable and streaming paths — and the stats share ONE
+  * full-data pass with them. At 100 TB that is the
   * dominant cost, the table scan; the observe aggregation is a
   * map-side-partial monoid (per-task buffers merged by an accumulator,
   * KBs on the wire, never rows).

@@ -16,7 +16,9 @@ import java.nio.charset.StandardCharsets
   * replaced atomically ([[Commit.writeAtomic]]) and read on the driver;
   * a restarted run revalidates ONLY partitions whose fingerprint changed —
   * the skip is a real scan skip, because the remaining sources are read
-  * with a partition-pruning filter.
+  * with a partition-pruning filter. The cross-partition uniqueness totals
+  * sit in one more state file, `uniqueness`, keyed by the fingerprint of
+  * the whole input ([[inputFingerprint]]).
   *
   * This is the "resumable from checkpoint with per-partition lineage"
   * requirement (BASELINE.json north_rule); the reference's incremental
@@ -44,20 +46,33 @@ object Checkpoint {
           .filter(f => f.isFile && Commit.isData(f.getPath.getName))
           .sortBy(_.getPath.getName)
           .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
-        val fp = java.security.MessageDigest.getInstance("MD5")
-          .digest(files.mkString("\n").getBytes(StandardCharsets.UTF_8))
-          .map("%02x".format(_)).mkString
-        PartitionLineage(source, fp)
+        PartitionLineage(source, md5Hex(files))
       }
   }
 
   private def stateFile(statePath: String, source: String): Path =
     new Path(s"$statePath/sources/$source")
 
-  /** A partition's stored (fingerprint, payload); None: no state file. */
-  def readState(spark: SparkSession, statePath: String,
-                source: String): Option[(String, Array[Byte])] = {
-    val (system, p) = (fs(spark, statePath), stateFile(statePath, source))
+  /** The global uniqueness totals' state file: beside `sources/`, so no
+    * reader of source state ([[stateSources]], `state-audit`) lists it.
+    */
+  private def uniquenessFile(statePath: String): Path =
+    new Path(s"$statePath/uniqueness")
+
+  /** The whole input's lineage: one digest over every partition's
+    * (source, fingerprint), sorted by source.
+    */
+  def inputFingerprint(partitions: Seq[PartitionLineage]): String =
+    md5Hex(partitions.sortBy(_.source).map(pl => s"${pl.source}:${pl.fingerprint}"))
+
+  private def md5Hex(lines: Seq[String]): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+
+  /** A state file's (fingerprint, payload); None: no such file. */
+  private def read(spark: SparkSession, p: Path): Option[(String, Array[Byte])] = {
+    val system = fs(spark, p.toString)
     Option.when(system.exists(p)) {
       val in = system.open(p)
       val bytes = try in.readAllBytes() finally in.close()
@@ -65,6 +80,16 @@ object Checkpoint {
       (new String(bytes, 0, nl, StandardCharsets.UTF_8), bytes.drop(nl + 1))
     }
   }
+
+  private def write(spark: SparkSession, p: Path, fingerprint: String,
+                    payload: Array[Byte]): Unit =
+    Commit.writeAtomic(fs(spark, p.toString), p,
+      s"$fingerprint\n".getBytes(StandardCharsets.UTF_8) ++ payload)
+
+  /** A partition's stored (fingerprint, payload); None: no state file. */
+  def readState(spark: SparkSession, statePath: String,
+                source: String): Option[(String, Array[Byte])] =
+    read(spark, stateFile(statePath, source))
 
   /** Partitions with a state file (orphans: their partition left the input). */
   def stateSources(spark: SparkSession, statePath: String): Seq[String] = {
@@ -78,8 +103,15 @@ object Checkpoint {
 
   def writeState(spark: SparkSession, statePath: String,
                  lineage: PartitionLineage, payload: Array[Byte]): Unit =
-    Commit.writeAtomic(fs(spark, statePath), stateFile(statePath, lineage.source),
-      s"${lineage.fingerprint}\n".getBytes(StandardCharsets.UTF_8) ++ payload)
+    write(spark, stateFile(statePath, lineage.source), lineage.fingerprint, payload)
+
+  /** The stored uniqueness (input fingerprint, payload); None: no file. */
+  def readUniqueness(spark: SparkSession, statePath: String): Option[(String, Array[Byte])] =
+    read(spark, uniquenessFile(statePath))
+
+  def writeUniqueness(spark: SparkSession, statePath: String,
+                      inputFingerprint: String, payload: Array[Byte]): Unit =
+    write(spark, uniquenessFile(statePath), inputFingerprint, payload)
 
   /** Violations are row data: source-partitioned parquet written with
     * DYNAMIC partition overwrite, so revalidating k of N partitions

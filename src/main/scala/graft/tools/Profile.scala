@@ -223,12 +223,15 @@ object Profile {
     step("scan_tokens_stats_walk", rows)(
       df.agg(sum(TokenStats.token_stats(col("tokens")).getField("max"))).head().get(0))
     step("stage_violations_count", rows)(Validator.violations(df, suiteCfg).count())
-    step("stage_observed_stats", rows) {
+    // the pass as validateOneScan runs it: the stats ride the uniqueness
+    // exchange, one action
+    step("stage_stats_uniqueness", rows) {
       val (observed, statsThunk) = Validator.observeStats(df, suiteCfg)
-      val n = Validator.violations(observed, suiteCfg).count()
+      val dups = Validator.dupStats(observed, suiteCfg).get
       statsThunk()
-      n
+      dups
     }
+    // uniqueness alone, as a resume over a changed input runs it
     step("stage_dup_stats", rows)(Validator.dupStats(df, suiteCfg).get)
     step("full_validate_one_scan", rows)(validate().verdicts.filter(!col("pass")).count())
     step.done.toSeq

@@ -30,10 +30,12 @@ object PlanCheck {
     println("==== partition-pruned scan (resume path) ====")
     df.filter(col("source").isin("web", "books")).groupBy("source").count()
       .explain("formatted")
-    println("==== fused one-scan suite: violations + observed stats ====")
+    println("==== one-scan suite: observed stats under the hash-pair uniqueness exchange ====")
     val (observed, _) = Validator.observeStats(df, suite)
+    Validator.duplicateHashes(observed).explain("formatted")
+    println("==== resume write: violations + observed stats ====")
     Validator.violations(observed, suite).explain("formatted")
-    println("==== count-only uniqueness: hash-pair exchange (dupStats) ====")
+    println("==== count-only uniqueness alone: hash-pair exchange (dupStats) ====")
     Validator.duplicateHashes(df).explain("formatted")
 
     println("==== round 3: miner pair join over the co-partitioned capped cache ====")

@@ -8,7 +8,8 @@ import graft.SharedSpark
 import graft.sequences.SequenceSynth
 
 /** The fused stats fold ([[Validator.observeStats]], run the way
-  * production runs it: observed on the violations scan) must equal the
+  * [[Validator.validateOneScan]] runs it: observed under the uniqueness
+  * exchange) must equal the
   * composed-builtins stats plan field-for-field: exact for every
   * counter/min/max/histogram; KLL compared on n/min/max (compaction is
   * internally randomized, so byte equality is not meaningful); the HLL
@@ -27,10 +28,10 @@ class SuiteStatsSpec extends AnyFunSuite {
   private def bySource(df: org.apache.spark.sql.DataFrame): Map[String, Row] =
     df.collect().map(r => r.getAs[String]("source") -> r).toMap
 
-  /** The production stats path: observed on the violations count. */
+  /** The production stats path: observed under the uniqueness action. */
   private def observed(df: org.apache.spark.sql.DataFrame): Map[String, Row] = {
     val (o, stats) = Validator.observeStats(df, suite)
-    Validator.violations(o, suite).count()
+    Validator.dupStats(o, suite)
     stats().map(r => r.getAs[String]("source") -> r).toMap
   }
 

@@ -92,6 +92,51 @@ class CrashStateSpec extends AnyFunSuite {
       assert(!fs(state).exists(Commit.tempPath(stateFile(state, "web"))))
     })
 
+  // ---- validate-resume uniqueness: the cross-partition totals, written
+  // after every source's state file, keyed by the whole input's lineage
+  private def uniquenessFile(state: String) = new Path(s"$state/uniqueness")
+  private def currentInput = Checkpoint.inputFingerprint(Checkpoint.inputPartitions(spark, seqInput))
+
+  private val resumeUniqueness = Writer("validate-resume uniqueness",
+    Seq(
+      "state files written" -> resumeState(st => rm(uniquenessFile(st).toString)),
+      "uniqueness temp written" -> resumeState { st =>
+        val f = uniquenessFile(st)
+        fs(st).rename(f, Commit.tempPath(f))
+      }),
+    state => {
+      assert(Checkpoint.plan(spark, seqInput, state)._2.isEmpty &&
+        Checkpoint.readUniqueness(spark, state).isEmpty,
+        "every source is current and the totals are missing")
+      assert(outcome(ResumableValidator.run(spark, seqInput, seqDim, suite, state)) ==
+        scratchRun)
+      assert(Checkpoint.readUniqueness(spark, state).map(_._1).contains(currentInput))
+      assert(!fs(state).exists(Commit.tempPath(uniquenessFile(state))))
+    })
+
+  test("validate-resume uniqueness: a file written before a source changed is never served") {
+    val root = tmp("crash-stale")
+    val (input, state) = (s"$root/seqs", s"$root/state")
+    SequenceSynth.write(spark, seqCfg, input, buckets = 4)
+    val before = ResumableValidator.run(spark, input, seqDim, suite, state)
+    // five web rows again, in a new file: web's lineage changes and its
+    // five ids are duplicated once more
+    spark.read.parquet(s"$input/source=web").limit(5)
+      .write.mode("append").parquet(s"$input/source=web")
+    val stale = Checkpoint.readUniqueness(spark, state).get
+    val now = Checkpoint.inputFingerprint(Checkpoint.inputPartitions(spark, input))
+    assert(stale._1 != now)
+
+    val resumed = ResumableValidator.run(spark, input, seqDim, suite, state)
+    assert(resumed.validatedSources == Seq("web"))
+    val scratch = ResumableValidator.run(spark, input, seqDim, suite, s"$root/scratch")
+    assert(outcome(resumed) == outcome(scratch))
+    def uniqueness(s: ResumableValidator.RunSummary) = s.report.verdicts
+      .filter(col("check") === "uniqueness").collect().map(_.getString(3)).toSeq
+    assert(uniqueness(resumed) != uniqueness(before), "the stale totals were served")
+    assert(Checkpoint.readUniqueness(spark, state).map(_._1).contains(now))
+  }
+
   // ---- stream stats: each micro-batch commits gen-<batchId>/stats; three
   // one-file batches over the sequences rows
   private lazy val streamInput = {
@@ -191,7 +236,7 @@ class CrashStateSpec extends AnyFunSuite {
       assert(readIds(root, 3L) == batchIds(0L, 1L, 2L))
     })
 
-  for (w <- Seq(validateResume, streamStats, indexRebuild, compaction); (step, crash) <- w.steps)
+  for (w <- Seq(validateResume, resumeUniqueness, streamStats, indexRebuild, compaction); (step, crash) <- w.steps)
     test(s"${w.name}: crash after $step, the next run equals a from-scratch run") {
       val dir = tmp("crash")
       crash(dir)

@@ -37,7 +37,7 @@ class ProfileSpec extends AnyFunSuite {
   test("suite prints SuiteProfile's rows, and every job carries its step's group") {
     val (steps, rows) = profile("suite", "2000", "1")
     assert(rows == Seq("scan_count_only", "scan_ntok_sum", "scan_tokens_sum_size",
-      "scan_tokens_stats_walk", "stage_violations_count", "stage_observed_stats",
+      "scan_tokens_stats_walk", "stage_violations_count", "stage_stats_uniqueness",
       "stage_dup_stats", "full_validate_one_scan"))
     assert(steps.map(_.name) == rows)
     assert(steps.forall(_.secs.size == 1))
