@@ -880,7 +880,7 @@ object Queries {
   }
 
   /** Distributed JSON schema inference over events.props (the reference's
-    * whole pipeline as a typed Aggregator), flattened to one row per
+    * whole pipeline as one partition fold and a driver merge), flattened to one row per
     * top-level field so DuckDB's JSON functions can recompute it: seen /
     * failed counts, field count, per-field kind and int bounds.
     */

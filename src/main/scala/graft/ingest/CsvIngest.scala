@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 
 import graft.json.JsonParser
 import graft.types._
@@ -25,25 +25,15 @@ object CsvIngest {
     JObj(names.zip(values).toMap)
   }
 
-  /** Distributed csv-file-to-schema: same extract-then-merge fold as the
-    * JSON path, driven by the CSV line parser.
+  /** Distributed csv-file-to-schema: the JSON path's one-job fold
+    * ([[JsonSchemaInference.foldLines]]), driven by the CSV line parser.
     */
   def inferSchema(lines: Dataset[String],
                   delimiter: String = ",",
                   header: Option[Seq[String]] = None,
                   policy: MergePolicy = StrictMerge,
-                  dateFormats: Seq[String] = Nil): Option[SchemaType] = {
-    import lines.sparkSession.implicits._
-    val types = lines.mapPartitions { it =>
-      val extractor = new TypeExtractor(policy, dateFormats)
-      var acc: Option[SchemaType] = None
-      it.foreach { line =>
-        val t = extractor.extract(parseCsvLine(line, delimiter, header))
-        acc = Some(acc.fold(t)(s => policy.mergeTwo(s, t)))
-      }
-      acc.iterator
-    }(org.apache.spark.sql.Encoders.kryo[SchemaType])
-    // one partial per partition survives; the driver folds the handful
-    types.collect().reduceOption((a, b) => policy.mergeTwo(a, b))
-  }
+                  dateFormats: Seq[String] = Nil): Option[SchemaType] =
+    JsonSchemaInference.foldLines(lines, policy, dateFormats) { extractor => line =>
+      Right(extractor.extract(parseCsvLine(line, delimiter, header)))
+    }.schema
 }

@@ -1,71 +1,73 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 import graft.types._
 
 /** Distributed schema inference: the reference's whole-dataset fold
-  * `reduce(merge, map(extract . parse, records))` (core.clj:22-27)
-  * re-expressed as a typed Spark Aggregator — per-partition partial
-  * reduction into a SchemaType buffer, then a merge tree across
-  * partitions. The proven commutativity of the merge monoid
-  * (merge_test.clj:484-496; our MonoidLawsSpec) is exactly what makes the
-  * partial/final split sound.
+  * `reduce(merge, map(extract . parse, records))` (core.clj:22-27) as ONE
+  * Spark job. Each task folds its lines into the policy's reducer clusters
+  * ([[fold]]); the driver collects the handful of partials and normalizes
+  * their clusters into one union ([[merge]]). No exchange, no second job.
+  *
+  * Clustering equals the pairwise `mergeTwo` fold because every record is
+  * a document (or a top-level special) and `mergeable` is an equivalence
+  * on them: equal keysets / equal kinds under [[StrictMerge]], equal kinds
+  * under [[SimplifyMerge]]. Merge order within a cluster is free
+  * (MonoidLawsSpec), so one normalization per call replaces one per record
+  * (InferFoldSpec pins the two equal).
   *
   * Parse failures do NOT throw (parser.clj:16-28 semantics): they are
-  * counted into the buffer and reported alongside the schema.
+  * counted and reported alongside the schema.
   *
-  * The fold is fed by [[TypeExtractor.extractLine]], one walk over each
+  * The JSON fold is fed by [[TypeExtractor.extractLine]], one walk over each
   * line's Jackson tokens straight to a SchemaType. `JsonParser.parseJsonLine`
   * + `extract` is its reference twin: it builds the JValue tree that
   * value consumers need, and ExtractLineSpec pins the two equal.
   */
 object JsonSchemaInference {
 
-  /** (merged schema or None, records seen, records failed) */
-  final case class Buf(schema: Option[SchemaType], seen: Long, failed: Long)
+  /** One share of the fold: the reducer's clusters, records seen, records failed. */
+  final case class Buf(clusters: Vector[SchemaType], seen: Long, failed: Long)
   final case class Result(schema: Option[SchemaType], seen: Long, failed: Long) {
     def render: String = schema.map(SchemaType.render).getOrElse("<empty>")
   }
 
-  final class SchemaAgg(
-      policy: MergePolicy,
-      dateFormats: Seq[String]) extends Aggregator[String, Buf, Result] {
-
-    @transient private lazy val extractor = new TypeExtractor(policy, dateFormats)
-
-    override def zero: Buf = Buf(None, 0L, 0L)
-
-    override def reduce(b: Buf, line: String): Buf =
-      extractor.extractLine(line) match {
-        case Right(t) =>
-          Buf(Some(b.schema.fold(t)(s => policy.mergeTwo(s, t))), b.seen + 1, b.failed)
-        case Left(_) =>
-          Buf(b.schema, b.seen + 1, b.failed + 1)
+  /** Fold extracted records (`Left` = a failed line) into the clusters. */
+  def fold(policy: MergePolicy, records: Iterator[Either[String, SchemaType]]): Buf = {
+    var clusters = Vector.empty[SchemaType]
+    var seen, failed = 0L
+    records.foreach { r =>
+      seen += 1
+      r match {
+        case Right(t) => clusters = policy.reduceInto(clusters, t)
+        case Left(_)  => failed += 1
       }
-
-    override def merge(a: Buf, b: Buf): Buf = {
-      val merged = (a.schema, b.schema) match {
-        case (Some(x), Some(y)) => Some(policy.mergeTwo(x, y))
-        case (x, y)             => x.orElse(y)
-      }
-      Buf(merged, a.seen + b.seen, a.failed + b.failed)
     }
-
-    override def finish(b: Buf): Result = Result(b.schema, b.seen, b.failed)
-
-    override def bufferEncoder: Encoder[Buf] = Encoders.kryo[Buf]
-    override def outputEncoder: Encoder[Result] = Encoders.kryo[Result]
+    Buf(clusters, seen, failed)
   }
+
+  /** The driver merge: one union normalization over every share's clusters. */
+  def merge(policy: MergePolicy, parts: Seq[Buf]): Result =
+    Result(policy.turnIntoUnion(parts.flatMap(_.clusters)),
+      parts.map(_.seen).sum, parts.map(_.failed).sum)
+
+  /** One job: each task folds its lines through `record`, built once per
+    * task from its own extractor; the driver merges the partials.
+    */
+  private[ingest] def foldLines(lines: Dataset[String], policy: MergePolicy,
+                                dateFormats: Seq[String])(
+      record: TypeExtractor => String => Either[String, SchemaType]): Result =
+    merge(policy, lines.mapPartitions { it =>
+      val extract = record(new TypeExtractor(policy, dateFormats))
+      Iterator.single(fold(policy, it.map(extract)))
+    }(Encoders.kryo[Buf]).collect().toSeq)
 
   /** Infer the merged observed schema of a Dataset of JSON lines. */
   def infer(lines: Dataset[String],
             policy: MergePolicy = StrictMerge,
-            dateFormats: Seq[String] = Nil): Result = {
-    import lines.sparkSession.implicits._
-    lines.select(new SchemaAgg(policy, dateFormats).toColumn).collect()(0)
-  }
+            dateFormats: Seq[String] = Nil): Result =
+    foldLines(lines, policy, dateFormats)(extractor => extractor.extractLine)
 
   /** Reference entry point S1/S2 analog: JSONL files -> schema. */
   def inferFiles(spark: SparkSession, paths: Seq[String],

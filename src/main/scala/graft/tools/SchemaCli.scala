@@ -1,8 +1,10 @@
 package graft.tools
 
+import graft.ingest.{CsvIngest, JsonSchemaInference}
 import graft.types._
 
 import scala.io.Source
+import scala.util.Using
 
 /** Local (non-Spark) schema analysis driver — the analog of the reference's
   * top-level entry point `analyze-json-schema` (core.clj:57-67): JSON-lines
@@ -43,36 +45,30 @@ object SchemaCli {
     val extractor = new TypeExtractor(policy, dateFormats)
 
     var n = 0
-    var failed = 0
-    var schema: Option[SchemaType] = None
     var csvHeaderNames: Option[Seq[String]] = None
-    files.foreach { f =>
-      val src = Source.fromFile(f, "UTF-8")
-      try src.getLines().foreach { line =>
-        csvDelim match {
-          case Some(delim) if csvHeader && csvHeaderNames.isEmpty =>
-            csvHeaderNames = Some(line.split(delim, -1).toSeq.map(_.trim))
-          case Some(delim) =>
-            n += 1
-            val t = extractor.extract(
-              graft.ingest.CsvIngest.parseCsvLine(line, delim, csvHeaderNames))
-            schema = Some(schema.fold(t)(s => policy.mergeTwo(s, t)))
-          case None =>
-            n += 1
-            extractor.extractLine(line) match {
-              case Left(err) =>
-                failed += 1
-                System.err.println(s"Line #: $n, $err\n$line\n---------")
-              case Right(t) =>
-                schema = Some(schema.fold(t)(s => policy.mergeTwo(s, t)))
-            }
-        }
-      } finally src.close()
+    // one line's record for the shared fold; a CSV header line is none
+    def record(line: String): Option[Either[String, SchemaType]] = csvDelim match {
+      case Some(delim) if csvHeader && csvHeaderNames.isEmpty =>
+        csvHeaderNames = Some(line.split(delim, -1).toSeq.map(_.trim))
+        None
+      case Some(delim) =>
+        n += 1
+        Some(Right(extractor.extract(CsvIngest.parseCsvLine(line, delim, csvHeaderNames))))
+      case None =>
+        n += 1
+        val r = extractor.extractLine(line)
+        r.left.foreach(err => System.err.println(s"Line #: $n, $err\n$line\n---------"))
+        Some(r)
     }
-    println(s"Analyzed $n entries. $failed failed.")
-    schema.foreach(s => println(SchemaType.render(s)))
+    val res = JsonSchemaInference.merge(policy, files.map { f =>
+      Using.resource(Source.fromFile(f, "UTF-8")) { src =>
+        JsonSchemaInference.fold(policy, src.getLines().flatMap(record))
+      }
+    })
+    println(s"Analyzed ${res.seen} entries. ${res.failed} failed.")
+    res.schema.foreach(s => println(SchemaType.render(s)))
 
-    (export, schema) match {
+    (export, res.schema) match {
       case (Some("avro"), Some(s)) =>
         println(graft.export.AvroExport.toAvro(s))
       case (Some(dialect @ ("mysql" | "vertica" | "table")), Some(s)) =>

@@ -116,8 +116,9 @@ class ParserSpec extends AnyFunSuite {
       assert(parse(l) == Right(JObj(Map.empty)))
       assert(TypeExtractor.merging().extractLine(l) == emptyDoc)
     }
-    val agg = new JsonSchemaInference.SchemaAgg(StrictMerge, Nil)
-    val b = Seq("", """{"a": 1}""", "{").foldLeft(agg.zero)(agg.reduce)
+    val extractor = TypeExtractor.merging()
+    val b = JsonSchemaInference.merge(StrictMerge, Seq(JsonSchemaInference.fold(StrictMerge,
+      Iterator("", """{"a": 1}""", "{").map(extractor.extractLine))))
     assert(b.seen == 3 && b.failed == 1)
     assert(b.schema.contains(UnionT.of(DocT(Map.empty), DocT(Map("a" -> IntT(1, 1))))))
   }

@@ -4,6 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
+import graft.ingest.JsonSchemaInference
+
 /** Property-based checks of the algebraic laws the reference only proves
   * pointwise (merge_test.clj:480-496 order-independence, 370-372
   * idempotence): the merge monoid must be commutative and idempotent under
@@ -87,6 +89,16 @@ class MonoidLawsSpec extends AnyFunSuite {
     forAll(Gen.nonEmptyListOf(genT)) { ts =>
       val folded = StrictMerge.mergeAll(ts)
       assert(StrictMerge.mergeTwo(folded, ts.head) == folded)
+    }
+  }
+
+  test("the inference fold (clusters per share, one union normalization) equals the mergeTwo fold") {
+    def clustered(p: MergePolicy, ts: Seq[SchemaType]) = JsonSchemaInference.merge(p,
+      ts.grouped(3).map(g => JsonSchemaInference.fold(p, g.iterator.map(Right(_)))).toSeq)
+    forAll(Gen.nonEmptyListOf(genT)) { ts =>
+      Seq(StrictMerge, SimplifyMerge).foreach { p =>
+        assert(clustered(p, ts) == JsonSchemaInference.Result(Some(p.mergeAll(ts)), ts.size, 0))
+      }
     }
   }
 }
