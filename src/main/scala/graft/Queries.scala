@@ -267,9 +267,7 @@ object Queries {
       |  CAST(count(*) AS BIGINT) AS n
       |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Stopword-family profile per labeled language (the lang-id features;
-    * the classifier itself is asserted in ScalaTest).
-    */
+  /** Stopword-family profile per labeled language. */
   private def q13(spark: SparkSession, dir: String): DataFrame = {
     val docs = tbl(spark, dir, "documents")
     val hits = Seq("en", "es", "fr", "de").map { l =>
@@ -639,7 +637,7 @@ object Queries {
     val pairs = graft.ops.Decontamination.containmentPairs(
       docs.filter(!col("source").isin(evalSources: _*)),
       docs.filter(col("source").isin(evalSources: _*)),
-      "text", "doc_id", k = 3, minContainment = 0.85).value
+      "text", "doc_id", k = 3, minContainment = 0.85)
     pairs.select(col("train_id"), col("eval_id"),
         round(col("containment"), 6).as("containment"))
       .filter(col("containment") >= 0.9)
@@ -1991,8 +1989,6 @@ object Queries {
     * rank-order char-trigram profiles): profiles trained from the corpus'
     * own (lang, text) labels, every document classified by out-of-place
     * rank distance — all integer arithmetic, replayed exactly in DuckDB.
-    * The stopword heuristic (q12's langId) stays as the label-less
-    * fallback; this is the trained path.
     */
   private def q58(spark: SparkSession, dir: String): DataFrame = {
     val docs = tbl(spark, dir, "documents").filter(col("text").isNotNull)

@@ -7,7 +7,8 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.constraints.{ResumableValidator, SuiteStatsBySourceAgg, Validator}
 import graft.sequences.SequenceSynth
 
-/** spark-submit entry point: synth | validate | throughput.
+/** spark-submit entry point: one subcommand per run, from the `commands`
+  * list below.
   *
   * Mirrors the reference's top-level driver (`analyze-json-schema`,
   * core.clj:57-67): run the suite, print the per-partition verdict
@@ -97,8 +98,10 @@ object Main {
           case None =>
             val df = spark.read.parquet(input)
             val rep = Validator.validateOneScan(spark, df, dim, cfg)
+            // summed on the driver: a table with no rows has no stats
+            // rows, and its stats frame has no n_rows column to aggregate
             ResumableValidator.RunSummary(rep, Nil, Nil,
-              rep.sourceStats.agg(sum("n_rows")).collect()(0).getLong(0))
+              rep.sourceStats.collect().map(_.getAs[Long]("n_rows")).sum)
         }
         val secs = (System.nanoTime() - t0) / 1e9
         val verdicts = summary.report.verdicts.collect()
@@ -374,8 +377,7 @@ object Main {
             if (dedup) "mine" else "process"}.")
         else if (dedup) {
           graft.streaming.StreamingDedup.start(spark, input, statePath,
-            graft.streaming.StreamingDedup.Params(
-              minJaccard = flagOr(opts, "jaccard", "0.5").toDouble),
+            flagOr(opts, "jaccard", "0.5").toDouble,
             streamTrigger(opts), schema).awaitTermination()
           val n = scala.util.Try(spark.read.parquet(
               graft.streaming.StreamingDedup.candidatesPath(statePath)).count())

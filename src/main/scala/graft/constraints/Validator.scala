@@ -32,21 +32,14 @@ import graft.stats.{Drift, KllSketchAgg}
   */
 object Validator {
 
-  /** The suite's two inputs besides the data and the dim table: the
-    * table bounds and the declared column DDL (reference db_types side
-    * door: observed stats are checked against these capacities with the
-    * `wider?` truncation predicate, db_types/common.clj:20-115). The
-    * sketch sizes are engine constants; with the bounds they form the
-    * persisted [[SuiteStatsBySourceAgg.suiteKey]].
+  /** The suite's input besides the data and the dim table: the table
+    * bounds. The sketch sizes are engine constants; with the bounds they
+    * form the persisted [[SuiteStatsBySourceAgg.suiteKey]].
     */
   final case class SuiteConfig(
       vocabSize: Int = 50000,
       minNtok: Int = 16,
-      maxNtok: Int = 513,
-      declaredDdl: Map[String, String] = Map(
-        "doc_id" -> "varchar(32)",
-        "n_tok" -> "int",
-        "tokens_element" -> "int")) {
+      maxNtok: Int = 513) {
     /** KLL sketch size of the n_tok drift sketches. */
     val kllK: Int = 200
     /** Id-range bins of the token-ID drift histogram. */
@@ -60,7 +53,16 @@ object Validator {
   private val KsThreshold = 0.30
   private val TokenPsiThreshold = 0.25
 
-  /** The dialect of [[SuiteConfig.declaredDdl]] and [[suggestDdl]]. */
+  /** The declared column DDL of the north-rule table (reference db_types
+    * side door: observed stats are checked against these capacities with
+    * the `wider?` truncation predicate, db_types/common.clj:20-115).
+    */
+  private val DeclaredDdl: Map[String, String] = Map(
+    "doc_id" -> "varchar(32)",
+    "n_tok" -> "int",
+    "tokens_element" -> "int")
+
+  /** The dialect of [[DeclaredDdl]] and [[suggestDdl]]. */
   private val DdlDialect: graft.dbtypes.DbTypeTranslator = graft.dbtypes.MySqlTranslator
 
   final case class ValidationReport(
@@ -208,7 +210,7 @@ object Validator {
       // use-case (README.md:86-104), evaluated from stats alone
       val declaredFit = {
         val observed = observedTypes(r).toMap
-        cfg.declaredDdl.toSeq.sortBy(_._1).flatMap { case (colName, ddl) =>
+        DeclaredDdl.toSeq.sortBy(_._1).flatMap { case (colName, ddl) =>
           observed.get(colName).map { obs =>
             val declared = DdlDialect.colTypeToSchemaType(ddl)
             val pass = graft.dbtypes.Wider.eqWidthOrNarrower(obs, declared)

@@ -7,9 +7,13 @@ import org.apache.spark.sql.DataFrame
   * shingle/signature pass feeds both sides of the bucket self-join; the
   * persisted frame must outlive the returned (lazy) DataFrame, so the
   * miner cannot unpersist it itself. Every operator that pins tables
-  * returns this handle, with one contract: consume `value`, then either
-  * `close()` to unpersist exactly what the call pinned, or deliberately
-  * leak the tables (a caller that wants later plans to ride them, until
+  * returns this handle — the 11 in `ops/`: `Dedup`'s exactGroups,
+  * dropExactDuplicates, minhashCandidates, simhashCandidates,
+  * ngramJaccard and embeddingNearDups, `Similarity.bucketedKnn`,
+  * `IncrementalDedup.newDocCandidates`, `SourceOverlap.overlapMatrix`
+  * and `DupSpans`' dupSpans and dupSpansKeepFirst — with one contract:
+  * consume `value`, then either `close()` to unpersist exactly what the
+  * call pinned, or deliberately leak the tables (a caller that wants later plans to ride them, until
   * `spark.catalog.clearCache()`, which drops every cached table in the
   * session).
   */

@@ -197,9 +197,8 @@ object Components {
     // outright: measured at 20M scattered edges, per-partition
     // contraction achieves nothing (a component's edges rarely colocate)
     // while its typed encode/decode overhead costs 40-60%
-    // (OPTIMIZATION_r07.md). contractMaxNodes <= 0 disables.
-    if (contractMaxNodes > 0 && edgesSig._1 > 0 &&
-        edgesSig._1 <= contractMaxNodes) {
+    // (OPTIMIZATION_r07.md).
+    if (edgesSig._1 > 0 && edgesSig._1 <= contractMaxNodes) {
       edges = labeled("cc: contract")(
         canon(localContract(edges.coalesce(1), contractMaxNodes)).localCheckpoint(true))
       edgesSig = labeled("cc: contract sig")(sig(edges))

@@ -11,17 +11,15 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Model-based language identification: Cavnar & Trenkle 1994 rank-order
   * character-n-gram profiles ("N-Gram-Based Text Categorization", public).
-  * Replaces guesswork-free the stopword heuristic ([[TextOps.langId]],
-  * kept as the documented fallback for label-less corpora): profiles are
-  * TRAINED from labeled text, so any language with training data is
-  * covered without curated stopword lists, and every step is
+  * Profiles are TRAINED from labeled text, so any language with training
+  * data is covered without curated stopword lists, and every step is
   * deterministic integer arithmetic — rank distance replays exactly in
   * DuckDB (q58).
   *
   * Semantics (pinned by CtLangIdSpec):
-  *   - n-grams: all length-`n` character substrings of the raw text
+  *   - n-grams: all length-`n` (3) character substrings of the raw text
   *     (spaces included; no word padding);
-  *   - a profile is the top-`k` n-grams by (count DESC, n-gram ASC),
+  *   - a profile is the top-`k` (20) n-grams by (count DESC, n-gram ASC),
   *     ranks 0-based;
   *   - out-of-place distance from doc profile D to language profile L:
   *     sum over D's entries of |rank_D - rank_L|, with `k` as the
@@ -41,6 +39,10 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object CtLangId {
 
+  /** Character n-gram width and profile length. */
+  private val N = 3
+  private val K = 20
+
   /** Language profiles, collected (catalog-sized: #langs x k). Sorted by
     * language code for deterministic downstream iteration.
     *
@@ -52,16 +54,16 @@ object CtLangId {
     * [[ngramArray]] twin stays as the semantic oracle, pinned in
     * CtLangIdSpec).
     */
-  def trainProfiles(df: DataFrame, textCol: String, langCol: String,
-                    n: Int = 3, k: Int = 20): Seq[(String, Seq[String])] = {
+  def trainProfiles(df: DataFrame, textCol: String,
+                    langCol: String): Seq[(String, Seq[String])] = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("c").desc, col("g"))
     df.filter(col(textCol).isNotNull && col(langCol).isNotNull)
       .select(col(langCol).as("lang"),
-        explode(ngramCounts(col(textCol), n)).as(Seq("g", "dc")))
+        explode(ngramCounts(col(textCol), N)).as(Seq("g", "dc")))
       .groupBy("lang", "g").agg(sum(col("dc")).as("c"))
       .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .filter(col("rk") <= K)
       .orderBy(col("lang"), col("rk"))
       .collect()
       .map(r => (r.getString(0), r.getString(1)))
@@ -83,22 +85,20 @@ object CtLangId {
         i => text.substr(i, lit(n))))
 
   /** Document profile: top-k n-grams by (count DESC, n-gram ASC). */
-  def profile(text: Column, n: Int = 3, k: Int = 20): Column =
-    ColumnBridge.column(CtProfile(ColumnBridge.expression(text), n, k))
+  def profile(text: Column): Column =
+    ColumnBridge.column(CtProfile(ColumnBridge.expression(text), N, K))
 
   /** Predicted language for a document profile under trained profiles. */
-  def classify(profileArr: Column, profiles: Seq[(String, Seq[String])],
-               k: Int = 20): Column =
+  def classify(profileArr: Column, profiles: Seq[(String, Seq[String])]): Column =
     ColumnBridge.column(CtClassify(ColumnBridge.expression(profileArr),
-      profiles, k))
+      profiles, K))
 
   /** Driver-side single-string classification (spec parity surface). */
-  def classifyString(text: String, profiles: Seq[(String, Seq[String])],
-                     n: Int = 3, k: Int = 20): String = {
-    val prof = CtProfile.compute(UTF8String.fromString(text), n, k)
+  def classifyString(text: String, profiles: Seq[(String, Seq[String])]): String = {
+    val prof = CtProfile.compute(UTF8String.fromString(text), N, K)
     CtClassify.computeFromStrings(
       (0 until prof.numElements()).map(i => prof.getUTF8String(i).toString),
-      new CtRuntime(profiles, k))
+      new CtRuntime(profiles, K))
   }
 }
 

@@ -16,7 +16,9 @@ import org.apache.spark.storage.StorageLevel
   * [[Cached]] handle: consume `value`, then `close()` to unpersist
   * deterministically (what Pipeline does), or deliberately leak the
   * tables for the session (what the query battery does, so later plans
-  * can ride the cache until `spark.catalog.clearCache()`).
+  * can ride the cache until `spark.catalog.clearCache()`). Exact dedup
+  * persists its narrow hash table the same way; [[Cached]] lists every
+  * operator under this contract.
   */
 object Dedup {
 
@@ -37,6 +39,9 @@ object Dedup {
   private[graft] def contentHash2(text: Column): Column =
     org.apache.spark.sql.functions.xxhash64(lit(HashSeed2), text)
 
+  /** Ids sampled per exact duplicate group ([[exactGroups]]' `all_ids`). */
+  private val MaxIds = 256
+
   /** Exact duplicate groups: (dup_hash, dup_hash2, n, keep_id, all_ids),
     * one row per content with more than one occurrence. Groups by TWO
     * independent 64-bit content hashes, NOT the text itself: at corpus
@@ -47,32 +52,29 @@ object Dedup {
     * physical corpus size, still payload-free.
     * `keep` picks the minimum id as the canonical representative.
     *
-    * `all_ids` holds the `maxIds` SMALLEST ids of the group (ascending).
+    * `all_ids` holds the [[MaxIds]] SMALLEST ids of the group (ascending).
     * An unbounded collect_list of a mega-duplicated content (a boiler-
     * plate page occurring 1e8 times) would build a 1e8-element array in
-    * one aggregation buffer; instead the ids ride a `row_number <= maxIds`
+    * one aggregation buffer; instead the ids ride a `row_number <= MaxIds`
     * window whose rank filter becomes a partial WindowGroupLimit — each
-    * map partition forwards at most maxIds rows per content (the shape
+    * map partition forwards at most MaxIds rows per content (the shape
     * PlanSpec pins on the q08/q38 rank windows). `n` stays the
     * EXACT group size (its count is a plain partial-aggregated groupBy).
-    * Keep maxIds below spark.sql.optimizer.windowGroupLimitThreshold
+    * MaxIds stays below spark.sql.optimizer.windowGroupLimitThreshold
     * (1000 in this build) — past it Catalyst skips the rewrite and the
     * window degrades to the unbounded single-partition shape. (The rule
     * also correctly skips when the child's row count is statically known
     * to be <= the limit — a tiny LocalRelation won't show the node.)
     */
-  def exactGroups(df: DataFrame, text: Column, id: Column,
-                  maxIds: Int = 256): Cached[DataFrame] = {
-    require(maxIds >= 1, "maxIds must be >= 1 (0 would drop every group)")
+  def exactGroups(df: DataFrame, text: Column, id: Column): Cached[DataFrame] = {
     val threshold = df.sparkSession.sessionState.conf
       .getConfString("spark.sql.optimizer.windowGroupLimitThreshold", "1000")
       .toLong
-    require(maxIds < threshold,
-      s"maxIds ($maxIds) must stay below " +
+    require(MaxIds < threshold,
+      s"MaxIds ($MaxIds) must stay below " +
         s"spark.sql.optimizer.windowGroupLimitThreshold ($threshold): past " +
         "it Catalyst skips the WindowGroupLimit rewrite and the id sample " +
-        "degrades to an unbounded single-partition window — raise the conf " +
-        "alongside maxIds if a bigger sample is really needed")
+        "degrades to an unbounded single-partition window")
     // persisted so the stats and sample subplans share one scan + hash
     // pass (narrow (hash, hash2, id) rows)
     val hashed = df.select(xxhash64(text).as("dup_hash"),
@@ -85,7 +87,7 @@ object Dedup {
     val w = Window.partitionBy(keys: _*).orderBy(col("__id"))
     val sampled = hashed
       .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= maxIds)
+      .filter(col("__rn") <= MaxIds)
       .groupBy(keys: _*)
       .agg(sort_array(collect_list(col("__id"))).as("all_ids"))
     Cached(stats.join(sampled, Seq("dup_hash", "dup_hash2"))
@@ -164,6 +166,11 @@ object Dedup {
           slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))).cast("string")).as("band_hash")))
   }
 
+  /** Ids per (band, band_hash) bucket of [[minhashCandidates]]; larger
+    * buckets are dropped.
+    */
+  private val MinhashMaxBucket = 64
+
   /** Near-duplicate candidate pairs via MinHash+LSH over word shingles.
     * Pipeline: shingle -> minhash -> band -> self-join within buckets ->
     * exact-Jaccard rerank on the signatures. The band groupBy is the only
@@ -171,8 +178,7 @@ object Dedup {
     */
   def minhashCandidates(df: DataFrame, textCol: String, idCol: String,
                         shingleK: Int = 3, perms: Int = 32, bands: Int = 8,
-                        minJaccard: Double = 0.5,
-                        maxBucket: Int = 64): Cached[DataFrame] = {
+                        minJaccard: Double = 0.5): Cached[DataFrame] = {
     val sigs = df.select(col(idCol).as("id"),
         minhashSignature(TextOps.shingles(col(textCol), shingleK), perms).as("sig"))
       .withColumn("bandinfo", explode(lshBands(col("sig"), bands, perms)))
@@ -184,7 +190,7 @@ object Dedup {
     // shingles) would dominate the join without finding near-dups. One
     // window pass over the (band, band_hash) shuffle does it — no second
     // scan + agg + join.
-    val pruned = capBuckets(sigs, Seq("band", "band_hash"), maxBucket)
+    val pruned = capBuckets(sigs, Seq("band", "band_hash"), MinhashMaxBucket)
 
     // bucket-local pair generation: same (band, band_hash), id < id2;
     // est_jaccard is computed INSIDE the join and only narrow columns
@@ -314,7 +320,7 @@ object Dedup {
 
   /** Embedding near-duplicates: cosine >= threshold among candidate pairs
     * blocked by `tables` INDEPENDENT random-hyperplane signature tables
-    * (seeds seed..seed+tables-1), OR'd — the standard banded-LSH recall
+    * (seeds 7..7+tables-1), OR'd — the standard banded-LSH recall
     * amplification. A single table of p planes finds a pair at angle
     * theta with probability (1 - theta/pi)^p (~0.29 at cosine 0.9 with
     * p=8 — round-1's silent recall hole); b OR'd tables lift that to
@@ -324,10 +330,8 @@ object Dedup {
     */
   def embeddingNearDups(df: DataFrame, vecCol: String, idCol: String,
                         threshold: Double = 0.95, planes: Int = 8,
-                        tables: Int = 16, seed: Long = 7L,
-                        maxBucket: Int = 1 << 20): Cached[DataFrame] = {
-    val pruned = rhpBuckets(df, vecCol, idCol, planes, tables, seed,
-      maxBucket)
+                        tables: Int = 16): Cached[DataFrame] = {
+    val pruned = rhpBuckets(df, vecCol, idCol, planes, tables, seed = 7L)
     val l = pruned.value.alias("l"); val r = pruned.value.alias("r")
     // cosine is evaluated inside the bucket-local join (once per shared
     // table); only (id_a, id_b, cosine) survives into the pair dedup
@@ -343,11 +347,11 @@ object Dedup {
   /** The shared multi-table RHP blocking stage of [[embeddingNearDups]]
     * and [[Similarity.bucketedKnn]]: `tables` independent signature
     * tables (seeds seed..seed+tables-1), exploded to (id, v, t, blk)
-    * rows, degenerate buckets capped.
+    * rows, buckets above 2^20 ids capped.
     */
   private[ops] def rhpBuckets(df: DataFrame, vecCol: String, idCol: String,
-                              planes: Int, tables: Int, seed: Long,
-                              maxBucket: Int): Cached[DataFrame] = {
+                              planes: Int, tables: Int,
+                              seed: Long): Cached[DataFrame] = {
     val sigStructs = (0 until tables).map { t =>
       struct(lit(t).as("t"),
         Similarity.rhpSignature(col("v"), planes, seed + t).as("blk"))
@@ -356,7 +360,7 @@ object Dedup {
       .withColumn("piece", explode(array(sigStructs: _*)))
       .select(col("id"), col("v"),
         col("piece.t").as("t"), col("piece.blk").as("blk"))
-    capBuckets(sigs, Seq("t", "blk"), maxBucket)
+    capBuckets(sigs, Seq("t", "blk"), 1 << 20)
   }
 
   /** Drop buckets larger than `maxBucket` from the signature table.

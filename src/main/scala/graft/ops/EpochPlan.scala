@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * 100-TB posture: one narrow groupBy (sources-sized), one broadcast
   * hash join of a sources-sized plan table, one codegen'd
   * filter+explode. The explode amplifies by design — its factor is
-  * budget/corpus, the quantity the caller chose — and `maxEpochs`
+  * budget/corpus, the quantity the caller chose — and [[MaxEpochs]]
   * refuses plans whose base factor exceeds a sanity bound, so a
   * mistyped budget fails loudly instead of emitting a 1000x corpus.
   */
@@ -49,11 +49,14 @@ object EpochPlan {
   /** Threshold modulus — mixKey values must be uniform in [0, M). */
   val M: Long = SourceMix.M
 
+  /** Sanity bound on a source's whole-epoch count. */
+  private val MaxEpochs = 1000L
+
   /** Per-source (base copies, fractional threshold) from per-source
     * token totals and a token budget. Pure integer math (BigInt).
     */
-  private[ops] def plan(tokens: Seq[(String, Long)], budgetTokens: Long,
-                        maxEpochs: Long = 1000L): Seq[(String, Long, Long)] = {
+  private[ops] def plan(tokens: Seq[(String, Long)],
+                        budgetTokens: Long): Seq[(String, Long, Long)] = {
     require(budgetTokens >= 0, s"budgetTokens ($budgetTokens) must be >= 0")
     val weighted = tokens.map { case (s, t) =>
       require(t > 0, s"source $s has non-positive token total $t")
@@ -63,9 +66,9 @@ object EpochPlan {
     weighted.map { case (s, t, w) =>
       val quota = (BigInt(budgetTokens) * w) / sumW
       val base = quota / t
-      require(base <= maxEpochs,
-        s"source $s plans ${base} whole epochs (> maxEpochs $maxEpochs); " +
-          "budget is likely mistyped — raise maxEpochs explicitly if not")
+      require(base <= MaxEpochs,
+        s"source $s plans $base whole epochs (more than $MaxEpochs); " +
+          "the budget is likely mistyped")
       val thr = (BigInt(M) * (quota % t)) / t
       (s, base.toLong, thr.toLong)
     }
@@ -78,8 +81,7 @@ object EpochPlan {
     */
   def epochSample(df: DataFrame, idCol: String, sourceCol: String,
                   tokensCol: String, budgetTokens: Long,
-                  mixKey: Option[Column] = None,
-                  maxEpochs: Long = 1000L): DataFrame = {
+                  mixKey: Option[Column] = None): DataFrame = {
     require(df.schema(sourceCol).dataType ==
         org.apache.spark.sql.types.StringType,
       s"$sourceCol must be a string column (got " +
@@ -96,7 +98,7 @@ object EpochPlan {
     if (totals.isEmpty) return df.limit(0).withColumn("epoch", lit(1L))
     val spark = df.sparkSession
     import spark.implicits._
-    val planDf = plan(totals, budgetTokens, maxEpochs)
+    val planDf = plan(totals, budgetTokens)
       .toDF(sourceCol, "__base", "__thr")
     val key = mixKey.getOrElse(SourceMix.defaultKey(col(idCol)))
     df.join(broadcast(planDf), Seq(sourceCol))

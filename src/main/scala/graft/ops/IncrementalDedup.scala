@@ -19,12 +19,15 @@ import graft.lineage.Commit
   * [[graft.streaming.CompactedIndex]]).
   *
   * Giant buckets are capped by COMBINED size (index + batch rows per
-  * (band, band_hash)), the same `maxBucket` semantics as full mining
+  * (band, band_hash)), the same [[MaxBucket]] semantics as full mining
   * measured over the union corpus — so incremental results equal full
   * mining restricted to batch-touching pairs, degenerate buckets
   * included.
   */
 object IncrementalDedup {
+
+  /** Largest combined (index + batch) bucket that is mined. */
+  private[graft] val MaxBucket = 64
 
   /** The banded signature rows of a corpus (the index's row shape). */
   private[graft] def signatureRows(df: DataFrame, textCol: String, idCol: String,
@@ -95,7 +98,6 @@ object IncrementalDedup {
     */
   private[graft] def candidatePairs(fresh: DataFrame, index: Option[DataFrame],
                                     perms: Int, minJaccard: Double,
-                                    maxBucket: Int,
                                     indexCounts: Option[DataFrame] = None): DataFrame = {
     val freshCounts = fresh.groupBy(col("band"), col("band_hash"))
       .agg(count(lit(1)).as("fc"))
@@ -114,7 +116,7 @@ object IncrementalDedup {
             (col("fc") + coalesce(col("ic"), lit(0L))).as("n"))
     }
     // only buckets the batch touches matter, and only small ones join
-    val okBuckets = combined.filter(col("n") <= maxBucket)
+    val okBuckets = combined.filter(col("n") <= MaxBucket)
       .select(col("band"), col("band_hash"))
     val freshOk = fresh.join(okBuckets, Seq("band", "band_hash"))
 
@@ -170,8 +172,7 @@ object IncrementalDedup {
   def newDocCandidates(spark: SparkSession, newDocs: DataFrame,
                        textCol: String, idCol: String, indexPath: String,
                        shingleK: Int = 3, perms: Int = 32, bands: Int = 16,
-                       minJaccard: Double = 0.5,
-                       maxBucket: Int = 64): Cached[DataFrame] = {
+                       minJaccard: Double = 0.5): Cached[DataFrame] = {
     val fresh = signatureRows(newDocs, textCol, idCol, shingleK, perms, bands)
       .persist()
     // explicit read schemas: the index's row shape is BY CONSTRUCTION the
@@ -206,7 +207,7 @@ object IncrementalDedup {
       else None
     Cached(candidatePairs(fresh,
         Some(spark.read.schema(indexSchema).parquet(indexPath)),
-        perms, minJaccard, maxBucket, counts),
+        perms, minJaccard, counts),
       Seq(fresh))
   }
 }

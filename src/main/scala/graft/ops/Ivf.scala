@@ -36,6 +36,9 @@ object Ivf {
     */
   private val MeanQuantum = (1L << 20).toDouble
 
+  /** Lloyd refinement steps of [[trainCentroids]]. */
+  private val RefineIters = 2
+
   /** Read an array<float> or array<double> row cell as Array[Float]. */
   private def rowVec(r: org.apache.spark.sql.Row): Array[Float] =
     r.getSeq[Any](0).map {
@@ -48,13 +51,12 @@ object Ivf {
     *  - seeds: the `nlist` rows with smallest xxhash64(id, seed) — a
     *    uniform deterministic sample, planned as TakeOrderedAndProject
     *    (per-partition heaps, no global sort);
-    *  - refinement: `refineIters` Lloyd steps over every vector (rows x
+    *  - refinement: [[RefineIters]] Lloyd steps over every vector (rows x
     *    dim through a (cell, pos) hash aggregate, partially merged
     *    map-side to at most nlist x dim sums per task).
     */
   def trainCentroids(df: DataFrame, vecCol: String, idCol: String,
-                     nlist: Int, seed: Long = 7L,
-                     refineIters: Int = 2): Array[Array[Float]] = {
+                     nlist: Int, seed: Long = 7L): Array[Array[Float]] = {
     var cents: Array[Array[Float]] =
       df.select(col(vecCol).as("v"), col(idCol).as("i"),
           xxhash64(col(idCol), lit(seed)).as("h"))
@@ -62,14 +64,12 @@ object Ivf {
         .select(col("v")).collect()
         .map(rowVec)
 
-    val vecs0 = df.select(col(vecCol).as("v"))
     // every Lloyd iteration consumes the vectors — persist them so the
     // corpus is scanned once, not once per refinement
-    val vecs =
-      if (refineIters > 1) vecs0.persist() else vecs0
+    val vecs = df.select(col(vecCol).as("v")).persist()
     try {
     var it = 0
-    while (it < refineIters) {
+    while (it < RefineIters) {
       // assign vectors -> quantized-sum mean per (cell, dimension); empty
       // cells keep their previous centroid (standard Lloyd degenerate-
       // cell rule)
@@ -89,7 +89,7 @@ object Ivf {
       cents = next
       it += 1
     }
-    } finally if (refineIters > 1) vecs.unpersist()
+    } finally vecs.unpersist()
     cents
   }
 
@@ -97,8 +97,8 @@ object Ivf {
     * expression, centroids broadcast inside the plan).
     */
   def build(df: DataFrame, vecCol: String, idCol: String,
-            nlist: Int = 64, seed: Long = 7L, refineIters: Int = 2): Index = {
-    val cents = trainCentroids(df, vecCol, idCol, nlist, seed, refineIters)
+            nlist: Int = 64, seed: Long = 7L): Index = {
+    val cents = trainCentroids(df, vecCol, idCol, nlist, seed)
     Index(cents, df.withColumn("__cell", nearestCell(col(vecCol), cents)))
   }
 
@@ -138,8 +138,8 @@ object Ivf {
     */
   def ivfTopK(df: DataFrame, vecCol: String, idCol: String,
               query: Seq[Float], k: Int, nlist: Int = 64, nProbe: Int = 8,
-              seed: Long = 7L, refineIters: Int = 2): DataFrame =
-    topK(build(df, vecCol, idCol, nlist, seed, refineIters),
+              seed: Long = 7L): DataFrame =
+    topK(build(df, vecCol, idCol, nlist, seed),
       vecCol, idCol, query, k, nProbe)
 
   def nearestCell(vec: Column, centroids: Array[Array[Float]]): Column =

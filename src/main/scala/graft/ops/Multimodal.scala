@@ -24,6 +24,9 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
+  /** Rows per decode batch of the extraction stages. */
+  private val BatchSize = 64
+
   /** Typed row of the pruned input projection (encoder-backed — the
     * mapPartitions stages stay inside one logical plan instead of
     * dropping to an RDD and re-attaching a schema).
@@ -378,11 +381,11 @@ object Multimodal {
     * n_bytes = 0 vs decode failure's n_bytes = payload length (the shared
     * error-channel convention).
     */
-  def extractAudioFeatures(media: DataFrame, batchSize: Int = 64): DataFrame = {
+  def extractAudioFeatures(media: DataFrame): DataFrame = {
     import media.sparkSession.implicits._
     media.select("media_id", "kind", "bytes").as[MediaIn]
       .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { rows =>
+        it.grouped(BatchSize).flatMap { rows =>
           rows.map { m =>
             def fail(nb: Int) = AudioFeature(m.media_id, m.kind, nb,
               ok = false, 0, 0, 0, 0L, 0L, 0, 0L, 0L, 0L)
@@ -403,17 +406,16 @@ object Multimodal {
   }
 
   /** Per-partition batched feature extraction. Batches bound peak memory
-    * (a real decoder holds `batchSize` frames at once, not a partition).
+    * (a real decoder holds [[BatchSize]] frames at once, not a partition).
     * Typed `Dataset.mapPartitions` keeps the stage inside one logical plan
     * (encoder serialization, no RDD hop), so upstream pruning/pushdown and
     * downstream optimization see through it.
     */
-  def extractFeatures(media: DataFrame, decoder: Decoder = JdkDecoder,
-                      batchSize: Int = 64): DataFrame = {
+  def extractFeatures(media: DataFrame, decoder: Decoder = JdkDecoder): DataFrame = {
     import media.sparkSession.implicits._
     media.select("media_id", "kind", "bytes").as[MediaIn]
       .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { rows =>
+        it.grouped(BatchSize).flatMap { rows =>
           val batch = rows.map(m => (m.media_id, m.kind, m.bytes))
           decoder.decode(batch).map { case (id, kind, n, ok, feat) =>
             MediaFeature(id, kind, n, ok, feat)

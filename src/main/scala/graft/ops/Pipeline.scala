@@ -22,20 +22,12 @@ object Pipeline {
 
   final case class Config(
       evalSources: Seq[String] = Nil,
-      rules: QualityFilter.Rules = QualityFilter.Rules(),
       /** near-dup fold threshold (exact word-shingle Jaccard) */
       jaccardThreshold: Double = 0.8,
-      /** eval-in-train n-gram containment threshold */
-      containmentThreshold: Double = 0.8,
       /** pack budget in characters of `text` (in BPE TOKENS when
         * `packBpeMerges` > 0)
         */
       budget: Int = 4096,
-      /** id-range width of the packing key's bucket component
-        * ([[Packing.bucketKey]]) — packs never cross a bucket, so
-        * parallelism is #sources x #occupied-buckets
-        */
-      idsPerBucket: Long = 100000L,
       /** leakage-free holdout: when set, the corpus gains
         * (split_rep, split) columns via [[Split.leakFreeSplit]] over the
         * SAME reranked pair list the dedup stage mined (zero extra
@@ -79,7 +71,7 @@ object Pipeline {
       /** per-source adaptive length calibration: when set, each TRAIN
         * source's bottom p-fraction by post-scrub `length(text)` is
         * dropped via [[Calibration.filterCalibrated]] before dedup — the
-        * per-source refinement of the global `rules.minChars` floor.
+        * per-source refinement of the quality gate's global length floor.
         * Eval sources are never calibrated (thinning the eval set would
         * weaken decontamination). NULL-source train rows drop at this
         * stage (the [[Calibration]] contract: no group, no budget to
@@ -169,6 +161,17 @@ object Pipeline {
     */
   val MiningFloor: Double = 0.2
 
+  /** Eval-in-train n-gram containment threshold of the decontamination
+    * stage.
+    */
+  private val ContainmentThreshold = 0.8
+
+  /** Id-range width of the packing key's bucket component
+    * ([[Packing.bucketKey]]): packs never cross a bucket, so parallelism
+    * is #sources x #occupied-buckets.
+    */
+  private val IdsPerBucket = 100000L
+
   def run(docs: DataFrame, cfg: Config = Config()): Result = {
     // enforce the documented contract (round-6 ADVICE): a splitJaccard
     // below the mining floor would silently miss every pair in
@@ -189,7 +192,7 @@ object Pipeline {
       UrlOps.filterBlocked(docs, cfg.urlCol, cfg.urlBlocklist)
     }
 
-    val clean = QualityFilter.filter(gated, "text", cfg.rules)
+    val clean = QualityFilter.filter(gated, "text")
     val scrubbed = Redaction.annotate(clean, "text")
       .withColumn("text", col("text_redacted"))
       .drop("text_redacted")
@@ -254,7 +257,7 @@ object Pipeline {
       case Some(ev) =>
         canonical.join(
           Decontamination.containmentPairs(canonical, ev, "text", "doc_id",
-              minContainment = cfg.containmentThreshold).value
+              minContainment = ContainmentThreshold)
             .select(col("train_id").as("doc_id")).distinct(),
           Seq("doc_id"), "left_anti")
     }).persist(StorageLevel.MEMORY_AND_DISK)
@@ -350,7 +353,7 @@ object Pipeline {
     val packed = Packing.packGreedy(
         corpus0.withColumn("len", packLen)
           .withColumn("__pack_grp",
-            Packing.bucketKey(packBy, col("doc_id"), cfg.idsPerBucket)),
+            Packing.bucketKey(packBy, col("doc_id"), IdsPerBucket)),
         "__pack_grp", "doc_id", "len", cfg.budget)
       .withColumn("source", packSrc)
       .withColumn("bucket", packBucket)

@@ -14,47 +14,40 @@ import org.apache.spark.sql.functions._
   */
 object QualityFilter {
 
-  final case class Rules(
-      minChars: Int = 50,
-      maxChars: Int = 100000,
-      minAlphaRatio: Double = 0.6,
-      maxDigitRatio: Double = 0.2,
-      /** max fraction of duplicate 3-word shingles (intra-doc repetition,
-        * the Gopher dup-ngram rule): 1 - distinct/total over shingles.
-        */
-      maxRepetitionRatio: Double = 0.3,
-      /** allowed language ids ([[TextOps.langId]]); empty = allow all */
-      langAllow: Seq[String] = Nil)
+  /** The rule thresholds (the q36 oracle replays the same numbers). */
+  private val MinChars = 50
+  private val MaxChars = 100000
+  private val MinAlphaRatio = 0.6
+  private val MaxDigitRatio = 0.2
+  /** max fraction of duplicate 3-word shingles (intra-doc repetition, the
+    * Gopher dup-ngram rule): 1 - distinct/total over shingles.
+    */
+  private val MaxRepetitionRatio = 0.3
 
-  /** Fraction of repeated k-word shingles in one document:
-    * 1 - distinct(shingles)/total(shingles); 0 for sub-k-word texts (the
+  /** Fraction of repeated 3-word shingles in one document:
+    * 1 - distinct(shingles)/total(shingles); 0 for sub-3-word texts (the
     * single whole-text shingle cannot repeat).
     */
-  def repetitionRatio(text: Column, k: Int = 3): Column = {
-    val sh = TextOps.shingles(text, k)
+  def repetitionRatio(text: Column): Column = {
+    val sh = TextOps.shingles(text)
     lit(1.0) - size(array_distinct(sh)) / size(sh).cast("double")
   }
 
   /** The rule set as (name, violated?) columns over a `text` column. */
-  def ruleFlags(text: Column, rules: Rules): Seq[(String, Column)] = {
-    val base = Seq(
-      "too_short" -> (length(text) < rules.minChars),
-      "too_long" -> (length(text) > rules.maxChars),
-      "low_alpha" -> (TextOps.alphaRatio(text) < rules.minAlphaRatio),
-      "digit_heavy" -> (TextOps.digitRatio(text) > rules.maxDigitRatio),
-      "repetitive" -> (repetitionRatio(text) > rules.maxRepetitionRatio))
-    if (rules.langAllow.isEmpty) base
-    else base :+ ("lang" -> !TextOps.langId(text).isin(rules.langAllow: _*))
-  }
+  private def ruleFlags(text: Column): Seq[(String, Column)] = Seq(
+    "too_short" -> (length(text) < MinChars),
+    "too_long" -> (length(text) > MaxChars),
+    "low_alpha" -> (TextOps.alphaRatio(text) < MinAlphaRatio),
+    "digit_heavy" -> (TextOps.digitRatio(text) > MaxDigitRatio),
+    "repetitive" -> (repetitionRatio(text) > MaxRepetitionRatio))
 
   /** Annotate every document with (keep, reasons). A null text fails every
     * applicable rule check as "null_text" alone.
     */
-  def annotate(df: DataFrame, textCol: String, rules: Rules = Rules()): DataFrame = {
+  def annotate(df: DataFrame, textCol: String): DataFrame = {
     val text = col(textCol)
-    val flags = ruleFlags(text, rules)
     val reasons = when(text.isNull, array(lit("null_text")))
-      .otherwise(array_compact(array(flags.map { case (name, bad) =>
+      .otherwise(array_compact(array(ruleFlags(text).map { case (name, bad) =>
         when(coalesce(bad, lit(true)), lit(name)).otherwise(lit(null))
       }: _*)))
     df.withColumn("reasons", reasons)
@@ -62,7 +55,7 @@ object QualityFilter {
   }
 
   /** The kept corpus (the pipeline's pass-through side). */
-  def filter(df: DataFrame, textCol: String, rules: Rules = Rules()): DataFrame =
-    annotate(df, textCol, rules).filter(col("keep"))
+  def filter(df: DataFrame, textCol: String): DataFrame =
+    annotate(df, textCol).filter(col("keep"))
       .drop("keep", "reasons")
 }

@@ -129,8 +129,7 @@ object Similarity {
     */
   def bucketedKnn(df: DataFrame, vecCol: String, idCol: String,
                   k: Int, planes: Int = 8, tables: Int = 8,
-                  seed: Long = 7L,
-                  maxBucket: Int = 1 << 20): Cached[DataFrame] = {
+                  seed: Long = 7L): Cached[DataFrame] = {
     // same guard as Dedup.exactGroups: past the threshold Catalyst skips
     // the partial WindowGroupLimit rewrite and the per-id rank degrades
     // to the unbounded single-partition window (hot-id straggler)
@@ -140,8 +139,7 @@ object Similarity {
     require(k >= 1 && k < threshold,
       s"k ($k) must be in [1, windowGroupLimitThreshold $threshold) — " +
         "raise the conf alongside k if a bigger neighborhood is needed")
-    val pruned = Dedup.rhpBuckets(df, vecCol, idCol, planes, tables, seed,
-      maxBucket)
+    val pruned = Dedup.rhpBuckets(df, vecCol, idCol, planes, tables, seed)
     val l = pruned.value.alias("l"); val r = pruned.value.alias("r")
     // Mirror each bucket-local pair into BOTH directions with one explode
     // (a union of two selects would embed the join subtree twice — and

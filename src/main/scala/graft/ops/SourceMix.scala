@@ -52,9 +52,9 @@ object SourceMix {
   /** Threshold modulus — mixKey values must be uniform in [0, M). */
   val M = 1000000L
 
-  /** Default mixKey: xxhash64 of (seed, id), folded into [0, M). */
-  def defaultKey(id: Column, seed: Long = 0x6d69784bL): Column =
-    pmod(xxhash64(lit(seed), id), lit(M))
+  /** Default mixKey: xxhash64 of (a fixed seed, id), folded into [0, M). */
+  def defaultKey(id: Column): Column =
+    pmod(xxhash64(lit(0x6d69784bL), id), lit(M))
 
   /** The multiplicative key the DuckDB oracles replicate (Knuth's 2^32
     * golden-ratio constant). Caller must ensure id * 2654435761 fits a

@@ -33,9 +33,11 @@ object Split {
   /** Split-key modulus: valPermille is measured in thousandths. */
   val Permille = 1000L
 
-  /** Default key: xxhash64 of (seed, representative) in [0, Permille). */
-  def defaultKey(rep: Column, seed: Long = 0x73706c69L): Column =
-    pmod(xxhash64(lit(seed), rep), lit(Permille))
+  /** Default key: xxhash64 of (a fixed seed, representative) in
+    * [0, Permille).
+    */
+  def defaultKey(rep: Column): Column =
+    pmod(xxhash64(lit(0x73706c69L), rep), lit(Permille))
 
   /** The multiplicative key DuckDB oracles replicate (ids must keep
     * id * 2654435761 within a long — ANSI throws past that, never
@@ -48,18 +50,17 @@ object Split {
     * near-dup cluster representative (component min id, or the document
     * itself when it appears in no pair), split is "val" iff
     * key(split_rep) < valPermille else "train". `pairs` is the
-    * undirected near-dup pair list (e.g. MinHash-mined + reranked);
-    * integral ids.
+    * undirected near-dup pair list (id_a, id_b), e.g. MinHash-mined +
+    * reranked; integral ids.
     */
   def leakFreeSplit(df: DataFrame, idCol: String, pairs: DataFrame,
                     valPermille: Int,
-                    aCol: String = "id_a", bCol: String = "id_b",
                     key: Column => Column = defaultKey(_)): DataFrame = {
     require(valPermille >= 0 && valPermille <= Permille,
       s"valPermille ($valPermille) must be in [0, $Permille]")
     // internal names prefixed: an input frame that already carries a
     // "component" column must not make the coalesce ambiguous
-    val labels = Components.connectedComponents(pairs, aCol, bCol)
+    val labels = Components.connectedComponents(pairs, "id_a", "id_b")
       .select(col("id").as("__cc_id"), col("component").as("__cc_comp"))
     // a NULL id has no representative and no key: key(NULL) is NULL and
     // the when() would silently bucket the row into 'train' (even at
@@ -92,15 +93,14 @@ object Split {
     * catalog-sized (split labels squared).
     */
   def leakageReport(assigned: DataFrame, idCol: String, splitCol: String,
-                    pairs: DataFrame,
-                    aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
+                    pairs: DataFrame): DataFrame = {
     val slim = assigned.select(col(idCol).as("__sid"),
       col(splitCol).cast("string").as("__sv"))
-    val joined = pairs.select(col(aCol), col(bCol))
-      .join(slim, col(aCol) === col("__sid"), "left")
+    val joined = pairs.select(col("id_a"), col("id_b"))
+      .join(slim, col("id_a") === col("__sid"), "left")
       .withColumn("__sa", coalesce(col("__sv"), lit("absent")))
       .drop("__sid", "__sv")
-      .join(slim, col(bCol) === col("__sid"), "left")
+      .join(slim, col("id_b") === col("__sid"), "left")
       .withColumn("__sb", coalesce(col("__sv"), lit("absent")))
     joined
       .select(least(col("__sa"), col("__sb")).as("split_a"),

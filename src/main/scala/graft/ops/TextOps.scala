@@ -55,16 +55,14 @@ object TextOps {
   private[graft] def whitespaceRatioComposed(text: Column): Column =
     classRatioComposed(text, "\\s")
 
-  /** Tiny per-language stopword inventories for the heuristic language ID.
-    * Word-boundary counts over the lowercased text.
+  /** Tiny per-language stopword inventories (q12/q13's language
+    * features). Word-boundary counts over the lowercased text.
     */
   val stopwords: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "to", "is"),
     "es" -> Seq("el", "la", "de", "que", "los"),
     "fr" -> Seq("le", "les", "des", "est", "une"),
-    "de" -> Seq("der", "die", "und", "ist", "das"),
-    "zh" -> Nil // CJK handled by script detection below
-  )
+    "de" -> Seq("der", "die", "und", "ist", "das"))
 
   def stopwordHits(text: Column, words: Seq[String]): Column =
     if (words.isEmpty) lit(0)
@@ -72,21 +70,6 @@ object TextOps {
       val pattern = words.map(w => java.util.regex.Pattern.quote(w)).mkString("\\b(", "|", ")\\b")
       regexp_count(lower(text), lit(pattern)).cast("int")
     }
-
-  /** Heuristic language ID: CJK script wins outright; otherwise the
-    * language with the most stopword hits (ties broken by language code,
-    * so the result is deterministic); no hits -> "und".
-    */
-  def langId(text: Column): Column = {
-    val cjk = regexp_count(text, lit("[\\x{4e00}-\\x{9fff}]"))
-    val scored = stopwords.toSeq.filter(_._2.nonEmpty).sortBy(_._1).map {
-      case (lang, words) => struct(stopwordHits(text, words).as("hits"), lit(lang).as("lang"))
-    }
-    val best = greatest(scored: _*)
-    when(cjk > 0, "zh")
-      .when(best.getField("hits") > 0, best.getField("lang"))
-      .otherwise("und")
-  }
 
   /** Rolling-hash document fingerprint over whitespace words: a fold that
     * chains each word's hash into the accumulator (order-sensitive, like a

@@ -50,8 +50,8 @@ object TrainOrder {
     * their threshold, so they'd concentrate at the START of the
     * training order instead of interleaving uniformly.
     */
-  def defaultKey(id: Column, seed: Long = 0x73687566L): Column =
-    pmod(xxhash64(lit(seed), id), lit(M))
+  def defaultKey(id: Column): Column =
+    pmod(xxhash64(lit(0x73687566L), id), lit(M))
 
   /** Annotate `df` with (shard, ord): `ord` is the global 0-based
     * training position under the deterministic shuffle, `shard` its

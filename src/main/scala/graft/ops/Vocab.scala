@@ -14,12 +14,15 @@ import graft.stats.FreqItemsAgg
   *    exchange is still the corpus vocabulary, the scale bottleneck.
   *  - [[topKSketch]] — one heavy-hitters sketch ([[FreqItemsAgg]],
   *    Misra-Gries family) per (partition, group): the exchange is a
-  *    bounded ~maxMapSize buffer per group regardless of corpus size.
-  *    Words with frequency above ~N/maxMapSize are exact (the guarantee
+  *    bounded ~[[MaxMapSize]] buffer per group regardless of corpus size.
+  *    Words with frequency above ~N/MaxMapSize are exact (the guarantee
   *    covers every real "top word"); FreqSketchSpec pins sketch == exact
   *    on the graded corpus, and q38 keeps the exact path as the oracle.
   */
 object Vocab {
+
+  /** Heavy-hitters map size of [[topKSketch]] (a power of 2). */
+  private val MaxMapSize = 4096
 
   def topKExact(df: DataFrame, groupCol: String, textCol: String,
                 k: Int): DataFrame = {
@@ -51,11 +54,11 @@ object Vocab {
   }
 
   def topKSketch(df: DataFrame, groupCol: String, textCol: String,
-                 k: Int, maxMapSize: Int = 4096): DataFrame =
+                 k: Int): DataFrame =
     df.select(col(groupCol).as("group"),
         explode(split(col(textCol), " ")).as("word"))
       .groupBy(col("group"))
-      .agg(FreqItemsAgg.freq_items(col("word"), maxMapSize).as("fi"))
+      .agg(FreqItemsAgg.freq_items(col("word"), MaxMapSize).as("fi"))
       // the sketch output is already sorted (est desc, word asc):
       // the first k entries ARE the top-k
       .select(col("group"), posexplode(slice(col("fi"), 1, k)))

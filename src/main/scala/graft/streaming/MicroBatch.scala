@@ -16,6 +16,13 @@ import graft.ops.{Cached, IncrementalDedup}
   */
 private[graft] object MicroBatch {
 
+  /** The signature-index step's LSH shape: word-shingle width, MinHash
+    * permutations and bands.
+    */
+  private[streaming] val ShingleK = 3
+  private[streaming] val Perms = 32
+  private[streaming] val Bands = 16
+
   def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -69,20 +76,20 @@ private[graft] object MicroBatch {
     * Replay guard: a crash between the caller's writes and the append
     * leaves the index holding THIS batch; probing it back would count the
     * batch twice in the combined bucket sizes and drop buckets near
-    * maxBucket on replay only. The probe excludes the batch, and the
-    * running batch is never folded, so the exclusion survives compaction.
+    * [[IncrementalDedup.MaxBucket]] on replay only. The probe excludes the
+    * batch, and the running batch is never folded, so the exclusion
+    * survives compaction.
     */
   def indexStep(spark: SparkSession, docs: DataFrame, batchId: Long,
-                root: String, shingleK: Int, perms: Int, bands: Int,
-                minJaccard: Double, maxBucket: Int, maxDeltas: Int)(
+                root: String, minJaccard: Double, maxDeltas: Int)(
       decide: DataFrame => Cached[Option[DataFrame]]): Unit = {
     val fresh = IncrementalDedup.signatureRows(docs, "text", "doc_id",
-        shingleK, perms, bands)
+        ShingleK, Perms, Bands)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val index = CompactedIndex.read(spark, fs(spark, root), root, batchId)
       val kept = decide(IncrementalDedup.candidatePairs(fresh, index,
-        perms, minJaccard, maxBucket))
+        Perms, minJaccard))
       // append AFTER probing (a batch must not meet itself via the index)
       try CompactedIndex.append(
           kept.value.fold(fresh)(ids =>

@@ -69,8 +69,6 @@ object StreamingPipeline {
   def checkpointPath(statePath: String) = s"$statePath/checkpoint"
 
   final case class Params(
-      rules: QualityFilter.Rules = QualityFilter.Rules(),
-      shingleK: Int = 3, perms: Int = 32, bands: Int = 16,
       /** signature-agreement PREFILTER for candidate mining (the same
         * role as the batch Pipeline's mining threshold) — candidates
         * below it are never reranked
@@ -81,7 +79,6 @@ object StreamingPipeline {
         * jaccardThreshold, same default
         */
       jaccardThreshold: Double = 0.8,
-      maxBucket: Int = 64,
       /** delta partitions tolerated per index before it folds into a
         * compacted base generation ([[CompactedIndex]])
         */
@@ -134,7 +131,7 @@ object StreamingPipeline {
     // the batch (quality rejects keep no text). TWO independent hashes —
     // the ~2^-128 joint-collision key of Dedup.dropExactDuplicates (a
     // single 64-bit key false-drops ~10^4 docs at 10^12 rows).
-    val staged = QualityFilter.annotate(batch, "text", p.rules)
+    val staged = QualityFilter.annotate(batch, "text")
       .withColumn("text", when(keep, Redaction.redact(col("text"))))
       .withColumn("dup_hash", xxhash64(col("text")))
       .withColumn("dup_hash2", graft.ops.Dedup.contentHash2(col("text")))
@@ -176,8 +173,7 @@ object StreamingPipeline {
         // ---- near dedup (keep-first) through the shared signature-index
         // step: only KEPT documents join the index
         MicroBatch.indexStep(spark, afterExact, batchId,
-            sigIndexPath(statePath), p.shingleK, p.perms, p.bands,
-            p.minJaccardEst, p.maxBucket, p.maxIndexDeltas) { cands =>
+            sigIndexPath(statePath), p.minJaccardEst, p.maxIndexDeltas) { cands =>
           val nearDrops = nearDuplicates(spark, afterExact, cands, batchId,
             statePath, p)
           val drops = exactDrops.withColumn("__stage", lit("exact_dup"))
@@ -280,7 +276,7 @@ object StreamingPipeline {
       }
     }
     val reranked = graft.ops.Dedup.ngramJaccard(textPool, pairIds,
-      "text", "doc_id", p.shingleK)
+      "text", "doc_id", MicroBatch.ShingleK)
     val confirmed = reranked.value.filter(col("jaccard") >= p.jaccardThreshold)
     val batchIds = afterExact.select(col("doc_id").as("other"))
       .withColumn("__other_new", lit(true))

@@ -277,14 +277,14 @@ object Profile {
     step("packing", nDocs)(
       Packing.packGreedy(docs.withColumn("len", length(col("text"))),
         "source", "doc_id", "len", 4096).count())
-    // uncapped: the synthetic corpus's tiny vocabulary makes every 3-gram
-    // boilerplate at this scale (df 100-750), so a realistic maxShingleDf
-    // would drop every shingle; this times the exact, worst-case join
+    // the synthetic corpus's tiny vocabulary makes every 3-gram
+    // boilerplate at this scale (df 100-750): this times the exact,
+    // worst-case join
     step("decontamination", nDocs)(
       Decontamination.containmentPairs(
         docs.filter(pmod(col("doc_id"), lit(50)) =!= 0),
         docs.filter(pmod(col("doc_id"), lit(50)) === 0),
-        "text", "doc_id", minContainment = 0.9).value.count())
+        "text", "doc_id", minContainment = 0.9).count())
     step.done.toSeq
   }
 

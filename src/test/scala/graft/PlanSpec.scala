@@ -87,14 +87,14 @@ class PlanSpec extends AnyFunSuite {
     val vecs = (0 until 300).map { i =>
       (i.toLong, Seq.tabulate(6)(j => math.sin(i * 7 + j * 3).toFloat))
     }.toDF("vec_id", "embedding").repartition(8)
-    val a = Ivf.trainCentroids(vecs, "embedding", "vec_id", nlist = 5, refineIters = 3)
-    val b = Ivf.trainCentroids(vecs, "embedding", "vec_id", nlist = 5, refineIters = 3)
+    val a = Ivf.trainCentroids(vecs, "embedding", "vec_id", nlist = 5)
+    val b = Ivf.trainCentroids(vecs, "embedding", "vec_id", nlist = 5)
     assert(a.map(_.toSeq).toSeq == b.map(_.toSeq).toSeq)
     // double-typed vectors train too (round-1 regression: getSeq[Float] crash)
     val dvecs = (0 until 100).map { i =>
       (i.toLong, Seq.tabulate(6)(j => math.sin(i * 7 + j * 3)))
     }.toDF("vec_id", "embedding")
-    val c = Ivf.trainCentroids(dvecs, "embedding", "vec_id", nlist = 3, refineIters = 1)
+    val c = Ivf.trainCentroids(dvecs, "embedding", "vec_id", nlist = 3)
     assert(c.length == 3)
   }
 
@@ -222,7 +222,7 @@ class PlanSpec extends AnyFunSuite {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val pairs = graft.ops.Decontamination.containmentPairs(
       docs.filter(col("doc_id") % 5 =!= 0), docs.filter(col("doc_id") % 5 === 0),
-      "text", "doc_id").value
+      "text", "doc_id")
     val exchanges = exchangeOutputs(pairs)
     assert(exchanges.nonEmpty)
     exchanges.foreach { cols =>

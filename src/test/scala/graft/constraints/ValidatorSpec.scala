@@ -154,14 +154,17 @@ class ValidatorSpec extends AnyFunSuite {
     assert(verdicts(("web", "declared_fit_doc_id")))
     assert(verdicts(("web", "declared_fit_n_tok")))
     assert(verdicts(("web", "declared_fit_tokens_element")))
-    val tight = suite.copy(declaredDdl = Map(
-      "doc_id" -> "varchar(8)",       // doc ids are 17 chars -> truncation
-      "n_tok" -> "smallint"))         // fits
-    val rep = Validator.validateOneScan(spark, df, dim, tight)
+    // doc ids are 17 chars; one 40-char id in "web" overflows the
+    // declared varchar(32)
+    import spark.implicits._
+    val longId = Seq(("x" * 40, Seq(1, 2, 3), 3, "web"))
+      .toDF("doc_id", "tokens", "n_tok", "source")
+    val rep = Validator.validateOneScan(spark, df.unionByName(longId), dim, suite)
     val vs = rep.verdicts.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getBoolean(2)).toMap
     assert(!vs(("web", "declared_fit_doc_id")))
     assert(vs(("web", "declared_fit_n_tok")))
+    assert(vs(("chat", "declared_fit_doc_id")))
   }
 
   test("a clean table passes every constraint") {

@@ -171,21 +171,22 @@ class CrashStateSpec extends AnyFunSuite {
       assert(StreamingValidator.readStats(spark, state).map(_._1).contains(2L))
     })
 
-  // ---- index rebuild plus sidecar: the combined-cap corpus (every bucket
-  // of 5 + 2 indexed and 2 probed identical docs holds 9 rows); a growing
-  // corpus is re-indexed as a whole, over an index of the first 5
+  // ---- index rebuild plus sidecar: the combined-cap corpus (identical
+  // docs, 60 indexed: a probe of 5 fills every bucket to 65 rows, past
+  // the cap of 64; a probe of 2 to 62); a growing corpus is re-indexed as
+  // a whole, over an index of the first 5
   private val same = "the quick brown fox jumps over the lazy dog near the river bank same"
   private def docs(ids: Long*) = ids.map(i => (i, same)).toDF("doc_id", "text")
   private def indexed = docs(1L to 5L: _*)
-  private def grown = indexed.unionByName(docs(10L, 11L))
-  private def mine(dir: String, cap: Int): Set[(Long, Long)] =
-    IncrementalDedup.newDocCandidates(spark, docs(20L, 21L), "text", "doc_id", dir,
-      maxBucket = cap).value.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-  private val caps = Seq(8, 10) // 9-row buckets: dropped at 8, mined at 10
+  private def grown = indexed.unionByName(docs(100L to 154L: _*))
+  private def mine(dir: String, probe: Seq[Long]): Set[(Long, Long)] =
+    IncrementalDedup.newDocCandidates(spark, docs(probe: _*), "text", "doc_id", dir)
+      .value.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+  private val probes = Seq(1000L to 1004L, Seq(2000L, 2001L))
   private lazy val scratchMined = {
     val dir = s"${tmp("crash-idx-scratch")}/idx"
     IncrementalDedup.writeIndex(grown, "text", "doc_id", dir)
-    caps.map(mine(dir, _))
+    probes.map(mine(dir, _))
   }
 
   private val indexRebuild = Writer("index rebuild plus sidecar",
@@ -206,8 +207,9 @@ class CrashStateSpec extends AnyFunSuite {
         uncommit(dir)
       }),
     root => {
-      assert(scratchMined(0).isEmpty && scratchMined(1).size == 15)
-      assert(caps.map(mine(s"$root/idx", _)) == scratchMined)
+      // 2 new x 60 old + 1 new-new pair
+      assert(scratchMined(0).isEmpty && scratchMined(1).size == 121)
+      assert(probes.map(mine(s"$root/idx", _)) == scratchMined)
       spark.catalog.clearCache()
     })
 

@@ -83,11 +83,6 @@ class ComponentsSpec extends AnyFunSuite {
         contractMaxNodes = 8)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cc == truth)
-    // and disabling contraction entirely reproduces the same assignment
-    val ccOff = Components.connectedComponents(
-        pairs.toDF("a", "b"), "a", "b", contractMaxNodes = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ccOff == truth)
     // gate met but the union-find NODE cap trips mid-pass (a chain has
     // edges+1 nodes): the pass-through tail + star rounds must absorb it
     val chain = (0L until 100L).map(i => (i, i + 1))

@@ -34,7 +34,7 @@ class CtLangIdSpec extends AnyFunSuite {
       "bb" -> Seq("xyz", "abc"))        // ranks 0,1
     // doc profile [abc, xyz]: vs aa -> |0-0| + k(xyz absent) = 0 + 5
     //                         vs bb -> |0-1| + |1-0|          = 2  -> bb
-    assert(CtLangId.classifyString("no", profiles, n = 3, k = 5) == "und")
+    assert(CtLangId.classifyString("no", profiles) == "und")
     val rt = new CtRuntime(profiles, 5)
     assert(CtClassify.computeFromStrings(Seq("abc", "xyz"), rt) == "bb")
     // tie: doc [cde] -> aa: |0-2|=2; bb: penalty... 5 -> aa wins outright;

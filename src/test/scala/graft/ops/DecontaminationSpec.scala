@@ -9,11 +9,11 @@ class DecontaminationSpec extends AnyFunSuite {
   import spark.implicits._
 
   def pairs(train: Seq[(Long, String)], eval: Seq[(Long, String)],
-            min: Double = 0.0, maxDf: Int = Int.MaxValue) =
+            min: Double = 0.0) =
     Decontamination.containmentPairs(
         train.toDF("doc_id", "text"), eval.toDF("doc_id", "text"),
-        "text", "doc_id", k = 3, minContainment = min, maxShingleDf = maxDf)
-      .value.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+        "text", "doc_id", k = 3, minContainment = min)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
 
   test("containment = shared distinct shingles / eval shingles") {
     val train = Seq(1L -> "a b c d e f", 2L -> "x y z w")
@@ -55,34 +55,12 @@ class DecontaminationSpec extends AnyFunSuite {
     }
   }
 
-  test("minContainment filters; maxShingleDf drops boilerplate shingles (recall-lowering only)") {
-    // "a b c" occurs in 3 train docs -> dropped at maxDf=2, so e10 loses
-    // that shingle's contribution (containment can only go DOWN)
+  test("minContainment filters the computed containment; shared boilerplate still counts") {
+    // "a b c" occurs in 3 train docs and counts for each of them
     val train = Seq(1L -> "a b c d", 2L -> "a b c e", 3L -> "a b c f")
     val eval = Seq(10L -> "a b c d")
     val exact = pairs(train, eval)
-    assert(exact((1L, 10L)) == 1.0 && exact((2L, 10L)) == 0.5)
-    val capped = pairs(train, eval, maxDf = 2)
-    // shingle "a b c" (df=3) dropped; "b c d" (df=1) survives -> only t1 at 0.5
-    assert(capped == Map((1L, 10L) -> 0.5))
-    // threshold applies to the computed containment
+    assert(exact == Map((1L, 10L) -> 1.0, (2L, 10L) -> 0.5, (3L, 10L) -> 0.5))
     assert(pairs(train, eval, min = 0.75) == Map((1L, 10L) -> 1.0))
-  }
-
-  test("containmentPairs releases the capped path's shingle cache on close()") {
-    val h = Decontamination.containmentPairs(
-      Seq(1L -> "a b c d e f", 2L -> "a b c d e f").toDF("doc_id", "text"),
-      Seq(10L -> "a b c d").toDF("doc_id", "text"),
-      "text", "doc_id", k = 3, minContainment = 0.0, maxShingleDf = 10)
-    assert(h.value.count() >= 1)
-    assert(h.handles.nonEmpty)
-    h.close()
-    h.handles.foreach(f => assert(
-      f.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
-    // the uncapped path pins nothing
-    val h2 = Decontamination.containmentPairs(
-      Seq(1L -> "a b c d e f").toDF("doc_id", "text"),
-      Seq(10L -> "a b c d").toDF("doc_id", "text"), "text", "doc_id")
-    assert(h2.handles.isEmpty)
   }
 }

@@ -46,14 +46,16 @@ class IncrementalDedupSpec extends AnyFunSuite {
 
   test("bucket cap measures the COMBINED (index + batch) bucket size") {
     val dir = SharedSpark.tempDir("incdedup3") + "/idx"
-    // 5 indexed + 2 new docs with IDENTICAL text: every bucket has 7 rows
-    val old = docs((1L to 5L).map(i => i -> s"$base same"): _*)
-    val batch = docs(10L -> s"$base same", 11L -> s"$base same")
+    // 40 indexed docs with IDENTICAL text; a batch of 30 more makes every
+    // bucket 70 rows, past the cap of 64 although each side alone fits; a
+    // batch of 20 makes it 60
+    val old = docs((1L to 40L).map(i => i -> s"$base same"): _*)
+    def batch(n: Int) = docs((1L to n.toLong).map(i => (1000L + i) -> s"$base same"): _*)
     IncrementalDedup.writeIndex(old, "text", "doc_id", dir)
-    def mine(cap: Int) = IncrementalDedup.newDocCandidates(spark, batch,
-        "text", "doc_id", dir, maxBucket = cap).value.count()
-    assert(mine(4) == 0L, "7-row buckets must be dropped at cap 4, like full mining")
-    assert(mine(10) == 11L) // 2 new x 5 old + 1 new-new pair
+    def mine(n: Int) = IncrementalDedup.newDocCandidates(spark, batch(n),
+        "text", "doc_id", dir).value.count()
+    assert(mine(30) == 0L, "70-row buckets must be dropped, like full mining")
+    assert(mine(20) == 20L * 40L + 190L) // 20 new x 40 old + C(20, 2) new-new pairs
     spark.catalog.clearCache()
   }
 

@@ -32,7 +32,6 @@ class PipelineSpec extends AnyFunSuite {
 
     val res = Pipeline.run(docs, Pipeline.Config(
       evalSources = Seq("eval"),
-      rules = QualityFilter.Rules(minChars = 50, maxRepetitionRatio = 0.9),
       jaccardThreshold = 0.5,
       budget = 200))
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
@@ -93,8 +92,7 @@ class PipelineSpec extends AnyFunSuite {
       (2L, "another quite adequate document with different words entirely",
         null.asInstanceOf[String])
     ).toDF("doc_id", "text", "source")
-    val res = Pipeline.run(df,
-      Pipeline.Config(rules = QualityFilter.Rules(minChars = 5)))
+    val res = Pipeline.run(df)
     val f = Pipeline.sourceFunnel(res).collect()
       .map(r => (Option(r.getString(0)), r.getInt(1)) -> r.getLong(3)).toMap
     assert(f.keySet.map(_._1) == Set(Some("src"), None))
@@ -106,18 +104,20 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("calibrateTrim knob: each train source drops its bottom fraction, eval is never calibrated") {
-    val alpha = "abcdefghij"
-    // doc i: i+1 distinct letter-words -> strictly increasing lengths,
-    // zero shared vocabulary (no dedup/decontamination interference)
+    val alpha = "abcdefghijklmnopqrstuvwxyz"
+    // doc i: i+12 distinct letter-words -> strictly increasing lengths
+    // from 51 chars (past the quality gate's 50), zero shared vocabulary
+    // (no dedup/decontamination interference)
     val train = (1 to 8).map { i =>
       (i.toLong,
-        (1 to i + 1).map(w => s"${alpha(i)}${alpha(w)}x").mkString(" "),
+        (1 to i + 12).map(w => s"${alpha(i)}${alpha(w)}x").mkString(" "),
         "train")
     }
-    val ev = Seq((20L, "ev one", "eval"), (21L, "ev two three", "eval"))
+    val ev = Seq(
+      (20L, "evaluation passage about distant galaxies and their cold stars", "eval"),
+      (21L, "evaluation passage two about ocean currents and warm tides", "eval"))
     val df = (train ++ ev).toDF("doc_id", "text", "source")
-    val rules = QualityFilter.Rules(minChars = 1, minAlphaRatio = 0.0)
-    val cfg = Pipeline.Config(evalSources = Seq("eval"), rules = rules)
+    val cfg = Pipeline.Config(evalSources = Seq("eval"))
 
     val base = Pipeline.run(df, cfg)
     assert(base.kept.select("doc_id").collect().map(_.getLong(0)).toSet
@@ -273,16 +273,19 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("packBpeMerges knob: packs budget in TOKENS of the shipped tokenizer") {
-    // six docs, each six copies of its own word: highly compressible
-    // under BPE (the whole word merges to ~1 token) but ~29 chars long —
-    // a budget of 13 fits TWO docs by tokens yet not even ONE by chars,
-    // so the knob must change the grouping, not just the len column
-    val docs = (1 to 6).map(i =>
-      (i.toLong, Seq.fill(6)(s"w${('a' + i).toChar}x").mkString(" "), "src"))
-      .toDF("doc_id", "text", "source")
-    val cfg = Pipeline.Config(
-      rules = QualityFilter.Rules(minChars = 10, maxRepetitionRatio = 0.9),
-      budget = 13)
+    // six docs, each ten words over its own two words (a de Bruijn order
+    // of A/B, so no 3-word shingle repeats and the quality gate keeps
+    // them). Every word ends in one shared 8-letter suffix: highly
+    // compressible under BPE (20 merges leave 1-2 tokens per word, at
+    // most 14 per doc) but 109 chars long — a budget of 30 fits TWO docs
+    // by tokens yet not even ONE by chars, so the knob must change the
+    // grouping, not just the len column
+    val docs = (1 to 6).map { i =>
+      val c = ('a' + i).toChar
+      (i.toLong, "0001011100".map(b => s"$c${if (b == '0') 'a' else 'b'}zyxwvuts")
+        .mkString(" "), "src")
+    }.toDF("doc_id", "text", "source")
+    val cfg = Pipeline.Config(budget = 30)
 
     val byChars = Pipeline.run(docs, cfg)
     val byTokens = Pipeline.run(docs, cfg.copy(packBpeMerges = 20))
@@ -306,7 +309,7 @@ class PipelineSpec extends AnyFunSuite {
       assert(packs(byTokens).flatten.sorted == (1L to 6L),
         s"token packs lost docs: ${packs(byTokens)}")
       assert(packs(byChars).flatten.sorted == (1L to 6L))
-      // chars: 29-char docs never share a 13-budget pack; tokens: they do
+      // chars: 109-char docs never share a 30-budget pack; tokens: they do
       assert(packs(byChars).forall(_.size == 1))
       assert(packs(byTokens).exists(_.size > 1),
         s"token budget never co-packed: ${packs(byTokens)}")

@@ -8,31 +8,37 @@ class QualityFilterSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 
-  val rules = QualityFilter.Rules(minChars = 10, maxChars = 80,
-    minAlphaRatio = 0.5, maxDigitRatio = 0.3, maxRepetitionRatio = 0.4)
+  // the rule thresholds: 50..100000 chars, alpha >= 0.6, digits <= 0.2,
+  // repeated 3-shingles <= 0.3
+  val clean = "a clean sentence about the weather today and the week ahead"
 
   def reasons(text: String): (Boolean, Set[String]) = {
     val r = QualityFilter.annotate(Seq((1L, text)).toDF("doc_id", "text"),
-      "text", rules).select("keep", "reasons").collect()(0)
+      "text").select("keep", "reasons").collect()(0)
     (r.getBoolean(0), r.getSeq[String](1).toSet)
   }
 
   test("each rule fires on its planted violation and only there") {
-    assert(reasons("a clean sentence about the weather today") == (true, Set()))
+    assert(reasons(clean) == (true, Set()))
     assert(reasons("tiny") == (false, Set("too_short")))
-    assert(reasons("alpha bravo charlie delta echo foxtrot golf hotel " +
-      "india juliet kilo lima mike november") == (false, Set("too_long")))
-    assert(reasons("!!! ??? ... ;;; ***") == (false, Set("low_alpha")))
-    assert(reasons("order 12345 total 99887 code 5544332211")._2.contains("digit_heavy"))
-    // 12 words, one 3-shingle repeated heavily -> repetition above 0.4
-    assert(reasons("go go go go go go go go go go go go") ==
+    // 20001 distinct four-letter words: 100004 chars, no repeated shingle
+    val distinctWords = (0 until 20001).map { i =>
+      (0 until 4).map(j => ('a' + (i / math.pow(26, j).toInt) % 26).toChar).mkString
+    }
+    assert(reasons(distinctWords.mkString(" ")) == (false, Set("too_long")))
+    assert(reasons("!!! ??? ... ;;; *** ### $$$ %%% &&& ((( ))) +++ === ~~~") ==
+      (false, Set("low_alpha")))
+    assert(reasons("order 12345 total 99887 code 5544332211 ref 7766554433")
+      ._2.contains("digit_heavy"))
+    // 20 words, one 3-shingle repeated heavily -> repetition above 0.3
+    assert(reasons(Seq.fill(20)("go").mkString(" ")) ==
       (false, Set("repetitive")))
   }
 
   test("null text fails as null_text alone") {
     val r = QualityFilter.annotate(
         Seq((1L, null.asInstanceOf[String])).toDF("doc_id", "text"),
-        "text", rules).select("keep", "reasons").collect()(0)
+        "text").select("keep", "reasons").collect()(0)
     assert(!r.getBoolean(0) && r.getSeq[String](1) == Seq("null_text"))
   }
 
@@ -47,18 +53,9 @@ class QualityFilterSpec extends AnyFunSuite {
     // shingles: "x y x","y x y","x y x","y x y","x y x" -> 2 distinct of 5
   }
 
-  test("lang allowlist rule joins the set only when configured") {
-    val withLang = rules.copy(langAllow = Seq("en"))
-    val r = QualityFilter.annotate(
-        Seq((1L, "el que la de los verdes campos")).toDF("doc_id", "text"),
-        "text", withLang).select("reasons").collect()(0)
-    assert(r.getSeq[String](0).contains("lang"))
-  }
-
   test("filter returns exactly the keep side with original columns") {
-    val df = Seq((1L, "a clean sentence about the weather today"),
-      (2L, "tiny")).toDF("doc_id", "text")
-    val kept = QualityFilter.filter(df, "text", rules)
+    val df = Seq((1L, clean), (2L, "tiny")).toDF("doc_id", "text")
+    val kept = QualityFilter.filter(df, "text")
     assert(kept.columns.toSeq == Seq("doc_id", "text"))
     assert(kept.select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(1L))
   }

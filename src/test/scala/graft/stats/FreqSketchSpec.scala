@@ -22,27 +22,27 @@ class FreqSketchSpec extends AnyFunSuite {
   test("sketch top-5 == exact top-5 per source on the graded corpus") {
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val exact = rows(Vocab.topKExact(docs, "source", "text", 5))
-    val sketch = rows(Vocab.topKSketch(docs, "source", "text", 5,
-      maxMapSize = 8192))
+    val sketch = rows(Vocab.topKSketch(docs, "source", "text", 5))
     assert(sketch == exact)
   }
 
   test("under purge pressure the dominant heavy hitters survive with bounded error") {
-    // 4000/2000 copies of two dominant words + a 2000-word noise tail,
-    // sketch map far smaller than the vocabulary. Misra-Gries guarantees
+    // 16000/8000 copies of two dominant words + an 8000-word noise tail in
+    // ONE partition, so the one sketch's 4096-slot map is far smaller than
+    // the vocabulary. Misra-Gries guarantees
     // IDENTIFYING items above ~N/maxMapSize; their estimates carry a
     // purge offset that depends on merge order — like the HLL/KLL house
     // rule, assert the guaranteed facts (identity, order, error bound),
     // never exact sketch readouts (CLAUDE.md).
-    val docs = spark.range(0, 2000)
+    val docs = spark.range(0, 8000, 1, 1)
       .select(lit("g").as("source"),
         concat_ws(" ", lit("alpha alpha beta"),
           concat(lit("noise"), col("id").cast("string"))).as("text"))
-    val top = rows(Vocab.topKSketch(docs, "source", "text", 2, maxMapSize = 64))
+    val top = rows(Vocab.topKSketch(docs, "source", "text", 2))
     assert(top.map(_._3) == Seq("alpha", "beta"))
-    val totalN = 8000.0 // 4 words x 2000 docs
-    val maxErr = (totalN / 64).toLong + 1 // N/maxMapSize error bound
-    val trueCounts = Map("alpha" -> 4000L, "beta" -> 2000L)
+    val totalN = 32000.0 // 4 words x 8000 docs
+    val maxErr = (totalN / 4096).toLong + 1 // N/maxMapSize error bound
+    val trueCounts = Map("alpha" -> 16000L, "beta" -> 8000L)
     top.foreach { case (_, _, w, est) =>
       assert(math.abs(est - trueCounts(w)) <= maxErr,
         s"$w est $est vs true ${trueCounts(w)}")
@@ -54,8 +54,8 @@ class FreqSketchSpec extends AnyFunSuite {
       .repartition(7)
       .select(lit("g").as("source"),
         when(col("id") % 3 === 0, "x x y").otherwise("y z w").as("text"))
-    val a = rows(Vocab.topKSketch(docs, "source", "text", 3, maxMapSize = 1024))
-    val b = rows(Vocab.topKSketch(docs, "source", "text", 3, maxMapSize = 1024))
+    val a = rows(Vocab.topKSketch(docs, "source", "text", 3))
+    val b = rows(Vocab.topKSketch(docs, "source", "text", 3))
     assert(a == b)
     val exact = rows(Vocab.topKExact(docs, "source", "text", 3))
     assert(a == exact)
