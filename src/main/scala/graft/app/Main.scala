@@ -28,6 +28,8 @@ object Main {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // applied as the context starts, ahead of its INFO start-up lines
+      .config("spark.log.level", "WARN")
       .getOrCreate()
   }
 
@@ -75,7 +77,6 @@ object Main {
     val cmd = args.head
     val opts = argMap(args.tail)
     val spark = session(s"graft-$cmd")
-    spark.sparkContext.setLogLevel("WARN")
     try cmd match {
       case "synth" =>
         val cfg = SequenceSynth.Config(rows = flagOr(opts, "rows", "100000").toLong)

@@ -15,7 +15,12 @@ import graft.types._
   * on them: equal keysets / equal kinds under [[StrictMerge]], equal kinds
   * under [[SimplifyMerge]]. Merge order within a cluster is free
   * (MonoidLawsSpec), so one normalization per call replaces one per record
-  * (InferFoldSpec pins the two equal).
+  * (InferFoldSpec pins the two equal). Within a task each cluster is a
+  * mutable accumulator with the absorb-or-fallback contract of
+  * [[graft.types.TypeAcc]]: a record of the cluster's shape is absorbed in
+  * place, and a node whose merge changes shape falls back to `mergeTwo` on
+  * its frozen value. FoldKernelSpec pins the fold against
+  * `reduceOption(mergeTwo)`.
   *
   * Parse failures do NOT throw (parser.clj:16-28 semantics): they are
   * counted and reported alongside the schema.
@@ -33,18 +38,23 @@ object JsonSchemaInference {
     def render: String = schema.map(SchemaType.render).getOrElse("<empty>")
   }
 
-  /** Fold extracted records (`Left` = a failed line) into the clusters. */
+  /** Fold extracted records (`Left` = a failed line) into the clusters,
+    * each a mutable accumulator ([[Clusters]]): a record of its cluster's
+    * shape is absorbed in place, and only where the merge changes a node's
+    * shape (a union, another nested keyset) does that node fall back to
+    * `mergeTwo`. The share keeps the frozen clusters.
+    */
   def fold(policy: MergePolicy, records: Iterator[Either[String, SchemaType]]): Buf = {
-    var clusters = Vector.empty[SchemaType]
+    val clusters = new Clusters(policy)
     var seen, failed = 0L
     records.foreach { r =>
       seen += 1
       r match {
-        case Right(t) => clusters = policy.reduceInto(clusters, t)
+        case Right(t) => clusters.absorb(t)
         case Left(_)  => failed += 1
       }
     }
-    Buf(clusters, seen, failed)
+    Buf(clusters.frozen, seen, failed)
   }
 
   /** The driver merge: one union normalization over every share's clusters. */
@@ -53,7 +63,9 @@ object JsonSchemaInference {
       parts.map(_.seen).sum, parts.map(_.failed).sum)
 
   /** One job: each task folds its lines through `record`, built once per
-    * task from its own extractor; the driver merges the partials.
+    * task from its own extractor; the driver merges the partials. The
+    * partials travel Java-serialized: Kryo spent about 5 ms more per
+    * `infer_jsonl` operation, mostly decoding them on the driver.
     */
   private[ingest] def foldLines(lines: Dataset[String], policy: MergePolicy,
                                 dateFormats: Seq[String])(
@@ -61,7 +73,7 @@ object JsonSchemaInference {
     merge(policy, lines.mapPartitions { it =>
       val extract = record(new TypeExtractor(policy, dateFormats))
       Iterator.single(fold(policy, it.map(extract)))
-    }(Encoders.kryo[Buf]).collect().toSeq)
+    }(Encoders.javaSerialization[Buf]).collect().toSeq)
 
   /** Infer the merged observed schema of a Dataset of JSON lines. */
   def infer(lines: Dataset[String],

@@ -42,6 +42,7 @@ object JsonParser {
     * (parser.clj:62-70; boundary golden parser_test.clj:22-34).
     */
   def numberIfNumber(s: String): Option[JValue] = s match {
+    case _ if s.isEmpty || !startsNumber(s.charAt(0)) => None
     case intRe(_*) =>
       val v = BigInt(s)
       if (v.bitLength <= 63) Some(JInt(v)) else None
@@ -49,20 +50,23 @@ object JsonParser {
     case _          => None
   }
 
+  // both number regexes need a leading '-' or ASCII digit
+  private def startsNumber(c: Char): Boolean = c == '-' || (c >= '0' && c <= '9')
+
   private def firstAndLastAre(s: String, first: Char, last: Char): Boolean =
     s.nonEmpty && s.charAt(0) == first && s.charAt(s.length - 1) == last
 
+  /** A string `jsonify` tries to revive as embedded JSON: `{...}` or `[...]`. */
+  private[graft] def revivable(s: String): Boolean =
+    firstAndLastAre(s, '{', '}') || firstAndLastAre(s, '[', ']')
+
   private def possiblyInnerEscaped(s: String): Boolean =
-    innerEscapedRe.findFirstIn(s).isDefined ||
-      escapedQuoteRe.findFirstIn(s).isDefined
+    s.indexOf('\\') >= 0 && (innerEscapedRe.findFirstIn(s).isDefined ||
+      escapedQuoteRe.findFirstIn(s).isDefined)
 
   private def unescapeOneLevel(s: String): String =
     unescapeRe.replaceAllIn(s, m =>
       Regex.quoteReplacement(m.group(1).substring(1) + "\""))
-
-  private def tryParse(s: String): Option[JsonNode] =
-    try Some(mapper.readTree(s))
-    catch { case _: JsonProcessingException => None }
 
   /** Jackson node -> JValue, verbatim (no revival). */
   def fromJackson(n: JsonNode): JValue =
@@ -76,8 +80,11 @@ object JsonParser {
       JObj(n.properties().asScala.map(e => e.getKey -> fromJackson(e.getValue)).toMap)
     else JStr(n.toString)
 
-  /** Reference attempt order first (one peel, then the raw string —
-    * parser.clj:92-126), then KEEP peeling until a parse succeeds.
+  /** `parse` of the first revival candidate of `s` it does not reject
+    * with a JsonProcessingException. `parse` is Jackson's `readTree` here
+    * and the token walk's own walker in `TypeExtractor.extractLine`.
+    * Candidates in reference attempt order first (one peel, then the raw
+    * string — parser.clj:92-126), then KEEP peeling until a parse succeeds.
     *
     * The extra peeling is a DELIBERATE deviation from the literal
     * reference code, forced by its own golden: nested-escaped-json.js
@@ -91,19 +98,26 @@ object JsonParser {
     * them as strings. Each level removes one backslash per quote, so the
     * loop strictly shrinks and is bounded.
     */
-  private def parseRevived(s: String): Option[JValue] =
+  private[graft] def revive[A](s: String)(parse: String => A): Option[A] = {
+    def attempt(c: String): Option[A] =
+      try Some(parse(c))
+      catch { case _: JsonProcessingException => None }
     if (possiblyInnerEscaped(s)) {
       val oneLevel = unescapeOneLevel(s)
-      var res = tryParse(oneLevel).orElse(tryParse(s))
+      var res = attempt(oneLevel).orElse(attempt(s))
       var cur = oneLevel
       var guard = 0
       while (res.isEmpty && guard < 8) {
         val next = unescapeOneLevel(cur)
         if (next == cur) guard = 8
-        else { cur = next; res = tryParse(cur); guard += 1 }
+        else { cur = next; res = attempt(cur); guard += 1 }
       }
-      res.map(fromJackson)
-    } else tryParse(s).map(fromJackson)
+      res
+    } else attempt(s)
+  }
+
+  private def parseRevived(s: String): Option[JValue] =
+    revive(s)(mapper.readTree).map(fromJackson)
 
   // revival recurses into the revived content's elements/values
   // (parser.clj:91-126: `map jsonify` / `project-map :value-xform jsonify`)

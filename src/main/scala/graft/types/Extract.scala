@@ -130,8 +130,14 @@ final class TypeExtractor(
     * a blank line or a non-object value is the empty document, content
     * after the first value is ignored, a duplicate key keeps its last
     * value, and `jsonify` revival applies to top-level string values only.
+    * A revived `{...}`/`[...]` string is walked by the same token walker,
+    * its own values revived in turn, in `jsonify`'s attempt order.
     * Registered specials recognize a [[JValue]], so with any registered
     * the line goes through the tree instead.
+    *
+    * The inference fold absorbs each line's type into its cluster's
+    * accumulator in place, or falls back to `mergeTwo` where the merge
+    * changes a node's shape ([[TypeAcc]]).
     */
   def extractLine(line: String): Either[String, SchemaType] =
     if (specials.nonEmpty) JsonParser.parseJsonLine(line).map(extract)
@@ -139,7 +145,7 @@ final class TypeExtractor(
       val p = JsonParser.factory.createParser(line)
       try {
         val id = nextId(p)
-        if (id == ID_START_OBJECT) Right(walkObject(p, topLevel = true))
+        if (id == ID_START_OBJECT) Right(walkObject(p, revive = true))
         else {
           // a non-object value must still parse; no token at all is a blank line
           if (id != ID_NO_TOKEN) walk(p, id)
@@ -153,8 +159,8 @@ final class TypeExtractor(
   private def nextId(p: JacksonParser): Int = { p.nextToken(); p.currentTokenId }
 
   private def walk(p: JacksonParser, id: Int): SchemaType = id match {
-    case ID_START_OBJECT => walkObject(p, topLevel = false)
-    case ID_START_ARRAY  => walkArray(p)
+    case ID_START_OBJECT => walkObject(p, revive = false)
+    case ID_START_ARRAY  => walkArray(p, revive = false)
     case ID_STRING       => stringType(p.getText)
     case ID_NUMBER_INT =>
       IntT.of(if (p.getNumberType == NumberType.BIG_INTEGER) BigInt(p.getBigIntegerValue)
@@ -165,16 +171,40 @@ final class TypeExtractor(
     case _ => throw new JsonParseException(p, s"Unexpected token ${p.currentToken}")
   }
 
-  private def walkObject(p: JacksonParser, topLevel: Boolean): DocT = {
+  /** A value's type, with `jsonify` revival when `revive` and it is a string. */
+  private def walkValue(p: JacksonParser, id: Int, revive: Boolean): SchemaType =
+    if (revive && id == ID_STRING) revivedType(p.getText) else walk(p, id)
+
+  private def walkObject(p: JacksonParser, revive: Boolean): DocT = {
     val fields = Map.newBuilder[String, SchemaType]
     while (nextId(p) == ID_FIELD_NAME) {
       val key = p.currentName
-      val id = nextId(p)
-      fields += key -> (
-        if (topLevel && id == ID_STRING) extract(JsonParser.jsonify(JStr(p.getText)))
-        else walk(p, id))
+      fields += key -> walkValue(p, nextId(p), revive)
     }
     DocT(fields.result()) // Jackson throws unless the object closed
+  }
+
+  /** `extract(JsonParser.jsonify(JStr(s)))` without the trees: embedded
+    * JSON walks its tokens, then a strict number, else the string itself.
+    */
+  private def revivedType(s: String): SchemaType = {
+    val embedded = if (JsonParser.revivable(s)) JsonParser.revive(s)(walkRevived) else None
+    if (embedded.isDefined) embedded.get
+    else JsonParser.numberIfNumber(s) match {
+      case Some(JInt(v))  => IntT.of(v)
+      case Some(JReal(v)) => RealT.of(v)
+      case _              => stringType(s)
+    }
+  }
+
+  /** One revival candidate: an object or array whose values revive. */
+  private def walkRevived(candidate: String): SchemaType = {
+    val p = JsonParser.factory.createParser(candidate)
+    try nextId(p) match {
+      case ID_START_OBJECT => walkObject(p, revive = true)
+      case ID_START_ARRAY  => walkArray(p, revive = true)
+      case _ => throw new JsonParseException(p, s"Unexpected token ${p.currentToken}")
+    } finally p.close()
   }
 
   /** Array elements fold through the policy's reducer as they arrive,
@@ -183,7 +213,7 @@ final class TypeExtractor(
     * reduced as one `IntT` at the close give the same clusters. Integers
     * beyond 64 bits take the reducer and meet that `IntT` there.
     */
-  private def walkArray(p: JacksonParser): CollT = {
+  private def walkArray(p: JacksonParser, revive: Boolean): CollT = {
     var merged = Vector.empty[SchemaType]
     var ints = false
     var lo, hi = 0L
@@ -194,7 +224,7 @@ final class TypeExtractor(
         if (!ints) { ints = true; lo = v; hi = v }
         else if (v < lo) lo = v
         else if (v > hi) hi = v
-      } else merged = policy.reduceInto(merged, walk(p, id))
+      } else merged = policy.reduceInto(merged, walkValue(p, id, revive))
       id = nextId(p)
     }
     if (ints) merged = policy.reduceInto(merged, IntT(lo, hi))

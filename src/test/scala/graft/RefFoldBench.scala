@@ -1,14 +1,17 @@
 package graft
 
+import graft.ingest.JsonSchemaInference
 import graft.json.JsonRender
 import graft.types._
 
 /** Single-threaded extract+merge fold rate over reference-shaped records
   * — the ported reference algorithm itself (A1-A8), measured to ground
   * BENCH/BASELINE.md's comparison: `sbt -batch "Test/runMain graft.RefFoldBench"`.
-  * Times two folds over the same records: `extract` over parsed JValue
-  * trees (the reference algorithm), and `extractLine` over the records
-  * rendered as JSON lines (parse included, the engine's inference path).
+  * Times three folds over the same records: `extract` over parsed JValue
+  * trees (the reference algorithm), `extractLine` + `mergeTwo` over the
+  * records rendered as JSON lines (parse included), and the inference
+  * kernel over those lines (`JsonSchemaInference.fold`: `extractLine` into
+  * the cluster accumulators, then the driver merge).
   */
 object RefFoldBench {
   def main(args: Array[String]): Unit = {
@@ -29,6 +32,11 @@ object RefFoldBench {
     fold("extractLine + mergeTwo (JSON lines)", n) {
       lines.iterator.map(l => extractor.extractLine(l).toOption.get)
         .reduce(StrictMerge.mergeTwo)
+    }
+    fold("inference kernel (JSON lines)", n) {
+      JsonSchemaInference.merge(StrictMerge,
+        Seq(JsonSchemaInference.fold(StrictMerge, lines.iterator.map(extractor.extractLine))))
+        .schema.get
     }
   }
 
